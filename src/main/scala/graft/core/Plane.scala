@@ -3,6 +3,9 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.StitchTiles
+import graft.writers.OmeTiffWriter
+
 /** One row per 2D Y×X plane — the engine's canonical distributed image
   * representation (SURVEY.md §1.5). A 5D–7D TCZYX[+M][+S] scene becomes a
   * long-form table keyed by (scene_idx, level, m, t, c, z, s); the plane
@@ -48,37 +51,35 @@ object Plane {
       .withColumn("x", col("x") + col("x0"))
       .drop("y0", "x0")
 
+  /** Stitched plane table: each (scene_idx, level, t, c, z, s) plane's
+    * tile ROWS are grouped (one shuffle of tile arrays, never of pixel
+    * rows) and pasted into one dense `h × w` row by [[StitchTiles]]:
+    * lowest tile index wins on overlap, and a pixel no tile covers fails
+    * the query. Disjoint and overlapping mosaics take the same path. The
+    * output has the plane-table columns, with m/y0/x0 = 0. */
+  def stitch(planes: DataFrame, sceneId: String, h: Int, w: Int): DataFrame =
+    planes
+      .groupBy(col("scene_idx"), col("level"), col("t"), col("c"),
+        col("z"), col("s"))
+      .agg(collect_list(struct(StitchTiles.Fields.map(col): _*)).as("tiles"))
+      .select(col("scene_idx"), lit(sceneId).as("scene_id"), col("level"),
+        lit(0).as("m"), col("t"), col("c"), col("z"), col("s"),
+        lit(0).as("y0"), lit(0).as("x0"), lit(h).as("h"), lit(w).as("w"),
+        StitchTiles(col("tiles"), h, w).as("pixels"))
+
   /** 2× mean-pool of a plane table (the pyramid step shared by the
-    * parquet plane store and the zarr writer): each (t,c,z,s,m) plane
-    * pools independently; edge blocks average the pixels that exist (ceil
-    * semantics); tile offsets halve with the geometry; the level column
-    * increments. Distributed: groupBy on halved coordinates, two shuffles
-    * per level, each over 4× less data than the previous. */
+    * parquet plane store and the zarr writer): each (t,c,z,s,m) row pools
+    * on its own through [[OmeTiffWriter.downsample2x]], the OME-TIFF
+    * pyramid's kernel, so the sinks cannot drift apart. Edge blocks
+    * average the pixels that exist (ceil semantics); tile offsets halve
+    * with the geometry; the level increments. A per-row map: no shuffle. */
   def poolHalf(planes: DataFrame): DataFrame = {
-    val keys = Seq("scene_idx", "scene_id", "m", "t", "c", "z", "s")
-    val px = planes.select(
-      keys.map(col) ++ Seq(col("level"), col("y0"), col("x0"), col("h"),
-        col("w"), posexplode(col("pixels")).as(Seq("pos", "v"))): _*)
-      .withColumn("h2", expr("(h + 1) div 2").cast("int"))
-      .withColumn("w2", expr("(w + 1) div 2").cast("int"))
-      .withColumn("py", expr("(pos div w) div 2").cast("int"))
-      .withColumn("px", expr("(pos % w) div 2").cast("int"))
-    val pooled = px
-      .groupBy(keys.map(col) ++ Seq(col("level"), expr("y0 div 2").as("y0"),
-        expr("x0 div 2").as("x0"), col("h2"), col("w2"), col("py"),
-        col("px")): _*)
-      .agg(avg(col("v")).as("v"))
-    pooled
-      .withColumn("pv", struct((col("py") * col("w2") + col("px")).as("p"),
-        col("v").as("v")))
-      .groupBy(keys.map(col) ++ Seq(col("level"), col("y0"), col("x0"),
-        col("h2"), col("w2")): _*)
-      .agg(transform(array_sort(collect_list(col("pv"))),
-        p => p.getField("v")).as("pixels"))
-      .select(col("scene_idx"), col("scene_id"),
-        (col("level") + 1).cast("int").as("level"), col("m"), col("t"),
-        col("c"), col("z"), col("s"), col("y0").cast("int").as("y0"),
-        col("x0").cast("int").as("x0"), col("h2").as("h"), col("w2").as("w"),
-        col("pixels"))
+    val spark = planes.sparkSession
+    import spark.implicits._
+    planes.as[PlaneRow].map { r =>
+      val (px, h2, w2) = OmeTiffWriter.downsample2x(r.pixels, r.h, r.w, 1)
+      r.copy(level = r.level + 1, y0 = r.y0 / 2, x0 = r.x0 / 2, h = h2,
+        w = w2, pixels = px)
+    }.toDF()
   }
 }

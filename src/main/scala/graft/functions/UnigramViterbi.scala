@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     coalesce(try_element_at(m, k), miss);
   *   - backtrack emits pieces END-of-word-first (pc1..pc8 order), at
   *     most 8, exactly the cascade's filtered [pc1..pc8] array;
-  *   - a word outside 1..8 codepoints yields (NULL, empty array), the
-  *     cascade's no-CASE-arm-matches behavior.
+  *   - a NULL word, or one outside 1..8 codepoints, yields (NULL, empty
+  *     array), the cascade's no-CASE-arm-matches behavior.
   *
   * Why native: the cascade evaluates ~64 `try_element_at` map probes
   * per row (each a LINEAR scan of the ~80-entry model MapData — and the
@@ -76,8 +76,15 @@ final case class UnigramViterbi(left: Expression, right: Expression)
     t
   }
 
-  override def nullSafeEval(word: Any, model: Any): Any =
-    UnigramViterbi.segment(word.asInstanceOf[UTF8String], table)
+  /** Never NULL: a NULL word yields (NULL, empty array), as in the
+    * cascade, where every CASE arm misses. */
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val word = left.eval(input)
+    if (word == null) InternalRow(null, UnigramViterbi.EmptyPcs)
+    else UnigramViterbi.segment(word.asInstanceOf[UTF8String], table)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): UnigramViterbi =

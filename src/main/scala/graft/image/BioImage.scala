@@ -153,39 +153,18 @@ final class BioImage(
           .agg(min_by(col("v"), col("m")).as("v"))
     } else Plane.pixels(pl).drop("y0", "x0")
 
-  /** Plane table in STITCHED space: for mosaic scenes, tiles are
-    * reassembled into full-width plane rows (one row per t/c/z/s, global
-    * Y/X, overlap already resolved by [[pixels]]); identical to [[planes]]
-    * for non-mosaic scenes. This is what single-plane sinks (OME-TIFF,
-    * zarr, PNG) consume, mirroring the reference's save of reconstructed
-    * data (bio_image.py:1282-1291). */
+  /** Plane table in STITCHED space: for mosaic scenes, each t/c/z/s
+    * plane's tiles are pasted into one full-size row (global Y/X, lowest
+    * tile index wins on overlap) by [[Plane.stitch]] — one shuffle of tile
+    * arrays, whether the tiles overlap or not; a gap between tiles fails
+    * the query. Identical to [[planes]] for non-mosaic scenes. This is
+    * what single-plane sinks (OME-TIFF, zarr, PNG) consume, mirroring the
+    * reference's save of reconstructed data (bio_image.py:1282-1291). */
   def stitchedPlanes: DataFrame =
     if (!(hasMosaic && reconstructMosaic)) planes
     else {
       val d = dims
-      val w = d('X')
-      val h = d('Y')
-      pixels
-        .withColumn("pv",
-          struct((col("y") * w + col("x")).as("p"), col("v").as("v")))
-        .groupBy(col("scene_idx"), col("level"), col("t"), col("c"),
-          col("z"), col("s"))
-        .agg(collect_list(col("pv")).as("pvs"))
-        // density guard: sorted values are positionally correct ONLY when
-        // the tiles cover the stitched bounding box completely; a gap
-        // would silently shift every later pixel, so fail loudly instead
-        .withColumn("pixels",
-          when(size(col("pvs")) === lit((h * w).toInt),
-            transform(array_sort(col("pvs")), p => p.getField("v")))
-            .otherwise(raise_error(concat(
-              lit(s"mosaic tiles do not cover the stitched ${h}x$w plane " +
-                "(expected "), lit((h * w).toInt), lit(" pixels, got "),
-              size(col("pvs")),
-              lit("); gapped mosaics cannot be written to dense sinks")))))
-        .select(col("scene_idx"), lit(currentScene).as("scene_id"),
-          col("level"), lit(0).as("m"), col("t"), col("c"), col("z"),
-          col("s"), lit(0).as("y0"), lit(0).as("x0"),
-          lit(h.toInt).as("h"), lit(w.toInt).as("w"), col("pixels"))
+      Plane.stitch(planes, currentScene, d('Y').toInt, d('X').toInt)
     }
 
   /** Dims of the current scene/level, derived from the catalog; mosaic
@@ -356,12 +335,15 @@ final class BioImage(
   /** Lazy slice+reorder (the get_image_dask_data analog): plane/pixel rows
     * filtered by the selections. Stays a lazy DataFrame.
     *
-    * Mosaic scale path: Y/X selections push THROUGH the stitch as a tile
-    * prune — only tiles whose rectangle intersects the selected range are
-    * scanned and exploded (the reference's dask graph reads only
-    * intersecting chunks; here the tile filter sits between the catalog
-    * scan and the posexplode, so pruned tiles never decode). The exact
-    * per-pixel predicate still applies after the stitch. */
+    * Mosaic path: Y/X selections push THROUGH the stitch as a tile
+    * filter — only tiles whose rectangle intersects the selected range
+    * are exploded into pixels, and the exact per-pixel predicate still
+    * applies after the stitch. The filter saves the explode, not the
+    * read: it sits above the readers' opaque `mapPartitions` decode, so
+    * every tile of the scene/level is still fetched and decoded, then
+    * dropped. Only the DataSource V2 scan (`v2ScanWork`) prunes the tile
+    * catalog before decode, as the reference's dask graph reads only
+    * intersecting chunks. */
   def getImagePixels(selections: Map[Char, Sel] = Map.empty): DataFrame = {
     val colFor = Map('M' -> "m", 'T' -> "t", 'C' -> "c", 'Z' -> "z",
       'S' -> "s", 'Y' -> "y", 'X' -> "x")

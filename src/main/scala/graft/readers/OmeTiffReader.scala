@@ -360,8 +360,10 @@ final class OmeTiffReader(spark: SparkSession, path: String) extends BioReader {
     val little = parsed.littleEndian
     val decode = OmeTiffReader.decodeSegs(file, little, hconf, sceneIdx,
       sceneId, level) _
-    spark.createDataset(segs)
-      .repartition(slices)
+    // parallelize keeps CONTIGUOUS segment blocks per partition (vs
+    // repartition's round-robin shuffle): a plane's tiles stay together
+    // in one task, and the catalog shuffle disappears
+    spark.createDataset(spark.sparkContext.parallelize(segs, slices))
       .mapPartitions(decode)
       .toDF()
   }

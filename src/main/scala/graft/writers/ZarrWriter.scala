@@ -301,9 +301,11 @@ object ZarrWriter extends BioWriter {
       }
 
       // chunk files: distributed — each task writes its chunks directly.
-      // Aligned mosaics write one chunk per TILE row (no stitched-plane
-      // aggregation in the plan); S>1 groups a plane's sample rows into
-      // one interleaved chunk (a tiny keyed shuffle).
+      // Aligned mosaics write one chunk per TILE row (no stitch in the
+      // plan); other mosaics come from `stitchedPlanes`, which shuffles
+      // each plane's tile arrays once and pastes them into one row; S>1
+      // groups a plane's sample rows into one interleaved chunk (a tiny
+      // keyed shuffle).
       val target = s"$uri/$g"
       val sSuffix = if (nS > 1) ".0" else ""
       val (shIH, shIW) = shardInner.getOrElse((0, 0))

@@ -99,6 +99,21 @@ class UnigramViterbiSpec extends SparkSpec {
     }
   }
 
+  test("a NULL word yields (null, empty) in both renderings, never a " +
+      "NULL struct") {
+    val model = Map("a" -> -1024L)
+    val df = spark.createDataFrame(Seq(Tuple1(null: String), Tuple1("a")))
+      .toDF("w")
+    def rows(out: DataFrame) = out.filter(col("w").isNull).collect().map {
+      r => (Option(r.get(1)), Option(r.getSeq[String](2)).map(_.toSeq))
+    }.toSeq
+    val expected = Seq((None, Some(Seq.empty[String])))
+    assert(rows(cascadeSegment(df, model)) == expected, "cascade")
+    assert(rows(nativeSegment(df, model)) == expected, "native")
+    val v = df.select(UnigramViterbi(col("w"), typedLit(model)).as("v"))
+    assert(!v.schema("v").nullable)
+  }
+
   test("the model must be a foldable literal map") {
     val df = spark.createDataFrame(Seq(Tuple1("ab"))).toDF("w")
     val err = intercept[Exception] {

@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * row-major `h × w` plane — the per-plane kernel behind
   * [[graft.core.Plane.stitch]].
   *
-  * Contract (the same as the pixel view's overlap policy):
+  * Contract (the same as the eager read's and the pixel view's overlap
+  * policy; the kernel is [[StitchTiles.paste]]):
   *   - tiles paste in ascending `m` and a written pixel is never
   *     overwritten, so on overlap the LOWEST tile index wins (the
   *     `min_by(v, m)` rule of `BioImage.pixels`);
@@ -45,37 +46,13 @@ final case class StitchTiles(child: Expression, h: Int, w: Int)
 
   override def nullSafeEval(input: Any): Any = {
     val tiles = input.asInstanceOf[ArrayData]
-    val n = tiles.numElements()
-    val rows = Array.tabulate(n)(i =>
-      tiles.getStruct(i, StitchTiles.Fields.length)).sortBy(_.getInt(0))
     val out = new Array[Double](h * w)
-    val seen = new Array[Boolean](h * w)
-    var covered = 0
-    rows.foreach { r =>
-      val (ty0, tx0, th, tw) = (r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getInt(4))
-      val px = r.getArray(5)
-      // clip the tile rectangle to the plane
-      val ya = math.max(0, -ty0)
-      val yb = math.min(th, h - ty0)
-      val xa = math.max(0, -tx0)
-      val xb = math.min(tw, w - tx0)
-      var y = ya
-      while (y < yb) {
-        var x = xa
-        var o = (ty0 + y) * w + tx0 + xa
-        while (x < xb) {
-          if (!seen(o)) {
-            seen(o) = true
-            out(o) = px.getDouble(y * tw + x)
-            covered += 1
-          }
-          x += 1
-          o += 1
-        }
-        y += 1
-      }
-    }
+    val covered = StitchTiles.paste(
+      Seq.tabulate(tiles.numElements()) { i =>
+        val r = tiles.getStruct(i, StitchTiles.Fields.length)
+        StitchTiles.Tile(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3),
+          r.getInt(4), r.getArray(5).toDoubleArray())
+      }, 0, 0, h, w, out)
     if (covered != h * w)
       throw new IllegalStateException(
         s"mosaic tiles do not cover the stitched ${h}x$w plane (expected " +
@@ -92,6 +69,48 @@ object StitchTiles {
   /** The tile struct's fields, in this order: five ints, then the
     * tile's row-major `h × w` pixel array. */
   val Fields: Seq[String] = Seq("m", "y0", "x0", "h", "w", "pixels")
+
+  /** One tile for [[paste]]: its index, its top-left in plane space, its
+    * extent, and its row-major `h × w` pixels. */
+  final case class Tile(m: Int, y0: Int, x0: Int, h: Int, w: Int,
+      pixels: Array[Double])
+
+  /** The paste kernel of this expression and of the facade's eager read
+    * (`BioImage.getImageData`): pastes `tiles` in ascending `m` into
+    * `out`, a row-major `h × w` window whose top-left lies at (`oy`,
+    * `ox`) in plane space. A written pixel is never overwritten, so on
+    * overlap the lowest tile index wins; tile pixels outside the window
+    * are dropped. Returns how many window pixels some tile covered; an
+    * uncovered pixel keeps its value in `out`. */
+  def paste(tiles: Seq[Tile], oy: Int, ox: Int, h: Int, w: Int,
+      out: Array[Double]): Int = {
+    val seen = new Array[Boolean](h * w)
+    var covered = 0
+    tiles.sortBy(_.m).foreach { t =>
+      // the tile rectangle, clipped to the window, in tile-local rows/cols
+      val (ty0, tx0) = (t.y0 - oy, t.x0 - ox)
+      val ya = math.max(0, -ty0)
+      val yb = math.min(t.h, h - ty0)
+      val xa = math.max(0, -tx0)
+      val xb = math.min(t.w, w - tx0)
+      var y = ya
+      while (y < yb) {
+        var x = xa
+        var o = (ty0 + y) * w + tx0 + xa
+        while (x < xb) {
+          if (!seen(o)) {
+            seen(o) = true
+            out(o) = t.pixels(y * t.w + x)
+            covered += 1
+          }
+          x += 1
+          o += 1
+        }
+        y += 1
+      }
+    }
+    covered
+  }
 
   def apply(tiles: Column, h: Int, w: Int): Column =
     ColumnBridge.column(StitchTiles(ColumnBridge.expression(tiles), h, w))

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.plugins.{BioReader, SceneMeta}
+import graft.functions.StitchTiles
+import graft.plugins.{BioReader, DimBound, PlanePredicate, ScanWork,
+  SceneMeta, YXWindow}
 
 /** Selection on a named dimension — the analog of reshape_data's kwarg
   * types (/root/reference/bioio/bio_image.py:776-827) plus coordinate
@@ -265,7 +267,7 @@ final class BioImage(
     * from the end (reference reshape_data accepts e.g. C=(0,-1),
     * bio_image.py:776-827); out-of-range indices raise rather than
     * silently shrinking the axis; empty/duplicated subsets raise. */
-  private def resolveSel(d: Char, sel: Sel): Sel = {
+  private[image] def resolveSel(d: Char, sel: Sel): Sel = {
     val sizeOpt =
       if (dims.order.contains(d)) Some(dims(d).toInt) else None
     def resolve1(i: Int): Int = sizeOpt match {
@@ -341,9 +343,10 @@ final class BioImage(
     * applies after the stitch. The filter saves the explode, not the
     * read: it sits above the readers' opaque `mapPartitions` decode, so
     * every tile of the scene/level is still fetched and decoded, then
-    * dropped. Only the DataSource V2 scan (`v2ScanWork`) prunes the tile
-    * catalog before decode, as the reference's dask graph reads only
-    * intersecting chunks. */
+    * dropped. The eager [[getImageData]] and the DataSource V2 scan read
+    * through `v2ScanWork` instead, which prunes the tile catalog before
+    * decode, as the reference's dask graph reads only intersecting
+    * chunks. */
   def getImagePixels(selections: Map[Char, Sel] = Map.empty): DataFrame = {
     val colFor = Map('M' -> "m", 'T' -> "t", 'C' -> "c", 'Z' -> "z",
       'S' -> "s", 'Y' -> "y", 'X' -> "x")
@@ -377,15 +380,27 @@ final class BioImage(
     * bio_image.py:841-917): returns an NDStack in `returnDims` order.
     * reshape_data semantics (bio_image.py:776-827):
     *   - Sel.Index drops the dim (must not appear in returnDims)
-    *   - Sel.Subset/SRange keep + re-index the dim
+    *   - Sel.Subset/SRange keep + re-index the dim, in the caller's order
+    *     (e.g. C=[1,0])
     *   - dims present in data but absent from returnDims (and unselected)
     *     are REDUCED at index 0
     *   - dims in returnDims absent from data are INSERTED with size 1
     *   - output axes are transposed to returnDims order
-    */
+    *
+    * A plane-array read, like bioio's, which reads only the chunks it
+    * needs: the selections become a [[PlanePredicate]] on (m, t, c, z, s)
+    * plus, in stitched mosaic space, a Y/X window. Readers that declare
+    * scan work ([[BioReader.exposesScanWork]]) prune their stored objects
+    * with it before decode and run the rest in at most one Spark job
+    * (none for driver-decoded formats); other readers' `planes` are
+    * filtered on the same coordinates and collected. The collected plane
+    * rows are pasted into the result on the driver by the stitch's kernel
+    * ([[StitchTiles.paste]]): the lowest tile index wins on overlap, and
+    * a pixel no tile covers reads 0. */
   def getImageData(returnDims: String,
       selections: Map[Char, Sel] = Map.empty): NDStack = {
-    val dataOrder = dims.order
+    val sizes = dims
+    val dataOrder = sizes.order
     selections.foreach { case (d, sel) =>
       if (sel.isInstanceOf[Sel.Index] && returnDims.contains(d))
         throw new ConflictingArguments(
@@ -397,40 +412,100 @@ final class BioImage(
     val reduced = dataOrder.filterNot(d => returnDims.contains(d))
       .filterNot(d => selections.contains(d))
       .map(d => d -> (Sel.Index(0): Sel)).toMap
-    val resolved = selections.map { case (d, s) => d -> resolveSel(d, s) }
-    val df = getImagePixels(resolved ++ reduced)
-    val colFor = Map('M' -> "m", 'T' -> "t", 'C' -> "c", 'Z' -> "z",
-      'S' -> "s", 'Y' -> "y", 'X' -> "x")
-    val present = returnDims.filter(d => dataOrder.contains(d))
-    val rows = df.select(
-      present.map(d => col(colFor(d))) :+ col("v"): _*)
-      .collect()
-    // per-dim index remap built from the SELECTION itself, preserving the
-    // caller's requested order (reference reshape_data keeps list order,
-    // e.g. C=[1,0] — bio_image.py:776-827); unselected dims are identity.
-    val remaps: Seq[Map[Int, Int]] = present.map { d =>
-      resolved.get(d) match {
-        case Some(Sel.Subset(xs))     => xs.zipWithIndex.toMap
-        case Some(Sel.SRange(s0, e0)) => (s0 until e0).zipWithIndex.toMap
-        case _                        => (0 until dims(d).toInt).zipWithIndex.toMap
-      }
+    val resolved =
+      selections.map { case (d, s) => d -> resolveSel(d, s) } ++ reduced
+    // the indices each data dim keeps, in the caller's order (reference
+    // reshape_data keeps list order, e.g. C=[1,0])
+    def picks(d: Char): IndexedSeq[Int] = resolved.get(d) match {
+      case Some(Sel.Index(i))       => IndexedSeq(i)
+      case Some(Sel.Subset(xs))     => xs.toIndexedSeq
+      case Some(Sel.SRange(s0, e0)) => s0 until e0
+      case _ => 0 until (if (dataOrder.contains(d)) sizes(d).toInt else 1)
     }
-    val shape = returnDims.map { d =>
-      val i = present.indexOf(d)
-      if (i < 0) 1 else remaps(i).size
-    }
+    val shape = returnDims.map(d =>
+      if (dataOrder.contains(d)) picks(d).size else 1)
     val strides = shape.indices.map(i => shape.drop(i + 1).product)
-    val data = new Array[Double](shape.product)
-    rows.foreach { r =>
-      var flat = 0
-      returnDims.zipWithIndex.foreach { case (d, ax) =>
-        val i = present.indexOf(d)
-        if (i >= 0) flat += remaps(i)(r.getInt(i)) * strides(ax)
+    def stride(d: Char): Int = {
+      val ax = returnDims.indexOf(d)
+      if (ax < 0) 0 else strides(ax)
+    }
+    // stitched mosaic rows carry stitched-space offsets; every other
+    // plane row is read in its own local Y/X
+    val stitched = hasMosaic && reconstructMosaic
+    val (ys, xs) = (picks('Y'), picks('X'))
+    val (ya, xa) = (ys.min, xs.min)
+    val (bh, bw) = (ys.max + 1 - ya, xs.max + 1 - xa)
+    def bound(d: Char): DimBound =
+      if (resolved.contains(d)) DimBound(eqs = Some(picks(d).map(_.toLong).toSet))
+      else DimBound()
+    val pred = PlanePredicate(m = bound('M'), t = bound('T'),
+      c = bound('C'), z = bound('Z'), s = bound('S'),
+      yx = if (stitched) Some(YXWindow(ya, ya + bh, xa, xa + bw)) else None)
+    val rows = planeRows(pred)
+    // the output offset of a row's plane, from its non-Y/X coordinates
+    val planeDims = returnDims.filter(d => "MTCZS".contains(d) &&
+      dataOrder.contains(d))
+    val posOf = planeDims.map(d => d -> picks(d).zipWithIndex.toMap).toMap
+    def base(r: PlaneRow): Int = planeDims.map { d =>
+      val v = d match {
+        case 'M' => r.m
+        case 'T' => r.t
+        case 'C' => r.c
+        case 'Z' => r.z
+        case 'S' => r.s
       }
-      data(flat) = r.getDouble(present.length)
+      posOf(d)(v) * stride(d)
+    }.sum
+    val (sy, sx) = (stride('Y'), stride('X'))
+    val data = new Array[Double](shape.product)
+    val window = new Array[Double](bh * bw)
+    rows.groupBy(base).foreach { case (b, plane) =>
+      java.util.Arrays.fill(window, 0.0)
+      StitchTiles.paste(plane.map(r =>
+        if (stitched) StitchTiles.Tile(r.m, r.y0, r.x0, r.h, r.w, r.pixels)
+        else StitchTiles.Tile(r.m, 0, 0, r.h, r.w, r.pixels)),
+        ya, xa, bh, bw, window)
+      var iy = 0
+      while (iy < ys.length) {
+        val src = (ys(iy) - ya) * bw - xa
+        val dst = b + iy * sy
+        var ix = 0
+        while (ix < xs.length) {
+          data(dst + ix * sx) = window(src + xs(ix))
+          ix += 1
+        }
+        iy += 1
+      }
     }
     NDStack(returnDims, NDArray(shape.toSeq, data))
   }
+
+  /** Stored objects the last eager read through scan work planned to
+    * read, after pruning — the pruned-IO number specs pin (-1 before
+    * the first such read). */
+  @volatile private[image] var plannedObjects: Int = -1
+
+  /** The plane rows of the current (scene, level) that `pred` accepts, at
+    * the driver: through the reader's scan work when it declares one,
+    * else through [[planes]] filtered on the same coordinates. */
+  private def planeRows(pred: PlanePredicate): Seq[PlaneRow] =
+    if (reader.exposesScanWork) {
+      val work = reader.v2ScanWork(sceneIdx, level, pred)
+      plannedObjects = work.map(_.objects).sum
+      ScanWork.collectRows(spark, work, pred)
+    } else {
+      import spark.implicits._
+      val coords = Seq("m" -> pred.m, "t" -> pred.t, "c" -> pred.c,
+        "z" -> pred.z, "s" -> pred.s).collect {
+        case (name, DimBound(Some(vs), _, _)) =>
+          col(name).isin(vs.toSeq.map(_.toInt): _*)
+      }
+      val rect = pred.yx.map(w => col("y0") < w.y1 &&
+        col("y0") + col("h") > w.y0 && col("x0") < w.x1 &&
+        col("x0") + col("w") > w.x0)
+      (coords ++ rect).foldLeft(planes)(_ filter _).as[PlaneRow].collect()
+        .toSeq.filter(pred.acceptsPlane)
+    }
 
   /** Scene stacking (bio_image.py:919-1007): all scenes as one lazy plane
     * table (leading scene dim ≡ the scene_idx column — a union, not a

@@ -228,18 +228,21 @@ object GraphOps {
       .orderBy(col("part_id"))
   }
 
+  /** Every CTE is MATERIALIZED: each round references the previous one
+    * twice, so an inlining planner (DuckDB) would otherwise expand the
+    * 8-round chain into 2^9 copies of the edge join. */
   val q88Oracle: String = {
     val rounds = (1 to 8).map { i =>
-      s"""s$i AS (SELECT e.u FROM und e
+      s"""s$i AS MATERIALIZED (SELECT e.u FROM und e
          |  JOIN s${i - 1} a ON e.u = a.u JOIN s${i - 1} b ON e.v = b.u
          |  GROUP BY e.u HAVING count(*) >= 3)""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS (SELECT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-       |  WHERE l_quantity >= 40),
-       |e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v
+    s"""WITH li AS MATERIALIZED (SELECT l_orderkey AS ok, l_partkey AS pk
+       |  FROM lineitem WHERE l_quantity >= 40),
+       |e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS u, b.pk AS v
        |  FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-       |und AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
-       |s0 AS (SELECT DISTINCT u FROM und),
+       |und AS MATERIALIZED (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
+       |s0 AS MATERIALIZED (SELECT DISTINCT u FROM und),
        |$rounds
        |SELECT e.u AS part_id, CAST(count(*) AS BIGINT) AS core_deg
        |FROM und e JOIN s8 a ON e.u = a.u JOIN s8 b ON e.v = b.u

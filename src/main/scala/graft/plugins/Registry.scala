@@ -88,12 +88,20 @@ trait BioReader {
       s"$name does not expose driver-side plane rows; read it through " +
         "the BioImage facade")
 
-  /** DataSource V2 scan work for one (scene, level), pruned by the
-    * pushed-filter predicate BEFORE decode. Default: one inline unit of
-    * driver-decoded rows (the existing cost shape of single-object
-    * formats). Distributed readers override with [[DeferredRows]] whose
-    * descriptor catalogs (TIFF segments, zarr chunk keys) are pruned by
-    * `pred` so unmatched stored objects are never read. */
+  /** Whether this reader implements [[v2ScanWork]] (directly, or through
+    * [[localPlaneRows]]). The facade's eager read reads through the scan
+    * work when it is declared, and through [[readDelayedAtLevel]]
+    * otherwise. */
+  def exposesScanWork: Boolean = false
+
+  /** Scan work for one (scene, level), pruned by `pred` BEFORE decode —
+    * the read path of the DataSource V2 scan (pushed filters) and of the
+    * facade's eager `getImageData` (its selections, Y/X window included).
+    * Default: one inline unit of driver-decoded rows (the existing cost
+    * shape of single-object formats). Distributed readers override with
+    * [[DeferredRows]] whose descriptor catalogs (TIFF segments, zarr
+    * chunk keys) are pruned by `pred` so unmatched stored objects are
+    * never read. */
   def v2ScanWork(sceneIdx: Int, level: Int,
       pred: PlanePredicate): Seq[ScanWork] =
     Seq(InlineRows(localPlaneRows(sceneIdx, level).filter(pred.acceptsPlane)))

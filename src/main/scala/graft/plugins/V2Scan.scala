@@ -1,5 +1,7 @@
 package graft.plugins
 
+import org.apache.spark.sql.SparkSession
+
 import graft.core.PlaneRow
 
 /** Inclusive constraint set for one integer plane coordinate, derived
@@ -21,14 +23,26 @@ final case class DimBound(
     eqs.nonEmpty || lo != Long.MinValue || hi != Long.MaxValue
 }
 
-/** Serializable conjunction of per-coordinate bounds — the V2 scan's
-  * catalog-prune contract. The driver prunes scenes/levels and readers
+/** Half-open Y/X rectangle `[y0, y1) × [x0, x1)` in a level's stitched
+  * pixel space (the space of [[PlaneRow]]'s `y0`/`x0` tile offsets). */
+final case class YXWindow(y0: Int, y1: Int, x0: Int, x1: Int)
+    extends Serializable {
+  /** Whether the `h × w` rectangle at (`top`, `left`) shares a pixel with
+    * the window. */
+  def intersects(top: Int, left: Int, h: Int, w: Int): Boolean =
+    top < y1 && top + h > y0 && left < x1 && left + w > x0
+}
+
+/** Serializable conjunction of per-coordinate bounds — the catalog-prune
+  * contract shared by the V2 scan and the facade's eager read
+  * (`BioImage.getImageData`). The caller prunes scenes/levels and readers
   * prune their work descriptors (TIFF segments, zarr chunk keys) with
   * it BEFORE any byte of pixel data is read; the partition reader
   * re-applies it row-level so pushed filters are fully consumed
   * (residual coordinates a reader cannot prune at descriptor level —
   * e.g. the sample band inside an interleaved chunk — still never
-  * leave the scan). */
+  * leave the scan). `yx`, when set, also drops stored rectangles that
+  * miss the window; the V2 scan never sets it. */
 final case class PlanePredicate(
     sceneIdx: DimBound = DimBound(),
     sceneIds: Option[Set[String]] = None,
@@ -37,24 +51,29 @@ final case class PlanePredicate(
     t: DimBound = DimBound(),
     c: DimBound = DimBound(),
     z: DimBound = DimBound(),
-    s: DimBound = DimBound()) extends Serializable {
+    s: DimBound = DimBound(),
+    yx: Option[YXWindow] = None) extends Serializable {
   def acceptsScene(idx: Int, id: String): Boolean =
     sceneIdx.accepts(idx) && sceneIds.forall(_.contains(id))
   def acceptsLevel(l: Int): Boolean = level.accepts(l)
   /** Descriptor-level prune on the coordinates every format indexes by. */
   def acceptsCoords(mi: Int, ti: Int, ci: Int, zi: Int): Boolean =
     m.accepts(mi) && t.accepts(ti) && c.accepts(ci) && z.accepts(zi)
+  /** Descriptor-level prune on a stored rectangle: true without a window. */
+  def acceptsRect(top: Int, left: Int, h: Int, w: Int): Boolean =
+    yx.forall(_.intersects(top, left, h, w))
   def acceptsPlane(r: PlaneRow): Boolean =
     acceptsScene(r.scene_idx, r.scene_id) && level.accepts(r.level) &&
-      acceptsCoords(r.m, r.t, r.c, r.z) && s.accepts(r.s)
+      acceptsCoords(r.m, r.t, r.c, r.z) && s.accepts(r.s) &&
+      acceptsRect(r.y0, r.x0, r.h, r.w)
 }
 
 object PlanePredicate {
   val All: PlanePredicate = PlanePredicate()
 }
 
-/** One unit of DataSource V2 scan work for a (scene, level) — what a
-  * reader hands the connector from [[BioReader.v2ScanWork]].
+/** One unit of scan work for a (scene, level) — what a reader hands the
+  * V2 connector and the facade's eager read from [[BioReader.v2ScanWork]].
   * `objects` counts the stored objects (files / zarr chunk or shard
   * objects / TIFF segments) the unit reads — the pruned-IO number the
   * scan reports and specs pin. */
@@ -71,7 +90,26 @@ sealed trait ScanWork extends Serializable {
 final case class InlineRows(rows: Seq[PlaneRow], objects: Int = 1)
     extends ScanWork
 
-/** Executor-side decode: the serializable thunk runs inside the V2
-  * partition reader, so pixel bytes never visit the driver. */
+/** Executor-side decode: the serializable thunk runs inside a task —
+  * the V2 partition reader, or the eager read's one job — so encoded
+  * bytes are fetched and decoded on executors. The V2 scan keeps the
+  * decoded pixels there; the eager read collects them to the driver. */
 final case class DeferredRows(objects: Int,
     thunk: () => Iterator[PlaneRow]) extends ScanWork
+
+object ScanWork {
+  /** Runs `work` and returns its rows that `pred` accepts, at the driver:
+    * inline units as they are, every deferred unit in ONE Spark job of
+    * one task per unit (no job when there is none). */
+  def collectRows(spark: SparkSession, work: Seq[ScanWork],
+      pred: PlanePredicate): Seq[PlaneRow] = {
+    val inline = work.collect { case InlineRows(rows, _) => rows }.flatten
+    val deferred = work.collect { case d: DeferredRows => d }
+    val decoded =
+      if (deferred.isEmpty) Seq.empty
+      else spark.sparkContext.parallelize(deferred, deferred.size)
+        .flatMap(_.thunk().filter(pred.acceptsPlane))
+        .collect().toSeq
+    inline.filter(pred.acceptsPlane) ++ decoded
+  }
+}

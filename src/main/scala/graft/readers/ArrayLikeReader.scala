@@ -92,6 +92,8 @@ final class ArrayLikeReader(
       timeInterval = timeInterval)
   }
 
+  override def exposesScanWork: Boolean = true
+
   /** Build the canonical plane table for one scene: known dims map onto
     * (m,t,c,z,s,y,x); unknown dims are REDUCED at index 0 (reference
     * normalization semantics, tests/test_array_like_reader.py:1050-1059).

@@ -73,6 +73,8 @@ final class AviReader(spark: SparkSession, path: String) extends BioReader {
       timeInterval = Some(1.0 / video.fps))
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
     require(level == 0, s"single-level source, got level $level")

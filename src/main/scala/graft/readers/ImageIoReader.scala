@@ -106,6 +106,8 @@ final class ImageIoReader(spark: SparkSession, path: String) extends BioReader {
       tilePositions = Seq.empty, rawMetadata = None)
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
     require(level == 0, s"single-level source, got level $level")

@@ -120,6 +120,8 @@ final class MrcReader(spark: SparkSession, path: String) extends BioReader {
           s"'labels': ${h.labels.mkString("['", "', '", "']")}}"))
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
     require(level == 0, s"single-level source, got level $level")

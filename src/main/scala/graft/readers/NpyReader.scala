@@ -164,6 +164,8 @@ final class NpyReader(spark: SparkSession, path: String) extends BioReader {
     arr.sceneMeta(0, "Image:0")
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[graft.core.PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
     require(level == 0, s"single-level source, got level $level")

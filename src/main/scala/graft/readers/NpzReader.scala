@@ -75,6 +75,8 @@ final class NpzReader(spark: SparkSession, path: String) extends BioReader {
     a.sceneMeta(sceneIdx, id)
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[graft.core.PlaneRow] = {
     require(sceneIdx >= 0 && sceneIdx < members.length,
       s"scene $sceneIdx out of range 0..${members.length - 1}")

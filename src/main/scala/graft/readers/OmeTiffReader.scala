@@ -368,14 +368,18 @@ final class OmeTiffReader(spark: SparkSession, path: String) extends BioReader {
       .toDF()
   }
 
-  /** V2 scan: the seg catalog pruned by pushed (m,t,c,z) predicates —
-    * unmatched strips/tiles are never fetched — then blocked into
-    * contiguous executor tasks of deferred decode work. */
+  override def exposesScanWork: Boolean = true
+
+  /** Scan work: the seg catalog pruned by the predicate's (m,t,c,z)
+    * bounds and Y/X window — unmatched strips/tiles are never fetched —
+    * then blocked into contiguous executor tasks of deferred decode
+    * work. */
   override def v2ScanWork(sceneIdx: Int, level: Int,
       pred: graft.plugins.PlanePredicate): Seq[graft.plugins.ScanWork] = {
     val sceneId = parsed.scenes(sceneIdx).sceneId
     val kept = segCatalog(sceneIdx, level)
-      .filter(sg => pred.acceptsCoords(sg.m, sg.t, sg.c, sg.z))
+      .filter(sg => pred.acceptsCoords(sg.m, sg.t, sg.c, sg.z) &&
+        pred.acceptsRect(sg.y0, sg.x0, sg.cropH, sg.cropW))
     if (kept.isEmpty) return Seq.empty
     val hconf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)

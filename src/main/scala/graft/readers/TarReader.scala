@@ -110,6 +110,8 @@ final class TarReader(spark: SparkSession, path: String) extends BioReader {
       tilePositions = Seq.empty, rawMetadata = sidecar)
   }
 
+  override def exposesScanWork: Boolean = true
+
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(level == 0, s"single-level source, got level $level")
     val (key, _, _) = samples(sceneIdx)

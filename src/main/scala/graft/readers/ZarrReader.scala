@@ -466,12 +466,14 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
       .toDF()
   }
 
-  /** V2 scan: the chunk-key catalog pruned by pushed (m,t,c,z)
-    * predicates — unmatched chunk/shard OBJECTS are never fetched (the
-    * directory-of-objects layout makes zarr the format where pushdown
-    * prunes whole stored files) — then blocked into contiguous
-    * executor tasks. `objects` counts distinct stored objects (shards
-    * collapse their inner chunks). */
+  override def exposesScanWork: Boolean = true
+
+  /** Scan work: the chunk-key catalog pruned by the predicate's
+    * (m,t,c,z) bounds and Y/X window — unmatched chunk/shard OBJECTS are
+    * never fetched (the directory-of-objects layout makes zarr the
+    * format where pushdown prunes whole stored files) — then blocked
+    * into contiguous executor tasks. `objects` counts distinct stored
+    * objects (shards collapse their inner chunks). */
   override def v2ScanWork(sceneIdx: Int, level: Int,
       pred: graft.plugins.PlanePredicate): Seq[graft.plugins.ScanWork] = {
     val s = scenes_(sceneIdx)
@@ -479,7 +481,9 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
       throw new IndexOutOfBoundsException(s"resolution level $level")
     val lv = s.levels(level)
     val kept = chunkKeys(lv).filter { case (ti, ci, zi, yi, xi) =>
-      pred.acceptsCoords(yi * lv.gridX + xi, ti, ci, zi)
+      pred.acceptsCoords(yi * lv.gridX + xi, ti, ci, zi) &&
+        pred.acceptsRect(yi * lv.chunkH, xi * lv.chunkW, lv.chunkH,
+          lv.chunkW)
     }
     if (kept.isEmpty) return Seq.empty
     val params = decodeParams(sceneIdx, level)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.functions.StitchTiles
 import graft.plugins.{BioReader, DimBound, PlanePredicate, ScanWork,
-  SceneMeta, YXWindow}
+  ScanWorkReader, SceneMeta, YXWindow}
 
 /** Selection on a named dimension — the analog of reshape_data's kwarg
   * types (/root/reference/bioio/bio_image.py:776-827) plus coordinate
@@ -99,7 +99,10 @@ final class BioImage(
   def meta: SceneMeta = reader.sceneMeta(sceneIdx)
 
   /** Lazy canonical plane table of the current (scene, level) — memoized
-    * per (scene, level) like the reference's _xarray_dask_data cache. */
+    * per (scene, level) like the reference's _xarray_dask_data cache. For
+    * a [[ScanWorkReader]] it is the reader's unpruned scan work as one
+    * frame: driver-decoded formats as local rows, TIFF and zarr as one
+    * task per contiguous block of stored objects, with no shuffle. */
   def planes: DataFrame =
     planeCache.getOrElseUpdate((sceneIdx, level),
       reader.readDelayedAtLevel(spark, sceneIdx, level))
@@ -341,7 +344,7 @@ final class BioImage(
     * filter — only tiles whose rectangle intersects the selected range
     * are exploded into pixels, and the exact per-pixel predicate still
     * applies after the stitch. The filter saves the explode, not the
-    * read: it sits above the readers' opaque `mapPartitions` decode, so
+    * read: it sits above the opaque decode of [[planes]]' scan work, so
     * every tile of the scene/level is still fetched and decoded, then
     * dropped. The eager [[getImageData]] and the DataSource V2 scan read
     * through `v2ScanWork` instead, which prunes the tile catalog before
@@ -389,14 +392,14 @@ final class BioImage(
     *
     * A plane-array read, like bioio's, which reads only the chunks it
     * needs: the selections become a [[PlanePredicate]] on (m, t, c, z, s)
-    * plus, in stitched mosaic space, a Y/X window. Readers that declare
-    * scan work ([[BioReader.exposesScanWork]]) prune their stored objects
-    * with it before decode and run the rest in at most one Spark job
-    * (none for driver-decoded formats); other readers' `planes` are
-    * filtered on the same coordinates and collected. The collected plane
-    * rows are pasted into the result on the driver by the stitch's kernel
-    * ([[StitchTiles.paste]]): the lowest tile index wins on overlap, and
-    * a pixel no tile covers reads 0. */
+    * plus, in stitched mosaic space, a Y/X window. A [[ScanWorkReader]]
+    * (every built-in format but the parquet plane store) prunes its
+    * stored objects with it before decode and runs the rest in at most
+    * one Spark job (none for driver-decoded formats); other readers'
+    * `planes` are filtered on the same coordinates and collected. The
+    * collected plane rows are pasted into the result on the driver by the
+    * stitch's kernel ([[StitchTiles.paste]]): the lowest tile index wins
+    * on overlap, and a pixel no tile covers reads 0. */
   def getImageData(returnDims: String,
       selections: Map[Char, Sel] = Map.empty): NDStack = {
     val sizes = dims
@@ -486,14 +489,14 @@ final class BioImage(
   @volatile private[image] var plannedObjects: Int = -1
 
   /** The plane rows of the current (scene, level) that `pred` accepts, at
-    * the driver: through the reader's scan work when it declares one,
-    * else through [[planes]] filtered on the same coordinates. */
-  private def planeRows(pred: PlanePredicate): Seq[PlaneRow] =
-    if (reader.exposesScanWork) {
-      val work = reader.v2ScanWork(sceneIdx, level, pred)
+    * the driver: through the scan work of a [[ScanWorkReader]], else
+    * through [[planes]] filtered on the same coordinates. */
+  private def planeRows(pred: PlanePredicate): Seq[PlaneRow] = reader match {
+    case r: ScanWorkReader =>
+      val work = r.v2ScanWork(sceneIdx, level, pred)
       plannedObjects = work.map(_.objects).sum
       ScanWork.collectRows(spark, work, pred)
-    } else {
+    case _ =>
       import spark.implicits._
       val coords = Seq("m" -> pred.m, "t" -> pred.t, "c" -> pred.c,
         "z" -> pred.z, "s" -> pred.s).collect {
@@ -505,7 +508,7 @@ final class BioImage(
         col("x0") + col("w") > w.x0)
       (coords ++ rect).foldLeft(planes)(_ filter _).as[PlaneRow].collect()
         .toSeq.filter(pred.acceptsPlane)
-    }
+  }
 
   /** Scene stacking (bio_image.py:919-1007): all scenes as one lazy plane
     * table (leading scene dim ≡ the scene_idx column — a union, not a
@@ -514,7 +517,9 @@ final class BioImage(
     scenes.indices.map(i => reader.readDelayed(spark, i)).reduce(_ unionByName _)
 
   /** Eager stack with leading scene dim 'I' (dims must match across
-    * scenes, as in biob.transforms.generate_stack). Guarded by
+    * scenes, as in biob.transforms.generate_stack), every scene read at
+    * the current resolution level; a scene without that level raises.
+    * The current scene and level are restored afterwards. Guarded by
     * `maxElements` (default 2^28 doubles ≈ 2 GiB): an eager all-scene
     * stack funnels through driver memory by design (the reference's numpy
     * stack has the same boundary, bio_image.py:919-937) — beyond the cap,
@@ -528,9 +533,20 @@ final class BioImage(
       s"eager stack of ${scenes.length} scenes × $perScene elements = " +
         s"$total doubles exceeds the driver-memory cap $maxElements; use " +
         "the lazy stackPlanes DataFrame instead (or raise maxElements)")
-    val saved = sceneIdx
-    val stacks = scenes.indices.map { i => setScene(i); getImageData(inner) }
-    setScene(saved)
+    val (savedScene, savedLevel) = (sceneIdx, level)
+    val stacks =
+      try scenes.indices.map { i =>
+        setScene(i)
+        if (!resolutionLevels.contains(savedLevel))
+          throw new IndexOutOfBoundsException(
+            s"scene '${scenes(i)}' has no resolution level $savedLevel " +
+              s"(levels $resolutionLevels)")
+        setResolutionLevel(savedLevel)
+        getImageData(inner)
+      } finally {
+        setScene(savedScene)
+        setResolutionLevel(savedLevel)
+      }
     val shapes = stacks.map(_.array.shape).distinct
     require(shapes.length == 1,
       s"scene shapes differ: $shapes — cannot stack")

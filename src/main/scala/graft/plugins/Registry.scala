@@ -79,32 +79,48 @@ trait BioReader {
   }
 
   /** Plane rows decoded DRIVER-side — implemented by the
-    * single-small-object formats whose `readDelayed` already decodes at
-    * the driver (createDataset over locally-built rows); feeds the
-    * default [[v2ScanWork]]. Distributed readers (TIFF, zarr) override
+    * single-small-object formats, which decode a whole object at once;
+    * feeds the default [[v2ScanWork]], and through it their lazy planes
+    * ([[ScanWorkReader]]). Distributed readers (TIFF, zarr) override
     * [[v2ScanWork]] directly and never implement this. */
   def localPlaneRows(sceneIdx: Int, level: Int): Seq[graft.core.PlaneRow] =
     throw new UnsupportedOperationException(
       s"$name does not expose driver-side plane rows; read it through " +
         "the BioImage facade")
 
-  /** Whether this reader implements [[v2ScanWork]] (directly, or through
-    * [[localPlaneRows]]). The facade's eager read reads through the scan
-    * work when it is declared, and through [[readDelayedAtLevel]]
-    * otherwise. */
-  def exposesScanWork: Boolean = false
-
   /** Scan work for one (scene, level), pruned by `pred` BEFORE decode —
-    * the read path of the DataSource V2 scan (pushed filters) and of the
-    * facade's eager `getImageData` (its selections, Y/X window included).
-    * Default: one inline unit of driver-decoded rows (the existing cost
-    * shape of single-object formats). Distributed readers override with
+    * the read path of the DataSource V2 scan (pushed filters), of the
+    * facade's eager `getImageData` (its selections, Y/X window included)
+    * and, with [[PlanePredicate.All]], of a [[ScanWorkReader]]'s lazy
+    * planes. Default: one inline unit of driver-decoded rows (the cost
+    * shape of single-object formats), for a level of
+    * [[resolutionLevels]] only. Distributed readers override with
     * [[DeferredRows]] whose descriptor catalogs (TIFF segments, zarr
     * chunk keys) are pruned by `pred` so unmatched stored objects are
     * never read. */
   def v2ScanWork(sceneIdx: Int, level: Int,
-      pred: PlanePredicate): Seq[ScanWork] =
+      pred: PlanePredicate): Seq[ScanWork] = {
+    if (!resolutionLevels(sceneIdx).contains(level))
+      throw new IndexOutOfBoundsException(s"resolution level $level")
     Seq(InlineRows(localPlaneRows(sceneIdx, level).filter(pred.acceptsPlane)))
+  }
+}
+
+/** A reader whose lazy plane table IS its scan work: `planes` at every
+  * level is [[v2ScanWork]] with [[PlanePredicate.All]] run as one frame
+  * ([[ScanWork.frame]]), so the lazy read, the eager read and the V2
+  * scan share one source of plane rows. Every built-in format reader but
+  * the parquet plane store (whose lazy read is a partition-pruned
+  * parquet scan) mixes this in; the facade's eager read goes through the
+  * scan work of exactly these readers. */
+trait ScanWorkReader extends BioReader {
+  final override def readDelayed(spark: SparkSession,
+      sceneIdx: Int): DataFrame =
+    readDelayedAtLevel(spark, sceneIdx, 0)
+
+  final override def readDelayedAtLevel(spark: SparkSession, sceneIdx: Int,
+      level: Int): DataFrame =
+    ScanWork.frame(spark, v2ScanWork(sceneIdx, level, PlanePredicate.All))
 }
 
 /** A constructable plugin: how to open a path as a BioReader. */

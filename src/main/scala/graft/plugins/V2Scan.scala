@@ -1,6 +1,7 @@
 package graft.plugins
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.PlaneRow
 
@@ -73,43 +74,89 @@ object PlanePredicate {
 }
 
 /** One unit of scan work for a (scene, level) — what a reader hands the
-  * V2 connector and the facade's eager read from [[BioReader.v2ScanWork]].
-  * `objects` counts the stored objects (files / zarr chunk or shard
-  * objects / TIFF segments) the unit reads — the pruned-IO number the
-  * scan reports and specs pin. */
+  * V2 connector, the facade's eager read and its lazy `planes` from
+  * [[BioReader.v2ScanWork]]. `objects` counts the stored objects (files /
+  * zarr chunk or shard objects / TIFF segments) the unit reads — the
+  * pruned-IO number the scan reports and specs pin. */
 sealed trait ScanWork extends Serializable {
   def objects: Int
+  /** The unit's plane rows, decoded where this is called. */
+  def decode(): Iterator[PlaneRow]
 }
 
 /** Rows decoded at PLANNING time on the driver — the right shape for
   * the single-small-object formats (PNG/BMP/GIF, npy/npz members, MRC,
-  * tar samples, AVI, in-memory arrays) whose existing readers already
-  * decode at the driver: the V2 path adds no new driver materialization
-  * over their `readDelayed`. Distributed formats return [[DeferredRows]]
-  * instead. */
+  * tar samples, AVI, in-memory arrays), which decode a whole object at
+  * once: their lazy `planes` are these rows as a local Dataset, and the
+  * V2 scan ships them to its tasks. Distributed formats return
+  * [[DeferredRows]] instead. */
 final case class InlineRows(rows: Seq[PlaneRow], objects: Int = 1)
-    extends ScanWork
+    extends ScanWork {
+  def decode(): Iterator[PlaneRow] = rows.iterator
+}
 
 /** Executor-side decode: the serializable thunk runs inside a task —
-  * the V2 partition reader, or the eager read's one job — so encoded
-  * bytes are fetched and decoded on executors. The V2 scan keeps the
-  * decoded pixels there; the eager read collects them to the driver. */
+  * the V2 partition reader, a task of the lazy `planes`, or the eager
+  * read's one job — so encoded bytes are fetched and decoded on
+  * executors. The V2 scan and `planes` keep the decoded pixels there;
+  * the eager read collects them to the driver. */
 final case class DeferredRows(objects: Int,
-    thunk: () => Iterator[PlaneRow]) extends ScanWork
+    thunk: () => Iterator[PlaneRow]) extends ScanWork {
+  def decode(): Iterator[PlaneRow] = thunk()
+}
 
 object ScanWork {
+  /** A reader's descriptor catalog `descs` (TIFF segments, zarr chunk
+    * keys), in stored order, cut into at most `defaultParallelism`
+    * contiguous blocks — `parallelize`'s slicing, so a plane's tiles and
+    * a shard's inner chunks stay in one task — each one [[DeferredRows]]
+    * unit that runs `decode` over its block in a task. `objects` counts
+    * a block's stored objects at planning. `decode` must close over
+    * serializable values only, never the reader. */
+  def deferred[D](spark: SparkSession, descs: Seq[D])(
+      objects: Seq[D] => Int,
+      decode: Iterator[D] => Iterator[PlaneRow]): Seq[ScanWork] = {
+    val all = descs.toVector
+    val n = all.length
+    val slices = math.min(n, spark.sparkContext.defaultParallelism)
+    (0 until slices).map { i =>
+      val block = all.slice((i.toLong * n / slices).toInt,
+        ((i + 1).toLong * n / slices).toInt)
+      DeferredRows(objects(block), () => decode(block.iterator))
+    }
+  }
+
+  /** The rows `work` holds at the driver, and its deferred units as one
+    * RDD of one partition per unit (None when there is none). */
+  private def split(spark: SparkSession,
+      work: Seq[ScanWork]): (Seq[PlaneRow], Option[RDD[PlaneRow]]) = {
+    val (inline, deferred) = work.partition(_.isInstanceOf[InlineRows])
+    (inline.flatMap(_.decode()),
+      if (deferred.isEmpty) None
+      else Some(spark.sparkContext.parallelize(deferred, deferred.size)
+        .flatMap(_.decode())))
+  }
+
+  /** `work` as a lazy plane table: inline rows as a local Dataset,
+    * deferred units as one task each with no shuffle. */
+  def frame(spark: SparkSession, work: Seq[ScanWork]): DataFrame = {
+    import spark.implicits._
+    split(spark, work) match {
+      case (rows, None) => spark.createDataset(rows).toDF()
+      case (Seq(), Some(tasks)) => spark.createDataset(tasks).toDF()
+      case (rows, Some(tasks)) =>
+        spark.createDataset(rows).union(spark.createDataset(tasks)).toDF()
+    }
+  }
+
   /** Runs `work` and returns its rows that `pred` accepts, at the driver:
     * inline units as they are, every deferred unit in ONE Spark job of
     * one task per unit (no job when there is none). */
   def collectRows(spark: SparkSession, work: Seq[ScanWork],
       pred: PlanePredicate): Seq[PlaneRow] = {
-    val inline = work.collect { case InlineRows(rows, _) => rows }.flatten
-    val deferred = work.collect { case d: DeferredRows => d }
-    val decoded =
-      if (deferred.isEmpty) Seq.empty
-      else spark.sparkContext.parallelize(deferred, deferred.size)
-        .flatMap(_.thunk().filter(pred.acceptsPlane))
-        .collect().toSeq
-    inline.filter(pred.acceptsPlane) ++ decoded
+    val (rows, tasks) = split(spark, work)
+    rows.filter(pred.acceptsPlane) ++
+      tasks.fold(Seq.empty[PlaneRow])(
+        _.filter(pred.acceptsPlane).collect().toSeq)
   }
 }

@@ -1,10 +1,10 @@
 package graft.readers
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core._
 import graft.meta.OmeUtils
-import graft.plugins.{BioReader, SceneMeta}
+import graft.plugins.{ScanWorkReader, SceneMeta}
 
 /** In-memory array source — the analog of the reference's ArrayLikeReader
   * (/root/reference/bioio/array_like_reader.py:29-464): one or more
@@ -33,7 +33,7 @@ final class ArrayLikeReader(
     physicalPixelSizes: Option[(Double, Double, Double)] = None,
     tilePositions: Seq[Seq[(Int, Int)]] = Seq.empty,
     timeInterval: Option[Double] = None)
-    extends BioReader {
+    extends ScanWorkReader {
 
   require(arrays.nonEmpty, "at least one array required")
 
@@ -92,14 +92,11 @@ final class ArrayLikeReader(
       timeInterval = timeInterval)
   }
 
-  override def exposesScanWork: Boolean = true
-
   /** Build the canonical plane table for one scene: known dims map onto
     * (m,t,c,z,s,y,x); unknown dims are REDUCED at index 0 (reference
     * normalization semantics, tests/test_array_like_reader.py:1050-1059).
     */
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
-    require(level == 0, s"single-level source, got level $level")
     val arr = arrays(sceneIdx)
     val order = resolvedOrders(sceneIdx)
     val sid = scenes(sceneIdx)
@@ -141,11 +138,6 @@ final class ArrayLikeReader(
         z = sel.getOrElse('Z', 0), s = sel.getOrElse('S', 0),
         y0 = ty, x0 = tx, h = h, w = w, pixels = px)
     }
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

@@ -1,11 +1,11 @@
 package graft.readers
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Dimensions, PixelType, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.AviFormat
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** Uncompressed-AVI source: frames stack on T (the GIF T-stack rule,
   * ImageIoReader), one scene per file. Gray content (r=g=b on every
@@ -14,7 +14,7 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * time_interval (Δt = 1/fps), mirroring what [[graft.writers.AviWriter]]
   * derives it from. Whole-file driver-side decode, same interchange
   * contract as GIF/PNG. */
-final class AviReader(spark: SparkSession, path: String) extends BioReader {
+final class AviReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private lazy val video: AviFormat.Video = {
     val fs = FileSystem.get(new Path(path).toUri,
@@ -73,11 +73,8 @@ final class AviReader(spark: SparkSession, path: String) extends BioReader {
       timeInterval = Some(1.0 / video.fps))
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
-    require(level == 0, s"single-level source, got level $level")
     val (h, w) = (video.height, video.width)
     val nS = if (isGray) 1 else 3
     video.frames.zipWithIndex.flatMap { case (f, t) =>
@@ -92,11 +89,6 @@ final class AviReader(spark: SparkSession, path: String) extends BioReader {
           y0 = 0, x0 = 0, h = h, w = w, pixels = px)
       }
     }
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

@@ -5,10 +5,10 @@ import java.awt.image.{BufferedImage, IndexColorModel}
 import javax.imageio.ImageIO
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Dimensions, PixelType, PlaneRow, UnsupportedFileFormatError}
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** PNG / JPEG / GIF / BMP source via `javax.imageio` — the analog of the
   * reference's imageio-formats plugin family
@@ -28,7 +28,7 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * rows; the resulting DataFrame is distributed like any other plane
   * table. Bulk pixel data at scale belongs in the Parquet plane store.
   */
-final class ImageIoReader(spark: SparkSession, path: String) extends BioReader {
+final class ImageIoReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private lazy val frames: Seq[BufferedImage] = {
     val fs = FileSystem.get(new Path(path).toUri,
@@ -106,11 +106,8 @@ final class ImageIoReader(spark: SparkSession, path: String) extends BioReader {
       tilePositions = Seq.empty, rawMetadata = None)
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
-    require(level == 0, s"single-level source, got level $level")
     val h = image.getHeight
     val w = image.getWidth
     val nS = bands
@@ -132,11 +129,6 @@ final class ImageIoReader(spark: SparkSession, path: String) extends BioReader {
           y0 = 0, x0 = 0, h = h, w = w, pixels = px)
       }
     }
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

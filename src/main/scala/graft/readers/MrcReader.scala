@@ -4,11 +4,11 @@ import java.io.DataInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Dimensions, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.MrcFormat
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** `.mrc` (MRC2014 / CCP-EM map) source — the cryo-EM/tomography member
   * of the reference's microscopy format family (an aicsimageio/bioio
@@ -25,7 +25,7 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * Like the other interchange readers the file decodes driver-side into
   * plane rows (MRC has no internal chunking to push down); bulk pixel
   * data at scale belongs in the parquet plane store / zarr. */
-final class MrcReader(spark: SparkSession, path: String) extends BioReader {
+final class MrcReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private lazy val parsed: (MrcFormat.Header, Array[Byte]) = {
     val fs = FileSystem.get(new Path(path).toUri,
@@ -120,11 +120,8 @@ final class MrcReader(spark: SparkSession, path: String) extends BioReader {
           s"'labels': ${h.labels.mkString("['", "', '", "']")}}"))
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
-    require(level == 0, s"single-level source, got level $level")
     val h = header
     val planeSize = h.ny * h.nx
     (0 until h.nz).map { sec =>
@@ -136,11 +133,6 @@ final class MrcReader(spark: SparkSession, path: String) extends BioReader {
         z = if (h.isStack) 0 else sec,
         s = 0, y0 = 0, x0 = 0, h = h.ny, w = h.nx, pixels = px)
     }
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

@@ -4,11 +4,11 @@ import java.io.DataInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Dimensions, Dims, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.NpyFormat
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** One parsed in-memory npy array: header + raw element bytes, with the
   * dim-order guess and plane-row conversion shared by the `.npy`
@@ -132,7 +132,7 @@ private[graft] object NpyArrayData {
   * internal chunking to push down); bulk pixel data at scale belongs in
   * the parquet plane store / zarr.
   */
-final class NpyReader(spark: SparkSession, path: String) extends BioReader {
+final class NpyReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private lazy val arr: NpyArrayData = {
     val fs = FileSystem.get(new Path(path).toUri,
@@ -164,17 +164,9 @@ final class NpyReader(spark: SparkSession, path: String) extends BioReader {
     arr.sceneMeta(0, "Image:0")
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[graft.core.PlaneRow] = {
     require(sceneIdx == 0, s"single-scene source, got scene $sceneIdx")
-    require(level == 0, s"single-level source, got level $level")
     arr.planeRows(0, "Image:0")
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

@@ -4,10 +4,10 @@ import java.io.DataInputStream
 import java.util.zip.ZipInputStream
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.UnsupportedFileFormatError
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** `.npz` (numpy zip archive) source: each member `.npy` array is one
   * SCENE — the multi-scene form of the ArrayLike file domain (a
@@ -23,7 +23,7 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * The archive is decoded driver-side like the other interchange
   * readers (STORED and DEFLATED members both stream through the JDK
   * inflater); bulk pixel data at scale belongs in the plane store. */
-final class NpzReader(spark: SparkSession, path: String) extends BioReader {
+final class NpzReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private lazy val members: Seq[(String, NpyArrayData)] = {
     val fs = FileSystem.get(new Path(path).toUri,
@@ -75,19 +75,11 @@ final class NpzReader(spark: SparkSession, path: String) extends BioReader {
     a.sceneMeta(sceneIdx, id)
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[graft.core.PlaneRow] = {
     require(sceneIdx >= 0 && sceneIdx < members.length,
       s"scene $sceneIdx out of range 0..${members.length - 1}")
-    require(level == 0, s"single-level source, got level $level")
     val (id, a) = members(sceneIdx)
     a.planeRows(sceneIdx, id)
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

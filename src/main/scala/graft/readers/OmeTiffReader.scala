@@ -3,18 +3,19 @@ package graft.readers
 import java.nio.ByteOrder
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{Dimensions, Dims, PixelType, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.TiffFormat
 import graft.meta.{OME, OmeXml}
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PlanePredicate, PluginEntry, ScanWork, ScanWorkReader,
+  SceneMeta}
 
 /** One decodable TIFF segment → one output plane row: a whole strip-
   * organized plane, or one tile of a tiled plane (tiles surface as mosaic
   * rows, edge tiles cropped from their padded stored size to the image
-  * bounds). Top-level so Spark derives a product encoder. */
+  * bounds). Serializable: blocks of them ride into decode tasks. */
 private[readers] final case class TiffSeg(
     t: Int, c: Int, z: Int, m: Int, y0: Int, x0: Int,
     cropH: Int, cropW: Int, segH: Int, segW: Int,
@@ -30,11 +31,12 @@ private[readers] final case class TiffSeg(
   *   - DRIVER parses the TIFF header + IFD chain + OME-XML — a handful of
   *     KB-sized random reads regardless of file size — yielding a segment
   *     catalog: (plane/tile → t,c,z,m, offsets, byteCounts).
-  *   - EXECUTORS fetch and decode pixel segments in parallel via
-  *     `spark.createDataset(catalog).mapPartitions` + Hadoop FileSystem
-  *     positioned reads (file:, hdfs:, s3a: all work), emitting canonical
-  *     PlaneRow records. Scene/T/C/Z selection prunes catalog rows before
-  *     any pixel byte is read — the dask-graph slicing analog.
+  *   - EXECUTORS fetch and decode pixel segments in parallel, one
+  *     contiguous block of the catalog per task ([[v2ScanWork]]), with
+  *     Hadoop FileSystem positioned reads (file:, hdfs:, s3a: all work),
+  *     emitting canonical PlaneRow records. Scene/T/C/Z selection
+  *     prunes catalog rows before any pixel byte is read — the
+  *     dask-graph slicing analog.
   *
   * Format coverage: uncompressed, Deflate (8/32946), LZW (5), PackBits
   * (32773) and new-style JPEG (7, incl. shared JPEGTables tag 347)
@@ -53,7 +55,8 @@ private[readers] final case class TiffSeg(
   * matching the reference's tiff fallback behavior. Raw OME-XML is
   * preserved as SceneMeta.rawMetadata (M9).
   */
-final class OmeTiffReader(spark: SparkSession, path: String) extends BioReader {
+final class OmeTiffReader(spark: SparkSession, path: String)
+    extends ScanWorkReader {
 
   /** One plane (= one IFD) with its scene-local position. */
   private case class PlaneRef(sceneIdx: Int, t: Int, c: Int, z: Int,
@@ -298,13 +301,10 @@ final class OmeTiffReader(spark: SparkSession, path: String) extends BioReader {
     }
   }
 
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame =
-    readDelayedAtLevel(spark, sceneIdx, 0)
-
   /** Per-level segment catalog: one entry per strip-organized plane or
-    * per stored tile — the unit of positioned IO. Shared by the facade
-    * read path and the DataSource V2 scan (which prunes it by pushed
-    * plane predicates before any pixel byte is read). */
+    * per stored tile — the unit of positioned IO, in IFD order. The one
+    * source of [[v2ScanWork]], which prunes it before any pixel byte is
+    * read. */
   private def segCatalog(sceneIdx: Int, level: Int): Seq[TiffSeg] = {
     val refs = parsed.planes(sceneIdx)
     val levelRefs = refs.map(r => (r, ifdAt(r, level)))
@@ -341,58 +341,25 @@ final class OmeTiffReader(spark: SparkSession, path: String) extends BioReader {
     }
   }
 
-  /** Distributed segment read: the segment catalog parallelizes over
-    * executors; each task opens the file once and does positioned reads
-    * of only its strips/tiles. */
-  override def readDelayedAtLevel(spark: SparkSession, sceneIdx: Int,
-      level: Int): DataFrame = {
-    import spark.implicits._
-    val sceneId = parsed.scenes(sceneIdx).sceneId
-    val hconf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val segs = segCatalog(sceneIdx, level)
-    val slices = math.min(segs.length,
-      spark.sparkContext.defaultParallelism).max(1)
+  /** Scan work: the seg catalog pruned by the predicate's (m,t,c,z)
+    * bounds and Y/X window — unmatched strips/tiles are never fetched —
+    * then blocked into contiguous executor tasks, each opening the file
+    * once for positioned reads of only its strips/tiles. */
+  override def v2ScanWork(sceneIdx: Int, level: Int,
+      pred: PlanePredicate): Seq[ScanWork] = {
+    val kept = segCatalog(sceneIdx, level)
+      .filter(sg => pred.acceptsCoords(sg.m, sg.t, sg.c, sg.z) &&
+        pred.acceptsRect(sg.y0, sg.x0, sg.cropH, sg.cropW))
     // bind instance members to locals BEFORE the partial application:
     // eta-expansion over `path`/`parsed` would capture `this` (the
     // non-serializable reader) to evaluate them lazily
     val file = path
     val little = parsed.littleEndian
-    val decode = OmeTiffReader.decodeSegs(file, little, hconf, sceneIdx,
-      sceneId, level) _
-    // parallelize keeps CONTIGUOUS segment blocks per partition (vs
-    // repartition's round-robin shuffle): a plane's tiles stay together
-    // in one task, and the catalog shuffle disappears
-    spark.createDataset(spark.sparkContext.parallelize(segs, slices))
-      .mapPartitions(decode)
-      .toDF()
-  }
-
-  override def exposesScanWork: Boolean = true
-
-  /** Scan work: the seg catalog pruned by the predicate's (m,t,c,z)
-    * bounds and Y/X window — unmatched strips/tiles are never fetched —
-    * then blocked into contiguous executor tasks of deferred decode
-    * work. */
-  override def v2ScanWork(sceneIdx: Int, level: Int,
-      pred: graft.plugins.PlanePredicate): Seq[graft.plugins.ScanWork] = {
     val sceneId = parsed.scenes(sceneIdx).sceneId
-    val kept = segCatalog(sceneIdx, level)
-      .filter(sg => pred.acceptsCoords(sg.m, sg.t, sg.c, sg.z) &&
-        pred.acceptsRect(sg.y0, sg.x0, sg.cropH, sg.cropW))
-    if (kept.isEmpty) return Seq.empty
     val hconf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    val little = parsed.littleEndian
-    val file = path
-    val slices = math.min(kept.length,
-      spark.sparkContext.defaultParallelism).max(1)
-    val per = (kept.length + slices - 1) / slices
-    kept.grouped(per).map { block =>
-      graft.plugins.DeferredRows(block.length,
-        () => OmeTiffReader.decodeSegs(file, little, hconf, sceneIdx,
-          sceneId, level)(block.iterator))
-    }.toSeq
+    ScanWork.deferred(spark, kept)(_.length,
+      OmeTiffReader.decodeSegs(file, little, hconf, sceneIdx, sceneId, level))
   }
 }
 
@@ -405,8 +372,8 @@ object OmeTiffReader {
   /** Executor-side segment decode (curried so it serializes as a pure
     * closure over scalars): positioned reads of each segment's byte
     * ranges, decompress, de-interleave sample bands, crop edge padding.
-    * Runs inside both the facade's `mapPartitions` and the V2
-    * partition reader. */
+    * Runs inside each [[graft.plugins.DeferredRows]] unit of
+    * [[OmeTiffReader.v2ScanWork]]. */
   private[readers] def decodeSegs(file: String, little: Boolean,
       hconf: SerializableConfiguration, sceneIdx: Int, sceneId: String,
       level: Int)(it: Iterator[TiffSeg]): Iterator[PlaneRow] = {

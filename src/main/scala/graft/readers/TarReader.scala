@@ -5,11 +5,11 @@ import java.awt.image.BufferedImage
 import javax.imageio.ImageIO
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.core.{Dimensions, PixelType, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.TarFormat
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PluginEntry, ScanWorkReader, SceneMeta}
 
 /** WebDataset-style `.tar` training-shard source: each IMAGE member
   * (png/jpg/gif/bmp, decoded by the same javax.imageio path as
@@ -25,7 +25,7 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * by construction (the WebDataset discipline caps a shard at what one
   * worker streams) and the scale axis is MANY shards across executors,
   * not one big shard. */
-final class TarReader(spark: SparkSession, path: String) extends BioReader {
+final class TarReader(spark: SparkSession, path: String) extends ScanWorkReader {
 
   private val ImageExts = Set("png", "jpg", "jpeg", "gif", "bmp")
 
@@ -110,10 +110,7 @@ final class TarReader(spark: SparkSession, path: String) extends BioReader {
       tilePositions = Seq.empty, rawMetadata = sidecar)
   }
 
-  override def exposesScanWork: Boolean = true
-
   override def localPlaneRows(sceneIdx: Int, level: Int): Seq[PlaneRow] = {
-    require(level == 0, s"single-level source, got level $level")
     val (key, _, _) = samples(sceneIdx)
     val bi = decoded(sceneIdx)
     val (bands, sample) = ImageIoReader.decodeSamples(bi)
@@ -133,11 +130,6 @@ final class TarReader(spark: SparkSession, path: String) extends BioReader {
       PlaneRow(sceneIdx, key, level = 0, m = 0, t = 0, c = 0, z = 0, s = s,
         y0 = 0, x0 = 0, h = h, w = w, pixels = px)
     }
-  }
-
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame = {
-    import spark.implicits._
-    spark.createDataset(localPlaneRows(sceneIdx, 0)).toDF()
   }
 }
 

@@ -5,14 +5,15 @@ import java.nio.charset.StandardCharsets
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.core.{Dimensions, PlaneRow, UnsupportedFileFormatError}
 import graft.formats.ZarrFormat
-import graft.plugins.{BioReader, PluginEntry, SceneMeta}
+import graft.plugins.{PlanePredicate, PluginEntry, ScanWork, ScanWorkReader,
+  SceneMeta}
 
 /** OME-ZARR (NGFF) source. The store is a directory tree of JSON metadata
   * documents + independent chunk objects, so reads parallelize the same
@@ -27,7 +28,8 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * (buffered whole-shard fallback on stat-less remote schemes),
   * trailing-S RGB, 2D–6D arrays, per-level multiscale grids.
   */
-final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
+final class ZarrReader(spark: SparkSession, path: String)
+    extends ScanWorkReader {
 
   /** `shape` is always the expanded 5D TCZYX shape; `axes` records the
     * STORED dim order (2–6 of "tczyxs", y/x last among spatial dims) for
@@ -402,14 +404,10 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
     else Dimensions("TCZYX", lv.shape)
   }
 
-  override def readDelayed(spark: SparkSession, sceneIdx: Int): DataFrame =
-    readDelayedAtLevel(spark, sceneIdx, 0)
-
   /** Chunk-key catalog for one level: (t,c,z) x the stored Y/X grid,
     * shard-major ordered for sharded arrays so a task's per-shard memo
-    * hits on consecutive inner chunks. Shared by the facade read and
-    * the V2 scan (which prunes it by pushed plane predicates before
-    * any chunk object is fetched). */
+    * hits on consecutive inner chunks. The one source of [[v2ScanWork]],
+    * which prunes it before any chunk object is fetched. */
   private def chunkKeys(lv: Level): Seq[(Int, Int, Int, Int, Int)] = {
     val Seq(t, c, z, _, _) = lv.shape.map(_.toInt)
     val (ny, nx) = (lv.gridY, lv.gridX)
@@ -443,31 +441,6 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
       idxCrc = lv.shardIndexCrc, idxAtEnd = lv.shardIndexAtEnd)
   }
 
-  override def readDelayedAtLevel(spark: SparkSession, sceneIdx: Int,
-      level: Int): DataFrame = {
-    import spark.implicits._
-    val s = scenes_(sceneIdx)
-    if (!s.levels.isDefinedAt(level))
-      throw new IndexOutOfBoundsException(s"resolution level $level")
-    val keys = chunkKeys(s.levels(level))
-    val slices = math.min(keys.length,
-      spark.sparkContext.defaultParallelism).max(1)
-    // bind the params to a local BEFORE the partial application:
-    // eta-expansion over `decodeParams(...)` would capture `this` (the
-    // non-serializable reader) to evaluate it lazily
-    val params = decodeParams(sceneIdx, level)
-    val decode = ZarrReader.decodeKeys(params) _
-    // parallelize keeps CONTIGUOUS key blocks per partition (vs
-    // repartition's round-robin shuffle): inner chunks of one shard stay
-    // adjacent in a task, so the stat-less remote fallback's per-task
-    // shard memo actually hits — and the tiny catalog shuffle disappears
-    spark.createDataset(spark.sparkContext.parallelize(keys, slices))
-      .mapPartitions(decode)
-      .toDF()
-  }
-
-  override def exposesScanWork: Boolean = true
-
   /** Scan work: the chunk-key catalog pruned by the predicate's
     * (m,t,c,z) bounds and Y/X window — unmatched chunk/shard OBJECTS are
     * never fetched (the directory-of-objects layout makes zarr the
@@ -475,7 +448,7 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
     * into contiguous executor tasks. `objects` counts distinct stored
     * objects (shards collapse their inner chunks). */
   override def v2ScanWork(sceneIdx: Int, level: Int,
-      pred: graft.plugins.PlanePredicate): Seq[graft.plugins.ScanWork] = {
+      pred: PlanePredicate): Seq[ScanWork] = {
     val s = scenes_(sceneIdx)
     if (!s.levels.isDefinedAt(level))
       throw new IndexOutOfBoundsException(s"resolution level $level")
@@ -485,27 +458,25 @@ final class ZarrReader(spark: SparkSession, path: String) extends BioReader {
         pred.acceptsRect(yi * lv.chunkH, xi * lv.chunkW, lv.chunkH,
           lv.chunkW)
     }
-    if (kept.isEmpty) return Seq.empty
+    val (ipy, ipx) =
+      if (lv.shardH == 0) (1, 1)
+      else (lv.shardH / lv.chunkH, lv.shardW / lv.chunkW)
+    // bind the params to a local BEFORE the partial application:
+    // eta-expansion over `decodeParams(...)` would capture `this` (the
+    // non-serializable reader) to evaluate it lazily
     val params = decodeParams(sceneIdx, level)
-    def objOf(k: (Int, Int, Int, Int, Int)): (Int, Int, Int, Int, Int) =
-      if (lv.shardH == 0) k
-      else {
-        val (ipy, ipx) = (lv.shardH / lv.chunkH, lv.shardW / lv.chunkW)
-        (k._1, k._2, k._3, k._4 / ipy, k._5 / ipx)
-      }
-    val slices = math.min(kept.length,
-      spark.sparkContext.defaultParallelism).max(1)
-    val per = (kept.length + slices - 1) / slices
-    kept.grouped(per).map { block =>
-      graft.plugins.DeferredRows(block.map(objOf).distinct.size,
-        () => ZarrReader.decodeKeys(params)(block.iterator))
-    }.toSeq
+    // contiguous key blocks keep a shard's inner chunks adjacent in one
+    // task, so the stat-less remote fallback's per-task shard memo hits
+    ScanWork.deferred(spark, kept)(
+      _.map { case (ti, ci, zi, yi, xi) => (ti, ci, zi, yi / ipy, xi / ipx) }
+        .distinct.size,
+      ZarrReader.decodeKeys(params))
   }
 }
 
 /** Serializable per-level decode parameters — everything the executor-
-  * side chunk decode needs, shared by the facade read path and the V2
-  * partition reader. */
+  * side chunk decode needs, shared by every unit of a level's scan
+  * work. */
 private[readers] final case class ZarrDecodeParams(
     base: String, hconf: SerializableConfiguration, sceneIdx: Int,
     sid: String, level: Int, axes: String, dtype: String,
@@ -518,8 +489,8 @@ object ZarrReader {
     * closure over [[ZarrDecodeParams]] scalars): fetch each chunk (or
     * locate the inner chunk inside its shard via the binary index),
     * decompress, de-interleave the sample band, crop edge padding.
-    * Runs inside both the facade's `mapPartitions` and the V2
-    * partition reader. */
+    * Runs inside each [[graft.plugins.DeferredRows]] unit of
+    * [[ZarrReader.v2ScanWork]]. */
   private[readers] def decodeKeys(p: ZarrDecodeParams)(
       it: Iterator[(Int, Int, Int, Int, Int)]): Iterator[PlaneRow] = {
     import p._

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.BioSpark
 import graft.core.PlaneRow
-import graft.plugins.{DeferredRows, DimBound, InlineRows, PlanePredicate, ScanWork}
+import graft.plugins.{DimBound, PlanePredicate, ScanWork}
 
 /** DataSource V2 face of the plugin registry — `spark.read
   * .format("bioio").load(path)` — the SURVEY §2.1 S5/S11 mechanism
@@ -42,10 +42,10 @@ import graft.plugins.{DeferredRows, DimBound, InlineRows, PlanePredicate, ScanWo
   *
   * Scale shape: planning reads only format METADATA (headers, IFD
   * chains, zarr manifests — KB-sized regardless of data size); pixels
-  * decode executor-side inside [[DeferredRows]] tasks for the
-  * distributed formats. Single-small-object formats (PNG, npy, MRC,
-  * tar samples, AVI) ride [[InlineRows]] planned at the driver — the
-  * cost shape their facade readers already have; their unit of 100 TB
+  * decode executor-side inside [[graft.plugins.DeferredRows]] tasks for
+  * the distributed formats. Single-small-object formats (PNG, npy, MRC,
+  * tar samples, AVI) ride [[graft.plugins.InlineRows]] planned at the
+  * driver — the cost shape their lazy planes have; their unit of 100 TB
   * parallelism is many FILES, which is exactly many V2 tables or a
   * tar-shard fleet. */
 class BioioDataSource extends TableProvider with DataSourceRegister {
@@ -211,11 +211,8 @@ private[sources] case class BioioReaderFactory(fields: Array[String],
 
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] = {
-    val it = partition.asInstanceOf[BioioInputPartition].work match {
-      case InlineRows(rows, _) => rows.iterator
-      case DeferredRows(_, thunk) => thunk()
-    }
-    val filtered = it.filter(pred.acceptsPlane)
+    val filtered = partition.asInstanceOf[BioioInputPartition].work.decode()
+      .filter(pred.acceptsPlane)
     new PartitionReader[InternalRow] {
       private var current: PlaneRow = _
       override def next(): Boolean =

@@ -1,7 +1,10 @@
 package graft.image
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.{BioSpark, SparkSpec}
 import graft.core._
+import graft.plugins.{BioReader, SceneMeta}
 import graft.readers.ArrayLikeReader
 
 /** Ports the reference's normalization/reshape/scene behavior
@@ -169,6 +172,56 @@ class BioImageSpec extends SparkSpec {
     assert(st.order == "ITCZYX")
     assert(st.array.shape == Seq(3, 1, 1, 1, 2, 2))
     assert(st.array(2, 0, 0, 0, 1, 1) == 211.0)
+  }
+
+  test("getStack reads every scene at the current level and restores " +
+      "the scene and level") {
+    val scenes = (0 until 2).map(i => NDArray.tabulate(Seq(2, 8, 6))(idx =>
+      i * 1000.0 + idx(0) * 100 + idx(1) * 10 + idx(2)))
+    val uri = java.nio.file.Files.createTempDirectory("graft-stack")
+      .toString + "/s.ome.tiff"
+    new BioImage(spark, ArrayLikeReader.multi(scenes, Seq(Some("ZYX"))))
+      .save(uri, None, Map("pyramidLevels" -> "2"))
+    val img = BioSpark.open(spark, uri)
+    val perScene = (0 until 2).map { i =>
+      img.setScene(i)
+      img.setResolutionLevel(1)
+      img.getImageData("ZYX")
+    }
+    assert(perScene.head.array.shape == Seq(2, 4, 3))
+    img.setScene(1)
+    img.setResolutionLevel(1)
+    val st = img.getStack("ZYX")
+    assert(st.order == "IZYX")
+    assert(st.array.shape == Seq(2, 2, 4, 3))
+    assert(st.array.data.toSeq == perScene.flatMap(_.array.data))
+    assert((img.currentSceneIndex, img.currentResolutionLevel) == ((1, 1)))
+  }
+
+  test("getStack raises on a scene without the current level and still " +
+      "restores the scene and level") {
+    val inner = ArrayLikeReader.multi(Seq(NDArray.zeros(Seq(2, 2)),
+      NDArray.zeros(Seq(2, 2))))
+    val reader = new BioReader {
+      def name: String = "LevelPerScene"
+      def supportedExtensions: Seq[String] = Seq.empty
+      def isSupportedImage(s: SparkSession, p: String): Boolean = false
+      def scenes: Seq[String] = inner.scenes
+      def sceneMeta(i: Int): SceneMeta = inner.sceneMeta(i)
+      def readDelayed(s: SparkSession, i: Int): DataFrame =
+        inner.readDelayed(s, i)
+      override def resolutionLevels(i: Int): Seq[Int] =
+        if (i == 1) Seq(0, 1) else Seq(0)
+      override def levelDims(i: Int, l: Int): Dimensions =
+        inner.levelDims(i, 0)
+    }
+    val img = new BioImage(spark, reader)
+    img.setScene(1)
+    img.setResolutionLevel(1)
+    val e = intercept[IndexOutOfBoundsException](img.getStack())
+    assert(e.getMessage.contains("scene 'Image:0'") &&
+      e.getMessage.contains("level 1"), e.getMessage)
+    assert((img.currentSceneIndex, img.currentResolutionLevel) == ((1, 1)))
   }
 
   test("coordinate slicing by physical units and channel names") {

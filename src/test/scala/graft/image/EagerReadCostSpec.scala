@@ -1,14 +1,12 @@
 package graft.image
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import graft.{BioSpark, SparkSpec}
 import graft.core.NDArray
-import graft.plugins.PlanePredicate
+import graft.plugins.{PlanePredicate, ScanWorkReader}
 import graft.writers.{OmeTiffWriter, TiffOptions}
 
 /** What an eager region read costs: the stored objects it plans (after
@@ -19,24 +17,8 @@ class EagerReadCostSpec extends SparkSpec {
   private def tmp(name: String): String =
     Files.createTempDirectory("graft-eager-cost").toString + "/" + name
 
-  /** Runs `body`, returning its result and the jobs and tasks it ran. */
-  private def counting[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    TestListenerBus.drain(sc)
-    val (jobs, tasks) = (new AtomicInteger, new AtomicInteger)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        tasks.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      TestListenerBus.drain(sc)
-      (out, jobs.get, tasks.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def counting[T](body: => T): (T, Int, Int) =
+    TestListenerBus.counting(spark.sparkContext)(body)
 
   /** T=2, C=2, Z=2 planes of 64x64, a distinct value per pixel. */
   private val Arr = NDArray.tabulate(Seq(2, 2, 2, 64, 64))(ix =>
@@ -77,7 +59,7 @@ class EagerReadCostSpec extends SparkSpec {
     val npy = tmp("c.npy")
     src.save(npy)
     for (img <- Seq(src, BioSpark.open(spark, npy))) {
-      assert(img.reader.exposesScanWork)
+      assert(img.reader.isInstanceOf[ScanWorkReader])
       val (got, jobs, tasks) = counting(img.getImageData("YX", Region))
       assert((jobs, tasks) == ((0, 0)))
       assertRegion(got)

@@ -2,17 +2,20 @@ package graft.image
 
 import java.nio.file.Files
 
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 
 import graft.{BioSpark, SparkSpec}
 import graft.core.NDArray
+import graft.plugins.PlanePredicate
 import graft.readers.ArrayLikeReader
 import graft.writers.{OmeTiffWriter, ParquetPlaneStore, TiffOptions}
 
 /** Pins the tile-paste stitch (`BioImage.stitchedPlanes`) to the pixel
   * path (`getImageData("YX")` per plane, which resolves overlap with
   * `min_by(v, m)` over exploded pixels) on generated mosaics, and pins the
-  * shape of the plans the stitch and the OME-TIFF segment read produce. */
+  * shape of the plans the stitch and the TIFF and Zarr lazy reads
+  * produce. */
 class StitchSpec extends SparkSpec {
 
   private def tmp(name: String): String =
@@ -128,6 +131,7 @@ class StitchSpec extends SparkSpec {
 
   test("plans: the stitch has no explode and at most one Exchange; the " +
       "OME-TIFF segment read has no round-robin shuffle") {
+    // the TIFF and Zarr lazy reads also run one task per unit of scan work
     for (img <- Seq(tiledTiff(Seq(2, 37, 42), "ZYX"),
         arrayMosaic(Seq(4, 3, 4), "MYX", Seq((2, 2), (0, 0), (0, 2), (2, 0))))) {
       val qe = img.stitchedPlanes.queryExecution
@@ -137,11 +141,24 @@ class StitchSpec extends SparkSpec {
       assert(!plan.contains("posexplode") && !plan.contains("Generate"), plan)
       assert("Exchange".r.findAllIn(plan).length <= 1, plan)
     }
-    val tiff = tiledTiff(Seq(2, 37, 42), "ZYX")
-    val read = tiff.reader.readDelayedAtLevel(spark, 0, 0)
-    val plan = read.queryExecution.executedPlan.toString
-    assert(!plan.contains("RoundRobinPartitioning"), plan)
-    assert(!plan.contains("Exchange"), plan)
-    assert(read.count() == 2 * 9)
+    val zarr = tmp("t.ome.zarr")
+    BioSpark.fromArray(spark, NDArray.tabulate(Seq(2, 37, 42))(_.sum.toDouble),
+      Some("ZYX")).save(zarr, None, Map("chunk" -> "16x16"))
+    for (img <- Seq(tiledTiff(Seq(2, 37, 42), "ZYX"),
+        BioSpark.open(spark, zarr))) withClue(s"${img.reader.name}: ") {
+      // 2 planes of a 3x3 grid of stored objects, in contiguous blocks
+      val work = img.reader.v2ScanWork(0, 0, PlanePredicate.All)
+      assert(work.map(_.objects).sum == 2 * 9)
+      assert(work.size == math.min(2 * 9,
+        spark.sparkContext.defaultParallelism) && work.size > 1)
+      val read = img.reader.readDelayedAtLevel(spark, 0, 0)
+      val plan = read.queryExecution.executedPlan.toString
+      assert(!plan.contains("RoundRobinPartitioning"), plan)
+      assert(!plan.contains("Exchange"), plan)
+      val (rows, jobs, tasks) =
+        TestListenerBus.counting(spark.sparkContext)(read.collect())
+      assert(rows.length == 2 * 9)
+      assert((jobs, tasks) == ((1, work.size)))
+    }
   }
 }

@@ -16,8 +16,12 @@ import org.apache.spark.sql.types._
   * Accumulation is sequential in index order, in double precision — the
   * same order as the zip_with formulation and DuckDB's
   * list_inner_product, so results are bit-compatible with the oracle.
-  * Zero-norm inputs yield NULL. Vector elements are assumed non-null
-  * (embedding columns); lengths are truncated to the shorter input.
+  * A zero denominator sqrt(|a|²)·sqrt(|b|²) yields NULL, as the
+  * zip_with form's division does: that is a zero-norm input, unless the
+  * other norm is NaN or infinite (0 * NaN and 0 * Inf are NaN, and so is
+  * the result). A NULL element among those read yields NULL, as in the
+  * zip_with form (DuckDB's list_inner_product raises on one); lengths
+  * are truncated to the shorter input.
   */
 final case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -42,6 +46,9 @@ final case class CosineSimilarity(left: Expression, right: Expression)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
+  private def containsNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -51,13 +58,14 @@ final case class CosineSimilarity(left: Expression, right: Expression)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
       val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    if (na == 0.0 || nb == 0.0) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
+    val den = math.sqrt(na) * math.sqrt(nb)
+    if (den == 0.0) null else dot / den
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -69,20 +77,31 @@ final case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
+      val hasNull = ctx.freshName("hasNull")
+      val den = ctx.freshName("den")
       def get(arr: String, idx: String, float: Boolean): String =
         if (float) s"(double) $arr.getFloat($idx)" else s"$arr.getDouble($idx)"
+      val nullChecks = Seq(a -> left, b -> right).collect {
+        case (arr, e) if containsNull(e) => s"$arr.isNullAt($i)"
+      }
+      val nullCheck =
+        if (nullChecks.isEmpty) ""
+        else s"if (${nullChecks.mkString(" || ")}) { $hasNull = true; break; }"
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
+         |boolean $hasNull = false;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $nullCheck
          |  double $xv = ${get(a, i, isFloat(left))};
          |  double $yv = ${get(b, i, isFloat(right))};
          |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
          |}
-         |if ($na == 0.0 || $nb == 0.0) {
+         |double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |if ($hasNull || $den == 0.0) {
          |  ${ev.isNull} = true;
          |} else {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |  ${ev.value} = $dot / $den;
          |}
        """.stripMargin
     })

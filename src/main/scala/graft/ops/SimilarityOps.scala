@@ -93,19 +93,16 @@ object SimilarityOps {
   /** Deterministic random-hyperplane bucket signature. Sign bit p of
     * vector v: sgn( Σ_d h(p,d)*v_d ), h in {-1,+1} from bit 7 of a cheap
     * integer mix of (p, d) — deterministic, engine-agnostic (pure int64
-    * arithmetic, identical in Spark and the SQL oracle). */
-  def lshBucket(emb: Column, nPlanes: Int): Column = {
-    def planeBit(p: Int): Column = {
-      val prods = zip_with(emb,
-        sequence(lit(0), size(emb) - 1),
-        (v, d) => v.cast("double") *
-          (shiftright(d * 2654435761L + lit((p + 1) * 40503L) + d * lit(p * 97L), 7)
-            .bitwiseAND(lit(1L)) * 2 - 1).cast("double"))
-      when(aggregate(prods, lit(0.0), (a, x) => a + x) >= 0, lit(1)).otherwise(lit(0))
-    }
-    (0 until nPlanes).map(p => planeBit(p) * (1 << p))
-      .reduce(_ + _).cast("long")
-  }
+    * arithmetic, identical in Spark and the SQL oracle). Computed by the
+    * codegen'd [[graft.functions.LshBucket]], which states the exact
+    * semantics: one index-order double fold per plane, NaN and -0.0 count
+    * as >= 0, and a NULL or empty vector, or one with a NULL element, has
+    * signature 0. `nPlanes` is 1..30. One divergence from the oracle's
+    * `bucketSql` that the corpus (no NULL elements) never reaches:
+    * DuckDB's `list_sum` skips NULL elements (`[1, NULL]` sums to 1.0),
+    * while this gives 0. */
+  def lshBucket(emb: Column, nPlanes: Int): Column =
+    graft.functions.LshBucket(emb, nPlanes)
 
   /** The bucket expression in DuckDB form (over `emb` DOUBLE[]). */
   private def bucketSql(nPlanes: Int): String =

@@ -47,8 +47,9 @@ class RegistrySpec extends SparkSpec {
       failConstruct.foreach(msg => throw new RuntimeException(msg))
       if (needAnon && !kwargs.get("anon").contains("true"))
         throw new RuntimeException("AccessDenied: anonymous access required")
+      val pluginName = name
       new BioReader {
-        def name: String = name
+        def name: String = pluginName
         def supportedExtensions: Seq[String] = exts
         def isSupportedImage(s: SparkSession, p: String): Boolean = supported
         def scenes: Seq[String] = Seq("Image:0")
@@ -104,8 +105,9 @@ class RegistrySpec extends SparkSpec {
       mockPlugin("says-no", Seq(".ome.tiff", ".tiff"), supported = false),
       mockPlugin("says-yes", Seq(".tiff", ".png", ".jpg")),
     ))
-    val (entry, _) = reg.determinePlugin(spark, "/x/img.ome.tiff")
+    val (entry, reader) = reg.determinePlugin(spark, "/x/img.ome.tiff")
     assert(entry.name == "says-yes")
+    assert(reader.name == "says-yes")
   }
 
   test("total failure aggregates probe errors into the message") {

@@ -33,7 +33,14 @@ import org.apache.spark.sql.DataFrame
   * overflowed the harness's ~2000-char stdout-tail window): diagnostics
   * print BEFORE the summary, a compact always-fits line is the LAST line
   * of stdout, and the full per-query record is persisted to
-  * BENCH_SELF.json.
+  * BENCH_SELF_<n>c.json, named after the core count so sweeps at
+  * different core counts keep separate records. The record is rewritten
+  * after every entry, outside the timed window, so a killed sweep still
+  * leaves the entries it completed (marked `truncated_after`).
+  *
+  * Scratch state: each entry's key runs open [[ops.Scratch]] scopes;
+  * they are released once per entry, after its median-of-3 and outside
+  * the timed window.
   */
 object Bench {
 
@@ -66,7 +73,7 @@ object Bench {
     * few hundred bytes, so whatever window the harness keeps, the final
     * line of stdout is complete, parseable JSON carrying the headline
     * numbers. The full per-query record stays available twice over: the
-    * summary line directly above, and the BENCH_SELF.json file artifact. */
+    * summary line directly above, and the BENCH_SELF_<n>c.json file. */
   def compactLine(total: Double, n: Int, canary: Double, sfDir: String,
                   truncatedAfter: Option[String]): String = {
     val truncField = truncatedAfter
@@ -158,6 +165,17 @@ object Bench {
     // JVM-wide warm-up before any per-query timing
     try materialize(SparkEntry.queries("q20_distinct")(spark, sfDir))
     catch { case _: Throwable => () }
+    finally ops.Scratch.release(spark)
+
+    // File artifact: the per-query record, immune to any stdout window.
+    // Best-effort — a read-only cwd must not fail the sweep.
+    val selfRecord = s"BENCH_SELF_${GraftSession.cpus}c.json"
+    def writeSelf(lines: String*): Unit =
+      try {
+        val w = new java.io.PrintWriter(selfRecord, "UTF-8")
+        try lines.foreach(w.println) finally w.close()
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $selfRecord write failed: $e") }
 
     // Natural-numeric order (b01…b38, q01…q108…), not lexicographic:
     // lexicographic runs q100+ between q10 and q11, which (a) hides the
@@ -277,6 +295,8 @@ object Bench {
           t = math.min(t, isolated)
         }
       }
+      // the entry's scratch views, catalog confs and /tmp dirs
+      ops.Scratch.release(spark)
       // defense-in-depth between entries: no query may hand its cache
       // debt to the next one (the r9 q101→q40/q52/q53 incident). Queries
       // release their own stages; this catches anything that slips.
@@ -285,6 +305,7 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       results += (name -> t)
       println(entryLine(name, t))
+      writeSelf(summaryLine(results.toSeq, sfDir, Some(name)))
       if (sweepElapsed() > budgetS && it.hasNext)
         truncatedAfter = Some(name)
     }
@@ -311,8 +332,8 @@ object Bench {
     //   1. watch/diagnostics line (canaries, GC, reruns) FIRST,
     //   2. the canonical full summary line (the declared contract line),
     //   3. a compact final line that ALWAYS fits the tail window.
-    // The full record is also persisted to BENCH_SELF.json so stdout
-    // truncation can never again destroy the per-query data.
+    // The full record is also persisted to the self-record file so
+    // stdout truncation can never again destroy the per-query data.
     val watchKeys = Seq("q17_window_range", "q40_minhash_lsh",
       "q52_dedup_clusters", "q53_kmeans_centroids", "q76_pagerank",
       "q93_bloom_prune", "q101_prefix_join", "q135_cdc_chunks")
@@ -334,13 +355,7 @@ object Bench {
         f""""end":$ioEnd%.3f},"canary":$canary%.3f$ratioField,""" +
         f""""total":$total%.3f}"""
     val summary = summaryLine(results.toSeq, sfDir, truncatedAfter)
-    // File artifact: full summary + diagnostics, immune to any stdout
-    // window. Best-effort — a read-only cwd must not fail the sweep.
-    try {
-      val w = new java.io.PrintWriter("BENCH_SELF.json", "UTF-8")
-      try { w.println(summary); w.println(watchLine) } finally w.close()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_SELF.json write failed: $e") }
+    writeSelf(summary, watchLine)
     println(watchLine)
     println(summary)
     println(compactLine(total, results.size, canary, sfDir, truncatedAfter))

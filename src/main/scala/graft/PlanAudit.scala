@@ -25,7 +25,7 @@ object PlanAudit {
             s"bnlj=${n("BroadcastNestedLoopJoin")}")
         } catch {
           case e: Throwable => println(s"$name  FAILED: ${e.getMessage}")
-        }
+        } finally ops.Scratch.release(spark)
       }
     spark.stop()
   }

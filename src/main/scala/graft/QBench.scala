@@ -28,6 +28,7 @@ object QBench {
         if (once) run()
         else { run(); Seq.fill(3)(run()).sorted.apply(1) }
       println(f"[qbench] $name $sec%.2f s")
+      ops.Scratch.release(spark)
     }
     spark.stop()
   }

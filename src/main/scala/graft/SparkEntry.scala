@@ -4,17 +4,26 @@ import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{BioQueries, DedupOps, EventOps, GraphOps, Relational, SimilarityOps, TextOps}
+import graft.ops.{BioQueries, DedupOps, EventOps, GraphOps, Key, Relational, SimilarityOps, TextOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
+  *
+  * The registry: each operator family declares its keys once, as
+  * `val keys: ListMap[String, Key]`, where a [[graft.ops.Key]] pairs the
+  * build with its oracle, so no key exists without one. `queries` and
+  * `oracleSql` are projections of the seven registries concatenated;
+  * the family key sets are disjoint (`KeyRegistrySpec` pins that).
   *
   * `queries` is the declared operator inventory (SURVEY.md §2): each entry
   * is one operator exercised over the driver's star schema; `oracleSql`
   * carries the DuckDB-equivalent SQL with identical column names for the
-  * hash-match correctness gate. Every query has an oracle: hash-dependent
-  * operators (MinHash/SimHash/HLL) use engine-agnostic integer hashing
-  * (see graft.functions.PolyHashMod) or emit in-engine-verified bounds so
+  * hash-match correctness gate. Hash-dependent operators
+  * (MinHash/SimHash/HLL) use engine-agnostic integer hashing (see
+  * graft.functions.PolyHashMod) or emit in-engine-verified bounds so
   * DuckDB reproduces them exactly.
+  *
+  * A key run may open [[graft.ops.Scratch]] scopes; whoever materializes
+  * a result calls `Scratch.release` afterwards.
   */
 object SparkEntry {
 
@@ -22,17 +31,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ListMap.empty[String, (SparkSession, String) => DataFrame] ++
-      Relational.all ++ EventOps.all ++ TextOps.all ++
-      SimilarityOps.all ++ DedupOps.all ++ GraphOps.all ++ BioQueries.all
+  /** The seven family registries. */
+  lazy val families: Seq[ListMap[String, Key]] = Seq(Relational.keys,
+    EventOps.keys, TextOps.keys, SimilarityOps.keys, DedupOps.keys,
+    GraphOps.keys, BioQueries.keys)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ListMap.empty[String, String] ++
-      Relational.oracles ++ EventOps.oracles ++ TextOps.oracles ++
-      SimilarityOps.oracles ++ DedupOps.oracles ++ GraphOps.oracles ++
-      BioQueries.oracles
+  /** Every declared key, family by family. */
+  lazy val keys: ListMap[String, Key] = families.reduce(_ ++ _)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    keys.map { case (k, v) => k -> v.build }
+
+  lazy val oracleSql: Map[String, String] =
+    keys.map { case (k, v) => k -> v.oracle }
 }

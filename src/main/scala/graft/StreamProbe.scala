@@ -46,6 +46,7 @@ object StreamProbe {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      ops.Scratch.release(spark)
       val snap = trigs.synchronized(trigs.toList)
       println(s"[streamprobe] ===== $name wall=${f"$wall%.3f"} s, " +
         s"${snap.size} triggers =====")

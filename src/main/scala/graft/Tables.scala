@@ -68,9 +68,4 @@ object Tables {
         s"unexpected events.ts physical type: ${other.catalogString}")
     }
   }
-
-  /** Register every table as a temp view (for SQL-shaped operators:
-    * grouping sets, SQL entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

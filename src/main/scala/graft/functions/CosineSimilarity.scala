@@ -19,17 +19,18 @@ import org.apache.spark.sql.types._
   * A zero denominator sqrt(|a|²)·sqrt(|b|²) yields NULL, as the
   * zip_with form's division does: that is a zero-norm input, unless the
   * other norm is NaN or infinite (0 * NaN and 0 * Inf are NaN, and so is
-  * the result). A NULL element among those read yields NULL, as in the
-  * zip_with form (DuckDB's list_inner_product raises on one); lengths
-  * are truncated to the shorter input.
+  * the result). A NULL element yields NULL, and so do inputs of unequal
+  * length, as in the zip_with form, which pads the shorter input with
+  * NULLs (DuckDB's list_inner_product raises on either).
   */
 final case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  /** Nullable regardless of input nullability: zero-norm vectors yield
-    * NULL even when both inputs are non-null. */
+  /** Nullable regardless of input nullability: zero-norm vectors and
+    * vectors of unequal length yield NULL even when both inputs are
+    * non-null. */
   override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -54,7 +55,8 @@ final case class CosineSimilarity(left: Expression, right: Expression)
     val y = b.asInstanceOf[ArrayData]
     val lf = isFloat(left)
     val rf = isFloat(right)
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -77,7 +79,7 @@ final case class CosineSimilarity(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
-      val hasNull = ctx.freshName("hasNull")
+      val nullResult = ctx.freshName("nullResult")
       val den = ctx.freshName("den")
       def get(arr: String, idx: String, float: Boolean): String =
         if (float) s"(double) $arr.getFloat($idx)" else s"$arr.getDouble($idx)"
@@ -86,11 +88,11 @@ final case class CosineSimilarity(left: Expression, right: Expression)
       }
       val nullCheck =
         if (nullChecks.isEmpty) ""
-        else s"if (${nullChecks.mkString(" || ")}) { $hasNull = true; break; }"
+        else s"if (${nullChecks.mkString(" || ")}) { $nullResult = true; break; }"
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |boolean $nullResult = $a.numElements() != $b.numElements();
+         |int $n = $nullResult ? 0 : $a.numElements();
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |boolean $hasNull = false;
          |for (int $i = 0; $i < $n; $i++) {
          |  $nullCheck
          |  double $xv = ${get(a, i, isFloat(left))};
@@ -98,7 +100,7 @@ final case class CosineSimilarity(left: Expression, right: Expression)
          |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
          |}
          |double $den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |if ($hasNull || $den == 0.0) {
+         |if ($nullResult || $den == 0.0) {
          |  ${ev.isNull} = true;
          |} else {
          |  ${ev.value} = $dot / $den;

@@ -20,8 +20,6 @@ import graft.writers.ParquetPlaneStore
   * slicing, mosaic stitching, scene stacking and the parquet plane store.
   */
 object BioQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- b01
   /** M1/M2 OME id generation as Column expressions. */
   val b01OmeIds: Q = (spark, dir) =>
@@ -190,7 +188,7 @@ object BioQueries {
         i * 1000.0 + idx(0) * 100.0 + idx(1) * 10.0 + idx(2)))
     val img = new graft.image.BioImage(spark, ArrayLikeReader.multi(arrs))
     // unique per run — concurrent harness invocations must not collide
-    val uri = s"/tmp/graft_store_b09_${java.util.UUID.randomUUID()}.graft"
+    val uri = Scratch(spark, "b09").path("b09.graft")
     ParquetPlaneStore.save(img, uri)
     val back = BioSpark.open(spark, uri)
     back.setScene("Image:1")
@@ -241,7 +239,7 @@ object BioQueries {
       NDArray.tabulate(Seq(2, 3, 4))(idx =>
         i * 1000.0 + idx(0) * 100.0 + idx(1) * 10.0 + idx(2)))
     val img = new graft.image.BioImage(spark, ArrayLikeReader.multi(arrs))
-    val uri = s"/tmp/graft_b11_${java.util.UUID.randomUUID()}.ome.tiff"
+    val uri = Scratch(spark, "b11").path("b11.ome.tiff")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     back.setScene("Image:1")
@@ -269,7 +267,7 @@ object BioQueries {
     val img = new graft.image.BioImage(spark, ArrayLikeReader.multi(arrs,
       Seq(Some("CYX"), Some("YX")),
       Seq(Some(Seq("DAPI", "GFP")), None)))
-    val uri = s"/tmp/graft_b12_${java.util.UUID.randomUUID()}.ome.tiff"
+    val uri = Scratch(spark, "b12").path("b12.ome.tiff")
     img.save(uri, selectScenes = Some(Seq("Image:1", "Image:0")))
     val back = BioSpark.open(spark, uri)
     back.scenes.zipWithIndex.flatMap { case (sid, i) =>
@@ -303,7 +301,7 @@ object BioQueries {
   val b13PyramidLevel: Q = (spark, _) => {
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = s"/tmp/graft_b13_${java.util.UUID.randomUUID()}.graft"
+    val uri = Scratch(spark, "b13").path("b13.graft")
     ParquetPlaneStore.save(img, uri, levels = 2)
     val back = BioSpark.open(spark, uri)
     back.setResolutionLevel(1)
@@ -379,7 +377,7 @@ object BioQueries {
   val b16PngRoundtrip: Q = (spark, _) => {
     val arr = NDArray.tabulate(Seq(6, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = s"/tmp/graft_b16_${java.util.UUID.randomUUID()}.png"
+    val uri = Scratch(spark, "b16").path("b16.png")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     back.getImagePixels()
@@ -402,7 +400,7 @@ object BioQueries {
       NDArray.tabulate(Seq(2, 3, 4))(idx =>
         i * 1000.0 + idx(0) * 100.0 + idx(1) * 10.0 + idx(2)))
     val img = new graft.image.BioImage(spark, ArrayLikeReader.multi(arrs))
-    val uri = s"/tmp/graft_b17_${java.util.UUID.randomUUID()}.ome.zarr"
+    val uri = Scratch(spark, "b17").path("b17.ome.zarr")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     back.setScene("Image:1")
@@ -430,11 +428,11 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(2, 20, 24))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr) // ZYX
-    val run = java.util.UUID.randomUUID()
-    val uriD = s"/tmp/graft_b18_${run}_deflate.ome.tiff"
+    val scratch = Scratch(spark, "b18")
+    val uriD = scratch.path("deflate.ome.tiff")
     OmeTiffWriter.save(img, uriD, None,
       TiffOptions(compression = TiffFormat.CompressionDeflate))
-    val uriT = s"/tmp/graft_b18_${run}_lzw_tiled.ome.tiff"
+    val uriT = scratch.path("lzw_tiled.ome.tiff")
     OmeTiffWriter.save(img, uriT, None,
       TiffOptions(compression = TiffFormat.CompressionLZW,
         tile = Some((16, 16))))
@@ -464,15 +462,15 @@ object BioQueries {
     import graft.core.PixelType
     import graft.formats.ZarrFormat
     import graft.writers.ZarrWriter
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b19")
 
     val arr = NDArray.tabulate(Seq(2, 5, 7))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
-    val uriB = s"/tmp/graft_b19_${run}_blosc.ome.zarr"
+    val uriB = scratch.path("blosc.ome.zarr")
     ZarrWriter.save(BioSpark.fromArray(spark, arr), uriB, None,
       levels = 1, compressor = Some("blosc"))
 
-    val uriR = s"/tmp/graft_b19_${run}_ragged.zarr"
+    val uriR = scratch.path("ragged.zarr")
     Files.createDirectories(Paths.get(uriR, "0"))
     def put(rel: String, bytes: Array[Byte]): Unit =
       Files.write(Paths.get(uriR, rel), bytes)
@@ -511,16 +509,16 @@ object BioQueries {
     * strips) and as a trailing-S zarr store → both reopened; every band
     * pixel checked against the regenerating oracle. */
   val b20RgbRoundtrip: Q = (spark, _) => {
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b20")
     val arr = NDArray.tabulate(Seq(6, 8, 3))(idx =>
       (idx(0) * 25 + idx(1) * 3 + idx(2) * 7) % 256)
-    val png = s"/tmp/graft_b20_$run.png"
+    val png = scratch.path("b20.png")
     new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(arr), Seq(Some("YXS")), Seq(None))).save(png)
     val img8 = BioSpark.open(spark, png) // ImageIoReader, YXS uint8
-    val tiff = s"/tmp/graft_b20_$run.ome.tiff"
+    val tiff = scratch.path("b20.ome.tiff")
     img8.save(tiff)
-    val zarr = s"/tmp/graft_b20_$run.ome.zarr"
+    val zarr = scratch.path("b20.ome.zarr")
     img8.save(zarr)
     Seq(("tiff", tiff), ("zarr", zarr)).map { case (variant, uri) =>
       BioSpark.open(spark, uri).getImagePixels()
@@ -579,7 +577,7 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(6, 5, 5))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr) // ZYX
-    val uri = s"/tmp/graft_b22_${java.util.UUID.randomUUID()}.graft"
+    val uri = Scratch(spark, "b22").path("b22.graft")
     ParquetPlaneStore.save(img, uri)
     ParquetPlaneStore.pixelsInRange(spark, uri, 0, 0, 220.0, 410.0)
       .select(col("z").cast("long").as("z"), col("y").cast("long").as("y"),
@@ -640,7 +638,7 @@ object BioQueries {
   val b24TiffPyramid: Q = (spark, _) => {
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = s"/tmp/graft_b24_${java.util.UUID.randomUUID()}.ome.tiff"
+    val uri = Scratch(spark, "b24").path("b24.ome.tiff")
     graft.writers.OmeTiffWriter.save(img, uri, None,
       graft.writers.TiffOptions(pyramidLevels = 2))
     val back = BioSpark.open(spark, uri)
@@ -665,7 +663,7 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(4, 5, 6))(idx =>
       (idx(0) * 50 + idx(1) * 7 + idx(2)) % 256)
     val img = BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = s"/tmp/graft_b25_${java.util.UUID.randomUUID()}.gif"
+    val uri = Scratch(spark, "b25").path("b25.gif")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     back.getImagePixels()
@@ -691,17 +689,17 @@ object BioQueries {
     * fixtures behind the b19 family. */
   val b26ZarrV3Write: Q = (spark, _) => {
     import graft.writers.ZarrWriter
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b26")
     val arr = NDArray.tabulate(Seq(2, 5, 7))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr, Some("CYX"))
-    val uriP = s"/tmp/graft_b26_${run}_v3.ome.zarr"
+    val uriP = scratch.path("v3.ome.zarr")
     ZarrWriter.save(img, uriP, None, levels = 1,
       compressor = Some("gzip"), format = 3)
-    val uriS = s"/tmp/graft_b26_${run}_v3shard.ome.zarr"
+    val uriS = scratch.path("v3shard.ome.zarr")
     ZarrWriter.save(img, uriS, None, levels = 1, compressor = None,
       format = 3, shardInner = Some((4, 4)))
-    val uriC = s"/tmp/graft_b26_${run}_v3chunk.ome.zarr"
+    val uriC = scratch.path("v3chunk.ome.zarr")
     ZarrWriter.save(img, uriC, None, levels = 1, compressor = None,
       format = 3, shardInner = None, chunk = Some((4, 4)))
     Seq(("v3", uriP), ("v3_sharded", uriS), ("v3_chunked", uriC))
@@ -728,14 +726,14 @@ object BioQueries {
     * the regenerating oracle. JPEG (DCT-lossy) ships under the
     * decode-equality spec contract instead. */
   val b27BmpRoundtrip: Q = (spark, _) => {
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b27")
     val gray = NDArray.tabulate(Seq(5, 6))(idx =>
       (idx(0) * 40 + idx(1) * 7) % 256)
-    val uriG = s"/tmp/graft_b27_${run}_gray.bmp"
+    val uriG = scratch.path("gray.bmp")
     BioSpark.fromArray(spark, gray).save(uriG)
     val rgb = NDArray.tabulate(Seq(4, 5, 3))(idx =>
       (idx(0) * 50 + idx(1) * 11 + idx(2) * 3) % 256)
-    val uriR = s"/tmp/graft_b27_${run}_rgb.bmp"
+    val uriR = scratch.path("rgb.bmp")
     new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(rgb), Seq(Some("YXS")), Seq(None))).save(uriR)
     val g = BioSpark.open(spark, uriG).getImagePixels()
@@ -766,14 +764,14 @@ object BioQueries {
     * deflate pyramid OME-TIFF — re-opened through plugin resolution and
     * hash-checked against the regenerating oracle. */
   val b28SaveOptions: Q = (spark, _) => {
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b28")
     val arr = NDArray.tabulate(Seq(2, 6, 8))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr, Some("CYX"))
-    val uriZ = s"/tmp/graft_b28_${run}.ome.zarr"
+    val uriZ = scratch.path("b28.ome.zarr")
     img.save(uriZ, None, Map(
       "levels" -> "2", "compressor" -> "zstd", "shardInner" -> "4x4"))
-    val uriT = s"/tmp/graft_b28_${run}.ome.tiff"
+    val uriT = scratch.path("b28.ome.tiff")
     img.save(uriT, None, Map(
       "compression" -> "deflate", "tile" -> "16x16",
       "pyramidLevels" -> "2"))
@@ -927,14 +925,14 @@ object BioQueries {
     * feature stacks); cross-engine byte compatibility with numpy itself
     * is pinned in NpySpec. */
   val b32NpyRoundtrip: Q = (spark, _) => {
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b32")
     val zyx = NDArray.tabulate(Seq(2, 4, 5))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
-    val uriZ = s"/tmp/graft_b32_${run}_zyx.npy"
+    val uriZ = scratch.path("zyx.npy")
     BioSpark.fromArray(spark, zyx, Some("ZYX")).save(uriZ)
     val rgb = NDArray.tabulate(Seq(3, 4, 3))(idx =>
       idx(0) * 20.0 + idx(1) * 5.0 + idx(2))
-    val uriR = s"/tmp/graft_b32_${run}_yxs.npy"
+    val uriR = scratch.path("yxs.npy")
     new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(rgb), Seq(Some("YXS")), Seq(None))).save(uriR)
     val z = BioSpark.open(spark, uriZ).getImagePixels()
@@ -1243,14 +1241,14 @@ object BioQueries {
     * conformance to the published spec (both byte orders, all four
     * modes, extended-header skip) is pinned in MrcSpec. */
   val b36MrcRoundtrip: Q = (spark, _) => {
-    val run = java.util.UUID.randomUUID()
+    val scratch = Scratch(spark, "b36")
     val vol = NDArray.tabulate(Seq(2, 4, 5))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
-    val uriV = s"/tmp/graft_b36_${run}_vol.mrc"
+    val uriV = scratch.path("vol.mrc")
     BioSpark.fromArray(spark, vol, Some("ZYX")).save(uriV)
     val stack = NDArray.tabulate(Seq(3, 2, 4))(idx =>
       idx(0) * 50.0 + idx(1) * 8.0 + idx(2))
-    val uriS = s"/tmp/graft_b36_${run}_stack.mrc"
+    val uriS = scratch.path("stack.mrc")
     BioSpark.fromArray(spark, stack, Some("TYX")).save(uriS)
     val v = BioSpark.open(spark, uriV).getImagePixels()
       .select(lit("vol").as("variant"), lit(0L).as("t"),
@@ -1391,7 +1389,7 @@ object BioQueries {
     val img = new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(a, b), Seq(Some("YX"), Some("ZYX")),
         Seq(None, None)))
-    val uri = s"/tmp/graft_b35_${java.util.UUID.randomUUID()}.npz"
+    val uri = Scratch(spark, "b35").path("b35.npz")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     Seq(("Image:0", 0L), ("Image:1", 1L)).map { case (id, tag) =>
@@ -1578,7 +1576,7 @@ object BioQueries {
       ((idx(0) * 7 + idx(1) * 5 + idx(2) * 13) % 251).toDouble)
     val img = new graft.image.BioImage(spark, ArrayLikeReader.multi(
       Seq(gray, rgb), dimOrders = Seq(Some("YX"), Some("YXS"))))
-    val uri = s"/tmp/graft_b44_${java.util.UUID.randomUUID()}.tar"
+    val uri = Scratch(spark, "b44").path("b44.tar")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     val metaRows = back.scenes.zipWithIndex.map { case (key, i) =>
@@ -1632,7 +1630,7 @@ object BioQueries {
       ((idx(0) * 31 + idx(1) * 17 + idx(2) * 5 + idx(3) * 3) % 251)
         .toDouble)
     val img = BioSpark.fromArray(spark, arr, Some("CZYX"))
-    val dir = s"/tmp/graft_b45_${java.util.UUID.randomUUID()}"
+    val dir = Scratch(spark, "b45").path("data")
     graft.writers.ShardedTarSink.write(img.planes, dir, 2)
     val shards = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".tar")).map(_.getAbsolutePath).sorted
@@ -1675,7 +1673,7 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(4, 5, 6))(idx =>
       ((idx(0) * 47 + idx(1) * 9 + idx(2) * 2) % 256).toDouble)
     val img = BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = s"/tmp/graft_b46_${java.util.UUID.randomUUID()}.avi"
+    val uri = Scratch(spark, "b46").path("b46.avi")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     back.getImagePixels()
@@ -1705,7 +1703,7 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(nt, h, w))(idx =>
       ((idx(0) * idx(0) * 7 + idx(1) * 5 + idx(2) * 3) % 29).toDouble)
     val img = BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = s"/tmp/graft_b47_${java.util.UUID.randomUUID()}.avi"
+    val uri = Scratch(spark, "b47").path("b47.avi")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     val win = Window.orderBy(col("t"))
@@ -1803,7 +1801,7 @@ object BioQueries {
     val arr = NDArray.tabulate(Seq(4, 2, 8, 8))(idx =>
       idx(0) * 1000.0 + idx(1) * 100.0 + idx(2) * 10.0 + idx(3))
     val img = BioSpark.fromArray(spark, arr, Some("TCYX"))
-    val uri = s"/tmp/graft_b49_${java.util.UUID.randomUUID()}.ome.zarr"
+    val uri = Scratch(spark, "b49").path("b49.ome.zarr")
     img.save(uri, None, Map("chunk" -> "4x4"))
     spark.read.format("bioio").load(uri)
       .filter(col("t").isin(1, 2) && col("c") === 1)
@@ -1847,7 +1845,7 @@ object BioQueries {
       .select(col("z").cast("long").as("z"),
         col("y").cast("long").as("y"),
         col("x").cast("long").as("x"), col("v"))
-    val dir = s"/tmp/graft_b50_${java.util.UUID.randomUUID()}"
+    val dir = Scratch(spark, "b50").path("data")
     VersionedTable.commit(spark, px, dir, carryForward = false) // v0
     VersionedTable.commit(spark,                                 // v1
       px.withColumn("v", col("v") + 10.0d), dir, carryForward = false,
@@ -1871,109 +1869,56 @@ object BioQueries {
       |  FROM range(2) a(z), range(3) b(y), range(4) c(x)
       |) ORDER BY snapshot, z, y, x""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "b01_ome_ids" -> b01OmeIds,
-    "b02_dim_guess" -> b02DimGuess,
-    "b03_arraylike_normalize" -> b03ArraylikeNormalize,
-    "b04_reshape_select" -> b04ReshapeSelect,
-    "b05_mosaic_stitch" -> b05MosaicStitch,
-    "b06_scene_stack" -> b06SceneStack,
-    "b07_pixeltype_map" -> b07PixelTypeMap,
-    "b08_plugin_order" -> b08PluginOrder,
-    "b09_store_roundtrip" -> b09StoreRoundtrip,
-    "b10_channel_names" -> b10ChannelNames,
-    "b11_ometiff_read" -> b11OmetiffRead,
-    "b12_ometiff_roundtrip" -> b12OmetiffRoundtrip,
-    "b13_pyramid_level" -> b13PyramidLevel,
-    "b14_coord_slice" -> b14CoordSlice,
-    "b15_plane_stats" -> b15PlaneStats,
-    "b16_png_roundtrip" -> b16PngRoundtrip,
-    "b17_zarr_roundtrip" -> b17ZarrRoundtrip,
-    "b18_compressed_tiff" -> b18CompressedTiff,
-    "b19_zarr_blosc_ragged" -> b19ZarrBloscRagged,
-    "b20_rgb_roundtrip" -> b20RgbRoundtrip,
-    "b21_frame_pipeline" -> b21FramePipeline,
-    "b22_store_value_scan" -> b22StoreValueScan,
-    "b23_audio_frames" -> b23AudioFrames,
-    "b24_tiff_pyramid" -> b24TiffPyramid,
-    "b25_gif_timeseries" -> b25GifTimeseries,
-    "b26_zarr_v3_write" -> b26ZarrV3Write,
-    "b27_bmp_roundtrip" -> b27BmpRoundtrip,
-    "b28_save_options" -> b28SaveOptions,
-    "b29_plane_normalize" -> b29PlaneNormalize,
-    "b30_plane_histogram" -> b30PlaneHistogram,
-    "b31_sobel_edges" -> b31SobelEdges,
-    "b32_npy_roundtrip" -> b32NpyRoundtrip,
-    "b33_mask_rle" -> b33MaskRle,
-    "b34_patchify" -> b34Patchify,
-    "b35_npz_roundtrip" -> b35NpzRoundtrip,
-    "b36_mrc_roundtrip" -> b36MrcRoundtrip,
-    "b37_augment" -> b37Augment,
-    "b38_zprojection" -> b38ZProjection,
-    "b39_patch_embed" -> b39PatchEmbed,
-    "b40_motion_energy" -> b40MotionEnergy,
-    "b41_percentile_stretch" -> b41PercentileStretch,
-    "b42_perceptual_hash" -> b42PerceptualHash,
-    "b43_haar_energy" -> b43HaarEnergy,
-    "b44_tar_shard" -> b44TarShard,
-    "b45_sharded_export" -> b45ShardedExport,
-    "b46_avi_timeseries" -> b46AviTimeseries,
-    "b47_avi_motion" -> b47AviMotion,
-    "b48_bilinear_resize" -> b48BilinearResize,
-    "b49_v2_source" -> b49V2Source,
-    "b50_versioned_planes" -> b50VersionedPlanes,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "b01_ome_ids" -> b01Oracle,
-    "b02_dim_guess" -> b02Oracle,
-    "b03_arraylike_normalize" -> b03Oracle,
-    "b04_reshape_select" -> b04Oracle,
-    "b05_mosaic_stitch" -> b05Oracle,
-    "b06_scene_stack" -> b06Oracle,
-    "b07_pixeltype_map" -> b07Oracle,
-    "b08_plugin_order" -> b08Oracle,
-    "b09_store_roundtrip" -> b09Oracle,
-    "b10_channel_names" -> b10Oracle,
-    "b11_ometiff_read" -> b11Oracle,
-    "b12_ometiff_roundtrip" -> b12Oracle,
-    "b13_pyramid_level" -> b13Oracle,
-    "b14_coord_slice" -> b14Oracle,
-    "b15_plane_stats" -> b15Oracle,
-    "b16_png_roundtrip" -> b16Oracle,
-    "b17_zarr_roundtrip" -> b17Oracle,
-    "b18_compressed_tiff" -> b18Oracle,
-    "b19_zarr_blosc_ragged" -> b19Oracle,
-    "b20_rgb_roundtrip" -> b20Oracle,
-    "b21_frame_pipeline" -> b21Oracle,
-    "b22_store_value_scan" -> b22Oracle,
-    "b23_audio_frames" -> b23Oracle,
-    "b24_tiff_pyramid" -> b24Oracle,
-    "b25_gif_timeseries" -> b25Oracle,
-    "b26_zarr_v3_write" -> b26Oracle,
-    "b27_bmp_roundtrip" -> b27Oracle,
-    "b28_save_options" -> b28Oracle,
-    "b29_plane_normalize" -> b29Oracle,
-    "b30_plane_histogram" -> b30Oracle,
-    "b31_sobel_edges" -> b31Oracle,
-    "b32_npy_roundtrip" -> b32Oracle,
-    "b33_mask_rle" -> b33Oracle,
-    "b34_patchify" -> b34Oracle,
-    "b35_npz_roundtrip" -> b35Oracle,
-    "b36_mrc_roundtrip" -> b36Oracle,
-    "b37_augment" -> b37Oracle,
-    "b38_zprojection" -> b38Oracle,
-    "b39_patch_embed" -> b39Oracle,
-    "b40_motion_energy" -> b40Oracle,
-    "b41_percentile_stretch" -> b41Oracle,
-    "b42_perceptual_hash" -> b42Oracle,
-    "b43_haar_energy" -> b43Oracle,
-    "b44_tar_shard" -> b44Oracle,
-    "b45_sharded_export" -> b45Oracle,
-    "b46_avi_timeseries" -> b46Oracle,
-    "b47_avi_motion" -> b47Oracle,
-    "b48_bilinear_resize" -> b48Oracle,
-    "b49_v2_source" -> b49Oracle,
-    "b50_versioned_planes" -> b50Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "b01_ome_ids" -> Key(b01OmeIds, b01Oracle),
+    "b02_dim_guess" -> Key(b02DimGuess, b02Oracle),
+    "b03_arraylike_normalize" -> Key(b03ArraylikeNormalize, b03Oracle),
+    "b04_reshape_select" -> Key(b04ReshapeSelect, b04Oracle),
+    "b05_mosaic_stitch" -> Key(b05MosaicStitch, b05Oracle),
+    "b06_scene_stack" -> Key(b06SceneStack, b06Oracle),
+    "b07_pixeltype_map" -> Key(b07PixelTypeMap, b07Oracle),
+    "b08_plugin_order" -> Key(b08PluginOrder, b08Oracle),
+    "b09_store_roundtrip" -> Key(b09StoreRoundtrip, b09Oracle),
+    "b10_channel_names" -> Key(b10ChannelNames, b10Oracle),
+    "b11_ometiff_read" -> Key(b11OmetiffRead, b11Oracle),
+    "b12_ometiff_roundtrip" -> Key(b12OmetiffRoundtrip, b12Oracle),
+    "b13_pyramid_level" -> Key(b13PyramidLevel, b13Oracle),
+    "b14_coord_slice" -> Key(b14CoordSlice, b14Oracle),
+    "b15_plane_stats" -> Key(b15PlaneStats, b15Oracle),
+    "b16_png_roundtrip" -> Key(b16PngRoundtrip, b16Oracle),
+    "b17_zarr_roundtrip" -> Key(b17ZarrRoundtrip, b17Oracle),
+    "b18_compressed_tiff" -> Key(b18CompressedTiff, b18Oracle),
+    "b19_zarr_blosc_ragged" -> Key(b19ZarrBloscRagged, b19Oracle),
+    "b20_rgb_roundtrip" -> Key(b20RgbRoundtrip, b20Oracle),
+    "b21_frame_pipeline" -> Key(b21FramePipeline, b21Oracle),
+    "b22_store_value_scan" -> Key(b22StoreValueScan, b22Oracle),
+    "b23_audio_frames" -> Key(b23AudioFrames, b23Oracle),
+    "b24_tiff_pyramid" -> Key(b24TiffPyramid, b24Oracle),
+    "b25_gif_timeseries" -> Key(b25GifTimeseries, b25Oracle),
+    "b26_zarr_v3_write" -> Key(b26ZarrV3Write, b26Oracle),
+    "b27_bmp_roundtrip" -> Key(b27BmpRoundtrip, b27Oracle),
+    "b28_save_options" -> Key(b28SaveOptions, b28Oracle),
+    "b29_plane_normalize" -> Key(b29PlaneNormalize, b29Oracle),
+    "b30_plane_histogram" -> Key(b30PlaneHistogram, b30Oracle),
+    "b31_sobel_edges" -> Key(b31SobelEdges, b31Oracle),
+    "b32_npy_roundtrip" -> Key(b32NpyRoundtrip, b32Oracle),
+    "b33_mask_rle" -> Key(b33MaskRle, b33Oracle),
+    "b34_patchify" -> Key(b34Patchify, b34Oracle),
+    "b35_npz_roundtrip" -> Key(b35NpzRoundtrip, b35Oracle),
+    "b36_mrc_roundtrip" -> Key(b36MrcRoundtrip, b36Oracle),
+    "b37_augment" -> Key(b37Augment, b37Oracle),
+    "b38_zprojection" -> Key(b38ZProjection, b38Oracle),
+    "b39_patch_embed" -> Key(b39PatchEmbed, b39Oracle),
+    "b40_motion_energy" -> Key(b40MotionEnergy, b40Oracle),
+    "b41_percentile_stretch" -> Key(b41PercentileStretch, b41Oracle),
+    "b42_perceptual_hash" -> Key(b42PerceptualHash, b42Oracle),
+    "b43_haar_energy" -> Key(b43HaarEnergy, b43Oracle),
+    "b44_tar_shard" -> Key(b44TarShard, b44Oracle),
+    "b45_sharded_export" -> Key(b45ShardedExport, b45Oracle),
+    "b46_avi_timeseries" -> Key(b46AviTimeseries, b46Oracle),
+    "b47_avi_motion" -> Key(b47AviMotion, b47Oracle),
+    "b48_bilinear_resize" -> Key(b48BilinearResize, b48Oracle),
+    "b49_v2_source" -> Key(b49V2Source, b49Oracle),
+    "b50_versioned_planes" -> Key(b50VersionedPlanes, b50Oracle),
   )
 }

@@ -22,8 +22,6 @@ import graft.Tables
   * hard oracle-checked, not just spec-pinned.
   */
 object DedupOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private val words: Column = split(col("text"), " ")
 
   /** Distinct word 3-gram shingles of `text` — the native single-pass
@@ -1193,8 +1191,7 @@ object DedupOps {
     val verified = anchors.join(corpStore, Seq("h", "gram"), "left_semi")
     val agg = verified.groupBy(col("doc_id"))
       .agg(max(col("n")).as("n"), collect_list(col("pos")).as("ps"))
-    val name = "q174_mem_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q174").name("q174_mem")
     val drained = StreamOps.runToMemory(spark, agg, name,
       outputMode = "complete")
     val out = drained
@@ -1299,41 +1296,22 @@ object DedupOps {
       |   / CAST(max(n) AS DOUBLE) AS contamination_ratio
       |FROM cov GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q39_jaccard_pairs" -> q39JaccardPairs,
-    "q40_minhash_lsh" -> q40MinHashLsh,
-    "q41_simhash" -> q41SimHash,
-    "q52_dedup_clusters" -> q52DedupClusters,
-    "q68_edit_verify" -> q68EditVerify,
-    "q70_decontaminate" -> q70Decontaminate,
-    "q75_cluster_keep" -> q75ClusterKeep,
-    "q78_source_overlap" -> q78SourceOverlap,
-    "q85_minhash_estimate" -> q85MinhashEstimate,
-    "q95_incremental_dedup" -> q95IncrementalDedup,
-    "q101_prefix_join" -> q101PrefixJoin,
-    "q157_exact_substr" -> q157ExactSubstr,
-    "q161_exact_substr_remove" -> q161ExactSubstrRemove,
-    "q171_incremental_substr" -> q171IncrementalSubstr,
-    "q172_source_span_matrix" -> q172SourceSpanMatrix,
-    "q174_stream_substr" -> q174StreamSubstr,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q39_jaccard_pairs" -> q39Oracle,
-    "q40_minhash_lsh" -> q40Oracle,
-    "q41_simhash" -> q41Oracle,
-    "q52_dedup_clusters" -> q52Oracle,
-    "q68_edit_verify" -> q68Oracle,
-    "q70_decontaminate" -> q70Oracle,
-    "q75_cluster_keep" -> q75Oracle,
-    "q78_source_overlap" -> q78Oracle,
-    "q85_minhash_estimate" -> q85Oracle,
-    "q95_incremental_dedup" -> q95Oracle,
-    "q101_prefix_join" -> q101Oracle,
-    "q157_exact_substr" -> q157Oracle,
-    "q161_exact_substr_remove" -> q161Oracle,
-    "q171_incremental_substr" -> q171Oracle,
-    "q172_source_span_matrix" -> q172Oracle,
-    "q174_stream_substr" -> q174Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q39_jaccard_pairs" -> Key(q39JaccardPairs, q39Oracle),
+    "q40_minhash_lsh" -> Key(q40MinHashLsh, q40Oracle),
+    "q41_simhash" -> Key(q41SimHash, q41Oracle),
+    "q52_dedup_clusters" -> Key(q52DedupClusters, q52Oracle),
+    "q68_edit_verify" -> Key(q68EditVerify, q68Oracle),
+    "q70_decontaminate" -> Key(q70Decontaminate, q70Oracle),
+    "q75_cluster_keep" -> Key(q75ClusterKeep, q75Oracle),
+    "q78_source_overlap" -> Key(q78SourceOverlap, q78Oracle),
+    "q85_minhash_estimate" -> Key(q85MinhashEstimate, q85Oracle),
+    "q95_incremental_dedup" -> Key(q95IncrementalDedup, q95Oracle),
+    "q101_prefix_join" -> Key(q101PrefixJoin, q101Oracle),
+    "q157_exact_substr" -> Key(q157ExactSubstr, q157Oracle),
+    "q161_exact_substr_remove" -> Key(q161ExactSubstrRemove, q161Oracle),
+    "q171_incremental_substr" -> Key(q171IncrementalSubstr, q171Oracle),
+    "q172_source_span_matrix" -> Key(q172SourceSpanMatrix, q172Oracle),
+    "q174_stream_substr" -> Key(q174StreamSubstr, q174Oracle),
   )
 }

@@ -18,8 +18,6 @@ import graft.Tables
   * All window math is integer arithmetic, so results are hash-exact.
   */
 object EventOps {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q24
   /** JSON path extraction over the props column + aggregate. */
   val q24Json: Q = (spark, dir) =>
@@ -140,7 +138,7 @@ object EventOps {
     * aggregation. */
   val q42StreamTumbling: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q42_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q42").name("q42_mem")
     val res = StreamOps.runToMemory(spark,
       StreamOps.tumblingCounts(StreamOps.readEvents(spark, dir)), name)
     res.select(
@@ -167,7 +165,7 @@ object EventOps {
     * finalization logic to batch sessionization at µs precision. */
   val q45StreamSession: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q45_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q45").name("q45_mem")
     StreamOps.runToMemory(spark,
       StreamOps.sessionWindows(StreamOps.readEvents(spark, dir)), name)
       .select(col("user_id"), col("session_start"), col("n_events"))
@@ -200,7 +198,7 @@ object EventOps {
     * applies the same finalization predicate. */
   val q46StreamSliding: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q46_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q46").name("q46_mem")
     StreamOps.runToMemory(spark,
       StreamOps.slidingCounts(StreamOps.readEvents(spark, dir)), name)
       .select(unix_timestamp(col("window_start")).as("window_start"),
@@ -227,7 +225,7 @@ object EventOps {
     * at µs precision. */
   val q47StreamDedup: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q47_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q47").name("q47_mem")
     StreamOps.runToMemory(spark,
       StreamOps.dedupKeysWithinWatermark(StreamOps.readEvents(spark, dir)),
       name)
@@ -250,7 +248,7 @@ object EventOps {
     * which the oracle runs directly at µs precision. */
   val q56StreamJoin: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q56_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q56").name("q56_mem")
     StreamOps.runToMemory(spark,
       StreamOps.clickPurchaseJoin(StreamOps.readEvents(spark, dir)), name)
       .select(col("user_id"), col("click_id"), col("purch_id"),
@@ -281,7 +279,7 @@ object EventOps {
     * (int64 cents — exact, order-independent). */
   val q58FunnelState: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q58_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q58").name("q58_mem")
     StreamOps.runToMemory(spark,
       StreamOps.conversionFunnel(spark, StreamOps.readEvents(spark, dir)),
       name)
@@ -310,7 +308,7 @@ object EventOps {
     * APIs must agree bit-for-bit. */
   val q67FunnelTws: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q67_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q67").name("q67_mem")
     StreamOps.runToMemory(spark,
       StreamOps.funnelTws(spark, StreamOps.readEvents(spark, dir)),
       name, stateStoreProvider = Some(StreamOps.RocksDBProvider))
@@ -328,8 +326,7 @@ object EventOps {
     * which must equal the batch groupBy — the oracle. */
   val q150TwsMapState: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q150_mem_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q150").name("q150_mem")
     StreamOps.runToMemory(spark,
       StreamOps.typeCountsTws(spark, StreamOps.readEvents(spark, dir)),
       name, stateStoreProvider = Some(StreamOps.RocksDBProvider))
@@ -359,8 +356,7 @@ object EventOps {
     * oracle. */
   val q152TwsListState: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q152_mem_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q152").name("q152_mem")
     StreamOps.runToMemory(spark,
       StreamOps.recentListTws(spark, StreamOps.readEvents(spark, dir)),
       name, stateStoreProvider = Some(StreamOps.RocksDBProvider))
@@ -463,7 +459,7 @@ object EventOps {
     * one-boundary-row off at scale. */
   val q87StreamOuterJoin: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q87_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q87").name("q87_mem")
     StreamOps.runToMemory(spark,
       StreamOps.clickPurchaseLeftJoin(StreamOps.readEvents(spark, dir)), name)
       .select(col("user_id"), col("click_id"), col("click_s"),
@@ -692,7 +688,7 @@ object EventOps {
     * watermark cutoff to the joined batch equivalent. */
   val q117StreamStatic: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q117_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val name = Scratch(spark, "q117").name("q117_mem")
     val res = StreamOps.runToMemory(spark,
       StreamOps.staticEnrichedCounts(StreamOps.readEvents(spark, dir),
         graft.Tables(spark, dir, "customer")), name)
@@ -871,8 +867,7 @@ object EventOps {
     * — real streaming semantics, not an artifact. */
   val q132FunnelTimeout: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q132_mem_" + java.util.UUID.randomUUID().toString
-      .replace("-", "")
+    val name = Scratch(spark, "q132").name("q132_mem")
     StreamOps.runToMemory(spark,
       StreamOps.abandonTimeouts(spark, StreamOps.readEvents(spark, dir)),
       name, stateStoreProvider = Some(StreamOps.RocksDBProvider))
@@ -916,8 +911,7 @@ object EventOps {
       provider: Option[String]): DataFrame = {
     import graft.streaming.StreamOps
     import spark.implicits._
-    val name = "q159_mem_" + java.util.UUID.randomUUID().toString
-      .replace("-", "")
+    val name = Scratch(spark, "q159").name("q159_mem")
     // MemoryStream feeds from the driver: the harness's clock driver,
     // not the deployment shape (a real deployment reads kafka and the
     // idle gaps are real time passing)
@@ -957,8 +951,7 @@ object EventOps {
     * double-counts nothing (the migration-correctness claim). */
   val q160StateBootstrap: Q = (spark, dir) => {
     import graft.streaming.StreamOps
-    val name = "q160_mem_" + java.util.UUID.randomUUID().toString
-      .replace("-", "")
+    val name = Scratch(spark, "q160").name("q160_mem")
     val initial = Tables.events(spark, dir)
       .filter(col("ts") < BootCutoverNs)
       .groupBy(col("user_id"))
@@ -1298,25 +1291,22 @@ object EventOps {
     * source at distinct-keys size. */
   val q178CdcUpsert: Q = (spark, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    val base = s"/tmp/graft_q178_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"$base/lake")
+    val scratch = Scratch(spark, "q178")
+    val cat = scratch.catalog
+    val batchView = scratch.name("q178_batch")
+    val ingest = scratch.path("ingest")
     Tables(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
       .repartition(4)
-      .write.parquet(s"$base/ingest")
+      .write.parquet(ingest)
     spark.sql(s"CREATE TABLE $cat.state " +
       "(user_id BIGINT, ts_us BIGINT, event_id BIGINT, value DOUBLE)")
-    val schema = spark.read.parquet(s"$base/ingest").schema
+    val schema = spark.read.parquet(ingest).schema
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/ingest")
+      .parquet(ingest)
       .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
+      .option("checkpointLocation", scratch.path("ckpt"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val w = Window.partitionBy(col("user_id"))
@@ -1325,7 +1315,7 @@ object EventOps {
           .filter(col("rn") === 1)
           .select(col("user_id"), col("ts_us"), col("event_id"),
             col("value"))
-          .createOrReplaceTempView(s"q178_batch_$nonce")
+          .createOrReplaceTempView(batchView)
         // batch key BOUNDS as a target-only conjunct: equality implies
         // it for every source row (semantics unchanged), but as a
         // pushable predicate it feeds the merge's footer-stats group
@@ -1356,7 +1346,7 @@ object EventOps {
         if (bounds.isDefined) { // empty micro-batch: nothing to merge
           val (lo, hi) = bounds.get
           batch.sparkSession.sql(
-            s"""MERGE INTO $cat.state AS t USING q178_batch_$nonce AS s
+            s"""MERGE INTO $cat.state AS t USING $batchView AS s
                |ON t.user_id = s.user_id
                |  AND t.user_id BETWEEN $lo AND $hi
                |WHEN MATCHED AND (s.ts_us > t.ts_us OR
@@ -1398,9 +1388,8 @@ object EventOps {
   val q182LakeStreamRead: Q = (spark, dir) => {
     import graft.sources.VersionedTable
     import graft.streaming.StreamOps
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val base = s"/tmp/graft_q182_$nonce/table"
+    val scratch = Scratch(spark, "q182")
+    val base = scratch.path("table")
     val ev = Tables(spark, dir, "events")
       .select(col("user_id"), col("value"), col("ts_us"))
     val cut1 = 1705363200000000L // 2024-01-16 (µs)
@@ -1413,7 +1402,7 @@ object EventOps {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("CAST(floor(value*100) AS BIGINT)")).as("cents"))
-    StreamOps.runToMemory(spark, agg, s"q182_mem_$nonce", "complete")
+    StreamOps.runToMemory(spark, agg, scratch.name("q182_mem"), "complete")
       .orderBy(col("user_id"))
   }
 
@@ -1439,20 +1428,17 @@ object EventOps {
     * 100 TB this is "scan the week, not the decade". */
   val q201LakeTimePartition: Q = (spark, dir) => {
     import graft.sources.LakeReadScanBuilder
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_laketp_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q201_$nonce")
+    val scratch = Scratch(spark, "q201")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q201_src")
     Tables(spark, dir, "events")
       .select(
         expr("CAST(timestamp_micros(ts_us) AS TIMESTAMP_NTZ)").as("ets"),
         col("user_id"), col("value"))
-      .createOrReplaceTempView(s"q201_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.ev (ets TIMESTAMP_NTZ, " +
       "user_id BIGINT, value DOUBLE) PARTITIONED BY (days(ets))")
-    spark.sql(s"INSERT INTO $cat.ev SELECT * FROM q201_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.ev SELECT * FROM $srcView")
     LakeReadScanBuilder.lastPartitionPrune.set(-1L)
     val rows = spark.sql(
       s"""SELECT CAST(ets AS DATE) AS day, count(*) AS n,
@@ -1500,25 +1486,24 @@ object EventOps {
   val q205EqDeleteUpsert: Q = (spark, dir) => {
     import graft.sources.VersionedTable
     import org.apache.spark.sql.streaming.Trigger
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val base = s"/tmp/graft_q205_$nonce"
-    val state = s"$base/state"
+    val scratch = Scratch(spark, "q205")
+    val ingest = scratch.path("ingest")
+    val state = scratch.path("state")
     Tables(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
       .repartitionByRange(4, col("user_id"))
-      .write.parquet(s"$base/ingest")
+      .write.parquet(ingest)
     // seed the table (empty, schema-bearing) so every upsert appends
     VersionedTable.commit(spark,
-      spark.read.parquet(s"$base/ingest").limit(0)
+      spark.read.parquet(ingest).limit(0)
         .select(col("user_id"), col("ts_us"), col("event_id"),
           col("value")), state)
-    val schema = spark.read.parquet(s"$base/ingest").schema
+    val schema = spark.read.parquet(ingest).schema
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/ingest")
+      .parquet(ingest)
       .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
+      .option("checkpointLocation", scratch.path("ckpt"))
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // per-key latest within the batch (each user's whole history
@@ -1604,19 +1589,16 @@ object EventOps {
     * manifest stays small on multi-year tables. */
   val q203LakeMonthsPartition: Q = (spark, dir) => {
     import graft.sources.LakeReadScanBuilder
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakemo_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q203_$nonce")
+    val scratch = Scratch(spark, "q203")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q203_src")
     Tables(spark, dir, "orders")
       .select(col("o_orderdate").cast("date").as("od"),
         col("o_orderkey"), col("o_totalprice"))
-      .createOrReplaceTempView(s"q203_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.ord (od DATE, o_orderkey BIGINT, " +
       "o_totalprice DOUBLE) PARTITIONED BY (months(od))")
-    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM q203_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM $srcView")
     LakeReadScanBuilder.lastPartitionPrune.set(-1L)
     val rows = spark.sql(
       s"""SELECT date_trunc('month', od) AS mon, count(*) AS n,
@@ -1643,87 +1625,45 @@ object EventOps {
       |  AND CAST(o_orderdate AS DATE) < DATE '1999-01-01'
       |GROUP BY 1 ORDER BY mon""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q24_json_extract" -> q24Json,
-    "q25_tumbling_window" -> q25TumblingWindow,
-    "q26_asof_join" -> q26AsOfJoin,
-    "q27_sessionize" -> q27Sessionize,
-    "q28_event_dedup" -> q28EventDedup,
-    "q42_stream_tumbling" -> q42StreamTumbling,
-    "q45_stream_session" -> q45StreamSession,
-    "q46_stream_sliding" -> q46StreamSliding,
-    "q47_stream_dedup" -> q47StreamDedup,
-    "q56_stream_join" -> q56StreamJoin,
-    "q58_funnel_state" -> q58FunnelState,
-    "q67_funnel_tws" -> q67FunnelTws,
-    "q80_upsert_merge" -> q80UpsertMerge,
-    "q86_pii_scrub" -> q86PiiScrub,
-    "q87_stream_outer_join" -> q87StreamOuterJoin,
-    "q89_gap_fill" -> q89GapFill,
-    "q98_cohort_retention" -> q98CohortRetention,
-    "q100_scd2_join" -> q100Scd2Join,
-    "q117_stream_static" -> q117StreamStatic,
-    "q119_spike_detect" -> q119SpikeDetect,
-    "q123_native_asof" -> q123NativeAsOf,
-    "q125_asof_tolerance" -> q125AsOfTolerance,
-    "q129_rolling_median" -> q129RollingMedian,
-    "q141_decay_score" -> q141DecayScore,
-    "q143_funnel_batch" -> q143Funnel,
-    "q145_path_transitions" -> q145PathTransitions,
-    "q146_seasonal_anomaly" -> q146SeasonalAnomaly,
-    "q149_sliding_hll" -> q149SlidingHll,
-    "q150_tws_mapstate" -> q150TwsMapState,
-    "q152_tws_liststate" -> q152TwsListState,
-    "q132_funnel_timeout" -> q132FunnelTimeout,
-    "q159_idle_flush" -> q159IdleFlush,
-    "q160_state_bootstrap" -> q160StateBootstrap,
-    "q178_cdc_lake_upsert" -> q178CdcUpsert,
-    "q201_lake_time_partition" -> q201LakeTimePartition,
-    "q203_lake_months_partition" -> q203LakeMonthsPartition,
-    "q205_eq_delete_upsert" -> q205EqDeleteUpsert,
-    "q182_lake_stream_read" -> q182LakeStreamRead,
-    "q154_attribution" -> q154Attribution,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q24_json_extract" -> q24Oracle,
-    "q25_tumbling_window" -> q25Oracle,
-    "q26_asof_join" -> q26Oracle,
-    "q27_sessionize" -> q27Oracle,
-    "q28_event_dedup" -> q28Oracle,
-    "q42_stream_tumbling" -> q42Oracle,
-    "q45_stream_session" -> q45Oracle,
-    "q46_stream_sliding" -> q46Oracle,
-    "q47_stream_dedup" -> q47Oracle,
-    "q56_stream_join" -> q56Oracle,
-    "q58_funnel_state" -> q58Oracle,
-    "q67_funnel_tws" -> q58Oracle, // same computation, two state APIs
-    "q80_upsert_merge" -> q80Oracle,
-    "q86_pii_scrub" -> q86Oracle,
-    "q87_stream_outer_join" -> q87Oracle,
-    "q89_gap_fill" -> q89Oracle,
-    "q98_cohort_retention" -> q98Oracle,
-    "q100_scd2_join" -> q100Oracle,
-    "q117_stream_static" -> q117Oracle,
-    "q119_spike_detect" -> q119Oracle,
-    "q123_native_asof" -> q123Oracle,
-    "q125_asof_tolerance" -> q125Oracle,
-    "q129_rolling_median" -> q129Oracle,
-    "q141_decay_score" -> q141Oracle,
-    "q143_funnel_batch" -> q143Oracle,
-    "q145_path_transitions" -> q145Oracle,
-    "q146_seasonal_anomaly" -> q146Oracle,
-    "q149_sliding_hll" -> q149Oracle,
-    "q150_tws_mapstate" -> q150Oracle,
-    "q152_tws_liststate" -> q152Oracle,
-    "q132_funnel_timeout" -> q132Oracle,
-    "q159_idle_flush" -> q159Oracle,
-    "q160_state_bootstrap" -> q160Oracle,
-    "q178_cdc_lake_upsert" -> q178Oracle,
-    "q201_lake_time_partition" -> q201Oracle,
-    "q203_lake_months_partition" -> q203Oracle,
-    "q205_eq_delete_upsert" -> q205Oracle,
-    "q182_lake_stream_read" -> q182Oracle,
-    "q154_attribution" -> q154Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q24_json_extract" -> Key(q24Json, q24Oracle),
+    "q25_tumbling_window" -> Key(q25TumblingWindow, q25Oracle),
+    "q26_asof_join" -> Key(q26AsOfJoin, q26Oracle),
+    "q27_sessionize" -> Key(q27Sessionize, q27Oracle),
+    "q28_event_dedup" -> Key(q28EventDedup, q28Oracle),
+    "q42_stream_tumbling" -> Key(q42StreamTumbling, q42Oracle),
+    "q45_stream_session" -> Key(q45StreamSession, q45Oracle),
+    "q46_stream_sliding" -> Key(q46StreamSliding, q46Oracle),
+    "q47_stream_dedup" -> Key(q47StreamDedup, q47Oracle),
+    "q56_stream_join" -> Key(q56StreamJoin, q56Oracle),
+    "q58_funnel_state" -> Key(q58FunnelState, q58Oracle),
+    "q67_funnel_tws" -> Key(q67FunnelTws, q58Oracle), // same computation, two state APIs
+    "q80_upsert_merge" -> Key(q80UpsertMerge, q80Oracle),
+    "q86_pii_scrub" -> Key(q86PiiScrub, q86Oracle),
+    "q87_stream_outer_join" -> Key(q87StreamOuterJoin, q87Oracle),
+    "q89_gap_fill" -> Key(q89GapFill, q89Oracle),
+    "q98_cohort_retention" -> Key(q98CohortRetention, q98Oracle),
+    "q100_scd2_join" -> Key(q100Scd2Join, q100Oracle),
+    "q117_stream_static" -> Key(q117StreamStatic, q117Oracle),
+    "q119_spike_detect" -> Key(q119SpikeDetect, q119Oracle),
+    "q123_native_asof" -> Key(q123NativeAsOf, q123Oracle),
+    "q125_asof_tolerance" -> Key(q125AsOfTolerance, q125Oracle),
+    "q129_rolling_median" -> Key(q129RollingMedian, q129Oracle),
+    "q141_decay_score" -> Key(q141DecayScore, q141Oracle),
+    "q143_funnel_batch" -> Key(q143Funnel, q143Oracle),
+    "q145_path_transitions" -> Key(q145PathTransitions, q145Oracle),
+    "q146_seasonal_anomaly" -> Key(q146SeasonalAnomaly, q146Oracle),
+    "q149_sliding_hll" -> Key(q149SlidingHll, q149Oracle),
+    "q150_tws_mapstate" -> Key(q150TwsMapState, q150Oracle),
+    "q152_tws_liststate" -> Key(q152TwsListState, q152Oracle),
+    "q132_funnel_timeout" -> Key(q132FunnelTimeout, q132Oracle),
+    "q159_idle_flush" -> Key(q159IdleFlush, q159Oracle),
+    "q160_state_bootstrap" -> Key(q160StateBootstrap, q160Oracle),
+    "q178_cdc_lake_upsert" -> Key(q178CdcUpsert, q178Oracle),
+    "q201_lake_time_partition" -> Key(q201LakeTimePartition, q201Oracle),
+    "q203_lake_months_partition" -> Key(q203LakeMonthsPartition, q203Oracle),
+    "q205_eq_delete_upsert" -> Key(q205EqDeleteUpsert, q205Oracle),
+    "q182_lake_stream_read" -> Key(q182LakeStreamRead, q182Oracle),
+    "q154_attribution" -> Key(q154Attribution, q154Oracle),
   )
 }

@@ -21,8 +21,6 @@ import graft.Tables
   * r' = 150000 + ⌊85·Σcontrib/100⌋ (d = 0.85 at scale 10^6).
   */
 object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q76
   /** PageRank (3 unrolled iterations) over the part co-purchase graph:
     * parts sharing an order are linked (the classic recommendation
@@ -347,19 +345,11 @@ object GraphOps {
       |FROM pr JOIN s sa ON sa.p = pa JOIN s sb ON sb.p = pb, n
       |ORDER BY n_ab DESC, lift_x100 DESC, pa, pb LIMIT 100""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q76_pagerank" -> q76PageRank,
-    "q77_triangles" -> q77Triangles,
-    "q88_kcore" -> q88KCore,
-    "q99_hits" -> q99Hits,
-    "q103_basket_lift" -> q103BasketLift,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q76_pagerank" -> q76Oracle,
-    "q77_triangles" -> q77Oracle,
-    "q88_kcore" -> q88Oracle,
-    "q99_hits" -> q99Oracle,
-    "q103_basket_lift" -> q103Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q76_pagerank" -> Key(q76PageRank, q76Oracle),
+    "q77_triangles" -> Key(q77Triangles, q77Oracle),
+    "q88_kcore" -> Key(q88KCore, q88Oracle),
+    "q99_hits" -> Key(q99Hits, q99Oracle),
+    "q103_basket_lift" -> Key(q103BasketLift, q103Oracle),
   )
 }

@@ -29,7 +29,17 @@ object Relational {
 
   private def ntz(s: String): Column = lit(s).cast("timestamp_ntz")
 
-  type Q = (SparkSession, String) => DataFrame
+  /** Registers `tables` as scratch temp views for a SQL-text key and
+    * returns each table's view name. */
+  private def views(spark: SparkSession, dir: String, key: String,
+      tables: String*): Map[String, String] = {
+    val scratch = Scratch(spark, key)
+    tables.map { n =>
+      val v = scratch.name(n)
+      t(spark, dir, n).createOrReplaceTempView(v)
+      n -> v
+    }.toMap
+  }
 
   // ---------------------------------------------------------------- q01
   /** TPC-H Q1 shape: scan + filter + hash aggregate (partial/final agg is
@@ -278,12 +288,12 @@ object Relational {
   // ---------------------------------------------------------------- q10
   /** GROUPING SETS via SQL surface. */
   val q10GroupingSets: Q = (spark, dir) => {
-    Tables(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
+    val v = views(spark, dir, "q10", "lineitem")
     spark.sql(
-      """SELECT coalesce(l_returnflag, '(all)') AS rf,
+      s"""SELECT coalesce(l_returnflag, '(all)') AS rf,
         | coalesce(l_linestatus, '(all)') AS ls,
         | round(sum(l_quantity),2) AS sum_qty, count(*) AS n
-        |FROM lineitem
+        |FROM ${v("lineitem")}
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         |ORDER BY rf, ls""".stripMargin)
   }
@@ -678,11 +688,13 @@ object Relational {
     * bucket lands in one file) — the pre-shuffled layout a 100 TB
     * deployment maintains for its hottest join key (the OpsSpec bucketed
     * test pins the exchange-free plan with broadcast disabled). */
-  private def bucketedDb(dir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
+  private def bucketedDb(dir: String): String = s"graft_buck_${dirTag(dir)}"
+
+  /** A short tag derived from the input dir: a root named after it is
+    * overwritten by a rerun in a later session instead of accumulating. */
+  private def dirTag(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_buck_$tag"
-  }
 
   /** Handles to already-built bucketed tables (no rebuild) — the
     * steady-state read side. Requires [[bucketedOrdersLineitem]] to have
@@ -834,7 +846,7 @@ object Relational {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
-    val base = s"/tmp/graft_q79_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q79").path("data")
     docs.write.mode("overwrite").json(base + "/jsonl")
     docs.write.mode("overwrite").option("header", "true").csv(base + "/csv")
     val j = spark.read.schema(docs.schema).json(base + "/jsonl")
@@ -868,18 +880,19 @@ object Relational {
     * two entry styles cannot change results. The revenue sum rounds to
     * 2 (order-sensitive double aggregate, per the file convention). */
   val q82SqlTpch5: Q = (spark, dir) => {
-    graft.Tables.registerAll(spark, dir)
+    val v = views(spark, dir, "q82", "customer", "orders", "lineitem",
+      "supplier", "nation", "region")
     spark.sql(
-      """SELECT n_name,
+      s"""SELECT n_name,
         | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
         | count(*) AS n_lines
-        |FROM customer
-        | JOIN orders   ON c_custkey = o_custkey
-        | JOIN lineitem ON l_orderkey = o_orderkey
-        | JOIN supplier ON l_suppkey = s_suppkey
+        |FROM ${v("customer")}
+        | JOIN ${v("orders")}   ON c_custkey = o_custkey
+        | JOIN ${v("lineitem")} ON l_orderkey = o_orderkey
+        | JOIN ${v("supplier")} ON l_suppkey = s_suppkey
         |   AND c_nationkey = s_nationkey
-        | JOIN nation   ON s_nationkey = n_nationkey
-        | JOIN region   ON n_regionkey = r_regionkey
+        | JOIN ${v("nation")}   ON s_nationkey = n_nationkey
+        | JOIN ${v("region")}   ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP_NTZ '1996-01-01'
         |  AND o_orderdate <  TIMESTAMP_NTZ '1997-01-01'
@@ -1090,7 +1103,7 @@ object Relational {
     * aggregate over the original table: layout must never change
     * results. */
   val q96SortedLayout: Q = (spark, dir) => {
-    val path = s"/tmp/graft_q96_${java.util.UUID.randomUUID()}"
+    val path = Scratch(spark, "q96").path("data")
     t(spark, dir, "lineitem")
       .select(col("l_shipdate"), col("l_returnflag"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"))
@@ -1152,7 +1165,7 @@ object Relational {
     * oracle runs the same box aggregate over the original table —
     * layout must never change results. */
   val q107ZorderLayout: Q = (spark, dir) => {
-    val path = s"/tmp/graft_q107_${java.util.UUID.randomUUID()}"
+    val path = Scratch(spark, "q107").path("data")
     t(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_returnflag"),
         col("l_quantity"), col("l_extendedprice"), col("l_discount"))
@@ -1249,14 +1262,14 @@ object Relational {
     * avg is an exact order-independent sum/count, so the 0.2× threshold
     * is bit-identical across engines. */
   val q83ScalarSubquery: Q = (spark, dir) => {
-    graft.Tables.registerAll(spark, dir)
+    val v = views(spark, dir, "q83", "lineitem", "part")
     spark.sql(
-      """SELECT p_brand,
+      s"""SELECT p_brand,
         | round(sum(l_extendedprice), 2) AS below_avg_revenue,
         | count(*) AS n_lines
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |FROM ${v("lineitem")} JOIN ${v("part")} ON p_partkey = l_partkey
         |WHERE l_quantity < (SELECT 0.2 * avg(l_quantity)
-        |                    FROM lineitem l2
+        |                    FROM ${v("lineitem")} l2
         |                    WHERE l2.l_partkey = p_partkey)
         |GROUP BY p_brand ORDER BY p_brand""".stripMargin)
   }
@@ -1280,21 +1293,21 @@ object Relational {
     * so the SQL entry path covers both rewrites. Both branches scan
     * orders with the same pushed date filter. */
   val q84ExistsSubquery: Q = (spark, dir) => {
-    graft.Tables.registerAll(spark, dir)
+    val v = views(spark, dir, "q84", "orders", "lineitem")
     spark.sql(
-      """SELECT 'exists' AS kind, o_orderpriority, count(*) AS n
-        |FROM orders
+      s"""SELECT 'exists' AS kind, o_orderpriority, count(*) AS n
+        |FROM ${v("orders")}
         |WHERE o_orderdate >= TIMESTAMP_NTZ '1996-01-01'
         |  AND o_orderdate <  TIMESTAMP_NTZ '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
+        |  AND EXISTS (SELECT 1 FROM ${v("lineitem")}
         |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
         |GROUP BY o_orderpriority
         |UNION ALL
         |SELECT 'not_exists' AS kind, o_orderpriority, count(*) AS n
-        |FROM orders
+        |FROM ${v("orders")}
         |WHERE o_orderdate >= TIMESTAMP_NTZ '1996-01-01'
         |  AND o_orderdate <  TIMESTAMP_NTZ '1996-04-01'
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem
+        |  AND NOT EXISTS (SELECT 1 FROM ${v("lineitem")}
         |                  WHERE l_orderkey = o_orderkey AND l_quantity > 45)
         |GROUP BY o_orderpriority
         |ORDER BY kind, o_orderpriority""".stripMargin)
@@ -1335,7 +1348,7 @@ object Relational {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
-    val base = s"/tmp/graft_q124_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q124").path("data")
     docs.write.mode("overwrite").orc(base + "/orc")
     docs.write.mode("overwrite").partitionBy("source")
       .parquet(base + "/bysource")
@@ -1373,7 +1386,7 @@ object Relational {
   val q126DynamicOverwrite: Q = (spark, dir) => {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val base = s"/tmp/graft_q126_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q126").path("data")
     docs.write.mode("overwrite").partitionBy("source").parquet(base)
     docs.filter(col("source").isin("src0", "src1", "src2"))
       .withColumn("n_chars", col("n_chars") + lit(1000L))
@@ -1830,7 +1843,7 @@ object Relational {
     import graft.sources.VersionedTable
     val o = t(spark, dir, "orders")
     val cut = ntz("1997-01-01 00:00:00")
-    val base = s"/tmp/graft_q151_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q151").path("data")
     val v0 = VersionedTable.commit(spark, o.filter(col("o_orderdate") < cut),
       base)
     val v1 = VersionedTable.commit(spark,
@@ -1966,10 +1979,11 @@ object Relational {
     * session has already staged this sfDir. */
   private def cboStarTables(spark: SparkSession, dir: String): Unit = {
     if (spark.conf.getOption("graft.cbo.star.dir").contains(dir)) return
-    // external tables under a session-unique path: a prior JVM's
-    // warehouse leftovers can't collide with this catalog's entries
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_cbo_" +
-      spark.sparkContext.applicationId
+    // external tables under a root derived from the input dir, as q62's
+    // bucketed database: each table is written in overwrite mode, so a
+    // later session's landing replaces a prior one's files
+    val base =
+      s"${System.getProperty("java.io.tmpdir")}/graft_cbo_${dirTag(dir)}"
     Seq("lineitem", "part", "supplier", "nation").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS graft_cbo_$t")
       Tables(spark, dir, t).write.mode("overwrite")
@@ -2047,7 +2061,7 @@ object Relational {
     * `targetFiles` tasks instead of one per micro-commit. */
   val q162Compaction: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_q162_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q162").path("data")
     val orders = Tables(spark, dir, "orders")
     VersionedTable.commit(spark, orders.repartition(32), base,
       carryForward = false)
@@ -2081,18 +2095,15 @@ object Relational {
     * the final aggregate reads the compacted table while the oracle
     * aggregates the raw source — SQL-only lifecycle, zero loss. */
   val q186LakeCallMaintenance: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakep_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q186_$nonce")
+    val scratch = Scratch(spark, "q186")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q186_src")
     t(spark, dir, "orders")
       .select(col("o_orderpriority"), col("o_totalprice"))
       .repartition(32)
-      .createOrReplaceTempView(s"q186_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.t " +
-      s"AS SELECT * FROM q186_src_$nonce")
+      s"AS SELECT * FROM $srcView")
     val c = spark.sql(
       s"CALL $cat.system.compact(table => 't', target_files => 4)")
       .collect()(0)
@@ -2132,31 +2143,27 @@ object Relational {
     * arrival ≡ batch load. */
   val q187LakeStreamSink: Q = (spark, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakes_$nonce"
-    val base = s"/tmp/graft_q187_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"$base/lake")
+    val scratch = Scratch(spark, "q187")
+    val cat = scratch.catalog
+    val ingest = scratch.path("ingest")
     Tables(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
       .repartition(4)
-      .write.parquet(s"$base/ingest")
+      .write.parquet(ingest)
     spark.sql(s"CREATE TABLE $cat.sink (event_id BIGINT, " +
       "user_id BIGINT, event_type STRING, value DOUBLE)")
-    val schema = spark.read.parquet(s"$base/ingest").schema
+    val schema = spark.read.parquet(ingest).schema
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/ingest")
+      .parquet(ingest)
       .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
+      .option("checkpointLocation", scratch.path("ckpt"))
       .trigger(Trigger.AvailableNow())
       .toTable(s"$cat.sink")
     q.awaitTermination()
     val v = graft.sources.VersionedTable
-      .latestVersion(spark, s"$base/lake/sink")
+      .latestVersion(spark, s"${scratch.catalogRoot}/sink")
     spark.sql(s"SELECT * FROM $cat.sink")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
@@ -2187,24 +2194,22 @@ object Relational {
     * CALL path. */
   val q188LakeRestoreClone: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_laker_$nonce"
-    val root = s"/tmp/graft_q188_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q188")
+    val cat = scratch.catalog
+    val preView = scratch.name("q188_pre")
+    val postView = scratch.name("q188_post")
+    val root = scratch.catalogRoot
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
     val cut = ntz("1997-01-01 00:00:00")
     o.filter(col("o_orderdate") < cut)
-      .createOrReplaceTempView(s"q188_pre_$nonce")
+      .createOrReplaceTempView(preView)
     o.filter(col("o_orderdate") >= cut)
-      .createOrReplaceTempView(s"q188_post_$nonce")
+      .createOrReplaceTempView(postView)
     spark.sql(
-      s"CREATE TABLE $cat.t AS SELECT * FROM q188_pre_$nonce")   // v0+v1
+      s"CREATE TABLE $cat.t AS SELECT * FROM $preView")    // v0+v1
     spark.sql(
-      s"INSERT OVERWRITE $cat.t SELECT * FROM q188_post_$nonce") // v2
+      s"INSERT OVERWRITE $cat.t SELECT * FROM $postView") // v2
     spark.sql(s"CALL $cat.system.clone(source => 't', target => 't2')")
     val r = spark.sql(
       s"CALL $cat.system.restore(table => 't', version => 1)")
@@ -2250,20 +2255,18 @@ object Relational {
     * aggregating the raw source. */
   val q189LakeStatsAgg: Q = (spark, dir) => {
     import graft.sources.{LakeFileStats, LakeStatsAggregate}
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakeg_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q189_$nonce")
+    val scratch = Scratch(spark, "q189")
+    val cat = scratch.catalog
+    val evenView = scratch.name("q189_even")
+    val oddView = scratch.name("q189_odd")
     val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
     li.filter(col("l_orderkey") % 2 === 0)
-      .createOrReplaceTempView(s"q189_even_$nonce")
+      .createOrReplaceTempView(evenView)
     li.filter(col("l_orderkey") % 2 =!= 0)
-      .createOrReplaceTempView(s"q189_odd_$nonce")
-    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM q189_even_$nonce")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q189_odd_$nonce")
+      .createOrReplaceTempView(oddView)
+    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM $evenView")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $oddView")
     val footersBefore = LakeFileStats.footerReads.get()
     val servedBefore = LakeStatsAggregate.served.get()
     val r = spark.sql(
@@ -2305,30 +2308,28 @@ object Relational {
     * read every star schema wants. */
   val q190LakeRuntimePrune: Q = (spark, dir) => {
     import graft.sources.LakeRuntimeFilterScan
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakex_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q190_$nonce")
+    val scratch = Scratch(spark, "q190")
+    val cat = scratch.catalog
+    val factView = scratch.name("q190_fact")
+    val suppView = scratch.name("q190_supp")
     t(spark, dir, "lineitem")
       .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
       .repartition(8)
-      .createOrReplaceTempView(s"q190_fact_$nonce")
+      .createOrReplaceTempView(factView)
     spark.sql(s"CREATE TABLE $cat.fact (l_suppkey BIGINT, " +
       "l_extendedprice DOUBLE, l_discount DOUBLE) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_suppkey')")
-    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM q190_fact_$nonce")
+    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM $factView")
     t(spark, dir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey"))
-      .createOrReplaceTempView(s"q190_supp_$nonce")
+      .createOrReplaceTempView(suppView)
     LakeRuntimeFilterScan.lastPrune.set(-1L)
     val r = spark.sql(
       s"""SELECT count(*) AS n,
          |  coalesce(round(sum(f.l_extendedprice * (1 - f.l_discount)), 2),
          |    0.0D) AS revenue
          |FROM $cat.fact f
-         |JOIN q190_supp_$nonce s ON f.l_suppkey = s.s_suppkey
+         |JOIN $suppView s ON f.l_suppkey = s.s_suppkey
          |WHERE s.s_nationkey = 5""".stripMargin).collect()(0)
     val packed = LakeRuntimeFilterScan.lastPrune.get()
     val prunedFiles = packed >= 0 &&
@@ -2359,23 +2360,21 @@ object Relational {
     * v0 is really gone (loud failure), and both branches' aggregates
     * hash-gate against the raw source. */
   val q191LakeTags: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_laket_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q191_$nonce")
+    val scratch = Scratch(spark, "q191")
+    val cat = scratch.catalog
+    val preView = scratch.name("q191_pre")
+    val postView = scratch.name("q191_post")
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
     val cut = ntz("1997-01-01 00:00:00")
     o.filter(col("o_orderdate") < cut)
-      .createOrReplaceTempView(s"q191_pre_$nonce")
+      .createOrReplaceTempView(preView)
     o.filter(col("o_orderdate") >= cut)
-      .createOrReplaceTempView(s"q191_post_$nonce")
-    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM q191_pre_$nonce")
+      .createOrReplaceTempView(postView)
+    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM $preView")
     spark.sql(s"CALL $cat.system.create_tag(table => 't', " +
       "tag => 'baseline')")                                   // pins v1
-    spark.sql(s"INSERT OVERWRITE $cat.t SELECT * FROM q191_post_$nonce")
+    spark.sql(s"INSERT OVERWRITE $cat.t SELECT * FROM $postView")
     spark.sql(s"CALL $cat.system.vacuum(table => 't', keep => 1, " +
       "grace_ms => 0L)")
     val refs = spark.sql(s"SELECT * FROM $cat.t.refs").collect()
@@ -2423,27 +2422,25 @@ object Relational {
     * count from the raw source, so the hash gate proves both the
     * labels and the per-snapshot counts. */
   val q192LakeHistory: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakeh_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q192_$nonce")
+    val scratch = Scratch(spark, "q192")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q192_src")
+    val postView = scratch.name("q192_post")
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderdate"), col("o_totalprice"))
-    o.createOrReplaceTempView(s"q192_src_$nonce")
+    o.createOrReplaceTempView(srcView)
     o.filter(col("o_orderdate") >= ntz("1997-01-01 00:00:00"))
-      .createOrReplaceTempView(s"q192_post_$nonce")
+      .createOrReplaceTempView(postView)
     spark.sql(s"CREATE TABLE $cat.t AS " +
-      s"SELECT * FROM q192_src_$nonce")                       // v0+v1
+      s"SELECT * FROM $srcView")                               // v0+v1
     spark.sql(s"DELETE FROM $cat.t WHERE o_orderstatus = 'P'") // v2
     spark.sql(s"UPDATE $cat.t SET o_totalprice = 0.0 " +
       "WHERE o_orderstatus = 'F'")                             // v3
     spark.sql(s"CALL $cat.system.compact(table => 't', " +
       "target_files => 2)")                                    // v4
     spark.sql(s"INSERT OVERWRITE $cat.t " +
-      s"SELECT * FROM q192_post_$nonce")                       // v5
+      s"SELECT * FROM $postView")                              // v5
     spark.sql(
       s"""SELECT version, operation, total_rows
          |FROM $cat.t.versions ORDER BY version""".stripMargin)
@@ -2484,15 +2481,13 @@ object Relational {
     * rewriting a 3-file sliver and rewriting the table. */
   val q193LakeRgfMerge: Q = (spark, dir) => {
     import graft.sources.{LakeGroupScan, VersionedTable}
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakem_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q193_$nonce")
+    val scratch = Scratch(spark, "q193")
+    val cat = scratch.catalog
+    val factView = scratch.name("q193_fact")
+    val deltaView = scratch.name("q193_delta")
     t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      .createOrReplaceTempView(s"q193_fact_$nonce")
+      .createOrReplaceTempView(factView)
     spark.sql(s"CREATE TABLE $cat.fact (l_orderkey BIGINT, " +
       "l_linenumber BIGINT, l_quantity DOUBLE) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_orderkey')")
@@ -2506,23 +2501,23 @@ object Relational {
       "false")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try spark.sql(
-      s"INSERT INTO $cat.fact SELECT * FROM q193_fact_$nonce")
+      s"INSERT INTO $cat.fact SELECT * FROM $factView")
     finally {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
         coalescePrior)
       spark.conf.set("spark.sql.shuffle.partitions", shufflePrior)
     }
-    val tdir = s"/tmp/graft_q193_$nonce/fact"
+    val tdir = s"${scratch.catalogRoot}/fact"
     val vBefore = VersionedTable.latestVersion(spark, tdir).get
     val before = VersionedTable.filesOf(spark, tdir, vBefore).toSet
     // merge keys from one narrow clustered slice; the condition
     // references the SOURCE, so only the runtime filter can narrow
-    spark.sql(s"SELECT DISTINCT l_orderkey AS k FROM q193_fact_$nonce " +
+    spark.sql(s"SELECT DISTINCT l_orderkey AS k FROM $factView " +
       "WHERE l_orderkey < 100")
-      .createOrReplaceTempView(s"q193_delta_$nonce")
+      .createOrReplaceTempView(deltaView)
     LakeGroupScan.lastPrune.set(-1L)
     spark.sql(
-      s"""MERGE INTO $cat.fact f USING q193_delta_$nonce d
+      s"""MERGE INTO $cat.fact f USING $deltaView d
          |ON f.l_orderkey = d.k
          |WHEN MATCHED THEN UPDATE SET l_quantity = f.l_quantity + 100.0D
          |""".stripMargin)
@@ -2573,26 +2568,24 @@ object Relational {
     * write-audit-publish loop is content-exact. */
   val q194LakeWap: Q = (spark, dir) => {
     import graft.sources.GraftLakeTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakew_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q194_$nonce")
+    val scratch = Scratch(spark, "q194")
+    val cat = scratch.catalog
+    val mainView = scratch.name("q194_main")
+    val lateView = scratch.name("q194_late")
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
     o.filter(col("o_orderkey") % 3 =!= 0)
-      .createOrReplaceTempView(s"q194_main_$nonce")
+      .createOrReplaceTempView(mainView)
     o.filter(col("o_orderkey") % 3 === 0)
-      .createOrReplaceTempView(s"q194_late_$nonce")
-    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM q194_main_$nonce")
+      .createOrReplaceTempView(lateView)
+    spark.sql(s"CREATE TABLE $cat.t AS SELECT * FROM $mainView")
     val mainN = spark.sql(s"SELECT count(*) FROM $cat.t")
       .collect()(0).getLong(0)
     val fullN = o.count()
     spark.conf.set(GraftLakeTable.WapBranchConf, "audit")
     val (stagedVisible, mainIsolated, refListed) =
       try {
-        spark.sql(s"INSERT INTO $cat.t SELECT * FROM q194_late_$nonce")
+        spark.sql(s"INSERT INTO $cat.t SELECT * FROM $lateView")
         val inWap = spark.sql(s"SELECT count(*) FROM $cat.t")
           .collect()(0).getLong(0)
         spark.conf.unset(GraftLakeTable.WapBranchConf)
@@ -2637,19 +2630,16 @@ object Relational {
     * pairwise DISJOINT — the clustered-layout contract q185 writes,
     * proven here by metadata query instead of a data scan. */
   val q195LakeFilesMeta: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakef_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q195_$nonce")
+    val scratch = Scratch(spark, "q195")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q195_src")
     t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"))
-      .createOrReplaceTempView(s"q195_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.t (l_orderkey BIGINT, " +
       "l_quantity DOUBLE) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_orderkey')")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q195_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $srcView")
     val files = spark.sql(s"SELECT * FROM $cat.t.files " +
       "WHERE content = 'data' AND row_count > 0").collect()
     val sumRows = files.map(_.getLong(3)).sum
@@ -2692,19 +2682,16 @@ object Relational {
     * row count — scan-level lineage and manifest bookkeeping agree
     * row-for-row. Total hash-gates against DuckDB. */
   val q196FileLineage: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakefl_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q196_$nonce")
+    val scratch = Scratch(spark, "q196")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q196_src")
     t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"))
-      .createOrReplaceTempView(s"q196_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.t (l_orderkey BIGINT, " +
       "l_quantity DOUBLE) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_orderkey')")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q196_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $srcView")
     val observed = spark.sql(
       s"SELECT _file, count(*) AS n FROM $cat.t GROUP BY _file")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -2739,24 +2726,22 @@ object Relational {
     * the gate can't be satisfied by a broadcast join); the segment
     * revenue rollup hash-gates against DuckDB's plain join. */
   val q197LakeSpj: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakesp_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q197_$nonce")
+    val scratch = Scratch(spark, "q197")
+    val cat = scratch.catalog
+    val factView = scratch.name("q197_fact")
+    val dimView = scratch.name("q197_dim")
     t(spark, dir, "orders")
       .select(col("o_custkey"), col("o_totalprice"))
-      .createOrReplaceTempView(s"q197_fact_$nonce")
+      .createOrReplaceTempView(factView)
     t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-      .createOrReplaceTempView(s"q197_dim_$nonce")
+      .createOrReplaceTempView(dimView)
     spark.sql(s"CREATE TABLE $cat.fact (o_custkey BIGINT, " +
       "o_totalprice DOUBLE) PARTITIONED BY (bucket(8, o_custkey))")
     spark.sql(s"CREATE TABLE $cat.dim (c_custkey BIGINT, " +
       "c_mktsegment STRING) PARTITIONED BY (bucket(8, c_custkey))")
-    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM q197_fact_$nonce")
-    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM q197_dim_$nonce")
+    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM $factView")
+    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM $dimView")
     val confs = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -2815,21 +2800,18 @@ object Relational {
     * key type is one manifest write, not a table rewrite. */
   val q208TypeWidening: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakew_$nonce"
-    val root = s"/tmp/graft_q208_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q208")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q208_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "customer")
       .select(col("c_custkey"),
         col("c_nationkey").cast("int").as("c_nationkey"),
         (col("c_acctbal") * 100).cast("int").as("cents"))
-      .createOrReplaceTempView(s"q208_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_custkey BIGINT, " +
       "c_nationkey INT, cents INT)")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q208_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView")
     val dataFilesBefore =
       VersionedTable.filesOf(spark, s"$root/c", 1).toSet
     spark.sql(s"ALTER TABLE $cat.c ALTER COLUMN cents TYPE BIGINT")
@@ -2884,21 +2866,18 @@ object Relational {
     * restating the lifecycle from the raw source. */
   val q198LakeRenameDrop: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakecm_$nonce"
-    val root = s"/tmp/graft_q198_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q198")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q198_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         col("o_totalprice").as("price"),
         col("o_orderstatus").as("status"))
-      .createOrReplaceTempView(s"q198_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, price DOUBLE, " +
       "status STRING)")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q198_src_$nonce") // v1
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $srcView") // v1
     val filesV1 = VersionedTable.filesOf(spark, s"$root/t", 1)
     spark.sql(s"ALTER TABLE $cat.t RENAME COLUMN price TO amount") // v2
     spark.sql(s"ALTER TABLE $cat.t DROP COLUMN status")            // v3
@@ -2949,18 +2928,15 @@ object Relational {
     * against DuckDB. */
   val q199LakePartitionLayout: Q = (spark, dir) => {
     import graft.sources.LakeReadScanBuilder
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakepl_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q199_$nonce")
+    val scratch = Scratch(spark, "q199")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q199_src")
     t(spark, dir, "lineitem")
       .select(col("l_suppkey"), col("l_extendedprice"))
-      .createOrReplaceTempView(s"q199_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.t (l_suppkey BIGINT, " +
       "l_extendedprice DOUBLE) PARTITIONED BY (bucket(8, l_suppkey))")
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q199_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $srcView")
     // (1) static prune: the lookup reads one bucket's files
     LakeReadScanBuilder.lastPartitionPrune.set(-1L)
     val point = spark.sql(
@@ -3037,27 +3013,25 @@ object Relational {
     * both from the executed plan); the join aggregate hash-gates
     * against DuckDB. */
   val q207SortFreeJoin: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakesf_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q207_$nonce")
+    val scratch = Scratch(spark, "q207")
+    val cat = scratch.catalog
+    val revView = scratch.name("q207_rev")
+    val qtyView = scratch.name("q207_qty")
     val li = t(spark, dir, "lineitem")
     li.groupBy(col("l_orderkey"))
       .agg(round(sum(col("l_extendedprice")), 2).as("revenue"))
-      .createOrReplaceTempView(s"q207_rev_$nonce")
+      .createOrReplaceTempView(revView)
     li.groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).cast("double").as("qty"))
-      .createOrReplaceTempView(s"q207_qty_$nonce")
+      .createOrReplaceTempView(qtyView)
     spark.sql(s"CREATE TABLE $cat.rev (l_orderkey BIGINT, " +
       "revenue DOUBLE) PARTITIONED BY (bucket(8, l_orderkey)) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_orderkey')")
     spark.sql(s"CREATE TABLE $cat.qty (l_orderkey BIGINT, " +
       "qty DOUBLE) PARTITIONED BY (bucket(8, l_orderkey)) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_orderkey')")
-    spark.sql(s"INSERT INTO $cat.rev SELECT * FROM q207_rev_$nonce")
-    spark.sql(s"INSERT INTO $cat.qty SELECT * FROM q207_qty_$nonce")
+    spark.sql(s"INSERT INTO $cat.rev SELECT * FROM $revView")
+    spark.sql(s"INSERT INTO $cat.qty SELECT * FROM $qtyView")
     val confs = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -3118,20 +3092,17 @@ object Relational {
     * some other query. */
   val q209BloomPointLookup: Q = (spark, dir) => {
     import graft.sources.LakeReadScanBuilder
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakebl_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q209_$nonce")
+    val scratch = Scratch(spark, "q209")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q209_src")
     t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .repartition(8) // hash-distributed: min/max useless for lookups
-      .createOrReplaceTempView(s"q209_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.ord (o_orderkey BIGINT, " +
       "o_custkey BIGINT, o_totalprice DOUBLE) " +
       "TBLPROPERTIES('graft.bloom.columns'='o_orderkey')")
-    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM q209_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM $srcView")
     LakeReadScanBuilder.lastBloomPrune.set(-1L)
     val hit = spark.sql(s"SELECT o_custkey, o_totalprice " +
       s"FROM $cat.ord WHERE o_orderkey = 1189").collect()(0)
@@ -3190,21 +3161,18 @@ object Relational {
     * across the upstream table's own maintenance. */
   val q210RowLineage: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakerl_$nonce"
-    val root = s"/tmp/graft_q210_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q210")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q210_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "customer")
       .select(col("c_custkey"),
         col("c_nationkey").cast("int").as("c_nationkey"))
       .repartition(1).sortWithinPartitions("c_custkey")
-      .createOrReplaceTempView(s"q210_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_custkey BIGINT, " +
       "c_nationkey INT) TBLPROPERTIES('graft.row.lineage'='true')")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q210_src_$nonce") // v1
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView") // v1
     // O(1) gates (the q211 digest discipline — no row-proportional
     // driver collects): the (key, id) mapping is pinned by a
     // single-row (count, xxhash64-sum) digest before and after the
@@ -3280,26 +3248,23 @@ object Relational {
     * compaction vs rewriting the table before anything improves. */
   val q204LakeSpecEvolution: Q = (spark, dir) => {
     import graft.sources.{LakeReadScanBuilder, VersionedTable}
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakesev_$nonce"
-    val root = s"/tmp/graft_q204_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q204")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q204_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "customer")
       .select(col("c_nationkey").cast("long").as("c_nationkey"),
         col("c_custkey"), col("c_acctbal"))
-      .createOrReplaceTempView(s"q204_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_nationkey BIGINT, " +
       "c_custkey BIGINT, c_acctbal DOUBLE) " +
       "PARTITIONED BY (c_nationkey)")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q204_src_$nonce " +
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView " +
       "WHERE c_custkey % 2 = 0")
     // the evolution: one property write, committed files untouched
     spark.sql(s"ALTER TABLE $cat.c SET TBLPROPERTIES(" +
       "'graft.partitioning'='bucket(8, c_custkey)')")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q204_src_$nonce " +
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView " +
       "WHERE c_custkey % 2 = 1")
     // (1) gen-0 pruning: nation lookup drops other nations' gen-0 files
     LakeReadScanBuilder.lastPartitionPrune.set(-1L)
@@ -3385,9 +3350,9 @@ object Relational {
     * zero-copy/vacuum-safety mechanics are spec-pinned in OpsSpec). */
   val q164ShallowClone: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val stamp = java.util.UUID.randomUUID().toString
-    val srcT = s"/tmp/graft_q164a_$stamp"
-    val dstT = s"/tmp/graft_q164b_$stamp"
+    val scratch = Scratch(spark, "q164")
+    val srcT = scratch.path("a")
+    val dstT = scratch.path("b")
     val orders = Tables(spark, dir, "orders")
     VersionedTable.commit(spark, orders, srcT, carryForward = false)
     VersionedTable.shallowClone(spark, srcT, dstT)
@@ -3497,7 +3462,7 @@ object Relational {
     * recompute of the consumer's state. */
   val q166ChangeFeed: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_q166_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q166").path("data")
     val orders = Tables(spark, dir, "orders")
     val cut0 = ntz("1997-01-01 00:00:00")
     val cut1 = ntz("1996-01-01 00:00:00")
@@ -3555,9 +3520,8 @@ object Relational {
   val q184LakeChangeStream: Q = (spark, dir) => {
     import graft.sources.VersionedTable
     import graft.streaming.StreamOps
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val base = s"/tmp/graft_q184_$nonce"
+    val scratch = Scratch(spark, "q184")
+    val base = scratch.path("changes")
     val orders = t(spark, dir, "orders").select(
       col("o_orderkey"), col("o_orderdate"),
       col("o_orderpriority"), col("o_totalprice"))
@@ -3574,7 +3538,7 @@ object Relational {
     val feed = StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, base,
         maxVersionsPerTrigger = 8),
-      s"q184_mem_$nonce", "append")
+      scratch.name("q184_mem"), "append")
     val w = Window.partitionBy(col("o_orderkey"))
     val live = feed
       .withColumn("maxv", max(col("_commit_version")).over(w))
@@ -3614,28 +3578,25 @@ object Relational {
   val q206CdfUpdateImages: Q = (spark, dir) => {
     import graft.sources.VersionedTable
     import graft.streaming.StreamOps
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakeui_$nonce"
-    val root = s"/tmp/graft_q206_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q206")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q206_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
-      .createOrReplaceTempView(s"q206_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.ord (o_orderkey BIGINT, " +
       "o_orderpriority STRING, o_totalprice DOUBLE) " +
       "PARTITIONED BY (o_orderpriority) " +
       "TBLPROPERTIES('graft.cdc.key'='o_orderkey')")
-    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM q206_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM $srcView")
     spark.sql(s"UPDATE $cat.ord SET o_totalprice = o_totalprice + 100.0 " +
       "WHERE o_orderpriority = '1-URGENT'")
     val updV = VersionedTable.latestVersion(spark, s"$root/ord").get
     val feed = StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, s"$root/ord"),
-      s"q206_mem_$nonce", "append")
+      scratch.name("q206_mem"), "append")
     // subtract-then-add over the whole feed ≡ final table total
     val folded = feed.agg(round(sum(
       when(col("_change_type").isin("insert", "update_postimage"),
@@ -3686,13 +3647,10 @@ object Relational {
   val q211TableChanges: Q = (spark, dir) => {
     import graft.sources.VersionedTable
     import graft.streaming.StreamOps
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_laketc_$nonce"
-    val root = s"/tmp/graft_q211_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q211")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q211_src")
+    val root = scratch.catalogRoot
     // a 10% key sample: the feed's SEMANTICS are what the key gates
     // (insert/delete/update legs, stream equality); the lifecycle
     // cost would otherwise dominate the bench suite at full SF
@@ -3700,12 +3658,12 @@ object Relational {
       .filter(col("o_orderkey") % 10 === 0)
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
-      .createOrReplaceTempView(s"q211_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.ord (o_orderkey BIGINT, " +
       "o_orderpriority STRING, o_totalprice DOUBLE) " +
       "PARTITIONED BY (o_orderpriority) " +
       "TBLPROPERTIES('graft.cdc.key'='o_orderkey')")
-    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM q211_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.ord SELECT * FROM $srcView")
     spark.sql(s"UPDATE $cat.ord SET o_totalprice = o_totalprice + 100.0 " +
       "WHERE o_orderpriority = '1-URGENT'")
     VersionedTable.deleteWhereMergeOnRead(spark, s"$root/ord",
@@ -3721,7 +3679,7 @@ object Relational {
     val streamed = StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, s"$root/ord",
         maxVersionsPerTrigger = 16),
-      s"q211_mem_$nonce", "append")
+      scratch.name("q211_mem"), "append")
       .select(batch.columns.map(col): _*)
     def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
@@ -3789,20 +3747,17 @@ object Relational {
     * rewrite. */
   val q212DefaultValues: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakedf_$nonce"
-    val root = s"/tmp/graft_q212_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q212")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q212_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "customer")
       .select(col("c_custkey"),
         col("c_nationkey").cast("int").as("c_nationkey"))
-      .createOrReplaceTempView(s"q212_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_custkey BIGINT, " +
       "c_nationkey INT)")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q212_src_$nonce") // v1
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView") // v1
     val filesBefore = VersionedTable.filesOf(spark, s"$root/c", 1).toSet
     spark.sql(s"ALTER TABLE $cat.c ADD COLUMN segment STRING " +
       "DEFAULT 'standard'")                                        // v2
@@ -3853,19 +3808,15 @@ object Relational {
     * raw JSON column (usually the table's widest) prunes out of the
     * scan entirely. */
   val q213JsonShred: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakejs_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root",
-      s"/tmp/graft_q213_$nonce")
+    val scratch = Scratch(spark, "q213")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q213_src")
     graft.Tables(spark, dir, "events")
       .select(col("event_type"), col("props"))
-      .createOrReplaceTempView(s"q213_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.e (event_type STRING, props STRING) " +
       "TBLPROPERTIES('graft.json.shred'='props:$.k')")
-    spark.sql(s"INSERT INTO $cat.e SELECT * FROM q213_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.e SELECT * FROM $srcView")
     def agg(src: String): DataFrame = spark.sql(
       s"""SELECT event_type,
          |  sum(CAST(get_json_object(props, '$$.k') AS BIGINT)) AS k_sum,
@@ -3879,7 +3830,7 @@ object Relational {
       .filter(_.contains("ReadSchema")).mkString("|")
     val planShredded = rs.contains("__shred_k") && !rs.contains("props")
     // gate 2: the raw parse path answers identically
-    val raw = agg(s"q213_src_$nonce")
+    val raw = agg(srcView)
     val sameAnswers = shredded.exceptAll(raw).isEmpty &&
       raw.exceptAll(shredded).isEmpty
     shredded
@@ -3913,24 +3864,20 @@ object Relational {
     * tables only through row counts — join order and build-side
     * choices on low-cardinality dimensions fly blind. */
   val q214NdvBroadcast: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakend_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root",
-      s"/tmp/graft_q214_$nonce")
+    val scratch = Scratch(spark, "q214")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q214_src")
     t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
-      .createOrReplaceTempView(s"q214_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.dim (o_orderkey BIGINT, " +
       "o_orderpriority STRING, o_totalprice DOUBLE) " +
       "TBLPROPERTIES('graft.ndv.columns'='o_orderpriority')")
     spark.sql(s"CREATE TABLE $cat.ctl (o_orderkey BIGINT, " +
       "o_orderpriority STRING, o_totalprice DOUBLE)")
-    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM q214_src_$nonce")
-    spark.sql(s"INSERT INTO $cat.ctl SELECT * FROM q214_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM $srcView")
+    spark.sql(s"INSERT INTO $cat.ctl SELECT * FROM $srcView")
     val saved = Seq("spark.sql.cbo.enabled",
       "spark.sql.autoBroadcastJoinThreshold")
       .map(k => k -> spark.conf.getOption(k))
@@ -3940,7 +3887,7 @@ object Relational {
       def q(tab: String): DataFrame = spark.sql(
         s"""SELECT d.o_orderpriority,
            |  count(*) AS n, round(sum(f.o_totalprice), 2) AS total
-           |FROM q214_src_$nonce f
+           |FROM $srcView f
            |JOIN (SELECT DISTINCT o_orderpriority FROM $cat.$tab) d
            |  ON f.o_orderpriority = d.o_orderpriority
            |GROUP BY d.o_orderpriority""".stripMargin)
@@ -3979,27 +3926,23 @@ object Relational {
     * path reads the owning files only, and the per-row cast
     * disappears from the query entirely. */
   val q215TypedShred: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakets_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root",
-      s"/tmp/graft_q215_$nonce")
+    val scratch = Scratch(spark, "q215")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q215_src")
     // a third of events (deterministic event_id sample): the gates are
     // plan facts (typed read + file prune), not volume-dependent
     graft.Tables(spark, dir, "events")
       .where(col("event_id") % 3 === 0)
       .select(col("event_type"), col("props"))
-      .createOrReplaceTempView(s"q215_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.e (event_type STRING, props STRING) " +
       "TBLPROPERTIES('graft.json.shred'='props:$.k BIGINT')")
     // two commits with DISJOINT $.k ranges: each commit's files bound
     // one side of 50, so the range predicate below can prove the low
     // commit's files irrelevant from manifest min/max alone
-    spark.sql(s"INSERT INTO $cat.e SELECT * FROM q215_src_$nonce " +
+    spark.sql(s"INSERT INTO $cat.e SELECT * FROM $srcView " +
       "WHERE CAST(get_json_object(props, '$.k') AS BIGINT) < 50")
-    spark.sql(s"INSERT INTO $cat.e SELECT * FROM q215_src_$nonce " +
+    spark.sql(s"INSERT INTO $cat.e SELECT * FROM $srcView " +
       "WHERE CAST(get_json_object(props, '$.k') AS BIGINT) >= 50")
     val q = spark.sql(
       s"""SELECT event_type,
@@ -4055,30 +3998,27 @@ object Relational {
     * over skewed keys — real distributions fix join order and
     * build-side choices. */
   val q217HistogramSkew: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakehg_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root",
-      s"/tmp/graft_q217_$nonce")
+    val scratch = Scratch(spark, "q217")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q217_src")
+    val factView = scratch.name("q217_fact")
     t(spark, dir, "customer")
       .selectExpr(
         """CASE WHEN c_custkey % 100 <> 0 THEN c_custkey % 100
           |  ELSE 5000 + (c_custkey % 5000) DIV 100 * 100
           |END AS k""".stripMargin,
         "c_acctbal")
-      .createOrReplaceTempView(s"q217_src_$nonce")
+      .createOrReplaceTempView(srcView)
     t(spark, dir, "orders")
       .selectExpr("o_orderkey % 10000 AS fk", "o_totalprice")
-      .createOrReplaceTempView(s"q217_fact_$nonce")
+      .createOrReplaceTempView(factView)
     spark.sql(s"CREATE TABLE $cat.dim (k BIGINT, c_acctbal DOUBLE) " +
       "TBLPROPERTIES('graft.ndv.columns'='k', " +
       "'graft.histogram.columns'='k')")
     spark.sql(s"CREATE TABLE $cat.ctl (k BIGINT, c_acctbal DOUBLE) " +
       "TBLPROPERTIES('graft.ndv.columns'='k')")
-    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM q217_src_$nonce")
-    spark.sql(s"INSERT INTO $cat.ctl SELECT * FROM q217_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.dim SELECT * FROM $srcView")
+    spark.sql(s"INSERT INTO $cat.ctl SELECT * FROM $srcView")
     val saved = Seq("spark.sql.cbo.enabled",
       "spark.sql.autoBroadcastJoinThreshold")
       .map(k => k -> spark.conf.getOption(k))
@@ -4088,7 +4028,7 @@ object Relational {
       def q(tab: String): DataFrame = spark.sql(
         s"""SELECT count(*) AS n,
            |  round(sum(f.o_totalprice), 2) AS total
-           |FROM q217_fact_$nonce f
+           |FROM $factView f
            |JOIN (SELECT k FROM $cat.$tab WHERE k >= 4000) d
            |  ON f.fk = d.k""".stripMargin)
       val flipped = q("dim").queryExecution.sparkPlan.toString
@@ -4133,24 +4073,23 @@ object Relational {
     * idempotent across upstream maintenance: the id IS the merge key. */
   val q216LineageFeed: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakelf_$nonce"
-    val root = s"/tmp/graft_q216_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q216")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q216_src")
+    val feedView = scratch.name("q216_feed")
+    val foldedView = scratch.name("q216_folded")
+    val root = scratch.catalogRoot
     // a fifth of customer (deterministic key sample): the lifecycle
     // and the id contracts are what is measured, not volume
     t(spark, dir, "customer")
       .where(col("c_custkey") % 5 === 0)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      .createOrReplaceTempView(s"q216_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_custkey BIGINT, " +
       "c_mktsegment STRING, c_acctbal DOUBLE) " +
       "TBLPROPERTIES('graft.row.lineage'='true', " +
       "'graft.cdc.key'='c_custkey')")
-    spark.sql(s"INSERT INTO $cat.c SELECT * FROM q216_src_$nonce") // v1
+    spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView") // v1
     spark.sql(s"UPDATE $cat.c SET c_acctbal = -1.0 " +
       "WHERE c_custkey % 10 = 0")                                  // v2
     spark.sql(s"DELETE FROM $cat.c WHERE c_custkey % 7 = 0")       // v3
@@ -4162,7 +4101,7 @@ object Relational {
     val feed = VersionedTable.tableChanges(spark, s"$root/c", 0)
       .localCheckpoint()
     // gate 1: pre/post images pair 1:1 on (_row_id, c_custkey)
-    feed.createOrReplaceTempView(s"q216_feed_$nonce")
+    feed.createOrReplaceTempView(feedView)
     val unpaired = spark.sql(
       s"""SELECT count(*) FROM (
          |  SELECT _row_id,
@@ -4171,7 +4110,7 @@ object Relational {
          |    sum(CASE WHEN _change_type = 'update_postimage'
          |      THEN 1 ELSE 0 END) AS post,
          |    count(DISTINCT c_custkey) AS nk
-         |  FROM q216_feed_$nonce
+         |  FROM $feedView
          |  WHERE _change_type LIKE 'update%'
          |  GROUP BY _row_id
          |  HAVING pre <> post OR nk <> 1)""".stripMargin)
@@ -4184,10 +4123,10 @@ object Relational {
          |    ORDER BY _commit_version DESC,
          |      CASE WHEN _change_type IN ('insert', 'update_postimage')
          |        THEN 1 ELSE 0 END DESC) AS __rn
-         |  FROM q216_feed_$nonce)
+         |  FROM $feedView)
          |WHERE __rn = 1
          |  AND _change_type IN ('insert', 'update_postimage')""".stripMargin)
-    folded.createOrReplaceTempView(s"q216_folded_$nonce")
+    folded.createOrReplaceTempView(foldedView)
     // gate 2: fold-back equals the live table (O(1) digest compare)
     def digest(src: String): (Long, java.math.BigDecimal) = {
       val r = spark.sql(s"SELECT count(*), " +
@@ -4207,7 +4146,7 @@ object Relational {
          |  round(sum(c_acctbal), 2) AS bal,
          |  sum(CAST(xxhash64(c_custkey, c_mktsegment, c_acctbal)
          |    AS DECIMAL(38,0))) AS __h
-         |FROM q216_folded_$nonce GROUP BY c_mktsegment""".stripMargin)
+         |FROM $foldedView GROUP BY c_mktsegment""".stripMargin)
       .localCheckpoint() // segment-count-sized; lets the feed blocks go
     val g = grouped.agg(sum(col("n")), sum(col("__h"))).collect()(0)
     val fn = if (g.isNullAt(0)) 0L else g.getLong(0)
@@ -4217,10 +4156,10 @@ object Relational {
     val rolled = grouped
       .select(col("c_mktsegment"), col("n"), col("bal"))
       .withColumn("lineage_feed_ok", lit(ok))
-    // the nonce temp views point into the released checkpoint blocks —
+    // the scratch temp views point into the released checkpoint blocks —
     // drop them before the release so nothing dangling stays registered
-    spark.catalog.dropTempView(s"q216_feed_$nonce")
-    spark.catalog.dropTempView(s"q216_folded_$nonce")
+    spark.catalog.dropTempView(feedView)
+    spark.catalog.dropTempView(foldedView)
     graft.ops.Checkpoints.release(feed)
     rolled.orderBy(col("c_mktsegment"))
   }
@@ -4254,20 +4193,17 @@ object Relational {
     * viable at all. */
   val q218ManifestSegments: Q = (spark, dir) => {
     import graft.sources.LakeManifest
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakeseg_$nonce"
-    val root = s"/tmp/graft_q218_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q218")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q218_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-      .createOrReplaceTempView(s"q218_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.c (c_custkey BIGINT, " +
       "c_mktsegment STRING)")
     (0 until 3).foreach { i =>
-      spark.sql(s"INSERT INTO $cat.c SELECT * FROM q218_src_$nonce " +
+      spark.sql(s"INSERT INTO $cat.c SELECT * FROM $srcView " +
         s"WHERE c_custkey % 3 = $i")
     }
     val f = org.apache.hadoop.fs.FileSystem.get(
@@ -4334,22 +4270,19 @@ object Relational {
     * nothing. */
   val q185ClusteredWrite: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakec_$nonce"
-    val root = s"/tmp/graft_q185_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val scratch = Scratch(spark, "q185")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q185_src")
+    val root = scratch.catalogRoot
     t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"))
-      .createOrReplaceTempView(s"q185_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"""CREATE TABLE $cat.t (o_orderkey BIGINT,
       | o_orderpriority STRING, o_totalprice DOUBLE)
       | TBLPROPERTIES('graft.write.ordered-by'='o_orderkey')"""
       .stripMargin)
-    spark.sql(s"INSERT INTO $cat.t SELECT * FROM q185_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $srcView")
     VersionedTable.compact(spark, s"$root/t", targetFiles = 8)
     val v = VersionedTable.latestVersion(spark, s"$root/t").get
     val ranges = VersionedTable.snapshotOf(spark, s"$root/t", v)
@@ -4391,7 +4324,7 @@ object Relational {
     * is also the shape a 100 TB ingest usually ARRIVES in; this pins
     * the decode path end to end. */
   val q167CsvJsonRoundtrip: Q = (spark, dir) => {
-    val base = s"/tmp/graft_q167_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q167").path("data")
     val d = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
@@ -4431,7 +4364,7 @@ object Relational {
     * against.) */
   val q170SchemaEvolution: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_q170_${java.util.UUID.randomUUID()}"
+    val base = Scratch(spark, "q170").path("data")
     val orders = Tables(spark, dir, "orders")
     val cut = ntz("1997-01-01 00:00:00")
     VersionedTable.commit(spark,
@@ -4479,26 +4412,25 @@ object Relational {
     * fallback into VersionedTable.commit, so SQL INSERTs inherit the
     * manifest-rename atomic commit point; reads are Spark's own
     * ParquetTable over the snapshot's file list (full pushdown stack).
-    * Each run registers a nonce-named catalog so reruns never share
+    * Each run registers its own scratch catalog so reruns never share
     * cached catalog state. */
   val q175LakeCatalogSql: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q175_$nonce")
+    val scratch = Scratch(spark, "q175")
+    val cat = scratch.catalog
+    val preView = scratch.name("q175_pre")
+    val postView = scratch.name("q175_post")
+    val fView = scratch.name("q175_f")
     val o = t(spark, dir, "orders")
     val cut = ntz("1997-01-01 00:00:00")
     o.filter(col("o_orderdate") < cut)
-      .createOrReplaceTempView("q175_pre")
+      .createOrReplaceTempView(preView)
     o.filter(col("o_orderdate") >= cut)
-      .createOrReplaceTempView("q175_post")
+      .createOrReplaceTempView(postView)
     o.filter(col("o_orderstatus") === "F")
-      .createOrReplaceTempView("q175_f")
-    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM q175_pre")
-    spark.sql(s"INSERT INTO $cat.orders_v SELECT * FROM q175_post")
-    spark.sql(s"INSERT OVERWRITE $cat.orders_v SELECT * FROM q175_f")
+      .createOrReplaceTempView(fView)
+    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM $preView")
+    spark.sql(s"INSERT INTO $cat.orders_v SELECT * FROM $postView")
+    spark.sql(s"INSERT OVERWRITE $cat.orders_v SELECT * FROM $fView")
     def fp(v: Long, from: String): String =
       s"""SELECT CAST($v AS BIGINT) AS version,
          |  count(*) AS n_rows,
@@ -4553,14 +4485,11 @@ object Relational {
     * versions; that lifecycle is q164's). Oracle restates each snapshot
     * from the raw source with the filter that defined it. */
   val q176LakeDeleteSql: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q176_$nonce")
-    t(spark, dir, "orders").createOrReplaceTempView("q176_src")
-    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM q176_src")
+    val scratch = Scratch(spark, "q176")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q176_src")
+    t(spark, dir, "orders").createOrReplaceTempView(srcView)
+    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM $srcView")
     spark.sql(s"DELETE FROM $cat.orders_v " +
       "WHERE o_orderstatus = 'O' AND o_totalprice < 150000.0")
     spark.sql(s"TRUNCATE TABLE $cat.orders_v")
@@ -4614,21 +4543,18 @@ object Relational {
     * orders), so the hash gate proves the rewrite loses, duplicates,
     * and resurrects nothing. */
   val q177LakeUpdateMergeSql: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q177_$nonce")
-    t(spark, dir, "orders").createOrReplaceTempView("q177_src")
+    val scratch = Scratch(spark, "q177")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q177_src")
+    t(spark, dir, "orders").createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.orders_v AS " +
-      "SELECT * FROM q177_src WHERE o_orderkey % 4 <> 0")
+      s"SELECT * FROM $srcView WHERE o_orderkey % 4 <> 0")
     spark.sql(s"UPDATE $cat.orders_v " +
       "SET o_totalprice = o_totalprice + 1000.0 " +
       "WHERE o_orderstatus = 'F'")
     spark.sql(
       s"""MERGE INTO $cat.orders_v AS t
-         |USING (SELECT * FROM q177_src WHERE o_orderkey % 2 = 0) AS s
+         |USING (SELECT * FROM $srcView WHERE o_orderkey % 2 = 0) AS s
          |ON t.o_orderkey = s.o_orderkey
          |WHEN MATCHED THEN UPDATE SET o_totalprice = s.o_totalprice
          |WHEN NOT MATCHED THEN INSERT *
@@ -4679,23 +4605,22 @@ object Relational {
     * source with the filter that defined it, so the hash gate proves
     * footer-count == count(*) for every snapshot. */
   val q179LakeVersionsMeta: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q179_$nonce")
+    val scratch = Scratch(spark, "q179")
+    val cat = scratch.catalog
+    val preView = scratch.name("q179_pre")
+    val postView = scratch.name("q179_post")
+    val fView = scratch.name("q179_f")
     val o = t(spark, dir, "orders")
     val cut = ntz("1997-01-01 00:00:00")
     o.filter(col("o_orderdate") < cut)
-      .createOrReplaceTempView("q179_pre")
+      .createOrReplaceTempView(preView)
     o.filter(col("o_orderdate") >= cut)
-      .createOrReplaceTempView("q179_post")
+      .createOrReplaceTempView(postView)
     o.filter(col("o_orderstatus") === "F")
-      .createOrReplaceTempView("q179_f")
-    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM q179_pre")
-    spark.sql(s"INSERT INTO $cat.orders_v SELECT * FROM q179_post")
-    spark.sql(s"INSERT OVERWRITE $cat.orders_v SELECT * FROM q179_f")
+      .createOrReplaceTempView(fView)
+    spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM $preView")
+    spark.sql(s"INSERT INTO $cat.orders_v SELECT * FROM $postView")
+    spark.sql(s"INSERT OVERWRITE $cat.orders_v SELECT * FROM $fView")
     spark.sql(
       s"""SELECT version, total_rows, n_files >= 1 AS files_ok
          |FROM $cat.orders_v.versions ORDER BY version""".stripMargin)
@@ -4730,17 +4655,14 @@ object Relational {
     * oracle restates the interleave with DuckDB's own int64 bit ops,
     * so the hash gate proves the curve bit-identical across engines. */
   val q180CatalogFunction: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q180_$nonce")
-    t(spark, dir, "lineitem").createOrReplaceTempView("q180_src")
+    val scratch = Scratch(spark, "q180")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q180_src")
+    t(spark, dir, "lineitem").createOrReplaceTempView(srcView)
     spark.sql(
       s"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS line_no,
          |  $cat.morton2(l_partkey, l_suppkey) AS z
-         |FROM q180_src WHERE l_orderkey <= 200
+         |FROM $srcView WHERE l_orderkey <= 200
          |ORDER BY l_orderkey, line_no""".stripMargin)
   }
 
@@ -4781,16 +4703,13 @@ object Relational {
     * actual deletion, across BOTH delete generations, with history
     * byte-stable. */
   val q181LakeMorDeleteSql: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lake_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q181_$nonce")
-    t(spark, dir, "orders").createOrReplaceTempView("q181_src")
+    val scratch = Scratch(spark, "q181")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q181_src")
+    t(spark, dir, "orders").createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.orders_v " +
       "TBLPROPERTIES('graft.delete.mode'='merge-on-read') " +
-      "AS SELECT * FROM q181_src")
+      s"AS SELECT * FROM $srcView")
     spark.sql(s"DELETE FROM $cat.orders_v WHERE o_orderstatus = 'F'")
     spark.sql(s"DELETE FROM $cat.orders_v WHERE o_totalprice >= 200000.0")
     def fp(v: Long): String =
@@ -4822,197 +4741,100 @@ object Relational {
       |  WHERE NOT o_orderstatus = 'F' AND NOT o_totalprice >= 200000.0
       |) ORDER BY version""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_filter_project" -> q02FilterProject,
-    "q03_top_orders" -> q03TopOrders,
-    "q04_semi_join" -> q04SemiJoin,
-    "q05_region_revenue" -> q05RegionRevenue,
-    "q06_forecast_revenue" -> q06ForecastRevenue,
-    "q07_anti_join" -> q07AntiJoin,
-    "q08_outer_join" -> q08OuterJoin,
-    "q09_count_distinct" -> q09CountDistinct,
-    "q29_approx_distinct" -> q29ApproxDistinct,
-    "q10_grouping_sets" -> q10GroupingSets,
-    "q11_rollup" -> q11Rollup,
-    "q12_cube" -> q12Cube,
-    "q13_topk_per_group" -> q13TopKPerGroup,
-    "q14_window_rank" -> q14WindowRank,
-    "q15_window_running" -> q15WindowRunning,
-    "q16_window_lag_lead" -> q16WindowLagLead,
-    "q17_window_range" -> q17WindowRange,
-    "q18_range_join" -> q18RangeJoin,
-    "q19_set_ops" -> q19SetOps,
-    "q20_distinct" -> q20Distinct,
-    "q21_string_fns" -> q21StringFns,
-    "q22_date_fns" -> q22DateFns,
-    "q23_math_fns" -> q23MathFns,
-    "q60_pivot" -> q60Pivot,
-    "q61_unpivot" -> q61Unpivot,
-    "q62_bucketed_join" -> q62BucketedJoin,
-    "q63_percentiles" -> q63Percentiles,
-    "q65_skew_join" -> q65SkewJoin,
-    "q79_text_formats" -> q79TextFormats,
-    "q82_sql_tpch5" -> q82SqlTpch5,
-    "q83_scalar_subquery" -> q83ScalarSubquery,
-    "q84_exists_subquery" -> q84ExistsSubquery,
-    "q90_approx_percentile" -> q90ApproxPercentile,
-    "q93_bloom_prune" -> q93BloomPrune,
-    "q94_cms_frequency" -> q94CmsFrequency,
-    "q96_sorted_layout" -> q96SortedLayout,
-    "q107_zorder_layout" -> q107ZorderLayout,
-    "q102_table_diff" -> q102TableDiff,
-    "q124_orc_partitioned" -> q124OrcPartitioned,
-    "q126_dynamic_overwrite" -> q126DynamicOverwrite,
-    "q130_hll_union" -> q130HllUnion,
-    "q131_theta_overlap" -> q131ThetaOverlap,
-    "q133_kll_quantiles" -> q133KllQuantiles,
-    "q139_incremental_agg" -> q139IncrementalAgg,
-    "q142_profile" -> q142Profile,
-    "q144_rank_family" -> q144RankFamily,
-    "q147_quality_checks" -> q147QualityChecks,
-    "q151_time_travel" -> q151TimeTravel,
-    "q155_cusum" -> q155Cusum,
-    "q156_skew_report" -> q156SkewReport,
-    "q158_cbo_star" -> q158CboStar,
-    "q162_compaction" -> q162Compaction,
-    "q164_shallow_clone" -> q164ShallowClone,
-    "q165_k_anonymity" -> q165KAnonymity,
-    "q166_change_feed" -> q166ChangeFeed,
-    "q184_lake_change_stream" -> q184LakeChangeStream,
-    "q185_lake_clustered_write" -> q185ClusteredWrite,
-    "q186_lake_call_maintenance" -> q186LakeCallMaintenance,
-    "q187_lake_stream_sink" -> q187LakeStreamSink,
-    "q188_lake_restore_clone" -> q188LakeRestoreClone,
-    "q167_csv_json_roundtrip" -> q167CsvJsonRoundtrip,
-    "q170_schema_evolution" -> q170SchemaEvolution,
-    "q175_lake_catalog_sql" -> q175LakeCatalogSql,
-    "q176_lake_delete_sql" -> q176LakeDeleteSql,
-    "q177_lake_update_merge_sql" -> q177LakeUpdateMergeSql,
-    "q179_lake_versions_meta" -> q179LakeVersionsMeta,
-    "q180_catalog_function" -> q180CatalogFunction,
-    "q181_lake_mor_delete_sql" -> q181LakeMorDeleteSql,
-    "q189_lake_stats_agg" -> q189LakeStatsAgg,
-    "q190_lake_runtime_prune" -> q190LakeRuntimePrune,
-    "q191_lake_tags" -> q191LakeTags,
-    "q192_lake_history" -> q192LakeHistory,
-    "q193_lake_rgf_merge" -> q193LakeRgfMerge,
-    "q194_lake_wap" -> q194LakeWap,
-    "q195_lake_files_meta" -> q195LakeFilesMeta,
-    "q196_file_lineage" -> q196FileLineage,
-    "q197_lake_spj" -> q197LakeSpj,
-    "q198_lake_rename_drop" -> q198LakeRenameDrop,
-    "q199_lake_partition_layout" -> q199LakePartitionLayout,
-    "q204_lake_spec_evolution" -> q204LakeSpecEvolution,
-    "q206_cdf_update_images" -> q206CdfUpdateImages,
-    "q207_sort_free_join" -> q207SortFreeJoin,
-    "q208_type_widening" -> q208TypeWidening,
-    "q209_bloom_point_lookup" -> q209BloomPointLookup,
-    "q210_row_lineage" -> q210RowLineage,
-    "q211_table_changes" -> q211TableChanges,
-    "q212_default_values" -> q212DefaultValues,
-    "q213_json_shred" -> q213JsonShred,
-    "q214_ndv_broadcast" -> q214NdvBroadcast,
-    "q215_typed_shred" -> q215TypedShred,
-    "q216_lineage_feed" -> q216LineageFeed,
-    "q217_histogram_skew" -> q217HistogramSkew,
-    "q218_manifest_segments" -> q218ManifestSegments,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_filter_project" -> q02Oracle,
-    "q03_top_orders" -> q03Oracle,
-    "q04_semi_join" -> q04Oracle,
-    "q05_region_revenue" -> q05Oracle,
-    "q06_forecast_revenue" -> q06Oracle,
-    "q07_anti_join" -> q07Oracle,
-    "q08_outer_join" -> q08Oracle,
-    "q09_count_distinct" -> q09Oracle,
-    "q29_approx_distinct" -> q29Oracle,
-    "q10_grouping_sets" -> q10Oracle,
-    "q11_rollup" -> q11Oracle,
-    "q12_cube" -> q12Oracle,
-    "q13_topk_per_group" -> q13Oracle,
-    "q14_window_rank" -> q14Oracle,
-    "q15_window_running" -> q15Oracle,
-    "q16_window_lag_lead" -> q16Oracle,
-    "q17_window_range" -> q17Oracle,
-    "q18_range_join" -> q18Oracle,
-    "q19_set_ops" -> q19Oracle,
-    "q20_distinct" -> q20Oracle,
-    "q21_string_fns" -> q21Oracle,
-    "q22_date_fns" -> q22Oracle,
-    "q23_math_fns" -> q23Oracle,
-    "q60_pivot" -> q60Oracle,
-    "q61_unpivot" -> q61Oracle,
-    "q62_bucketed_join" -> q62Oracle,
-    "q63_percentiles" -> q63Oracle,
-    "q65_skew_join" -> q65Oracle,
-    "q79_text_formats" -> q79Oracle,
-    "q82_sql_tpch5" -> q82Oracle,
-    "q83_scalar_subquery" -> q83Oracle,
-    "q84_exists_subquery" -> q84Oracle,
-    "q90_approx_percentile" -> q90Oracle,
-    "q93_bloom_prune" -> q93Oracle,
-    "q94_cms_frequency" -> q94Oracle,
-    "q96_sorted_layout" -> q96Oracle,
-    "q107_zorder_layout" -> q107Oracle,
-    "q102_table_diff" -> q102Oracle,
-    "q124_orc_partitioned" -> q124Oracle,
-    "q126_dynamic_overwrite" -> q126Oracle,
-    "q130_hll_union" -> q130Oracle,
-    "q131_theta_overlap" -> q131Oracle,
-    "q133_kll_quantiles" -> q133Oracle,
-    "q139_incremental_agg" -> q139Oracle,
-    "q142_profile" -> q142Oracle,
-    "q144_rank_family" -> q144Oracle,
-    "q147_quality_checks" -> q147Oracle,
-    "q151_time_travel" -> q151Oracle,
-    "q155_cusum" -> q155Oracle,
-    "q156_skew_report" -> q156Oracle,
-    "q158_cbo_star" -> q158Oracle,
-    "q162_compaction" -> q162Oracle,
-    "q164_shallow_clone" -> q164Oracle,
-    "q165_k_anonymity" -> q165Oracle,
-    "q166_change_feed" -> q166Oracle,
-    "q184_lake_change_stream" -> q184Oracle,
-    "q185_lake_clustered_write" -> q185Oracle,
-    "q186_lake_call_maintenance" -> q186Oracle,
-    "q187_lake_stream_sink" -> q187Oracle,
-    "q188_lake_restore_clone" -> q188Oracle,
-    "q167_csv_json_roundtrip" -> q167Oracle,
-    "q170_schema_evolution" -> q170Oracle,
-    "q175_lake_catalog_sql" -> q175Oracle,
-    "q176_lake_delete_sql" -> q176Oracle,
-    "q177_lake_update_merge_sql" -> q177Oracle,
-    "q179_lake_versions_meta" -> q179Oracle,
-    "q180_catalog_function" -> q180Oracle,
-    "q181_lake_mor_delete_sql" -> q181Oracle,
-    "q189_lake_stats_agg" -> q189Oracle,
-    "q190_lake_runtime_prune" -> q190Oracle,
-    "q191_lake_tags" -> q191Oracle,
-    "q192_lake_history" -> q192Oracle,
-    "q193_lake_rgf_merge" -> q193Oracle,
-    "q194_lake_wap" -> q194Oracle,
-    "q195_lake_files_meta" -> q195Oracle,
-    "q196_file_lineage" -> q196Oracle,
-    "q197_lake_spj" -> q197Oracle,
-    "q198_lake_rename_drop" -> q198Oracle,
-    "q199_lake_partition_layout" -> q199Oracle,
-    "q204_lake_spec_evolution" -> q204Oracle,
-    "q206_cdf_update_images" -> q206Oracle,
-    "q207_sort_free_join" -> q207Oracle,
-    "q208_type_widening" -> q208Oracle,
-    "q209_bloom_point_lookup" -> q209Oracle,
-    "q210_row_lineage" -> q210Oracle,
-    "q211_table_changes" -> q211Oracle,
-    "q212_default_values" -> q212Oracle,
-    "q213_json_shred" -> q213Oracle,
-    "q214_ndv_broadcast" -> q214Oracle,
-    "q215_typed_shred" -> q215Oracle,
-    "q216_lineage_feed" -> q216Oracle,
-    "q217_histogram_skew" -> q217Oracle,
-    "q218_manifest_segments" -> q218Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q01_pricing_summary" -> Key(q01PricingSummary, q01Oracle),
+    "q02_filter_project" -> Key(q02FilterProject, q02Oracle),
+    "q03_top_orders" -> Key(q03TopOrders, q03Oracle),
+    "q04_semi_join" -> Key(q04SemiJoin, q04Oracle),
+    "q05_region_revenue" -> Key(q05RegionRevenue, q05Oracle),
+    "q06_forecast_revenue" -> Key(q06ForecastRevenue, q06Oracle),
+    "q07_anti_join" -> Key(q07AntiJoin, q07Oracle),
+    "q08_outer_join" -> Key(q08OuterJoin, q08Oracle),
+    "q09_count_distinct" -> Key(q09CountDistinct, q09Oracle),
+    "q29_approx_distinct" -> Key(q29ApproxDistinct, q29Oracle),
+    "q10_grouping_sets" -> Key(q10GroupingSets, q10Oracle),
+    "q11_rollup" -> Key(q11Rollup, q11Oracle),
+    "q12_cube" -> Key(q12Cube, q12Oracle),
+    "q13_topk_per_group" -> Key(q13TopKPerGroup, q13Oracle),
+    "q14_window_rank" -> Key(q14WindowRank, q14Oracle),
+    "q15_window_running" -> Key(q15WindowRunning, q15Oracle),
+    "q16_window_lag_lead" -> Key(q16WindowLagLead, q16Oracle),
+    "q17_window_range" -> Key(q17WindowRange, q17Oracle),
+    "q18_range_join" -> Key(q18RangeJoin, q18Oracle),
+    "q19_set_ops" -> Key(q19SetOps, q19Oracle),
+    "q20_distinct" -> Key(q20Distinct, q20Oracle),
+    "q21_string_fns" -> Key(q21StringFns, q21Oracle),
+    "q22_date_fns" -> Key(q22DateFns, q22Oracle),
+    "q23_math_fns" -> Key(q23MathFns, q23Oracle),
+    "q60_pivot" -> Key(q60Pivot, q60Oracle),
+    "q61_unpivot" -> Key(q61Unpivot, q61Oracle),
+    "q62_bucketed_join" -> Key(q62BucketedJoin, q62Oracle),
+    "q63_percentiles" -> Key(q63Percentiles, q63Oracle),
+    "q65_skew_join" -> Key(q65SkewJoin, q65Oracle),
+    "q79_text_formats" -> Key(q79TextFormats, q79Oracle),
+    "q82_sql_tpch5" -> Key(q82SqlTpch5, q82Oracle),
+    "q83_scalar_subquery" -> Key(q83ScalarSubquery, q83Oracle),
+    "q84_exists_subquery" -> Key(q84ExistsSubquery, q84Oracle),
+    "q90_approx_percentile" -> Key(q90ApproxPercentile, q90Oracle),
+    "q93_bloom_prune" -> Key(q93BloomPrune, q93Oracle),
+    "q94_cms_frequency" -> Key(q94CmsFrequency, q94Oracle),
+    "q96_sorted_layout" -> Key(q96SortedLayout, q96Oracle),
+    "q107_zorder_layout" -> Key(q107ZorderLayout, q107Oracle),
+    "q102_table_diff" -> Key(q102TableDiff, q102Oracle),
+    "q124_orc_partitioned" -> Key(q124OrcPartitioned, q124Oracle),
+    "q126_dynamic_overwrite" -> Key(q126DynamicOverwrite, q126Oracle),
+    "q130_hll_union" -> Key(q130HllUnion, q130Oracle),
+    "q131_theta_overlap" -> Key(q131ThetaOverlap, q131Oracle),
+    "q133_kll_quantiles" -> Key(q133KllQuantiles, q133Oracle),
+    "q139_incremental_agg" -> Key(q139IncrementalAgg, q139Oracle),
+    "q142_profile" -> Key(q142Profile, q142Oracle),
+    "q144_rank_family" -> Key(q144RankFamily, q144Oracle),
+    "q147_quality_checks" -> Key(q147QualityChecks, q147Oracle),
+    "q151_time_travel" -> Key(q151TimeTravel, q151Oracle),
+    "q155_cusum" -> Key(q155Cusum, q155Oracle),
+    "q156_skew_report" -> Key(q156SkewReport, q156Oracle),
+    "q158_cbo_star" -> Key(q158CboStar, q158Oracle),
+    "q162_compaction" -> Key(q162Compaction, q162Oracle),
+    "q164_shallow_clone" -> Key(q164ShallowClone, q164Oracle),
+    "q165_k_anonymity" -> Key(q165KAnonymity, q165Oracle),
+    "q166_change_feed" -> Key(q166ChangeFeed, q166Oracle),
+    "q184_lake_change_stream" -> Key(q184LakeChangeStream, q184Oracle),
+    "q185_lake_clustered_write" -> Key(q185ClusteredWrite, q185Oracle),
+    "q186_lake_call_maintenance" -> Key(q186LakeCallMaintenance, q186Oracle),
+    "q187_lake_stream_sink" -> Key(q187LakeStreamSink, q187Oracle),
+    "q188_lake_restore_clone" -> Key(q188LakeRestoreClone, q188Oracle),
+    "q167_csv_json_roundtrip" -> Key(q167CsvJsonRoundtrip, q167Oracle),
+    "q170_schema_evolution" -> Key(q170SchemaEvolution, q170Oracle),
+    "q175_lake_catalog_sql" -> Key(q175LakeCatalogSql, q175Oracle),
+    "q176_lake_delete_sql" -> Key(q176LakeDeleteSql, q176Oracle),
+    "q177_lake_update_merge_sql" -> Key(q177LakeUpdateMergeSql, q177Oracle),
+    "q179_lake_versions_meta" -> Key(q179LakeVersionsMeta, q179Oracle),
+    "q180_catalog_function" -> Key(q180CatalogFunction, q180Oracle),
+    "q181_lake_mor_delete_sql" -> Key(q181LakeMorDeleteSql, q181Oracle),
+    "q189_lake_stats_agg" -> Key(q189LakeStatsAgg, q189Oracle),
+    "q190_lake_runtime_prune" -> Key(q190LakeRuntimePrune, q190Oracle),
+    "q191_lake_tags" -> Key(q191LakeTags, q191Oracle),
+    "q192_lake_history" -> Key(q192LakeHistory, q192Oracle),
+    "q193_lake_rgf_merge" -> Key(q193LakeRgfMerge, q193Oracle),
+    "q194_lake_wap" -> Key(q194LakeWap, q194Oracle),
+    "q195_lake_files_meta" -> Key(q195LakeFilesMeta, q195Oracle),
+    "q196_file_lineage" -> Key(q196FileLineage, q196Oracle),
+    "q197_lake_spj" -> Key(q197LakeSpj, q197Oracle),
+    "q198_lake_rename_drop" -> Key(q198LakeRenameDrop, q198Oracle),
+    "q199_lake_partition_layout" -> Key(q199LakePartitionLayout, q199Oracle),
+    "q204_lake_spec_evolution" -> Key(q204LakeSpecEvolution, q204Oracle),
+    "q206_cdf_update_images" -> Key(q206CdfUpdateImages, q206Oracle),
+    "q207_sort_free_join" -> Key(q207SortFreeJoin, q207Oracle),
+    "q208_type_widening" -> Key(q208TypeWidening, q208Oracle),
+    "q209_bloom_point_lookup" -> Key(q209BloomPointLookup, q209Oracle),
+    "q210_row_lineage" -> Key(q210RowLineage, q210Oracle),
+    "q211_table_changes" -> Key(q211TableChanges, q211Oracle),
+    "q212_default_values" -> Key(q212DefaultValues, q212Oracle),
+    "q213_json_shred" -> Key(q213JsonShred, q213Oracle),
+    "q214_ndv_broadcast" -> Key(q214NdvBroadcast, q214Oracle),
+    "q215_typed_shred" -> Key(q215TypedShred, q215Oracle),
+    "q216_lineage_feed" -> Key(q216LineageFeed, q216Oracle),
+    "q217_histogram_skew" -> Key(q217HistogramSkew, q217Oracle),
+    "q218_manifest_segments" -> Key(q218ManifestSegments, q218Oracle),
   )
 }

@@ -16,8 +16,6 @@ import graft.Tables
   * fold order matches DuckDB's list_inner_product so ranks are stable.
   */
 object SimilarityOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Σ a_i*b_i in double precision over two float vectors. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -1265,47 +1263,25 @@ object SimilarityOps {
        |FROM pr JOIN e USING (vec_id)
        |GROUP BY e.label ORDER BY label""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q36_vector_norms" -> q36VectorNorms,
-    "q37_cosine_topk" -> q37CosineTopK,
-    "q38_lsh_buckets" -> q38LshBuckets,
-    "q43_embedding_neardup" -> q43EmbeddingNearDup,
-    "q44_ann_probe" -> q44AnnProbe,
-    "q48_ivf_assign" -> q48IvfAssign,
-    "q49_ivf_probe" -> q49IvfProbe,
-    "q53_kmeans_centroids" -> q53KmeansCentroids,
-    "q54_pq_adc" -> q54PqAdc,
-    "q55_ivfpq_probe" -> q55IvfPqProbe,
-    "q69_sq8_codes" -> q69Sq8,
-    "q74_ann_recall" -> q74AnnRecall,
-    "q92_knn_graph" -> q92KnnGraph,
-    "q163_truncation_eval" -> q163TruncationEval,
-    "q111_semdedup" -> q111SemDedup,
-    "q115_hard_negatives" -> q115HardNegatives,
-    "q116_cluster_purity" -> q116ClusterPurity,
-    "q136_jl_projection" -> q136JlProjection,
-    "q148_knn_accuracy" -> q148KnnAccuracy,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q36_vector_norms" -> q36Oracle,
-    "q37_cosine_topk" -> q37Oracle,
-    "q38_lsh_buckets" -> q38Oracle,
-    "q43_embedding_neardup" -> q43Oracle,
-    "q44_ann_probe" -> q44Oracle,
-    "q48_ivf_assign" -> q48Oracle,
-    "q49_ivf_probe" -> q49Oracle,
-    "q53_kmeans_centroids" -> q53Oracle,
-    "q54_pq_adc" -> q54Oracle,
-    "q55_ivfpq_probe" -> q55Oracle,
-    "q69_sq8_codes" -> q69Oracle,
-    "q74_ann_recall" -> q74Oracle,
-    "q92_knn_graph" -> q92Oracle,
-    "q163_truncation_eval" -> q163Oracle,
-    "q111_semdedup" -> q111Oracle,
-    "q115_hard_negatives" -> q115Oracle,
-    "q116_cluster_purity" -> q116Oracle,
-    "q136_jl_projection" -> q136Oracle,
-    "q148_knn_accuracy" -> q148Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q36_vector_norms" -> Key(q36VectorNorms, q36Oracle),
+    "q37_cosine_topk" -> Key(q37CosineTopK, q37Oracle),
+    "q38_lsh_buckets" -> Key(q38LshBuckets, q38Oracle),
+    "q43_embedding_neardup" -> Key(q43EmbeddingNearDup, q43Oracle),
+    "q44_ann_probe" -> Key(q44AnnProbe, q44Oracle),
+    "q48_ivf_assign" -> Key(q48IvfAssign, q48Oracle),
+    "q49_ivf_probe" -> Key(q49IvfProbe, q49Oracle),
+    "q53_kmeans_centroids" -> Key(q53KmeansCentroids, q53Oracle),
+    "q54_pq_adc" -> Key(q54PqAdc, q54Oracle),
+    "q55_ivfpq_probe" -> Key(q55IvfPqProbe, q55Oracle),
+    "q69_sq8_codes" -> Key(q69Sq8, q69Oracle),
+    "q74_ann_recall" -> Key(q74AnnRecall, q74Oracle),
+    "q92_knn_graph" -> Key(q92KnnGraph, q92Oracle),
+    "q163_truncation_eval" -> Key(q163TruncationEval, q163Oracle),
+    "q111_semdedup" -> Key(q111SemDedup, q111Oracle),
+    "q115_hard_negatives" -> Key(q115HardNegatives, q115Oracle),
+    "q116_cluster_purity" -> Key(q116ClusterPurity, q116Oracle),
+    "q136_jl_projection" -> Key(q136JlProjection, q136Oracle),
+    "q148_knn_accuracy" -> Key(q148KnnAccuracy, q148Oracle),
   )
 }

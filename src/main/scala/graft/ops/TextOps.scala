@@ -17,8 +17,6 @@ import graft.Tables
   * and the ops scale embarrassingly parallel (no shuffle except final agg).
   */
 object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Cheap linear scans (q30–q32, q34, q35) read the table as-is: a
     * round-robin repartition costs more than the per-row work it would
     * parallelize. Only shingle-heavy q33 pays for `Tables.balanced`. */
@@ -2321,9 +2319,7 @@ object TextOps {
     * EXACT state and durable commits. */
   val q183LakeIngestDedup: Q = (spark, dir) => {
     import graft.sources.VersionedTable
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val stateDir = s"/tmp/graft_q183_$nonce/seen"
+    val stateDir = Scratch(spark, "q183").path("seen")
     val d = docs(spark, dir).select(col("doc_id"),
       lower(regexp_replace(col("text"), "[^a-zA-Z ]", "")).as("norm"))
     val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -2384,19 +2380,16 @@ object TextOps {
     * plan; results hash-gate against DuckDB's plain dedup (q34's
     * oracle shape). */
   val q200LakeDedupSpj: Q = (spark, dir) => {
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_lakedd_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q200_$nonce")
+    val scratch = Scratch(spark, "q200")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q200_src")
     docs(spark, dir)
       .select(col("doc_id"),
         lower(regexp_replace(col("text"), "[^a-zA-Z ]", "")).as("norm"))
-      .createOrReplaceTempView(s"q200_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.corpus (doc_id BIGINT, norm STRING) " +
       "PARTITIONED BY (bucket(16, norm))")
-    spark.sql(s"INSERT INTO $cat.corpus SELECT * FROM q200_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.corpus SELECT * FROM $srcView")
     val confs = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
@@ -2448,19 +2441,16 @@ object TextOps {
     * space and never shuffles for prefix rollups. */
   val q202LakeTruncateCorpus: Q = (spark, dir) => {
     import graft.sources.LakeReadScanBuilder
-    val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      .take(12)
-    val cat = s"graft_laketr_$nonce"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      "graft.sources.GraftLakeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$cat.root", s"/tmp/graft_q202_$nonce")
+    val scratch = Scratch(spark, "q202")
+    val cat = scratch.catalog
+    val srcView = scratch.name("q202_src")
     docs(spark, dir)
       .select(col("doc_id"),
         lower(regexp_replace(col("text"), "[^a-zA-Z ]", "")).as("norm"))
-      .createOrReplaceTempView(s"q202_src_$nonce")
+      .createOrReplaceTempView(srcView)
     spark.sql(s"CREATE TABLE $cat.corpus (doc_id BIGINT, norm STRING) " +
       "PARTITIONED BY (truncate(2, norm))")
-    spark.sql(s"INSERT INTO $cat.corpus SELECT * FROM q202_src_$nonce")
+    spark.sql(s"INSERT INTO $cat.corpus SELECT * FROM $srcView")
     val confs = Seq(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true")
@@ -2501,99 +2491,51 @@ object TextOps {
       |  TRUE AS prefix_pruned, TRUE AS zero_shuffle
       |FROM g WHERE norm >= 'm' ORDER BY first_id""".stripMargin
 
-  val all: ListMap[String, Q] = ListMap(
-    "q30_token_count" -> q30TokenCount,
-    "q31_quality_score" -> q31QualityScore,
-    "q32_lang_id" -> q32LangId,
-    "q33_shingles" -> q33Shingles,
-    "q34_normalized_dedup" -> q34NormalizedDedup,
-    "q35_sha_fingerprint" -> q35ShaFingerprint,
-    "q50_winnow_fingerprint" -> q50WinnowFingerprint,
-    "q51_winnow_pairs" -> q51WinnowPairs,
-    "q57_chunk_dedup" -> q57ChunkDedup,
-    "q59_tfidf" -> q59Tfidf,
-    "q64_train_mix" -> q64TrainMix,
-    "q66_repetition" -> q66Repetition,
-    "q71_vocab_oov" -> q71VocabOov,
-    "q72_bm25" -> q72Bm25,
-    "q73_rarity" -> q73Rarity,
-    "q81_quality_strata" -> q81QualityStrata,
-    "q91_bpe_pretokenize" -> q91BpePretokenize,
-    "q97_group_sample" -> q97GroupSample,
-    "q104_split_assign" -> q104SplitAssign,
-    "q105_inverted_index" -> q105InvertedIndex,
-    "q106_sequence_pack" -> q106SequencePack,
-    "q108_curation_pipeline" -> q108CurationPipeline,
-    "q109_bigram_lm" -> q109BigramSurprise,
-    "q110_budget_fill" -> q110BudgetFill,
-    "q112_dsir_weights" -> q112DsirWeights,
-    "q113_chunk_dedup" -> q113ChunkDedup,
-    "q114_boilerplate_cov" -> q114BoilerplateCov,
-    "q118_bpe_pairs" -> q118BpePairs,
-    "q120_quality_classifier" -> q120QualityClassifier,
-    "q121_conjunctive_search" -> q121ConjunctiveSearch,
-    "q122_intradoc_repeat" -> q122IntraDocRepeat,
-    "q127_heavy_hitters" -> q127HeavyHitters,
-    "q128_langid_eval" -> q128LangIdEval,
-    "q134_phrase_search" -> q134PhraseSearch,
-    "q135_cdc_chunks" -> q135CdcChunks,
-    "q137_bpe_merges" -> q137BpeMerges,
-    "q138_bpe_apply" -> q138BpeApply,
-    "q140_temperature_mix" -> q140TemperatureMix,
-    "q153_segment_merge" -> q153SegmentMerge,
-    "q168_bootstrap_ci" -> q168BootstrapCi,
-    "q169_padding_report" -> q169PaddingReport,
-    "q173_unigram_lm" -> q173UnigramLm,
-    "q183_lake_ingest_dedup" -> q183LakeIngestDedup,
-    "q200_lake_dedup_spj" -> q200LakeDedupSpj,
-    "q202_lake_truncate_corpus" -> q202LakeTruncateCorpus,
-  )
-
-  val oracles: ListMap[String, String] = ListMap(
-    "q30_token_count" -> q30Oracle,
-    "q31_quality_score" -> q31Oracle,
-    "q32_lang_id" -> q32Oracle,
-    "q33_shingles" -> q33Oracle,
-    "q34_normalized_dedup" -> q34Oracle,
-    "q35_sha_fingerprint" -> q35Oracle,
-    "q50_winnow_fingerprint" -> q50Oracle,
-    "q51_winnow_pairs" -> q51Oracle,
-    "q57_chunk_dedup" -> q57Oracle,
-    "q59_tfidf" -> q59Oracle,
-    "q64_train_mix" -> q64Oracle,
-    "q66_repetition" -> q66Oracle,
-    "q71_vocab_oov" -> q71Oracle,
-    "q72_bm25" -> q72Oracle,
-    "q73_rarity" -> q73Oracle,
-    "q81_quality_strata" -> q81Oracle,
-    "q91_bpe_pretokenize" -> q91Oracle,
-    "q97_group_sample" -> q97Oracle,
-    "q104_split_assign" -> q104Oracle,
-    "q105_inverted_index" -> q105Oracle,
-    "q106_sequence_pack" -> q106Oracle,
-    "q108_curation_pipeline" -> q108Oracle,
-    "q109_bigram_lm" -> q109Oracle,
-    "q110_budget_fill" -> q110Oracle,
-    "q112_dsir_weights" -> q112Oracle,
-    "q113_chunk_dedup" -> q113Oracle,
-    "q114_boilerplate_cov" -> q114Oracle,
-    "q118_bpe_pairs" -> q118Oracle,
-    "q120_quality_classifier" -> q120Oracle,
-    "q121_conjunctive_search" -> q121Oracle,
-    "q122_intradoc_repeat" -> q122Oracle,
-    "q127_heavy_hitters" -> q127Oracle,
-    "q128_langid_eval" -> q128Oracle,
-    "q134_phrase_search" -> q134Oracle,
-    "q135_cdc_chunks" -> q135Oracle,
-    "q137_bpe_merges" -> q137Oracle,
-    "q138_bpe_apply" -> q138Oracle,
-    "q140_temperature_mix" -> q140Oracle,
-    "q153_segment_merge" -> q153Oracle,
-    "q168_bootstrap_ci" -> q168Oracle,
-    "q169_padding_report" -> q169Oracle,
-    "q173_unigram_lm" -> q173Oracle,
-    "q183_lake_ingest_dedup" -> q183Oracle,
-    "q200_lake_dedup_spj" -> q200Oracle,
-    "q202_lake_truncate_corpus" -> q202Oracle,
+  val keys: ListMap[String, Key] = ListMap(
+    "q30_token_count" -> Key(q30TokenCount, q30Oracle),
+    "q31_quality_score" -> Key(q31QualityScore, q31Oracle),
+    "q32_lang_id" -> Key(q32LangId, q32Oracle),
+    "q33_shingles" -> Key(q33Shingles, q33Oracle),
+    "q34_normalized_dedup" -> Key(q34NormalizedDedup, q34Oracle),
+    "q35_sha_fingerprint" -> Key(q35ShaFingerprint, q35Oracle),
+    "q50_winnow_fingerprint" -> Key(q50WinnowFingerprint, q50Oracle),
+    "q51_winnow_pairs" -> Key(q51WinnowPairs, q51Oracle),
+    "q57_chunk_dedup" -> Key(q57ChunkDedup, q57Oracle),
+    "q59_tfidf" -> Key(q59Tfidf, q59Oracle),
+    "q64_train_mix" -> Key(q64TrainMix, q64Oracle),
+    "q66_repetition" -> Key(q66Repetition, q66Oracle),
+    "q71_vocab_oov" -> Key(q71VocabOov, q71Oracle),
+    "q72_bm25" -> Key(q72Bm25, q72Oracle),
+    "q73_rarity" -> Key(q73Rarity, q73Oracle),
+    "q81_quality_strata" -> Key(q81QualityStrata, q81Oracle),
+    "q91_bpe_pretokenize" -> Key(q91BpePretokenize, q91Oracle),
+    "q97_group_sample" -> Key(q97GroupSample, q97Oracle),
+    "q104_split_assign" -> Key(q104SplitAssign, q104Oracle),
+    "q105_inverted_index" -> Key(q105InvertedIndex, q105Oracle),
+    "q106_sequence_pack" -> Key(q106SequencePack, q106Oracle),
+    "q108_curation_pipeline" -> Key(q108CurationPipeline, q108Oracle),
+    "q109_bigram_lm" -> Key(q109BigramSurprise, q109Oracle),
+    "q110_budget_fill" -> Key(q110BudgetFill, q110Oracle),
+    "q112_dsir_weights" -> Key(q112DsirWeights, q112Oracle),
+    "q113_chunk_dedup" -> Key(q113ChunkDedup, q113Oracle),
+    "q114_boilerplate_cov" -> Key(q114BoilerplateCov, q114Oracle),
+    "q118_bpe_pairs" -> Key(q118BpePairs, q118Oracle),
+    "q120_quality_classifier" -> Key(q120QualityClassifier, q120Oracle),
+    "q121_conjunctive_search" -> Key(q121ConjunctiveSearch, q121Oracle),
+    "q122_intradoc_repeat" -> Key(q122IntraDocRepeat, q122Oracle),
+    "q127_heavy_hitters" -> Key(q127HeavyHitters, q127Oracle),
+    "q128_langid_eval" -> Key(q128LangIdEval, q128Oracle),
+    "q134_phrase_search" -> Key(q134PhraseSearch, q134Oracle),
+    "q135_cdc_chunks" -> Key(q135CdcChunks, q135Oracle),
+    "q137_bpe_merges" -> Key(q137BpeMerges, q137Oracle),
+    "q138_bpe_apply" -> Key(q138BpeApply, q138Oracle),
+    "q140_temperature_mix" -> Key(q140TemperatureMix, q140Oracle),
+    "q153_segment_merge" -> Key(q153SegmentMerge, q153Oracle),
+    "q168_bootstrap_ci" -> Key(q168BootstrapCi, q168Oracle),
+    "q169_padding_report" -> Key(q169PaddingReport, q169Oracle),
+    "q173_unigram_lm" -> Key(q173UnigramLm, q173Oracle),
+    "q183_lake_ingest_dedup" -> Key(q183LakeIngestDedup, q183Oracle),
+    "q200_lake_dedup_spj" -> Key(q200LakeDedupSpj, q200Oracle),
+    "q202_lake_truncate_corpus" -> Key(q202LakeTruncateCorpus, q202Oracle),
   )
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.Scratch
+
 /** Shared session for all suites (one JVM-wide session, scalatest runs
   * suites sequentially within the forked JVM). */
 object TestSpark {
@@ -30,15 +32,33 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A new scratch scope, released after the test. */
+  protected def scratch(): Scratch =
+    Scratch(spark, getClass.getSimpleName.toLowerCase)
+
+  /** A new lake catalog: its name and its root. */
+  protected def freshCatalog(): (String, String) = {
+    val s = scratch()
+    (s.catalog, s.catalogRoot)
+  }
+
+  /** A new path whose parent directory exists. */
+  protected def freshDir(name: String = "t"): String = scratch().path(name)
+
   /** Cache-lifecycle guard: NO test may leave an entry in the cache
     * manager behind (the round-9 bench regression was exactly such a
     * leak — a persist() with no unpersist() that taxed every query run
     * after it in the same session). Runs after every test in every
     * suite, so a future operator that persists without releasing fails
-    * its own spec instead of degrading the whole bench. */
-  override protected def afterEach(): Unit = {
-    super.afterEach()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "cache leak: a test left persisted plans in the cache manager")
-  }
+    * its own spec instead of degrading the whole bench.
+    *
+    * Then the scratch release: the views, catalog confs and directories
+    * of every scope the test opened, its own and those of the keys it
+    * ran. */
+  override protected def afterEach(): Unit =
+    try {
+      super.afterEach()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "cache leak: a test left persisted plans in the cache manager")
+    } finally Scratch.release(spark)
 }

@@ -39,7 +39,7 @@ object DeclarativeTwins {
 class NativeTwinSpec extends SparkSpec {
 
   /** One generated input: element type, plane count, and rows of two
-    * equal-length vectors (`None` = NULL array or element). */
+    * vectors, mostly of equal length (`None` = NULL array or element). */
   private case class Case(float: Boolean, containsNull: Boolean, nPlanes: Int,
       rows: List[(Option[List[Option[Double]]], Option[List[Option[Double]]])])
 
@@ -98,12 +98,14 @@ class NativeTwinSpec extends SparkSpec {
     for {
       n <- Gen.frequency(1 -> Gen.const(0), 1 -> Gen.choose(1, 3),
         6 -> Gen.choose(0, 130))
+      m <- Gen.frequency(6 -> Gen.const(n), 1 -> Gen.choose(0, 130))
       p <- Gen.choose(0, nPlanes - 1)
       a <- Gen.frequency(5 -> Gen.listOfN(n, finite),
         2 -> Gen.listOfN(n, special), 2 -> zeroSum(n, p))
-      b <- Gen.frequency(3 -> Gen.listOfN(n, finite),
-        1 -> Gen.listOfN(n, special), 1 -> Gen.const(a),
-        1 -> Gen.const(a.map(-_)), 1 -> Gen.const(List.fill(n)(0.0)))
+      b <- Gen.frequency(3 -> Gen.listOfN(m, finite),
+        1 -> Gen.listOfN(m, special), 1 -> Gen.const(a),
+        1 -> Gen.const(a.map(-_)), 1 -> Gen.const(List.fill(m)(0.0)),
+        1 -> Gen.choose(0, n).map(a.take)) // a prefix: the truncation case
       an <- withNulls(a, containsNull)
       bn <- withNulls(b, containsNull)
       aNull <- Gen.frequency(12 -> false, 1 -> true)

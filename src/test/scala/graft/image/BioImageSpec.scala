@@ -178,8 +178,7 @@ class BioImageSpec extends SparkSpec {
       "the scene and level") {
     val scenes = (0 until 2).map(i => NDArray.tabulate(Seq(2, 8, 6))(idx =>
       i * 1000.0 + idx(0) * 100 + idx(1) * 10 + idx(2)))
-    val uri = java.nio.file.Files.createTempDirectory("graft-stack")
-      .toString + "/s.ome.tiff"
+    val uri = freshDir("s.ome.tiff")
     new BioImage(spark, ArrayLikeReader.multi(scenes, Seq(Some("ZYX"))))
       .save(uri, None, Map("pyramidLevels" -> "2"))
     val img = BioSpark.open(spark, uri)
@@ -300,8 +299,7 @@ class BioImageSpec extends SparkSpec {
 
     // against a file-backed tiled store (zarr) the OPTIMIZED plan keeps
     // the tile filter below the explode — pruned tiles never decode
-    val zuri = java.nio.file.Files.createTempDirectory("graft-prune")
-      .toString + "/m.ome.zarr"
+    val zuri = freshDir("m.ome.zarr")
     img.save(zuri)
     val zimg = graft.BioSpark.open(spark, zuri)
     val zdf = zimg.getImagePixels(Map(

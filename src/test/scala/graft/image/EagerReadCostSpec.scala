@@ -1,6 +1,5 @@
 package graft.image
 
-import java.nio.file.Files
 
 import org.apache.spark.TestListenerBus
 
@@ -13,9 +12,6 @@ import graft.writers.{OmeTiffWriter, TiffOptions}
   * pruning by plane and Y/X window), and the Spark jobs and tasks it
   * runs, counted by a listener. */
 class EagerReadCostSpec extends SparkSpec {
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-eager-cost").toString + "/" + name
 
   private def counting[T](body: => T): (T, Int, Int) =
     TestListenerBus.counting(spark.sparkContext)(body)
@@ -37,9 +33,9 @@ class EagerReadCostSpec extends SparkSpec {
   test("a 32x32 region of 32x32-chunked Zarr and tiled OME-TIFF plans 1 " +
       "of 32 stored objects and runs one job of one task") {
     val src = BioSpark.fromArray(spark, Arr, Some("TCZYX"))
-    val zarr = tmp("c.ome.zarr")
+    val zarr = freshDir("c.ome.zarr")
     src.save(zarr, None, Map("chunk" -> "32x32"))
-    val tiff = tmp("c.ome.tiff")
+    val tiff = freshDir("c.ome.tiff")
     OmeTiffWriter.save(src, tiff, None, TiffOptions(tile = Some((32, 32))))
     for (uri <- Seq(zarr, tiff)) withClue(s"$uri: ") {
       val img = BioSpark.open(spark, uri)
@@ -56,7 +52,7 @@ class EagerReadCostSpec extends SparkSpec {
 
   test("a region of a driver-decoded source (array, NPY) runs no job") {
     val src = BioSpark.fromArray(spark, Arr, Some("TCZYX"))
-    val npy = tmp("c.npy")
+    val npy = freshDir("c.npy")
     src.save(npy)
     for (img <- Seq(src, BioSpark.open(spark, npy))) {
       assert(img.reader.isInstanceOf[ScanWorkReader])

@@ -1,6 +1,5 @@
 package graft.image
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions.col
 
@@ -14,9 +13,6 @@ import graft.writers.{OmeTiffWriter, ParquetPlaneStore, TiffOptions}
   * (`getImagePixels` collected and placed pixel by pixel) on every store
   * kind and selection form. */
 class EagerReadSpec extends SparkSpec {
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-eager").toString + "/" + name
 
   /** The eager read as the pixel path computes it: the lazy long-form
     * view, one collected row per pixel, placed by the resolved
@@ -98,15 +94,15 @@ class EagerReadSpec extends SparkSpec {
 
   private def stores(): Seq[(String, BioImage)] = {
     val src = source
-    val tiff = tmp("s.ome.tiff")
+    val tiff = freshDir("s.ome.tiff")
     OmeTiffWriter.save(src, tiff, None,
       TiffOptions(tile = Some((16, 16)), pyramidLevels = 2))
-    val zarr = tmp("s.ome.zarr")
+    val zarr = freshDir("s.ome.zarr")
     src.save(zarr, None, Map("chunk" -> "16x16", "levels" -> "2"))
-    val sharded = tmp("sh.ome.zarr")
+    val sharded = freshDir("sh.ome.zarr")
     src.save(sharded, None, Map("chunk" -> "16x16", "shardInner" -> "8x8",
       "levels" -> "2"))
-    val store = tmp("s.graft")
+    val store = freshDir("s.graft")
     ParquetPlaneStore.save(src, store, levels = 2)
     Seq("array" -> src, "tiff" -> BioSpark.open(spark, tiff),
       "zarr" -> BioSpark.open(spark, zarr),
@@ -150,7 +146,7 @@ class EagerReadSpec extends SparkSpec {
     // 3x4 tiles overlapping in y and in x; m order is not position order
     val img = arrayMosaic(Seq(4, 3, 4), "MYX",
       Seq((2, 2), (0, 0), (0, 2), (2, 0)))
-    val dir = tmp("o.graft")
+    val dir = freshDir("o.graft")
     ParquetPlaneStore.save(img, dir)
     for (m <- Seq(img, BioSpark.open(spark, dir))) {
       val full = assertSame(m, "YX")
@@ -166,7 +162,7 @@ class EagerReadSpec extends SparkSpec {
 
   test("reconstructMosaic = false keeps M in the output, tile-local Y/X") {
     val src = source
-    val tiff = tmp("m.ome.tiff")
+    val tiff = freshDir("m.ome.tiff")
     OmeTiffWriter.save(src, tiff, None, TiffOptions(tile = Some((16, 16))))
     val tiled = new BioImage(spark, BioSpark.open(spark, tiff).reader,
       reconstructMosaic = false)
@@ -185,7 +181,7 @@ class EagerReadSpec extends SparkSpec {
   test("S>1 samples: a tiled YXS OME-TIFF and an overlapping MYXS mosaic") {
     val arr = NDArray.tabulate(Seq(20, 18, 3))(ix =>
       ix.foldLeft(0.0)((acc, v) => acc * 100 + v) + 0.5)
-    val uri = tmp("rgb.ome.tiff")
+    val uri = freshDir("rgb.ome.tiff")
     OmeTiffWriter.save(new BioImage(spark, new ArrayLikeReader(Seq(arr),
       Seq(Some("YXS")), Seq(None))), uri, None,
       TiffOptions(tile = Some((16, 16))))

@@ -1,7 +1,5 @@
 package graft.image
 
-import java.nio.file.Files
-
 import graft.{BioSpark, SparkSpec}
 import graft.core.NDArray
 import graft.readers.ArrayLikeReader
@@ -77,7 +75,7 @@ class StoreSpec extends SparkSpec {
         i * 1000.0 + idx(0) * 100 + idx(1) * 10 + idx(2)))
     val img = new BioImage(spark, ArrayLikeReader.multi(arrs,
       channelNames = Seq(None, Some(Seq.empty)).take(1)))
-    val dir = Files.createTempDirectory("graft-store").toString + "/img.graft"
+    val dir = freshDir("img.graft")
     ParquetPlaneStore.save(img, dir, selectScenes = Some(Seq("Image:1")))
     val back = BioSpark.open(spark, dir)
     assert(back.reader.name == "ParquetPlaneReader")
@@ -91,7 +89,7 @@ class StoreSpec extends SparkSpec {
   test("pyramid: levels materialize, per-level dims, level switch") {
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val dir = Files.createTempDirectory("graft-pyr").toString + "/img.graft"
+    val dir = freshDir("img.graft")
     ParquetPlaneStore.save(img, dir, levels = 3)
     val back = BioSpark.open(spark, dir)
     assert(back.resolutionLevels == Seq(0, 1, 2))
@@ -109,7 +107,7 @@ class StoreSpec extends SparkSpec {
     // odd-size edge semantics: 5 wide pools to 3 (ceil)
     val odd = BioSpark.fromArray(spark,
       NDArray.tabulate(Seq(5, 5))(idx => idx(0) * 10.0 + idx(1)))
-    val dir2 = Files.createTempDirectory("graft-pyr").toString + "/odd.graft"
+    val dir2 = freshDir("odd.graft")
     ParquetPlaneStore.save(odd, dir2, levels = 2)
     val back2 = BioSpark.open(spark, dir2)
     back2.setResolutionLevel(1)
@@ -140,7 +138,7 @@ class StoreSpec extends SparkSpec {
       new ArrayLikeReader(Seq(arr), Seq(Some("MYX")), Seq(None),
         tilePositions = Seq(Seq((0, 0), (0, 4)))))
     assert(img.dims('Y') == 4 && img.dims('X') == 8)
-    val dir = Files.createTempDirectory("graft-mpyr").toString + "/m.graft"
+    val dir = freshDir("m.graft")
     ParquetPlaneStore.save(img, dir, levels = 2)
     val back = BioSpark.open(spark, dir)
     back.setResolutionLevel(1)
@@ -155,7 +153,7 @@ class StoreSpec extends SparkSpec {
   test("save raises on unknown scene ids and empty selection") {
     val img = new BioImage(spark, ArrayLikeReader.multi(
       Seq(NDArray.zeros(Seq(2, 2)))))
-    val dir = Files.createTempDirectory("graft-store").toString + "/img.graft"
+    val dir = freshDir("img.graft")
     val e = intercept[IllegalArgumentException](
       ParquetPlaneStore.save(img, dir, selectScenes = Some(Seq("Image:9"))))
     assert(e.getMessage.contains("Image:9"))
@@ -166,7 +164,7 @@ class StoreSpec extends SparkSpec {
   test("scene/level scan is partition-pruned") {
     val img = new BioImage(spark, ArrayLikeReader.multi(
       (0 until 3).map(_ => NDArray.zeros(Seq(2, 2)))))
-    val dir = Files.createTempDirectory("graft-store").toString + "/img.graft"
+    val dir = freshDir("img.graft")
     ParquetPlaneStore.save(img, dir)
     val rd = new ParquetPlaneReader(spark, dir)
     val plan = rd.readDelayedAtLevel(spark, 1, 0)
@@ -181,7 +179,7 @@ class StoreSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(5, 4, 4))(idx =>
       idx(0) * 100.0 + idx(1) * 8 + idx(2))
     val img = BioSpark.fromArray(spark, arr) // ZYX
-    val dir = Files.createTempDirectory("graft-stats").toString + "/s.graft"
+    val dir = freshDir("s.graft")
     ParquetPlaneStore.save(img, dir)
 
     // v in [350, 460]: only plane z=4 (400..427) can match on
@@ -217,7 +215,7 @@ class StoreSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(3, 4, 4))(idx =>
       idx(0) * 100.0 + idx(1) * 8 + idx(2))
     val img = BioSpark.fromArray(spark, arr)
-    val dir = Files.createTempDirectory("graft-rule").toString + "/r.graft"
+    val dir = freshDir("r.graft")
     ParquetPlaneStore.save(img, dir)
     def planeFilterBelowExplode(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect {
@@ -256,7 +254,7 @@ class StoreSpec extends SparkSpec {
       v = 2 * (z * 100.0 + y * 8 + x) if v >= 420.0) yield v).size
     assert(derived.count() === expectDerived)
     // a store without stats columns still answers correctly (rule no-ops)
-    val legacy = Files.createTempDirectory("graft-rule").toString + "/l.graft"
+    val legacy = freshDir("l.graft")
     ParquetPlaneStore.save(img, legacy)
     // strip the stats columns to simulate a pre-stats store
     val stripped = spark.read.parquet(s"$legacy/planes")

@@ -1,7 +1,5 @@
 package graft.image
 
-import java.nio.file.Files
-
 import graft.{BioSpark, SparkSpec}
 import graft.core.NDArray
 
@@ -18,11 +16,10 @@ class PyramidParitySpec extends SparkSpec {
     // odd dims: 9x11 → 5x6 → 3x3 (ceil halving, ragged pool windows)
     val arr = NDArray.tabulate(Seq(9, 11))(idx => idx(0) * 20.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val dir = Files.createTempDirectory("graft-pyr").toString
-    val tiff = s"$dir/p.ome.tiff"
+    val tiff = freshDir("p.ome.tiff")
     graft.writers.OmeTiffWriter.save(img, tiff, None,
       graft.writers.TiffOptions(pyramidLevels = 3))
-    val zarr = s"$dir/p.ome.zarr"
+    val zarr = freshDir("p.ome.zarr")
     graft.writers.ZarrWriter.save(img, zarr, None, levels = 3)
 
     val tBack = BioSpark.open(spark, tiff)

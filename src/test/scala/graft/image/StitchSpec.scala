@@ -1,6 +1,5 @@
 package graft.image
 
-import java.nio.file.Files
 
 import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.catalyst.plans.logical.Generate
@@ -17,9 +16,6 @@ import graft.writers.{OmeTiffWriter, ParquetPlaneStore, TiffOptions}
   * shape of the plans the stitch and the TIFF and Zarr lazy reads
   * produce. */
 class StitchSpec extends SparkSpec {
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-stitch").toString + "/" + name
 
   private val PlaneCols = Seq("scene_idx", "scene_id", "level", "m", "t",
     "c", "z", "s", "y0", "x0", "h", "w", "pixels")
@@ -59,7 +55,7 @@ class StitchSpec extends SparkSpec {
       ix.foldLeft(0.0)((acc, v) => acc * 100 + v) + 0.5)
     val src = new BioImage(spark, new ArrayLikeReader(Seq(arr), Seq(Some(order)),
       Seq(None)))
-    val uri = tmp("t.ome.tiff")
+    val uri = freshDir("t.ome.tiff")
     OmeTiffWriter.save(src, uri, None,
       TiffOptions(tile = Some((16, 16)), pyramidLevels = pyramidLevels))
     val back = BioSpark.open(spark, uri)
@@ -112,7 +108,7 @@ class StitchSpec extends SparkSpec {
     // 3-wide tiles at x 0 and 3 pool to 2-wide tiles at x 0 and 1: they
     // overlap at level 1
     val img = arrayMosaic(Seq(2, 3, 3), "MYX", Seq((0, 0), (0, 3)))
-    val dir = tmp("m.graft")
+    val dir = freshDir("m.graft")
     ParquetPlaneStore.save(img, dir, levels = 2)
     val back = BioSpark.open(spark, dir)
     back.setResolutionLevel(1)
@@ -141,7 +137,7 @@ class StitchSpec extends SparkSpec {
       assert(!plan.contains("posexplode") && !plan.contains("Generate"), plan)
       assert("Exchange".r.findAllIn(plan).length <= 1, plan)
     }
-    val zarr = tmp("t.ome.zarr")
+    val zarr = freshDir("t.ome.zarr")
     BioSpark.fromArray(spark, NDArray.tabulate(Seq(2, 37, 42))(_.sum.toDouble),
       Some("ZYX")).save(zarr, None, Map("chunk" -> "16x16"))
     for (img <- Seq(tiledTiff(Seq(2, 37, 42), "ZYX"),

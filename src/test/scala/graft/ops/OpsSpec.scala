@@ -8,8 +8,15 @@ import graft.SparkSpec
   * Deep value checking is the DuckDB oracle harness (tools/oracle_check.py
   * + the driver's CORRECTNESS gate). */
 class QueriesSmokeSpec extends SparkSpec {
+  private def catalogConfs(): Map[String, String] =
+    spark.conf.getAll.filter(_._1.startsWith("spark.sql.catalog."))
+
+  private def tempViews(): Set[String] =
+    spark.sessionState.catalog.getTempViewNames().toSet
+
   graft.SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
+      val (confs, views) = (catalogConfs(), tempViews())
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty)
       // q39/q40 candidate pairs can legitimately be empty on tiny data
@@ -17,6 +24,12 @@ class QueriesSmokeSpec extends SparkSpec {
       if (!Set("q39_jaccard_pairs", "q40_minhash_lsh",
           "q51_winnow_pairs").contains(name))
         assert(n > 0, s"$name returned no rows")
+      // the key's scratch scopes leave nothing behind once released
+      val released = Scratch.release(spark)
+      assert(catalogConfs() == confs, s"$name left catalog confs behind")
+      assert(tempViews() == views, s"$name left temp views behind")
+      val left = released.map(_.dir).filter(new java.io.File(_).exists)
+      assert(left.isEmpty, s"$name left paths behind: $left")
     }
   }
 
@@ -46,7 +59,7 @@ class DedupSpec extends SparkSpec {
         (6 to 10).map(i => s"v$i")).mkString(" ")),
       (2L, (1 to 25).map(i => s"c$i").mkString(" ")), // no overlap
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q157spec").toString
+    val dir = freshDir("q157spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // Bound pin: the 10-token shared span holds exactly 10-K+1 = 3
     // duplicated 8-token windows per doc → 6 candidate anchors. The
@@ -138,7 +151,7 @@ class DedupSpec extends SparkSpec {
       doc(2L, span31, 50), doc(3L, span31, 200),
       doc(4L, Seq.empty, 0), doc(5L, Seq.empty, 0),
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q157k32").toString
+    val dir = freshDir("q157k32")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val toks = DedupOps.exactSubstrToks(spark, dir, 32)
     // the corpus holds 6×(500-31) = 2814 anchors; only the 64-token
@@ -168,7 +181,7 @@ class DedupSpec extends SparkSpec {
       (2L, ((1 to 5).map(i => s"w$i") ++ shared ++
         (6 to 10).map(i => s"w$i")).mkString(" ")),
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q161spec").toString
+    val dir = freshDir("q161spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = DedupOps.q161ExactSubstrRemove(spark, dir)
       .as[(Long, Long, Long, Long)].collect().toList
@@ -209,7 +222,7 @@ class DedupSpec extends SparkSpec {
       (5L, t(120000L), 3L, "view", 5.0, ""),
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     // the harness layout is a FILE named events.parquet, not a dir
-    val fdir = java.nio.file.Files.createTempDirectory("q160spec").toString
+    val fdir = freshDir("q160spec")
     fx.coalesce(1).write.mode("overwrite").parquet(s"$fdir/stage")
     val part = new java.io.File(s"$fdir/stage").listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -464,8 +477,7 @@ class DedupSpec extends SparkSpec {
 
   test("sorted layout: range-partitioned files are shipdate-disjoint " +
       "and the range scan pushes its predicates to the footers") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_q96_spec").toString
+    val path = freshDir()
     graft.Tables(spark, sf, "lineitem")
       .select(col("l_shipdate"), col("l_returnflag"), col("l_quantity"))
       .repartitionByRange(8, col("l_shipdate"))
@@ -513,8 +525,7 @@ class DedupSpec extends SparkSpec {
 
   test("z-order layout: files carry tight TWO-column zone maps, a box " +
       "predicate prunes files, and both predicates reach the footers") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_q107_spec").toString
+    val path = freshDir()
     graft.Tables(spark, sf, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
       .withColumn("zv",
@@ -780,7 +791,7 @@ class DedupSpec extends SparkSpec {
       (1L, rep + " trailing words that do not fill a chunk"), // dup of 0's
       (2L, "only five words right here"), // <10 words → no chunks
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q57spec").toString
+    val dir = freshDir("q57spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = TextOps.q57ChunkDedup(spark, dir)
       .as[(Long, Long, Long)].collect().toList
@@ -804,7 +815,7 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents reliable-checkpoint mode: same labels, " +
       "checkpoint files actually written") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val dir = freshDir("cc-ckpt")
     val edges = Seq((5L, 3L), (3L, 8L), (9L, 1L), (40L, 41L), (41L, 42L))
       .toDF("doc_a", "doc_b")
     val got = DedupOps.connectedComponents(edges, "doc_a", "doc_b",
@@ -1198,7 +1209,7 @@ class DedupSpec extends SparkSpec {
       "hive partition directory (PartitionFilters in the scan, pruned " +
       "row count matches)") {
     val docs = graft.Tables(spark, sf, "documents")
-    val base = s"/tmp/graft_q124spec_${java.util.UUID.randomUUID()}"
+    val base = freshDir("q124spec")
     docs.write.mode("overwrite").partitionBy("source").parquet(base)
     val expected = docs.filter(col("source") === "src3").count()
     val pruned = spark.read.parquet(base).filter(col("source") === "src3")
@@ -1215,7 +1226,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val docs = graft.Tables(spark, sf, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
-    val base = s"/tmp/graft_dppspec_${java.util.UUID.randomUUID()}"
+    val base = freshDir("dppspec")
     docs.write.mode("overwrite").partitionBy("source").parquet(base)
     val fact = spark.read.parquet(base)
     // the partition predicate is only known AFTER filtering the dim —
@@ -1335,7 +1346,7 @@ class DedupSpec extends SparkSpec {
   test("q151 versioned table: snapshot reads are isolated from later " +
       "commits, latest resolves, and missing versions raise") {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_vtspec_${java.util.UUID.randomUUID()}"
+    val base = freshDir("vtspec")
     val a = spark.range(0, 100).toDF("id")
     val b = spark.range(100, 150).toDF("id")
     val v0 = VersionedTable.commit(spark, a, base)
@@ -1386,7 +1397,7 @@ class DedupSpec extends SparkSpec {
       "exactly one wins the rename, the loser throws, the table keeps " +
       "serving the winner") {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_vtrace_${java.util.UUID.randomUUID()}"
+    val base = freshDir("vtrace")
     val winner = spark.range(0, 40).toDF("id")
     val loser = spark.range(1000, 1010).toDF("id")
     assert(VersionedTable.commitAs(spark, winner, base, 0,
@@ -1416,7 +1427,7 @@ class DedupSpec extends SparkSpec {
       "reclaim, carried-forward files survive via any live reference, " +
       "below-horizon reads fail loudly, numbering continues") {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_vtvac_${java.util.UUID.randomUUID()}"
+    val base = freshDir("vtvac")
     val a = spark.range(0, 100).toDF("id")
     val b = spark.range(100, 150).toDF("id")
     VersionedTable.commit(spark, a, base) // v0
@@ -1451,7 +1462,7 @@ class DedupSpec extends SparkSpec {
       "identical content, vacuum reclaims every fragment, the retired " +
       "version fails loudly") {
     import graft.sources.VersionedTable
-    val base = s"/tmp/graft_q162spec_${java.util.UUID.randomUUID()}"
+    val base = freshDir("q162spec")
     val df = spark.range(0, 1000).toDF("id")
     VersionedTable.commit(spark, df.repartition(32), base,
       carryForward = false)
@@ -1478,9 +1489,8 @@ class DedupSpec extends SparkSpec {
       "without touching the source, clone vacuum never reclaims " +
       "source files") {
     import graft.sources.VersionedTable
-    val stamp = java.util.UUID.randomUUID().toString
-    val a = s"/tmp/graft_q164spec_a_$stamp"
-    val b = s"/tmp/graft_q164spec_b_$stamp"
+    val a = freshDir("a")
+    val b = freshDir("b")
     VersionedTable.commit(spark, spark.range(0, 100).toDF("id"), a,
       carryForward = false)
     VersionedTable.shallowClone(spark, a, b)
@@ -1507,7 +1517,7 @@ class DedupSpec extends SparkSpec {
     val docs = graft.Tables(spark, sf, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val nSources = docs.select(col("source")).distinct().count()
-    val base = s"/tmp/graft_q126spec_${java.util.UUID.randomUUID()}"
+    val base = freshDir("q126spec")
     docs.write.mode("overwrite").partitionBy("source").parquet(base)
     val delta = docs.filter(col("source") === "src3")
       .withColumn("n_chars", col("n_chars") + lit(7L))

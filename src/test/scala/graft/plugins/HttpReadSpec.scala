@@ -1,7 +1,7 @@
 package graft.plugins
 
 import java.net.InetSocketAddress
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import com.sun.net.httpserver.HttpServer
 
@@ -40,8 +40,8 @@ class HttpReadSpec extends SparkSpec {
     import graft.writers.ZarrWriter
     val arr = NDArray.tabulate(Seq(2, 3, 4))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2) + 1)
-    val dir = Files.createTempDirectory("graft-httpzarr")
-    val store = dir.resolve("img.ome.zarr")
+    val store = Paths.get(freshDir("img.ome.zarr"))
+    val dir = store.getParent
     ZarrWriter.save(BioSpark.fromArray(spark, arr, Some("CYX")),
       store.toString, None, levels = 1)
     // drop the c=1 chunk object: over http the reader must see the 404
@@ -76,8 +76,8 @@ class HttpReadSpec extends SparkSpec {
       if (c == 0 && y >= 4 && x >= 4) 0.0
       else c * 1000.0 + y * 10.0 + x + 1
     }
-    val dir = Files.createTempDirectory("graft-httpshard")
-    val store = dir.resolve("img.ome.zarr")
+    val store = Paths.get(freshDir("img.ome.zarr"))
+    val dir = store.getParent
     ZarrWriter.save(BioSpark.fromArray(spark, arr, Some("CYX")),
       store.toString, None, levels = 1, compressor = None, format = 3,
       shardInner = Some((4, 4)))
@@ -101,10 +101,9 @@ class HttpReadSpec extends SparkSpec {
   test("BioSpark.open reads a PNG over http:// through plugin resolution") {
     // a formulaic PNG on local disk, then served over HTTP
     val arr = NDArray.tabulate(Seq(4, 5))(idx => idx(0) * 10.0 + idx(1))
-    val dir = Files.createTempDirectory("graft-http")
-    val png = dir.resolve("img.png").toString
+    val png = freshDir("img.png")
     BioSpark.fromArray(spark, arr).save(png)
-    val bytes = Files.readAllBytes(dir.resolve("img.png"))
+    val bytes = Files.readAllBytes(Paths.get(png))
 
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/img.png", exchange => {

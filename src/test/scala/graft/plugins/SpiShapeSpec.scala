@@ -1,6 +1,5 @@
 package graft.plugins
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,8 +61,7 @@ class SpiShapeSpec extends SparkSpec {
     assert(got.array.shape == Seq(2, 3, 4))
     assert(got.array.data.toSeq == Arr.data.toSeq)
     assert(viaReadDelayed(_.planes.count()) == 2)
-    val dir = Files.createTempDirectory("graft-spi").toString
-    for (uri <- Seq(s"$dir/p.ome.tiff", s"$dir/p.ome.zarr"))
+    for (uri <- Seq(freshDir("p.ome.tiff"), freshDir("p.ome.zarr")))
       withClue(s"$uri: ") {
         viaReadDelayed(_.save(uri))
         val back = BioSpark.open(spark, uri)

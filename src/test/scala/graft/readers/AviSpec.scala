@@ -48,7 +48,7 @@ class AviSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(3, 4, 5))(idx =>
       ((idx(0) * 31 + idx(1) * 7 + idx(2)) % 256).toDouble)
     val img = graft.BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = s"/tmp/graft_avispec_${java.util.UUID.randomUUID()}.avi"
+    val uri = freshDir("avispec.avi")
     img.save(uri)
     val back = graft.BioSpark.open(spark, uri)
     assert(back.reader.name == "AviReader",
@@ -69,7 +69,7 @@ class AviSpec extends SparkSpec {
       ((idx(0) * 80 + idx(1) * 20 + idx(2) * 5 + idx(3) * 100) % 256)
         .toDouble)
     val img = graft.BioSpark.fromArray(spark, arr, Some("TYXS"))
-    val uri = s"/tmp/graft_avispec_${java.util.UUID.randomUUID()}.avi"
+    val uri = freshDir("avispec.avi")
     img.save(uri)
     val back = graft.BioSpark.open(spark, uri)
     assert(back.dims.order == "TCZYXS")

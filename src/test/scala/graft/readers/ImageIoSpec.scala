@@ -11,13 +11,10 @@ import graft.writers.TwoDWriter
 
 class ImageIoSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-img").toString + "/" + name
-
   test("grayscale PNG roundtrip via writer registry + plugin resolution") {
     val arr = NDArray.tabulate(Seq(4, 5))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("gray.png")
+    val uri = freshDir("gray.png")
     img.save(uri) // Writers dispatch → PngWriter
     val back = BioSpark.open(spark, uri)
     assert(back.reader.name == "ImageIoReader")
@@ -34,7 +31,7 @@ class ImageIoSpec extends SparkSpec {
       val r = y * 10 + x; val g = 100 + r; val b = 200 + r
       buf.setRGB(x, y, (r << 16) | (g << 8) | b)
     }
-    val p = tmp("rgb.png")
+    val p = freshDir("rgb.png")
     ImageIO.write(buf, "png", new java.io.File(p))
     val back = BioSpark.open(spark, p)
     assert(back.dims.order == "TCZYXS")
@@ -47,7 +44,7 @@ class ImageIoSpec extends SparkSpec {
 
   test("PNG writer clamps out-of-range values") {
     val arr = NDArray.tabulate(Seq(1, 3))(idx => idx(1) * 300.0 - 100)
-    val uri = tmp("clamp.png")
+    val uri = freshDir("clamp.png")
     TwoDWriter.save(BioSpark.fromArray(spark, arr), uri, None)
     val back = BioSpark.open(spark, uri)
     val nd = back.getImageData("YX")
@@ -61,7 +58,7 @@ class ImageIoSpec extends SparkSpec {
     import graft.writers.Writers
     val arr = NDArray.tabulate(Seq(4, 5))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("gray.bmp")
+    val uri = freshDir("gray.bmp")
     img.save(uri) // Writers dispatch → TwoDWriter
     assert(Writers.forPath(uri) == TwoDWriter)
     val back = BioSpark.open(spark, uri)
@@ -74,7 +71,7 @@ class ImageIoSpec extends SparkSpec {
       (idx(0) * 60 + idx(1) * 13 + idx(2) * 7) % 256)
     val rimg = new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(rgb), Seq(Some("YXS")), Seq(None)))
-    val ruri = tmp("rgb.bmp")
+    val ruri = freshDir("rgb.bmp")
     rimg.save(ruri)
     val rback = BioSpark.open(spark, ruri)
     assert(rback.dims('S') == 3)
@@ -86,12 +83,12 @@ class ImageIoSpec extends SparkSpec {
     // a real 16-bit source (USHORT_GRAY PNG → UInt16 on read)
     val buf16 = new BufferedImage(2, 2, BufferedImage.TYPE_USHORT_GRAY)
     buf16.getRaster.setSample(0, 0, 0, 1000)
-    val p16 = tmp("deep.png")
+    val p16 = freshDir("deep.png")
     ImageIO.write(buf16, "png", new java.io.File(p16))
     val u16 = BioSpark.open(spark, p16)
     assert(u16.meta.pixelType == graft.core.PixelType.UInt16)
-    intercept[IllegalArgumentException](u16.save(tmp("bad.bmp")))
-    intercept[IllegalArgumentException](u16.save(tmp("bad.jpg")))
+    intercept[IllegalArgumentException](u16.save(freshDir("bad.bmp")))
+    intercept[IllegalArgumentException](u16.save(freshDir("bad.jpg")))
   }
 
   test("JPEG write: registry dispatch for .jpg/.jpeg; read-back is " +
@@ -102,7 +99,7 @@ class ImageIoSpec extends SparkSpec {
       100.0 + idx(0) * 2 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
     for (ext <- Seq("jpg", "jpeg")) {
-      val uri = tmp(s"grad.$ext")
+      val uri = freshDir(s"grad.$ext")
       img.save(uri)
       assert(Writers.forPath(uri) == TwoDWriter)
       val back = BioSpark.open(spark, uri)
@@ -128,7 +125,7 @@ class ImageIoSpec extends SparkSpec {
       ((idx(0) * 31 + idx(1) * 17) % 7) * 30.0)
     val img = BioSpark.fromArray(spark, arr)
     val sizes = Seq("0.3", "1.0").map { q =>
-      val uri = tmp(s"q$q.jpg")
+      val uri = freshDir(s"q$q.jpg")
       img.save(uri, None, Map("quality" -> q))
       // decode-equality contract holds at every quality setting
       val nd = BioSpark.open(spark, uri).getImageData("YX")
@@ -142,23 +139,23 @@ class ImageIoSpec extends SparkSpec {
       s"q=1.0 (${sizes(1)}B) should out-size q=0.3 (${sizes(0)}B)")
     // quality is a JPEG-only knob; lossless formats reject it
     intercept[IllegalArgumentException](
-      img.save(tmp("q.png"), None, Map("quality" -> "0.5")))
+      img.save(freshDir("q.png"), None, Map("quality" -> "0.5")))
     // out-of-range and non-numeric values fail loudly
     intercept[IllegalArgumentException](
-      img.save(tmp("q2.jpg"), None, Map("quality" -> "1.5")))
+      img.save(freshDir("q2.jpg"), None, Map("quality" -> "1.5")))
     intercept[IllegalArgumentException](
-      img.save(tmp("q3.jpg"), None, Map("quality" -> "hi")))
+      img.save(freshDir("q3.jpg"), None, Map("quality" -> "hi")))
     // direct writer calls with an unregistered extension raise instead of
     // silently writing JPEG bytes under a foreign name
     intercept[IllegalArgumentException](
-      TwoDWriter.save(img, tmp("img.tif"), None))
+      TwoDWriter.save(img, freshDir("img.tif"), None))
     // unknown option keys raise on every writer
     intercept[IllegalArgumentException](
-      img.save(tmp("q4.jpg"), None, Map("speed" -> "11")))
+      img.save(freshDir("q4.jpg"), None, Map("speed" -> "11")))
   }
 
   test("non-image file is rejected by plugin resolution") {
-    val p = tmp("not.png")
+    val p = freshDir("not.png")
     Files.write(java.nio.file.Paths.get(p), "hello".getBytes)
     intercept[graft.core.UnsupportedFileFormatError](BioSpark.open(spark, p))
   }
@@ -170,7 +167,7 @@ class ImageIoSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(5, 6, 8))(idx =>
       (idx(0) * 40 + idx(1) * 9 + idx(2)) % 256)
     val img = BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = tmp("movie.gif")
+    val uri = freshDir("movie.gif")
     img.save(uri) // registry dispatch by extension
     assert(Writers.forPath(uri) == TimeSeriesWriter)
     val back = BioSpark.open(spark, uri)
@@ -192,7 +189,7 @@ class ImageIoSpec extends SparkSpec {
       Seq(40.0 * idx(0), 200.0 - 50 * (idx(1) % 2), 30.0 * idx(3))(idx(3) % 3))
     val img = new BioImage(spark, new ArrayLikeReader(Seq(arr),
       Seq(Some("TYXS")), Seq(None)))
-    val uri = tmp("rgb-movie.gif")
+    val uri = freshDir("rgb-movie.gif")
     img.save(uri)
     val f = new java.io.File(uri)
     val iis = javax.imageio.ImageIO.createImageInputStream(f)
@@ -221,7 +218,7 @@ class ImageIoSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(2, 3, 3))(idx => idx(0) * 100.0)
     val img = new BioImage(spark, new ArrayLikeReader(Seq(arr),
       Seq(Some("TYX")), Seq(None), timeInterval = Some(0.25)))
-    val uri = tmp("timed.gif")
+    val uri = freshDir("timed.gif")
     img.save(uri)
     val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.File(uri))
     val rd = javax.imageio.ImageIO.getImageReaders(iis).next()

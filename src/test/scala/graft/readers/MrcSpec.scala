@@ -1,7 +1,7 @@
 package graft.readers
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.core.{NDArray, PixelType, UnsupportedFileFormatError}
@@ -35,7 +35,7 @@ class MrcSpec extends SparkSpec {
     block(208) = 'M'; block(209) = 'A'; block(210) = 'P'; block(211) = ' '
     block(212) = if (big) 0x11 else 0x44
     block(213) = if (big) 0x11 else 0x44
-    val f = Files.createTempFile("graft_mrc", ".mrc")
+    val f = Paths.get(freshDir("mrc.mrc"))
     val out = new java.io.ByteArrayOutputStream()
     out.write(block); out.write(ext); out.write(data)
     Files.write(f, out.toByteArray)
@@ -106,7 +106,7 @@ class MrcSpec extends SparkSpec {
   test("facade round-trip: ZYX volume and TYX stack via .mrc dispatch") {
     val zyx = NDArray.tabulate(Seq(2, 4, 5))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
-    val uriV = Files.createTempFile("graft_mrc_rt", ".mrc").toString
+    val uriV = freshDir("mrc_rt.mrc")
     graft.BioSpark.fromArray(spark, zyx, Some("ZYX")).save(uriV)
     val vol = graft.BioSpark.open(spark, uriV)
     assert(vol.dims.shape == Seq(1L, 1L, 2L, 4L, 5L))
@@ -114,7 +114,7 @@ class MrcSpec extends SparkSpec {
     assert(vol.getImageData("ZYX").array.data.toSeq == zyx.data.toSeq)
     val tyx = NDArray.tabulate(Seq(3, 2, 4))(idx =>
       idx(0) * 50.0 + idx(1) * 8.0 + idx(2))
-    val uriS = Files.createTempFile("graft_mrc_rt", ".mrc").toString
+    val uriS = freshDir("mrc_rt.mrc")
     graft.BioSpark.fromArray(spark, tyx, Some("TYX")).save(uriS)
     val stk = graft.BioSpark.open(spark, uriS)
     assert(stk.dims.shape == Seq(3L, 1L, 1L, 2L, 4L))
@@ -131,23 +131,23 @@ class MrcSpec extends SparkSpec {
       pixels(writeMrc(3, 2, 1, 3, data, big = false))
     }
     // no MAP tag → not this format
-    val junk = Files.createTempFile("graft_mrc_junk", ".mrc")
+    val junk = Paths.get(freshDir("mrc_junk.mrc"))
     Files.write(junk, new Array[Byte](1100))
     intercept[Exception] { graft.BioSpark.open(spark, junk.toString) }
     val cyx = NDArray.tabulate(Seq(2, 2, 2))(_ => 1.0)
     intercept[IllegalArgumentException] {
       graft.BioSpark.fromArray(spark, cyx, Some("CYX"))
-        .save(Files.createTempFile("graft_mrc_c", ".mrc").toString)
+        .save(freshDir("mrc_c.mrc"))
     }
     val frac = NDArray.tabulate(Seq(1, 1, 1))(_ => 0.1) // not f4-exact
     intercept[IllegalArgumentException] {
       graft.BioSpark.fromArray(spark, frac, Some("ZYX"))
-        .save(Files.createTempFile("graft_mrc_f", ".mrc").toString)
+        .save(freshDir("mrc_f.mrc"))
     }
     val tzyx = NDArray.tabulate(Seq(2, 2, 1, 1))(_ => 1.0)
     intercept[IllegalArgumentException] {
       graft.BioSpark.fromArray(spark, tzyx, Some("TZYX"))
-        .save(Files.createTempFile("graft_mrc_tz", ".mrc").toString)
+        .save(freshDir("mrc_tz.mrc"))
     }
   }
 }

@@ -16,7 +16,7 @@ class NpySpec extends SparkSpec {
   /** Build a v1.0 .npy file from raw element bytes. */
   private def writeNpy(descr: String, shape: Seq[Long],
       data: Array[Byte]): String = {
-    val f = Files.createTempFile("graft_npy", ".npy")
+    val f = Paths.get(freshDir("npy.npy"))
     val header = NpyFormat.headerBytes(descr, shape)
     // headerBytes always emits fortran_order: False with the requested
     // descr — for big-endian fixtures patch the descr in place
@@ -104,7 +104,7 @@ class NpySpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(2, 3, 2, 4, 5))(idx =>
       idx(0) * 10000.0 + idx(1) * 1000 + idx(2) * 100 + idx(3) * 10 + idx(4))
     val img = graft.BioSpark.fromArray(spark, arr)
-    val uri = Files.createTempDirectory("npyrt").toString + "/rt.npy"
+    val uri = freshDir("rt.npy")
     img.save(uri)
     val back = graft.BioSpark.open(spark, uri)
     assert(back.dims.order == "TCZYX")
@@ -119,7 +119,7 @@ class NpySpec extends SparkSpec {
     val pu2 = writeNpy("<u2", Seq(2L, 2L), b.array())
     val imgU = graft.BioSpark.open(spark, pu2)
     assert(imgU.meta.pixelType == PixelType.UInt16)
-    val uriU = Files.createTempDirectory("npyu2").toString + "/u2.npy"
+    val uriU = freshDir("u2.npy")
     imgU.save(uriU)
     val hdr = NpyFormat.readHeader(new java.io.DataInputStream(
       new java.io.BufferedInputStream(
@@ -132,11 +132,11 @@ class NpySpec extends SparkSpec {
       "per-member dtype narrow-back") {
     val f8 = NDArray.tabulate(Seq(2, 3))(i => i(0) * 10.0 + i(1))
     val img = graft.BioSpark.fromArray(spark, f8)
-    val dir = Files.createTempDirectory("npz").toString
     // write a 2-member archive by hand through the writer's scene loop:
     // one scene per save is the npy path; the npz writer takes them all
-    img.save(s"$dir/one.npz")
-    val back1 = graft.BioSpark.open(spark, s"$dir/one.npz")
+    val one = freshDir("one.npz")
+    img.save(one)
+    val back1 = graft.BioSpark.open(spark, one)
     assert(back1.scenes == Seq("Image:0"))
     assert(back1.getImageData("YX").array.data.toSeq == f8.data.toSeq)
     // multi-scene via ArrayLike pair with distinct ranks
@@ -146,8 +146,9 @@ class NpySpec extends SparkSpec {
     val multi = new graft.image.BioImage(spark,
       new ArrayLikeReader(Seq(a, b), Seq(Some("YX"), Some("ZYX")),
         Seq(None, None)))
-    multi.save(s"$dir/two.npz")
-    val back = graft.BioSpark.open(spark, s"$dir/two.npz")
+    val two = freshDir("two.npz")
+    multi.save(two)
+    val back = graft.BioSpark.open(spark, two)
     assert(back.scenes == Seq("Image:0", "Image:1"))
     back.setScene("Image:1")
     assert(back.dims.order == "TCZYX" && back.dims('Z') == 2)
@@ -163,7 +164,7 @@ class NpySpec extends SparkSpec {
     val bytes = Files.readAllBytes(Paths.get(good))
     val text = new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
       .replace("False", "True ")
-    val fortran = Files.createTempFile("graft_f", ".npy")
+    val fortran = Paths.get(freshDir("f.npy"))
     Files.write(fortran,
       text.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
     intercept[UnsupportedFileFormatError] {

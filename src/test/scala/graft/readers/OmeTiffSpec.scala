@@ -196,12 +196,9 @@ class OmeTiffSpec extends SparkSpec {
         v * math.pow(10, shape.length - 1 - i)
       }.sum)
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-tiff").toString + "/" + name
-
   test("write → plugin-resolve → read roundtrip preserves pixels and dims") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 3, 4, 5))) // CZYX
-    val uri = tmp("img.ome.tiff")
+    val uri = freshDir("img.ome.tiff")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.reader.name == "OmeTiffReader")
@@ -221,7 +218,7 @@ class OmeTiffSpec extends SparkSpec {
       "and pyramid levels via the options map") {
     val img = BioSpark.fromArray(spark,
       formulaic(Seq(2, 40, 48)), Some("CYX"))
-    val uri = tmp("opts.ome.tiff")
+    val uri = freshDir("opts.ome.tiff")
     // tile syntax is HxW (height-first, like the zarr chunk options):
     // 32-tall x 16-wide — the non-square shape pins the orientation
     img.save(uri, None, Map(
@@ -236,7 +233,7 @@ class OmeTiffSpec extends SparkSpec {
     val nd = back.getImageData("CYX")
     for (c <- 0 until 2; y <- 0 until 40 by 7; x <- 0 until 48 by 11)
       assert(nd.array(c, y, x) == c * 100.0 + y * 10.0 + x, s"($c,$y,$x)")
-    intercept[IllegalArgumentException](img.save(tmp("bad.ome.tiff"), None,
+    intercept[IllegalArgumentException](img.save(freshDir("bad.ome.tiff"), None,
       Map("compression" -> "jpeg2000")))
   }
 
@@ -244,7 +241,7 @@ class OmeTiffSpec extends SparkSpec {
     val arrs = (0 until 3).map(i =>
       NDArray.tabulate(Seq(2, 2))(idx => i * 100.0 + idx(0) * 10 + idx(1)))
     val img = new BioImage(spark, ArrayLikeReader.multi(arrs))
-    val uri = tmp("multi.ome.tiff")
+    val uri = freshDir("multi.ome.tiff")
     img.save(uri, selectScenes = Some(Seq("Image:2", "Image:0")))
     val back = BioSpark.open(spark, uri)
     assert(back.scenes == Seq("Image:0", "Image:1")) // renumbered, order kept
@@ -256,7 +253,7 @@ class OmeTiffSpec extends SparkSpec {
   test("channel names, pps and timeInterval survive the roundtrip") {
     val img = BioSpark.fromArray(spark, NDArray.zeros(Seq(2, 2, 2)),
       Some("CYX"), Some(Seq("DAPI", "GFP")))
-    val uri = tmp("meta.ome.tiff")
+    val uri = freshDir("meta.ome.tiff")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.channelNames == Seq("DAPI", "GFP"))
@@ -295,7 +292,7 @@ class OmeTiffSpec extends SparkSpec {
     b.putInt(0) // no next IFD
     b.putInt(8).putInt(10) // strip offsets
     b.putInt(2).putInt(2) // strip byte counts
-    val p = tmp("bigendian.tif")
+    val p = freshDir("bigendian.tif")
     Files.write(java.nio.file.Paths.get(p),
       java.util.Arrays.copyOf(b.array(), b.position()))
     val back = BioSpark.open(spark, p)
@@ -314,7 +311,7 @@ class OmeTiffSpec extends SparkSpec {
     val ifd1 = TiffFormat.ifdBytes(TiffFormat.planeEntries(
       2, 2, PixelType.UInt8, 8, None), 0)
     val bytes = TiffFormat.headerBytes(8L + strip.length) ++ strip ++ ifd0 ++ ifd1
-    val p = tmp("plain.tif")
+    val p = freshDir("plain.tif")
     Files.write(java.nio.file.Paths.get(p), bytes)
     val back = BioSpark.open(spark, p)
     assert(back.dims.shape == Seq(1, 1, 2, 2, 2)) // 2 IFDs on Z
@@ -328,7 +325,7 @@ class OmeTiffSpec extends SparkSpec {
     // 600x64 float64: rowBytes=512 → rps=512 → 2 strips per plane
     val img = BioSpark.fromArray(spark, NDArray.tabulate(Seq(600, 64))(idx =>
       idx(0) * 1000.0 + idx(1)))
-    val uri = tmp("strips.ome.tiff")
+    val uri = freshDir("strips.ome.tiff")
     img.save(uri)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(uri))
     val read = (off: Long, len: Int) =>
@@ -345,7 +342,7 @@ class OmeTiffSpec extends SparkSpec {
 
   test("deflate-compressed roundtrip (strips)") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 5, 7))) // ZYX
-    val uri = tmp("deflate.ome.tiff")
+    val uri = freshDir("deflate.ome.tiff")
     OmeTiffWriter.save(img, uri, None,
       TiffOptions(compression = TiffFormat.CompressionDeflate))
     val back = BioSpark.open(spark, uri)
@@ -357,7 +354,7 @@ class OmeTiffSpec extends SparkSpec {
 
   test("LZW-compressed roundtrip (strips)") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(3, 6, 5)))
-    val uri = tmp("lzw.ome.tiff")
+    val uri = freshDir("lzw.ome.tiff")
     OmeTiffWriter.save(img, uri, None,
       TiffOptions(compression = TiffFormat.CompressionLZW))
     val back = BioSpark.open(spark, uri)
@@ -369,7 +366,7 @@ class OmeTiffSpec extends SparkSpec {
   test("tiled roundtrip: ragged 20x24 image over 16x16 tiles reads as a " +
       "cropped 2x2 mosaic grid") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(20, 24))) // YX
-    val uri = tmp("tiled.ome.tiff")
+    val uri = freshDir("tiled.ome.tiff")
     OmeTiffWriter.save(img, uri, None, TiffOptions(tile = Some((16, 16))))
     val back = BioSpark.open(spark, uri)
     // tiled scenes surface as mosaics; reconstruction reports TRUE dims
@@ -389,7 +386,7 @@ class OmeTiffSpec extends SparkSpec {
 
   test("tiled + deflate-compressed multi-plane roundtrip") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 18, 17)), Some("CYX"))
-    val uri = tmp("tiled-z.ome.tiff")
+    val uri = freshDir("tiled-z.ome.tiff")
     OmeTiffWriter.save(img, uri, None,
       TiffOptions(compression = TiffFormat.CompressionDeflate,
         tile = Some((16, 16))))
@@ -486,7 +483,7 @@ class OmeTiffSpec extends SparkSpec {
     entry(317, 3, 1, 3) // floating-point predictor
     entry(339, 3, 1, 3) // IEEE float
     b.putInt(0)
-    val p = tmp("foreign-p3.tif")
+    val p = freshDir("foreign-p3.tif")
     Files.write(java.nio.file.Paths.get(p),
       java.util.Arrays.copyOf(b.array(), b.position()))
     val back = BioSpark.open(spark, p)
@@ -530,7 +527,7 @@ class OmeTiffSpec extends SparkSpec {
     entry(324, 4, 1, 8) // tile offset
     entry(325, 4, 1, enc.length)
     b.putInt(0)
-    val p = tmp("foreign-lzw.tif")
+    val p = freshDir("foreign-lzw.tif")
     Files.write(java.nio.file.Paths.get(p),
       java.util.Arrays.copyOf(b.array(), b.position()))
     val back = BioSpark.open(spark, p)
@@ -556,7 +553,7 @@ class OmeTiffSpec extends SparkSpec {
       val img = new BufferedImage(256, 256, BufferedImage.TYPE_BYTE_GRAY)
       for (y <- 0 until 256; x <- 0 until 256)
         img.getRaster.setSample(x, y, 0, (y * 7 + x * 3) % 251)
-      val f = new java.io.File(tmp(s"imageio-$compression.tif"))
+      val f = new java.io.File(freshDir(s"imageio-$compression.tif"))
       val os = ImageIO.createImageOutputStream(f)
       w.setOutput(os)
       w.write(null, new IIOImage(img, null, null), p)
@@ -578,11 +575,11 @@ class OmeTiffSpec extends SparkSpec {
       // route through PNG so the image carries a UInt8 pixel type ImageIO
       // can consume on the TIFF side
       val arr = NDArray.tabulate(Seq(30, 20))(idx => (idx(0) * 3 + idx(1)) % 251)
-      val png = tmp(s"src-$comp.png")
+      val png = freshDir(s"src-$comp.png")
       BioSpark.fromArray(spark, arr).save(png)
       val img8 = BioSpark.open(spark, png)
       assert(img8.meta.pixelType == PixelType.UInt8)
-      val uri = tmp(s"ours-$comp.ome.tiff")
+      val uri = freshDir(s"ours-$comp.ome.tiff")
       OmeTiffWriter.save(img8, uri, None, TiffOptions(compression = comp))
       val read = ImageIO.read(new java.io.File(uri))
       assert(read != null, s"ImageIO failed to read compression $comp")
@@ -598,12 +595,12 @@ class OmeTiffSpec extends SparkSpec {
     // engine → ImageIO: write an RGB scene via an RGB PNG source
     val arr = NDArray.tabulate(Seq(5, 7, 3))(idx =>
       (idx(0) * 20 + idx(1) * 5 + idx(2) * 3) % 256)
-    val png = tmp("rgb-src.png")
+    val png = freshDir("rgb-src.png")
     new BioImage(spark, new ArrayLikeReader(Seq(arr), Seq(Some("YXS")),
       Seq(None))).save(png)
     val img8 = BioSpark.open(spark, png)
     assert(img8.dims.order == "TCZYXS")
-    val uri = tmp("rgb.ome.tiff")
+    val uri = freshDir("rgb.ome.tiff")
     img8.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.dims.order == "TCZYXS")
@@ -625,7 +622,7 @@ class OmeTiffSpec extends SparkSpec {
     val bi = new BufferedImage(9, 4, BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 4; x <- 0 until 9; s <- 0 until 3)
       bi.getRaster.setSample(x, y, s, (y * 31 + x * 11 + s * 5) % 256)
-    val f = new java.io.File(tmp("foreign-rgb.tif"))
+    val f = new java.io.File(freshDir("foreign-rgb.tif"))
     val os = ImageIO.createImageOutputStream(f)
     w.setOutput(os)
     w.write(null, new javax.imageio.IIOImage(bi, null, null), p)
@@ -640,7 +637,7 @@ class OmeTiffSpec extends SparkSpec {
 
   test("BigTIFF write → read roundtrip (tiled + compressed, multi-plane)") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 18, 20)), Some("CYX"))
-    val uri = tmp("big.ome.tiff")
+    val uri = freshDir("big.ome.tiff")
     OmeTiffWriter.save(img, uri, None, TiffOptions(
       compression = TiffFormat.CompressionDeflate,
       tile = Some((16, 16)), bigTiff = true))
@@ -659,11 +656,11 @@ class OmeTiffSpec extends SparkSpec {
   test("RGB + tiled + compressed TIFF roundtrip (interleaved tile crop)") {
     val arr = NDArray.tabulate(Seq(20, 18, 3))(idx =>
       (idx(0) * 12 + idx(1) * 5 + idx(2) * 41) % 256)
-    val png = tmp("rgbt-src.png")
+    val png = freshDir("rgbt-src.png")
     new BioImage(spark, new ArrayLikeReader(Seq(arr), Seq(Some("YXS")),
       Seq(None))).save(png)
     val img8 = BioSpark.open(spark, png)
-    val uri = tmp("rgb-tiled.ome.tiff")
+    val uri = freshDir("rgb-tiled.ome.tiff")
     OmeTiffWriter.save(img8, uri, None, TiffOptions(
       compression = TiffFormat.CompressionDeflate, tile = Some((16, 16))))
     val back = BioSpark.open(spark, uri)
@@ -690,7 +687,7 @@ class OmeTiffSpec extends SparkSpec {
     def v(y: Int, x: Int, s: Int): Int = 1000 * (y + 1) + 100 * x + 17 * s
     for (y <- 0 until h; x <- 0 until w; s <- 0 until 3)
       src.getRaster.setSample(x, y, s, v(y, x, s))
-    val f = new java.io.File(tmp("deep-rgb.png"))
+    val f = new java.io.File(freshDir("deep-rgb.png"))
     assert(ImageIO.write(src, "png", f))
     val img = BioSpark.open(spark, f.getPath)
     assert(img.meta.pixelType == PixelType.UInt16)
@@ -699,7 +696,7 @@ class OmeTiffSpec extends SparkSpec {
     for (y <- 0 until h; x <- 0 until w; s <- 0 until 3)
       assert(nd.array(y, x, s) == v(y, x, s).toDouble, s"($y,$x,$s)")
     // engine writes it back at 16 bits per channel
-    val out = tmp("deep-rgb-out.png")
+    val out = freshDir("deep-rgb-out.png")
     img.save(out)
     val back = BioSpark.open(spark, out)
     assert(back.meta.pixelType == PixelType.UInt16)
@@ -711,11 +708,11 @@ class OmeTiffSpec extends SparkSpec {
   test("BigTIFF + RGB: sample arrays pack into the 8-byte inline slot") {
     val arr = NDArray.tabulate(Seq(6, 9, 3))(idx =>
       (idx(0) * 30 + idx(1) * 7 + idx(2) * 11) % 256)
-    val png = tmp("bigrgb-src.png")
+    val png = freshDir("bigrgb-src.png")
     new BioImage(spark, new ArrayLikeReader(Seq(arr), Seq(Some("YXS")),
       Seq(None))).save(png)
     val img8 = BioSpark.open(spark, png)
-    val uri = tmp("big-rgb.ome.tiff")
+    val uri = freshDir("big-rgb.ome.tiff")
     OmeTiffWriter.save(img8, uri, None, TiffOptions(bigTiff = true))
     val back = BioSpark.open(spark, uri)
     assert(back.dims('S') == 3)
@@ -729,7 +726,7 @@ class OmeTiffSpec extends SparkSpec {
   test("RGB PNG write path (TwoDWriter analog)") {
     val arr = NDArray.tabulate(Seq(4, 6, 3))(idx =>
       (idx(0) * 40 + idx(1) * 9 + idx(2) * 2) % 256)
-    val png = tmp("rgb-out.png")
+    val png = freshDir("rgb-out.png")
     new BioImage(spark, new ArrayLikeReader(Seq(arr), Seq(Some("YXS")),
       Seq(None))).save(png)
     val back = BioSpark.open(spark, png)
@@ -753,7 +750,7 @@ class OmeTiffSpec extends SparkSpec {
         else b.putInt(value)
       }
       b.putInt(0)
-      val p = tmp("bad.tif")
+      val p = freshDir("bad.tif")
       Files.write(java.nio.file.Paths.get(p),
         java.util.Arrays.copyOf(b.array(), b.position()))
       p
@@ -785,9 +782,9 @@ class OmeTiffSpec extends SparkSpec {
   test("writer raises on unknown scene and empty selection") {
     val img = BioSpark.fromArray(spark, NDArray.zeros(Seq(2, 2)))
     intercept[IllegalArgumentException](
-      img.save(tmp("x.ome.tiff"), Some(Seq("Image:9"))))
+      img.save(freshDir("x.ome.tiff"), Some(Seq("Image:9"))))
     intercept[IllegalArgumentException](
-      img.save(tmp("x.ome.tiff"), Some(Seq.empty)))
+      img.save(freshDir("x.ome.tiff"), Some(Seq.empty)))
   }
 
   test("mosaic scenes stitch on save (tiles reassembled into full planes)") {
@@ -796,7 +793,7 @@ class OmeTiffSpec extends SparkSpec {
     val mosaic = new BioImage(spark,
       new ArrayLikeReader(Seq(arr), Seq(Some("MYX")),
         Seq(None), tilePositions = Seq(Seq((0, 0), (0, 2)))))
-    val uri = tmp("m.ome.tiff")
+    val uri = freshDir("m.ome.tiff")
     mosaic.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.dims.shape == Seq(1, 1, 1, 2, 4)) // 2x(2x2) side by side
@@ -818,7 +815,7 @@ class OmeTiffSpec extends SparkSpec {
     // S9: the readers go through Hadoop FileSystem, so any configured
     // scheme (file:, hdfs:, s3a:, gs: …) works; exercised with file://
     val img = BioSpark.fromArray(spark, formulaic(Seq(3, 4)))
-    val plain = tmp("uri.ome.tiff")
+    val plain = freshDir("uri.ome.tiff")
     img.save(plain)
     val back = BioSpark.open(spark, "file://" + plain)
     assert(back.reader.name == "OmeTiffReader")
@@ -826,7 +823,7 @@ class OmeTiffSpec extends SparkSpec {
   }
 
   test("feasibility report covers the tiff plugin") {
-    val uri = tmp("probe.ome.tiff")
+    val uri = freshDir("probe.ome.tiff")
     BioSpark.fromArray(spark, NDArray.zeros(Seq(2, 2))).save(uri)
     val rep = BioSpark.defaultRegistry.feasibilityReport(spark, uri)
     assert(rep("OmeTiffReader").supported)
@@ -838,7 +835,7 @@ class OmeTiffSpec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(2, 8, 8))(idx =>
       idx(0) * 1000.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr, Some("CYX"))
-    val uri = tmp("pyr.ome.tiff")
+    val uri = freshDir("pyr.ome.tiff")
     OmeTiffWriter.save(img, uri, None, TiffOptions(pyramidLevels = 3))
     val back = BioSpark.open(spark, uri)
     assert(back.resolutionLevels == Seq(0, 1, 2))
@@ -865,7 +862,7 @@ class OmeTiffSpec extends SparkSpec {
       "cropped and pooled") {
     val arr = NDArray.tabulate(Seq(20, 24))(idx => idx(0) * 30.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("pyrt.ome.tiff")
+    val uri = freshDir("pyrt.ome.tiff")
     OmeTiffWriter.save(img, uri, None, TiffOptions(
       compression = TiffFormat.CompressionDeflate,
       tile = Some((16, 16)), pyramidLevels = 2))
@@ -883,7 +880,7 @@ class OmeTiffSpec extends SparkSpec {
 
   test("pyramidLevels stops at 1x1 instead of over-halving") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 2)))
-    val uri = tmp("tiny-pyr.ome.tiff")
+    val uri = freshDir("tiny-pyr.ome.tiff")
     OmeTiffWriter.save(img, uri, None, TiffOptions(pyramidLevels = 8))
     val back = BioSpark.open(spark, uri)
     assert(back.resolutionLevels == Seq(0, 1)) // 2x2 → 1x1, then stop
@@ -903,7 +900,7 @@ class OmeTiffSpec extends SparkSpec {
     val bi = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
     for (y <- 0 until h; x <- 0 until w)
       bi.getRaster.setSample(x, y, 0, (y * 5 + x * 3) % 251)
-    val f = new java.io.File(tmp("jpeg-gray.tif"))
+    val f = new java.io.File(freshDir("jpeg-gray.tif"))
     val os = ImageIO.createImageOutputStream(f)
     wr.setOutput(os)
     wr.write(null, new IIOImage(bi, null, null), p)
@@ -932,7 +929,7 @@ class OmeTiffSpec extends SparkSpec {
     val bi = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
     for (y <- 0 until h; x <- 0 until w; s <- 0 until 3)
       bi.getRaster.setSample(x, y, s, (y * 16 + x * 7 + s * 40) % 256)
-    val f = new java.io.File(tmp("jpeg-rgb.tif"))
+    val f = new java.io.File(freshDir("jpeg-rgb.tif"))
     val os = ImageIO.createImageOutputStream(f)
     wr.setOutput(os)
     wr.write(null, new IIOImage(bi, null, null), p)

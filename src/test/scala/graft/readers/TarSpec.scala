@@ -39,7 +39,7 @@ class TarSpec extends SparkSpec {
       "sidecar metadata pairs by basename key, scenes decode") {
     val gray = NDArray.tabulate(Seq(3, 4))(idx => (idx(0) * 4 + idx(1)).toDouble)
     val img = graft.BioSpark.fromArray(spark, gray, Some("YX"))
-    val uri = s"/tmp/graft_tarspec_${java.util.UUID.randomUUID()}.tar"
+    val uri = freshDir("tarspec.tar")
     img.save(uri)
     val back = graft.BioSpark.open(spark, uri)
     assert(back.reader.name == "TarReader",
@@ -54,7 +54,7 @@ class TarSpec extends SparkSpec {
   }
 
   test("a tar with no image members is rejected as unsupported") {
-    val uri = s"/tmp/graft_tarspec_${java.util.UUID.randomUUID()}.tar"
+    val uri = freshDir("tarspec.tar")
     val bytes = TarFormat.build(
       Seq(TarFormat.Member("readme.txt", "no images".getBytes("UTF-8"))))
     java.nio.file.Files.write(java.nio.file.Paths.get(uri), bytes)

@@ -15,12 +15,9 @@ class ZarrSpec extends SparkSpec {
         v * math.pow(10, shape.length - 1 - i)
       }.sum)
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-zarr").toString + "/" + name
-
   test("write → plugin-resolve → read roundtrip, distributed chunks") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 3, 4, 5))) // CZYX
-    val uri = tmp("img.ome.zarr")
+    val uri = freshDir("img.ome.zarr")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.reader.name == "ZarrReader")
@@ -38,7 +35,7 @@ class ZarrSpec extends SparkSpec {
       Seq(Some(Seq("DAPI", "GFP")), None),
       physicalPixelSizes = Some((2.0, 0.5, 0.5)))
     val img = new BioImage(spark, reader)
-    val uri = tmp("multi.ome.zarr")
+    val uri = freshDir("multi.ome.zarr")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.scenes == Seq("Image:0", "Image:1"))
@@ -52,7 +49,7 @@ class ZarrSpec extends SparkSpec {
   test("NGFF multiscale pyramid: levels readable with per-level dims") {
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("pyr.ome.zarr")
+    val uri = freshDir("pyr.ome.zarr")
     ZarrWriter.save(img, uri, None, levels = 2)
     val back = BioSpark.open(spark, uri)
     assert(back.resolutionLevels == Seq(0, 1))
@@ -64,7 +61,7 @@ class ZarrSpec extends SparkSpec {
 
   test("multi-plane TCZ chunk grid roundtrips") {
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 3, 2, 2, 2))) // TCZYX
-    val uri = tmp("tcz.zarr")
+    val uri = freshDir("tcz.zarr")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.dims.shape == Seq(2, 3, 2, 2, 2))
@@ -77,7 +74,7 @@ class ZarrSpec extends SparkSpec {
     import graft.core.PixelType
     import graft.formats.ZarrFormat
     // hand-built NGFF store: 4x4 plane stored as four 2x2 chunks
-    val root = tmp("tiled.zarr")
+    val root = freshDir("tiled.zarr")
     Files.createDirectories(Paths.get(root, "0"))
     def put(rel: String, bytes: Array[Byte]): Unit =
       Files.write(Paths.get(root, rel), bytes)
@@ -112,7 +109,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("zlib.zarr")
+    val root = freshDir("zlib.zarr")
     Files.createDirectories(Paths.get(root, "0"))
     def put(rel: String, bytes: Array[Byte]): Unit =
       Files.write(Paths.get(root, rel), bytes)
@@ -190,7 +187,7 @@ class ZarrSpec extends SparkSpec {
       (2, "zlib"), (2, "zstd"), (2, "blosc"))
     for ((fmt, comp) <- variants) {
       val img = BioSpark.fromArray(spark, formulaic(Seq(2, 6, 9)), Some("CYX"))
-      val uri = tmp(s"v$fmt$comp.ome.zarr")
+      val uri = freshDir(s"v$fmt$comp.ome.zarr")
       ZarrWriter.save(img, uri, None, levels = 1, compressor = Some(comp),
         format = fmt)
       val back = BioSpark.open(spark, uri)
@@ -202,9 +199,9 @@ class ZarrSpec extends SparkSpec {
     // format/codec mismatches fail loudly, not silently
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 2)))
     intercept[IllegalArgumentException](ZarrWriter.save(img,
-      tmp("bad1.zarr"), None, 1, Some("zlib"), format = 3))
+      freshDir("bad1.zarr"), None, 1, Some("zlib"), format = 3))
     intercept[IllegalArgumentException](ZarrWriter.save(img,
-      tmp("bad2.zarr"), None, 1, Some("gzip"), format = 2))
+      freshDir("bad2.zarr"), None, 1, Some("gzip"), format = 2))
   }
 
   test("ragged chunk grid: 5x7 plane over 4x4 chunks (padded edge chunks " +
@@ -212,7 +209,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("ragged.zarr")
+    val root = freshDir("ragged.zarr")
     Files.createDirectories(Paths.get(root, "0"))
     def put(rel: String, bytes: Array[Byte]): Unit =
       Files.write(Paths.get(root, rel), bytes)
@@ -244,7 +241,7 @@ class ZarrSpec extends SparkSpec {
     import graft.core.PixelType
     import graft.formats.ZarrFormat
     // 2D: 3x4 YX, single chunk, key "0.0"
-    val r2 = tmp("rank2.zarr")
+    val r2 = freshDir("rank2.zarr")
     Files.createDirectories(Paths.get(r2, "0"))
     Files.write(Paths.get(r2, ".zgroup"), ZarrFormat.zgroup.getBytes)
     Files.write(Paths.get(r2, ".zattrs"), ZarrFormat.imageAttrs("Image:0", 1,
@@ -258,7 +255,7 @@ class ZarrSpec extends SparkSpec {
     assert(b2.getImageData("YX").array(2, 3) == 23.0)
 
     // 3D: 2x2x3 ZYX, one chunk per z plane, keys "z.y.x"
-    val r3 = tmp("rank3.zarr")
+    val r3 = freshDir("rank3.zarr")
     Files.createDirectories(Paths.get(r3, "0"))
     Files.write(Paths.get(r3, ".zgroup"), ZarrFormat.zgroup.getBytes)
     Files.write(Paths.get(r3, ".zattrs"), ZarrFormat.imageAttrs("Image:0", 1,
@@ -282,7 +279,7 @@ class ZarrSpec extends SparkSpec {
     // level 0: 8x8 over 4x4 chunks (2x2 grid); level 1: 4x4 as ONE chunk
     // — halving level-0 positions would predict a phantom 2x2 grid of
     // 2x2-positioned tiles and break dims/stitching
-    val root = tmp("tiledms.zarr")
+    val root = freshDir("tiledms.zarr")
     Files.createDirectories(Paths.get(root, "0"))
     Files.createDirectories(Paths.get(root, "1"))
     def put(rel: String, bytes: Array[Byte]): Unit =
@@ -319,7 +316,7 @@ class ZarrSpec extends SparkSpec {
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = new BioImage(spark, new ArrayLikeReader(Seq(arr),
       Seq(Some("YXS")), Seq(None)))
-    val uri = tmp("rgb.ome.zarr")
+    val uri = freshDir("rgb.ome.zarr")
     img.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.dims.order == "TCZYXS")
@@ -345,7 +342,7 @@ class ZarrSpec extends SparkSpec {
     val plan = rows.queryExecution.executedPlan.toString
     assert(!plan.contains("Aggregate") && !plan.contains("collect_list"),
       plan)
-    val uri = tmp("aligned.ome.zarr")
+    val uri = freshDir("aligned.ome.zarr")
     img.save(uri) // v3 default
     // the array node declares the TILE grid as the chunk grid
     val za = new String(Files.readAllBytes(
@@ -374,7 +371,7 @@ class ZarrSpec extends SparkSpec {
     import graft.core.PixelType
     import graft.formats.ZarrFormat
     // foreign store with NON-default units (ms / nm)
-    val root = tmp("units.zarr")
+    val root = freshDir("units.zarr")
     Files.createDirectories(Paths.get(root, "0"))
     def put(rel: String, bytes: Array[Byte]): Unit =
       Files.write(Paths.get(root, rel), bytes)
@@ -398,7 +395,7 @@ class ZarrSpec extends SparkSpec {
       Seq(NDArray.tabulate(Seq(2, 2, 2))(_.sum.toDouble)), Seq(None),
       Seq(None), physicalPixelSizes = Some((1.0, 1.0, 1.0)),
       timeInterval = Some(1.0)))
-    val uri = tmp("interval1.ome.zarr")
+    val uri = freshDir("interval1.ome.zarr")
     img.save(uri)
     val rt = BioSpark.open(spark, uri)
     assert(rt.timeInterval.contains(1.0))
@@ -407,7 +404,7 @@ class ZarrSpec extends SparkSpec {
     // and a unit-less store still reads "no interval" from scale 1.0
     val bare = new BioImage(spark, new ArrayLikeReader(
       Seq(NDArray.tabulate(Seq(2, 2, 2))(_.sum.toDouble)), Seq(None), Seq(None)))
-    val uri2 = tmp("nointerval.ome.zarr")
+    val uri2 = freshDir("nointerval.ome.zarr")
     bare.save(uri2)
     val rt2 = BioSpark.open(spark, uri2)
     assert(rt2.timeInterval.isEmpty)
@@ -438,7 +435,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("v3.zarr")
+    val root = freshDir("v3.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -479,7 +476,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("v3shard.zarr")
+    val root = freshDir("v3shard.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -545,7 +542,7 @@ class ZarrSpec extends SparkSpec {
       "dispatch; unknown keys raise") {
     import java.nio.file.Paths
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 8, 8)), Some("CYX"))
-    val uri = tmp("opt.ome.zarr")
+    val uri = freshDir("opt.ome.zarr")
     img.save(uri, None, Map(
       "levels" -> "2", "compressor" -> "zstd", "shardInner" -> "4x4"))
     // sharded layout on disk: one whole-plane shard object per (c, level)
@@ -559,7 +556,7 @@ class ZarrSpec extends SparkSpec {
       assert(nd.array(c, y, x) == c * 100.0 + y * 10.0 + x, s"($c,$y,$x)")
 
     // v2 behind the same facade
-    val uri2 = tmp("opt2.ome.zarr")
+    val uri2 = freshDir("opt2.ome.zarr")
     img.save(uri2, None, Map("format" -> "2", "compressor" -> "zlib"))
     assert(Files.exists(Paths.get(uri2, ".zgroup")))
     assert(BioSpark.open(spark, uri2).getImageData("CYX").array(1, 7, 6)
@@ -567,9 +564,9 @@ class ZarrSpec extends SparkSpec {
 
     // unknown keys and malformed dims raise instead of being dropped
     intercept[IllegalArgumentException](
-      img.save(tmp("bad.ome.zarr"), None, Map("chunks" -> "4x4")))
+      img.save(freshDir("bad.ome.zarr"), None, Map("chunks" -> "4x4")))
     intercept[IllegalArgumentException](
-      img.save(tmp("bad2.ome.zarr"), None, Map("chunk" -> "4x4x4")))
+      img.save(freshDir("bad2.ome.zarr"), None, Map("chunk" -> "4x4x4")))
   }
 
   test("zarr v3 sharding_indexed with index_location=start reads (no " +
@@ -578,7 +575,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("v3shardstart.zarr")
+    val root = freshDir("v3shardstart.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -622,7 +619,7 @@ class ZarrSpec extends SparkSpec {
     // zarr-python's GZip codec writes {"id":"gzip"} v2 stores — distinct
     // from "zlib" (raw deflate) but the same RFC-1952 wire format the v3
     // gzip codec uses
-    val root = tmp("v2gzip.zarr")
+    val root = freshDir("v2gzip.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -644,7 +641,7 @@ class ZarrSpec extends SparkSpec {
 
     // doubly-compressed v3 chain: a single-layer decode would yield
     // garbage, so the parse must refuse it instead
-    val root2 = tmp("v3double.zarr")
+    val root2 = freshDir("v3double.zarr")
     def put2(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root2, rel)
       Files.createDirectories(p.getParent)
@@ -672,7 +669,7 @@ class ZarrSpec extends SparkSpec {
     // ragged: 2x5x7 CYX — aligned-grid fast path can't engage (no mosaic),
     // whole-plane chunks; multiscale levels=2 over an 8x8 plane
     val img = BioSpark.fromArray(spark, formulaic(Seq(2, 5, 7)), Some("CYX"))
-    val uri = tmp("v3write.ome.zarr")
+    val uri = freshDir("v3write.ome.zarr")
     img.save(uri) // v3 is the default
     // on-disk layout: zarr.json nodes, no v2 documents
     assert(Files.exists(Paths.get(uri, "zarr.json")))
@@ -699,7 +696,7 @@ class ZarrSpec extends SparkSpec {
     // multiscale v3 write: level 1 readable with its own dims
     val pimg = BioSpark.fromArray(spark,
       NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1)))
-    val puri = tmp("v3pyr.ome.zarr")
+    val puri = freshDir("v3pyr.ome.zarr")
     ZarrWriter.save(pimg, puri, None, levels = 2)
     val pback = BioSpark.open(spark, puri)
     assert(pback.resolutionLevels == Seq(0, 1))
@@ -708,7 +705,7 @@ class ZarrSpec extends SparkSpec {
     assert(pback.getImageData("YX").array(0, 0) == 5.5)
 
     // v2 behind the option: historical layout intact
-    val uri2 = tmp("v2write.ome.zarr")
+    val uri2 = freshDir("v2write.ome.zarr")
     ZarrWriter.save(img, uri2, None, levels = 1, compressor = None,
       format = 2)
     assert(Files.exists(Paths.get(uri2, ".zgroup")))
@@ -728,7 +725,7 @@ class ZarrSpec extends SparkSpec {
       if (y >= 3 && x >= 3) 0.0 else (y + 1) * 10.0 + x
     }
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("v3shardw.ome.zarr")
+    val uri = freshDir("v3shardw.ome.zarr")
     ZarrWriter.save(img, uri, None, levels = 1, compressor = Some("gzip"),
       format = 3, shardInner = Some((3, 3)))
     val doc = new String(Files.readAllBytes(
@@ -758,7 +755,7 @@ class ZarrSpec extends SparkSpec {
     }
     // ragged grid: 5x7 plane, 4x4 inner → shard padded to 8x8, lossless
     val rimg = BioSpark.fromArray(spark, formulaic(Seq(2, 5, 7)), Some("CYX"))
-    val ruri = tmp("v3shardragged.ome.zarr")
+    val ruri = freshDir("v3shardragged.ome.zarr")
     ZarrWriter.save(rimg, ruri, None, levels = 1, compressor = None,
       format = 3, shardInner = Some((4, 4)))
     val rnd = BioSpark.open(spark, ruri).getImageData("CYX")
@@ -766,7 +763,7 @@ class ZarrSpec extends SparkSpec {
       assert(rnd.array(c, y, x) == c * 100.0 + y * 10.0 + x, s"($c,$y,$x)")
     // sharding is a v3-only construct
     intercept[IllegalArgumentException](ZarrWriter.save(img,
-      tmp("shardv2.zarr"), None, 1, None, 2, Some((2, 2))))
+      freshDir("shardv2.zarr"), None, 1, None, 2, Some((2, 2))))
   }
 
   test("v3 sharding_indexed with index_location=start reads through the " +
@@ -775,7 +772,7 @@ class ZarrSpec extends SparkSpec {
     import java.nio.file.Paths
     import graft.core.PixelType
     import graft.formats.ZarrFormat
-    val root = tmp("v3shardstart.zarr")
+    val root = freshDir("v3shardstart.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -825,7 +822,7 @@ class ZarrSpec extends SparkSpec {
     // multiscale: 8x8 → 4x4, sharded 3x3 inner chunks at every level
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("v3shardms.ome.zarr")
+    val uri = freshDir("v3shardms.ome.zarr")
     ZarrWriter.save(img, uri, None, levels = 2, compressor = Some("zstd"),
       format = 3, shardInner = Some((3, 3)))
     val back = BioSpark.open(spark, uri)
@@ -842,7 +839,7 @@ class ZarrSpec extends SparkSpec {
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2) + 1)
     val rimg = new BioImage(spark, new ArrayLikeReader(Seq(rgb),
       Seq(Some("YXS")), Seq(None)))
-    val ruri = tmp("v3shardrgb.ome.zarr")
+    val ruri = freshDir("v3shardrgb.ome.zarr")
     ZarrWriter.save(rimg, ruri, None, levels = 1, compressor = None,
       format = 3, shardInner = Some((2, 4)))
     val rback = BioSpark.open(spark, ruri)
@@ -866,7 +863,7 @@ class ZarrSpec extends SparkSpec {
         assert(nd.array(y, x) == y * 10.0 + x + 1, s"$tag ($y,$x)")
     }
 
-    val v3uri = tmp("v3chunked.ome.zarr")
+    val v3uri = freshDir("v3chunked.ome.zarr")
     ZarrWriter.save(img, v3uri, None, levels = 1, compressor = None,
       format = 3, shardInner = None, chunk = Some((4, 4)))
     val doc = new String(Files.readAllBytes(
@@ -880,7 +877,7 @@ class ZarrSpec extends SparkSpec {
     assert(BioSpark.open(spark, v3uri).meta.dims('M') == 6)
     checkAll(v3uri, "v3")
 
-    val v2uri = tmp("v2chunked.zarr")
+    val v2uri = freshDir("v2chunked.zarr")
     ZarrWriter.save(img, v2uri, None, levels = 1, compressor = Some("zlib"),
       format = 2, shardInner = None, chunk = Some((4, 4)))
     val za = new String(Files.readAllBytes(
@@ -890,7 +887,7 @@ class ZarrSpec extends SparkSpec {
     checkAll(v2uri, "v2")
 
     // chunk + shard: each 4x4 chunk object is a shard of 2x2 inner chunks
-    val shuri = tmp("v3chunkshard.ome.zarr")
+    val shuri = freshDir("v3chunkshard.ome.zarr")
     ZarrWriter.save(img, shuri, None, levels = 1, compressor = None,
       format = 3, shardInner = Some((2, 2)), chunk = Some((4, 4)))
     val sdoc = new String(Files.readAllBytes(
@@ -901,10 +898,10 @@ class ZarrSpec extends SparkSpec {
     checkAll(shuri, "chunk+shard")
     // mismatched chunk/inner geometry is rejected
     intercept[IllegalArgumentException](ZarrWriter.save(img,
-      tmp("badgeom.zarr"), None, 1, None, 3, Some((3, 3)), Some((4, 4))))
+      freshDir("badgeom.zarr"), None, 1, None, 3, Some((3, 3)), Some((4, 4))))
 
     // multiscale chunked: level 1 (4x5) gets its own ragged grid
-    val msuri = tmp("v3chunkms.ome.zarr")
+    val msuri = freshDir("v3chunkms.ome.zarr")
     ZarrWriter.save(img, msuri, None, levels = 2, compressor = None,
       format = 3, shardInner = None, chunk = Some((4, 4)))
     val back = BioSpark.open(spark, msuri)
@@ -918,7 +915,7 @@ class ZarrSpec extends SparkSpec {
   test("zarr v3 v2-style chunk-key encoding with big-endian uint16") {
     import java.nio.{ByteBuffer, ByteOrder}
     import java.nio.file.Paths
-    val root = tmp("v3be.zarr")
+    val root = freshDir("v3be.zarr")
     def put(rel: String, bytes: Array[Byte]): Unit = {
       val p = Paths.get(root, rel)
       Files.createDirectories(p.getParent)
@@ -947,13 +944,13 @@ class ZarrSpec extends SparkSpec {
   test("writer raises on unknown selections; mosaic scenes stitch on save") {
     val img = BioSpark.fromArray(spark, NDArray.zeros(Seq(2, 2)))
     intercept[IllegalArgumentException](
-      img.save(tmp("x.zarr"), Some(Seq("Image:9"))))
+      img.save(freshDir("x.zarr"), Some(Seq("Image:9"))))
     val arr = NDArray.tabulate(Seq(2, 2, 2))(idx =>
       idx(0) * 100.0 + idx(1) * 10 + idx(2))
     val mosaic = new BioImage(spark,
       new ArrayLikeReader(Seq(arr), Seq(Some("MYX")),
         Seq(None), tilePositions = Seq(Seq((0, 0), (0, 2)))))
-    val uri = tmp("m.zarr")
+    val uri = freshDir("m.zarr")
     mosaic.save(uri)
     val back = BioSpark.open(spark, uri)
     assert(back.dims.shape == Seq(1, 1, 1, 2, 4))

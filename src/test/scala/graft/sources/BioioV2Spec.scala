@@ -28,7 +28,7 @@ class BioioV2Spec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(4, 2, 8, 8))(idx =>
       idx(0) * 1000.0 + idx(1) * 100.0 + idx(2) * 10.0 + idx(3))
     val img = BioSpark.fromArray(spark, arr, Some("TCYX"))
-    val uri = s"/tmp/graft_v2spec_${java.util.UUID.randomUUID()}.ome.zarr"
+    val uri = freshDir("v2spec.ome.zarr")
     img.save(uri, None, Map("chunk" -> "4x4"))
     uri
   }
@@ -92,7 +92,7 @@ class BioioV2Spec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(3, 6, 5))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))
     val img = BioSpark.fromArray(spark, arr, Some("TYX"))
-    val uri = s"/tmp/graft_v2spec_${java.util.UUID.randomUUID()}.ome.tiff"
+    val uri = freshDir("v2spec.ome.tiff")
     img.save(uri)
     val all = scanOf(spark.read.format("bioio").load(uri))
     assert(all.plannedObjects == 3, // one strip-organized segment per T plane
@@ -113,7 +113,7 @@ class BioioV2Spec extends SparkSpec {
     val arr = NDArray.tabulate(Seq(4, 6))(idx =>
       ((idx(0) * 13 + idx(1) * 7) % 251).toDouble)
     val img = BioSpark.fromArray(spark, arr, Some("YX"))
-    val uri = s"/tmp/graft_v2spec_${java.util.UUID.randomUUID()}.png"
+    val uri = freshDir("v2spec.png")
     img.save(uri)
     val v2 = spark.read.format("bioio").load(uri).collect()
     val facade = BioSpark.open(spark, uri).planes.collect()
@@ -126,7 +126,7 @@ class BioioV2Spec extends SparkSpec {
     val img = new graft.image.BioImage(spark,
       graft.readers.ArrayLikeReader.multi(Seq(a, b),
         dimOrders = Seq(Some("YX"), Some("YX"))))
-    val uri = s"/tmp/graft_v2spec_${java.util.UUID.randomUUID()}.npz"
+    val uri = freshDir("v2spec.npz")
     img.save(uri)
     val rows = spark.read.format("bioio").load(uri)
       .filter(col("scene_id") === "Image:1")

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,22 +27,24 @@ class FastLocalFileSystemSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_fastfs").toString
     val fast = newFast()
     val stock = newStock()
-    for (bits <- Seq(Integer.parseInt("600", 8), Integer.parseInt("644", 8),
-        Integer.parseInt("700", 8), Integer.parseInt("755", 8),
-        Integer.parseInt("775", 8), Integer.parseInt("444", 8),
-        Integer.parseInt("541", 8))) {
-      val a = new Path(s"$dir/fast_$bits")
-      val b = new Path(s"$dir/stock_$bits")
-      fast.create(a).close()
-      stock.create(b).close()
-      fast.setPermission(a, new FsPermission(bits.toShort))
-      stock.setPermission(b, new FsPermission(bits.toShort))
-      val got = fast.getFileStatus(a).getPermission.toShort
-      val want = stock.getFileStatus(b).getPermission.toShort
-      assert(got == want && (got.toInt & 0x1ff) == bits,
-        s"bits ${bits.toOctalString}: fast ${got.toInt.toOctalString} " +
-          s"vs stock ${want.toInt.toOctalString}")
-    }
+    try {
+      for (bits <- Seq(Integer.parseInt("600", 8), Integer.parseInt("644", 8),
+          Integer.parseInt("700", 8), Integer.parseInt("755", 8),
+          Integer.parseInt("775", 8), Integer.parseInt("444", 8),
+          Integer.parseInt("541", 8))) {
+        val a = new Path(s"$dir/fast_$bits")
+        val b = new Path(s"$dir/stock_$bits")
+        fast.create(a).close()
+        stock.create(b).close()
+        fast.setPermission(a, new FsPermission(bits.toShort))
+        stock.setPermission(b, new FsPermission(bits.toShort))
+        val got = fast.getFileStatus(a).getPermission.toShort
+        val want = stock.getFileStatus(b).getPermission.toShort
+        assert(got == want && (got.toInt & 0x1ff) == bits,
+          s"bits ${bits.toOctalString}: fast ${got.toInt.toOctalString} " +
+            s"vs stock ${want.toInt.toOctalString}")
+      }
+    } finally FileUtil.fullyDelete(new java.io.File(dir))
   }
 
   test("create/rename/delete roundtrip through the registered 'file' " +

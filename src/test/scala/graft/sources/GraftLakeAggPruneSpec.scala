@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** Manifest-stats read optimizations on the lake catalog:
@@ -10,17 +8,6 @@ import graft.SparkSpec
   * pruning (`SupportsRuntimeV2Filtering` fed by Spark's
   * dynamic-pruning subquery, pruning on manifest stats). */
 class GraftLakeAggPruneSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glap_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_agg_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("count/min/max answered from manifest stats: local scan, " +
       "zero footer reads, zero jobs over data files") {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
@@ -14,17 +12,6 @@ import graft.SparkSpec
   * retention window counts MAIN versions only. */
 class GraftLakeBranchSpec extends SparkSpec {
 
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glbr_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_branch_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
   private def withWap[A](branch: String)(body: => A): A = {
     spark.conf.set(GraftLakeTable.WapBranchConf, branch)
     try body
@@ -33,7 +20,7 @@ class GraftLakeBranchSpec extends SparkSpec {
 
   test("facade: branch commits stay off main until fastForward") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_f_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_f")
     VersionedTable.commit(spark, Seq(1, 2).toDF("k"), dir,
       carryForward = false)                                   // v0 main
     VersionedTable.commit(spark, Seq(3).toDF("k"), dir,
@@ -146,7 +133,7 @@ class GraftLakeBranchSpec extends SparkSpec {
   test("vacuum: branch heads are pins and the retention window " +
       "counts main versions only") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_v_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_v")
     VersionedTable.commit(spark, Seq(1).toDF("k"), dir,
       carryForward = false)                                   // v0 main
     VersionedTable.commit(spark, Seq(2).toDF("k"), dir,
@@ -175,8 +162,8 @@ class GraftLakeBranchSpec extends SparkSpec {
   test("streaming source skips branch-staged commits; fast-forward " +
       "delivers them exactly once") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_s_${java.util.UUID.randomUUID()}"
-    val ckpt = s"/tmp/graft_branch_ck_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_s")
+    val ckpt = freshDir("branch_ck")
     VersionedTable.commit(spark, Seq(1).toDF("k"), dir,
       carryForward = false)                                   // v0
     VersionedTable.commit(spark, Seq(2).toDF("k"), dir)       // v1 main
@@ -206,8 +193,8 @@ class GraftLakeBranchSpec extends SparkSpec {
 
   test("a branch stream follows ONLY its branch's commits") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_bs_${java.util.UUID.randomUUID()}"
-    val ckpt = s"/tmp/graft_branch_bck_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_bs")
+    val ckpt = freshDir("branch_bck")
     VersionedTable.commit(spark, Seq(1).toDF("k"), dir,
       carryForward = false)                                   // v0 main
     VersionedTable.commit(spark, Seq(10).toDF("k"), dir,
@@ -250,7 +237,7 @@ class GraftLakeBranchSpec extends SparkSpec {
   test("interleaved main and branch commits never cross lines: each " +
       "line reads only its own chain at every step") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_il_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_il")
     def main_ = VersionedTable.read(spark, dir).as[Int].collect().sorted
     def branch_ = VersionedTable.read(spark, dir, Some(
       VersionedTable.branches(spark, dir)("x"))).as[Int].collect().sorted
@@ -287,7 +274,7 @@ class GraftLakeBranchSpec extends SparkSpec {
   test("fast-forward advances the fork point: stage, publish, keep " +
       "staging, publish again") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_ff_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_ff")
     VersionedTable.commit(spark, Seq(1).toDF("k"), dir,
       carryForward = false)                                  // v0 main
     VersionedTable.commit(spark, Seq(2).toDF("k"), dir,
@@ -307,8 +294,8 @@ class GraftLakeBranchSpec extends SparkSpec {
   test("change feed composes with branch scope: row-level +/- deltas " +
       "of the staged line only") {
     import spark.implicits._
-    val dir = s"/tmp/graft_branch_cf_${java.util.UUID.randomUUID()}"
-    val ckpt = s"/tmp/graft_branch_cfk_${java.util.UUID.randomUUID()}"
+    val dir = freshDir("branch_cf")
+    val ckpt = freshDir("branch_cfk")
     VersionedTable.commit(spark, Seq(1).toDF("k"), dir,
       carryForward = false)                                   // v0 main
     VersionedTable.commit(spark, Seq(10).toDF("k"), dir,

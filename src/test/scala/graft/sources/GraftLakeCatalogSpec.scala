@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
@@ -14,22 +12,12 @@ import graft.SparkSpec
   * full parquet pushdown stack on catalog reads. */
 class GraftLakeCatalogSpec extends SparkSpec {
 
-  private val n = new AtomicInteger(0)
-
   /** Fresh catalog per test: catalog instances cache their root at
     * initialize and CatalogManager caches instances by name, so each
     * test gets a unique name -> unique root. */
-  private def freshCatalog(): String = {
-    val cat = s"glc_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_spec_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    cat
-  }
 
   test("create + insert + overwrite + version-as-of round trip") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     // v0 is the empty created snapshot
     assert(spark.sql(s"SELECT * FROM $cat.t").count() === 0)
@@ -54,7 +42,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("CTAS creates and populates through the catalog") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.range(5).createOrReplaceTempView("glc_ctas_src")
     spark.sql(
       s"CREATE TABLE $cat.c AS SELECT id, id * 2 AS dbl FROM glc_ctas_src")
@@ -64,8 +52,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("timestamp-as-of resolves the newest version published at-or-before") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")                // v0
     spark.sql(s"INSERT INTO $cat.t VALUES (1)")              // v1
     spark.sql(s"INSERT INTO $cat.t VALUES (2)")              // v2
@@ -87,7 +74,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("writes to a time-travel snapshot are rejected") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1)")
     val catalog = spark.sessionState.catalogManager.catalog(cat)
@@ -101,7 +88,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("catalog reads push filters and prune columns like any V2 parquet scan") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING, w STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a','x'), (2,'b','y')")
     val df = spark.sql(s"SELECT v FROM $cat.t WHERE k = 2")
@@ -115,7 +102,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
 
   test("aggregate pushdown reaches the catalog scan — stats-answered " +
       "from the manifest, parquet footer pushdown as fallback") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1), (2), (3)")
     // the manifest-stats path intercepts ahead of parquet's own
@@ -137,7 +124,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
 
   test("commit history records operation labels (DESCRIBE HISTORY " +
       "shape) across every publish path") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.h (k INT) " +
       "TBLPROPERTIES('graft.delete.mode'='merge-on-read')")
     spark.sql(s"INSERT INTO $cat.h VALUES (1), (2), (3)")
@@ -157,7 +144,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("list/rename/drop table and namespace surfaces") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ns")
     spark.sql(s"CREATE TABLE $cat.ns.t1 (k INT)")
     spark.sql(s"CREATE TABLE $cat.ns.t2 (k INT)")
@@ -181,7 +168,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("partitioning transforms persist; duplicate columns reject loudly") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     // identity/bucket transforms are supported, multi-level included
     // (GraftLakeSpjSpec covers behavior)
     spark.sql(s"CREATE TABLE $cat.p (k INT, d STRING) " +
@@ -198,7 +185,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("DELETE FROM removes matches, keeps NULL-condition rows, old snapshots intact") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b'), " +
       "(NULL,'n'), (5,'e')")                                   // v1
@@ -216,8 +203,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("DELETE is copy-on-write: untouched files carry forward by reference") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(0, 10)")    // v1
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(100, 110)") // v2
@@ -248,7 +234,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("TRUNCATE TABLE empties via schema-preserving commit; history serves") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b')") // v1
     spark.sql(s"TRUNCATE TABLE $cat.t")                      // v2
@@ -260,7 +246,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("untranslatable DELETE condition rides the row-level rewrite") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'bb'), (3,'ccc')")
     // length(v) has no V1 filter form -> canDeleteWhere false -> Spark
@@ -273,7 +259,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("UPDATE rewrites matches in place, old snapshots intact") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b'), (3,'c')")
     spark.sql(s"UPDATE $cat.t SET v = concat(v, '!') WHERE k >= 2")
@@ -284,8 +270,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("UPDATE is copy-on-write: files without matches carry forward by reference") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(0, 10)")    // v1
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(100, 110)") // v2
@@ -302,8 +287,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("MERGE INTO: matched update + not-matched insert, one commit") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b')") // v1
     import spark.implicits._
@@ -325,7 +309,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("MERGE with DELETE clause and NOT MATCHED BY SOURCE") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b'), (9,'z')")
     import spark.implicits._
@@ -344,8 +328,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("CDC upsert shape: gated MERGE is latest-wins, per-batch versioned, replay-idempotent") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.state (k BIGINT, ts BIGINT, v STRING)")
     def mergeBatch(rows: String): Unit = {
       spark.sql(s"SELECT * FROM VALUES $rows AS t(k, ts, v)")
@@ -378,7 +361,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("versions metadata table reports exact footer counts per snapshot") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")                    // v0
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(0, 7)")  // v1
     spark.sql(s"INSERT INTO $cat.t SELECT id FROM range(10, 15)") // v2
@@ -403,8 +386,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("bounded MERGE carries forward files outside the key range by reference") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT)")
     spark.sql(s"INSERT INTO $cat.t SELECT id, 0L FROM range(0, 10)")    // v1
     spark.sql(s"INSERT INTO $cat.t SELECT id, 0L FROM range(100, 110)") // v2
@@ -434,7 +416,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("ALTER TABLE ADD COLUMN widens additively; other alters reject") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1), (2)")        // v1
     spark.sql(s"ALTER TABLE $cat.t ADD COLUMN extra STRING") // v2
@@ -464,7 +446,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("catalog function morton2 resolves via FunctionCatalog, magic == row path == zValue") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     // resolves as <cat>.morton2 (catalog + empty namespace)
     val viaSql = spark.sql(
       s"SELECT $cat.morton2(id, id + 3) AS z FROM range(0, 100)")
@@ -494,10 +476,9 @@ class GraftLakeCatalogSpec extends SparkSpec {
   }
 
   test("schema widens across commits and old snapshots keep their shape") {
-    val cat = freshCatalog()
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1)") // v1
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
     // widen via the facade (catalog INSERT checks the declared schema);
     // the catalog's mergeSchema read must surface the evolved column
     import spark.implicits._
@@ -514,7 +495,7 @@ class GraftLakeCatalogSpec extends SparkSpec {
 
   test("ALTER TABLE SET/UNSET TBLPROPERTIES declares clustering on an " +
       "existing table; non-graft keys reject") {
-    val cat = freshCatalog()
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT)")
     spark.sql(s"INSERT INTO $cat.t SELECT id * 2, id FROM range(400)")
     spark.sql(s"INSERT INTO $cat.t SELECT id * 2 + 1, id FROM range(400)")
@@ -527,7 +508,6 @@ class GraftLakeCatalogSpec extends SparkSpec {
     // per-file key ranges from the manifest stats
     spark.sql(s"CALL $cat.system.compact(table => 't', " +
       "target_files => 3)")
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
     val dir = s"$root/t"
     val v = VersionedTable.latestVersion(spark, dir).get
     val snap = VersionedTable.snapshotOf(spark, dir, v)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -12,17 +10,6 @@ import graft.SparkSpec
   * DISJOINT key ranges by construction and stats-based group pruning /
   * bounded merges prune maximally. */
 class GraftLakeClusteringSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glcl_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_cluster_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   /** Per-file (min, max) of `column` straight from the MANIFEST stats
     * of the latest snapshot, restricted to `files` (default: all). */

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** COLUMN MAPPING ([[LakeColumnMapping]]): RENAME/DROP COLUMN without
@@ -11,17 +9,6 @@ import graft.SparkSpec
   * names and the mixed-naming rewrite paths refused until compaction
   * re-earns identity naming. */
 class GraftLakeColumnMappingSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glcm_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_cmap_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("RENAME COLUMN: zero data IO, reads/inserts/pushdown under the new name") {
     val (cat, root) = freshCatalog()
@@ -197,7 +184,7 @@ class GraftLakeColumnMappingSpec extends SparkSpec {
     val streamed = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.readStream(spark, s"$root/w")
         .groupBy().agg(org.apache.spark.sql.functions.sum("k").as("s")),
-      s"glw_${java.util.UUID.randomUUID().toString.take(8)}", "complete")
+      scratch().name("glw"), "complete")
     assert(streamed.collect()(0).getLong(0) == 5000000003L)
     // compact rewrites everything wide and drops the override
     VersionedTable.compact(spark, s"$root/w", 1)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** DEFAULT column values ([[LakeDefaults]] — the third metadata-only
@@ -10,17 +8,6 @@ import graft.SparkSpec
   * files backfill at read, INSERTs that omit the column write it,
   * time travel below the add serves absence. */
 class GraftLakeDefaultsSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_def_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_def_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("ADD COLUMN DEFAULT is property-only; old rows backfill, new rows write") {
     val (cat, root) = freshCatalog()

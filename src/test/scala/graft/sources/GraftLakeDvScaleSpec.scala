@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,20 +12,6 @@ import graft.SparkSpec
   * `convert_deletes` maintenance that folds equality deletes into
   * positional masks without rewriting a single data file. */
 class GraftLakeDvScaleSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_dvs_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_dvs_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
-  private def freshDir(): String =
-    s"/tmp/graft_dvs_${java.util.UUID.randomUUID()}"
 
   private def javaSerializedSize(o: AnyRef): Int = {
     val bos = new java.io.ByteArrayOutputStream()

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** Merge-on-read positional deletes (deletion vectors): zero-rewrite
@@ -10,20 +8,6 @@ import graft.SparkSpec
   * as the materialize step, and loud refusal of every operation that
   * would resurrect masked rows. */
 class GraftLakeDvSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): String = {
-    val cat = s"glc_dv_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_dv_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    cat
-  }
-
-  private def freshDir(): String =
-    s"/tmp/graft_dv_facade_${java.util.UUID.randomUUID()}"
 
   test("facade MoR delete masks rows with zero data rewrite; deletes union") {
     import spark.implicits._
@@ -72,8 +56,7 @@ class GraftLakeDvSpec extends SparkSpec {
   }
 
   test("catalog merge-on-read mode: SQL DELETE writes DVs, reads apply them") {
-    val cat = freshCatalog()
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('graft.delete.mode'='merge-on-read')")
     spark.sql(s"INSERT INTO $cat.t SELECT id, concat('r', id) " +
@@ -131,7 +114,7 @@ class GraftLakeDvSpec extends SparkSpec {
     val dir = freshDir()
     VersionedTable.commit(spark, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
       dir)                                                       // v0
-    val name = s"glc_stream_${java.util.UUID.randomUUID().toString.take(8)}"
+    val name = scratch().name("glc_stream")
     val q = VersionedTable.readStream(spark, dir)
       .groupBy($"k").agg(org.apache.spark.sql.functions.sum($"v").as("s"))
       .writeStream.format("memory").queryName(name)
@@ -160,7 +143,7 @@ class GraftLakeDvSpec extends SparkSpec {
     } finally q.stop()
     // a FRESH stream on the DV table starts from the pinned snapshot
     // with masks APPLIED — deleted rows never enter the stream
-    val name2 = s"glc_stream_${java.util.UUID.randomUUID().toString.take(8)}"
+    val name2 = scratch().name("glc_stream")
     val q2 = VersionedTable.readStream(spark, dir)
       .writeStream.format("memory").queryName(name2)
       .outputMode("append").start()
@@ -199,7 +182,7 @@ class GraftLakeDvSpec extends SparkSpec {
   }
 
   test("SHOW TBLPROPERTIES surfaces the persisted delete mode") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT) " +
       "TBLPROPERTIES ('graft.delete.mode'='merge-on-read')")
     val props = spark.sql(s"SHOW TBLPROPERTIES $cat.t").collect()
@@ -251,7 +234,7 @@ class GraftLakeDvSpec extends SparkSpec {
   test("masked reads prune files STATICALLY from manifest min/max — " +
       "a range predicate drops the out-of-range commit's files " +
       "before any task launches") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES('graft.delete.mode'='merge-on-read')")
     // two commits with DISJOINT key ranges
@@ -275,7 +258,7 @@ class GraftLakeDvSpec extends SparkSpec {
   }
 
   test("manifest blooms prune point lookups under masks too") {
-    val cat = freshCatalog()
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES('graft.delete.mode'='merge-on-read', " +
       "'graft.bloom.columns'='k')")
@@ -317,11 +300,10 @@ class GraftLakeDvSpec extends SparkSpec {
   }
 
   test("CDC spec shape still works on a copy-on-write table (mode default)") {
-    val cat = freshCatalog()
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
     spark.sql(s"INSERT INTO $cat.t VALUES (1), (2)")
     spark.sql(s"DELETE FROM $cat.t WHERE k = 1")
-    val root = spark.conf.get(s"spark.sql.catalog.$cat.root")
     // default mode: the delete was COW — no delete files in the snapshot
     val s = VersionedTable.snapshotOf(spark, s"$root/t", 2)
     assert(s.deleteFiles.isEmpty)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,20 +12,6 @@ import graft.SparkSpec
   * upsert shape: positional deletes must READ matching files to
   * locate row positions; equality deletes never open them. */
 class GraftLakeEqDeleteSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_eq_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_eq_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
-  private def freshDir(): String =
-    s"/tmp/graft_eq_facade_${java.util.UUID.randomUUID()}"
 
   test("deleteByKeys masks by key with zero data rewrite; facade + catalog reads agree") {
     import spark.implicits._
@@ -130,7 +114,7 @@ class GraftLakeEqDeleteSpec extends SparkSpec {
     val drained = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.readStream(spark, dir)
         .groupBy().agg(count(lit(1)).as("n"), sum("v").as("s")),
-      s"eq_origin_${n.incrementAndGet()}", "complete").collect()(0)
+      scratch().name("eq_origin"), "complete").collect()(0)
     assert(drained.getLong(0) === 20L)
     assert(drained.getLong(1) ===
       (0 until 20).map(_ * 10L).sum - 50L - 190L + 555L + 999L)
@@ -138,7 +122,7 @@ class GraftLakeEqDeleteSpec extends SparkSpec {
     // (the superseded rows, resolved from keys to rows) + inserts
     val feed = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, dir),
-      s"eq_cdf_${n.incrementAndGet()}", "append")
+      scratch().name("eq_cdf"), "append")
     val v1 = feed.filter(col("_commit_version") === 1)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
@@ -166,7 +150,7 @@ class GraftLakeEqDeleteSpec extends SparkSpec {
       Seq((2L, 2222L), (4L, 40L)).toDF("k", "v"), Seq("k"))
     val feed = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, s"$root/u"),
-      s"eq_upd_${n.incrementAndGet()}", "append")
+      scratch().name("eq_upd"), "append")
     val vUp = feed.filter(col("_commit_version") === 2)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),

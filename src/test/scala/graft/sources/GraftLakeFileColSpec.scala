@@ -7,15 +7,6 @@ import graft.SparkSpec
   * filter pushdown preserved; refused on DV-masked snapshots. */
 class GraftLakeFileColSpec extends SparkSpec {
 
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glfc_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = s"/tmp/graft_fc_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
   test("_file groups rows by their manifest data file exactly") {
     val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")

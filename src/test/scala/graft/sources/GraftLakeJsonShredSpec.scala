@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** Shredded-JSON storage ([[LakeJsonShred]]): declared paths parse
@@ -10,17 +8,6 @@ import graft.SparkSpec
   * the rewrite is gated on every file carrying the columns and
   * answers never depend on the gate. */
 class GraftLakeJsonShredSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_shred_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_shred_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   private def readSchemaOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString.linesIterator

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** Manifest NDV sketches → CBO column statistics
@@ -10,17 +8,6 @@ import graft.SparkSpec
   * reported distinct counts, and the planner's join decisions follow
   * the real cardinality. */
 class GraftLakeNdvSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_ndv_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_ndv_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("per-file sketches merge to exact NDVs at plan time (zero data IO)") {
     val (cat, root) = freshCatalog()
@@ -49,7 +36,7 @@ class GraftLakeNdvSpec extends SparkSpec {
     val (cat, _) = freshCatalog()
     // fact side: plain parquet, too big to broadcast under the test
     // threshold
-    val factDir = s"/tmp/graft_ndv_fact_${java.util.UUID.randomUUID()}"
+    val factDir = freshDir("ndv_fact")
     spark.range(0, 20000).selectExpr("id", "id % 5 AS grp")
       .write.parquet(factDir)
     // two identical lake tables: one declares NDV, the control not
@@ -96,7 +83,7 @@ class GraftLakeNdvSpec extends SparkSpec {
       "range filter flips the join to broadcast where the stats-less " +
       "control stays on the shuffle") {
     val (cat, _) = freshCatalog()
-    val factDir = s"/tmp/graft_mm_fact_${java.util.UUID.randomUUID()}"
+    val factDir = freshDir("mm_fact")
     spark.range(0, 20000).selectExpr("id", "id % 10000 AS k")
       .write.parquet(factDir)
     spark.sql(s"CREATE TABLE $cat.dim (k BIGINT, payload STRING) " +
@@ -141,7 +128,7 @@ class GraftLakeNdvSpec extends SparkSpec {
       "histogram table flips to broadcast where min/max interpolation " +
       "(uniformity assumption) keeps the control on the shuffle") {
     val (cat, _) = freshCatalog()
-    val factDir = s"/tmp/graft_h_fact_${java.util.UUID.randomUUID()}"
+    val factDir = freshDir("h_fact")
     spark.range(0, 20000).selectExpr("id", "id % 10000 AS k")
       .write.parquet(factDir)
     // skew: 99% of rows in [0, 99], 1% spread over [5000, 9900] — a

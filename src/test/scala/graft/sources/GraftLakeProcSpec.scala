@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
@@ -10,17 +8,6 @@ import graft.SparkSpec
   * first-class analyzer-resolved statements (Spark 4 ProcedureCatalog),
   * replaying the facade lifecycle through plain SQL. */
 class GraftLakeProcSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glproc_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_proc_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("CALL system.compact rewrites to target_files and bumps the version") {
     val (cat, root) = freshCatalog()

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,17 +10,6 @@ import graft.SparkSpec
   * clean files, MATERIALIZED through compaction and row-level
   * rewrites so ids are stable across the table's own maintenance. */
 class GraftLakeRowLineageSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_lin_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_lin_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   private def linTable(cat: String, extraProps: String = ""): Unit =
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
@@ -105,10 +92,11 @@ class GraftLakeRowLineageSpec extends SparkSpec {
     linTable(cat)
     spark.sql(s"INSERT INTO $cat.t SELECT id, id * 10 FROM range(0, 6)")
     val before = idsByKey(cat)
+    val src = scratch().name("lin_merge_src")
     spark.sql(s"SELECT * FROM VALUES (4L, 444L), (100L, 1000L) " +
-      "AS s(k, v)").createOrReplaceTempView(s"lin_merge_src_${n.get()}")
+      "AS s(k, v)").createOrReplaceTempView(src)
     spark.sql(
-      s"""MERGE INTO $cat.t AS t USING lin_merge_src_${n.get()} AS s
+      s"""MERGE INTO $cat.t AS t USING $src AS s
          |ON t.k = s.k
          |WHEN MATCHED THEN UPDATE SET v = s.v
          |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)

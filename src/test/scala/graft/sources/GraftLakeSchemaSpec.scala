@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** SCHEMA IN THE MANIFEST ([[LakeSchema]]): every data-landing commit
@@ -10,19 +8,6 @@ import graft.SparkSpec
   * streaming source) serve it with ZERO footer IO — the
   * Iceberg/Delta "schema is metadata" discipline. */
 class GraftLakeSchemaSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(root: String = ""): (String, String) = {
-    val cat = s"glc_sch_${n.incrementAndGet()}"
-    val r =
-      if (root.nonEmpty) root
-      else s"/tmp/graft_lake_sch_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", r)
-    (cat, r)
-  }
 
   private def headMeta(dir: String): Map[String, String] = {
     val v = VersionedTable.latestVersion(spark, dir).get
@@ -53,8 +38,10 @@ class GraftLakeSchemaSpec extends SparkSpec {
       f -> java.nio.file.Files.readAllBytes(f.toPath))
     try {
       files.foreach(f => new java.io.FileOutputStream(f).close())
-      // a FRESH catalog alias (same root) defeats relation caching
-      val (cat2, _) = freshCatalog(root)
+      // a FRESH catalog alias (same root) defeats relation caching:
+      // a scratch catalog repointed at `root` before its first use
+      val (cat2, _) = freshCatalog()
+      spark.conf.set(s"spark.sql.catalog.$cat2.root", root)
       val sch = spark.table(s"$cat2.t").schema
       assert(sch.fieldNames.toSeq === Seq("k", "v"),
         s"schema must serve from the manifest, got $sch")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,17 +12,6 @@ import graft.SparkSpec
   * declares its key, and `EnsureRequirements` matches the layouts
   * instead of exchanging 100 TB twice. */
 class GraftLakeSpjSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glspj_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_spj_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   /** Run `body` with storage-partitioned joins enabled and broadcast
     * joins disabled (tiny test tables would otherwise broadcast and
@@ -451,7 +438,7 @@ class GraftLakeSpjSpec extends SparkSpec {
   }
 
   test(".partitions metadata table reports per-value layout incl. unrouted debt") {
-    val (cat, _) = freshCatalog()
+    val (cat, root) = freshCatalog()
     import spark.implicits._
     spark.sql(s"CREATE TABLE $cat.pm (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(4, k))")
@@ -466,8 +453,7 @@ class GraftLakeSpjSpec extends SparkSpec {
     assert(rows.forall(r => r.getInt(2) >= 1 && r.getLong(4) > 0L))
     // a foreign non-routing writer (every graft path routes now)
     // shows up as the NULL (layout-debt) row
-    val dir = s"/tmp" // placeholder, replaced below
-    val tdir = spark.conf.get(s"spark.sql.catalog.$cat.root") + "/pm"
+    val tdir = s"$root/pm"
     val stray = s"$tdir/files-vX-foreign"
     (900L to 901L).toDF("k").withColumn("v", col("k"))
       .coalesce(1).write.parquet(stray)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -20,20 +18,6 @@ import graft.SparkSpec
   * rejection, proper NonEmptyNamespaceException, and reserved-name
   * isolation in the MoR delete path. */
 class GraftLakeStatsSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"glc_stats_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_stats_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
-
-  private def freshDir(): String =
-    s"/tmp/graft_stats_facade_${java.util.UUID.randomUUID()}"
 
   test("commit embeds per-file stats; carry-forward keeps them by reference") {
     import spark.implicits._

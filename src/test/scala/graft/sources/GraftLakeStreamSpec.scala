@@ -11,12 +11,9 @@ import graft.SparkSpec
   * incremental delivery. */
 class GraftLakeStreamSpec extends SparkSpec {
 
-  private def freshDir(): String =
-    s"/tmp/graft_lakestream_${java.util.UUID.randomUUID()}"
-
   private def drain(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val name = s"gls_${java.util.UUID.randomUUID().toString.take(8)}"
+    val name = scratch().name("gls")
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -74,11 +71,7 @@ class GraftLakeStreamSpec extends SparkSpec {
 
   test("cdc key: change feed pairs rewrite legs into update pre/post images") {
     import spark.implicits._
-    val cat = s"glsu_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = freshDir()
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, grp STRING, v BIGINT) " +
       "PARTITIONED BY (grp) " +
       "TBLPROPERTIES('graft.cdc.key'='k')")
@@ -120,11 +113,7 @@ class GraftLakeStreamSpec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(folded === actual, s"incremental fold $folded != $actual")
     // without the property the same history stays insert/delete
-    val cat2 = s"glsu2_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root2 = freshDir()
-    spark.conf.set(s"spark.sql.catalog.$cat2",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat2.root", root2)
+    val (cat2, root2) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat2.t (k BIGINT, grp STRING, v BIGINT) " +
       "PARTITIONED BY (grp)")
     spark.sql(s"INSERT INTO $cat2.t SELECT * FROM glsu_src")
@@ -173,11 +162,7 @@ class GraftLakeStreamSpec extends SparkSpec {
   test("native streaming sink: writeStream.toTable commits one version " +
       "per epoch; batch SQL and time travel read the streamed table") {
     import spark.implicits._
-    val cat = s"glsink_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = s"/tmp/graft_lakesink_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT)")
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Long)](
@@ -209,11 +194,7 @@ class GraftLakeStreamSpec extends SparkSpec {
 
   test("epoch replay publishes no duplicate version and no duplicate rows") {
     import org.apache.spark.sql.catalyst.InternalRow
-    val cat = s"glsink_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = s"/tmp/graft_lakesink_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
     val dir = s"$root/t"
     val rowSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -259,11 +240,7 @@ class GraftLakeStreamSpec extends SparkSpec {
   test("streaming into a clustered table range-shuffles each epoch " +
       "(RequiresDistributionAndOrdering on the streaming write)") {
     import spark.implicits._
-    val cat = s"glsink_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = s"/tmp/graft_lakesink_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT) " +
       "TBLPROPERTIES('graft.write.ordered-by'='k')")
     val ms = org.apache.spark.sql.execution.streaming.runtime
@@ -303,11 +280,7 @@ class GraftLakeStreamSpec extends SparkSpec {
   test("end-to-end pipe: stream INTO the table (native sink), change " +
       "feed OUT — the drained feed folds back to the table's state") {
     import spark.implicits._
-    val cat = s"glpipe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val root = s"/tmp/graft_lakepipe_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long](
@@ -339,7 +312,7 @@ class GraftLakeStreamSpec extends SparkSpec {
     import spark.implicits._
     val dir = freshDir()
     VersionedTable.commit(spark, Seq((1L, 1L)).toDF("k", "v"), dir)
-    val name = s"gls_inc_${java.util.UUID.randomUUID().toString.take(8)}"
+    val name = scratch().name("gls_inc")
     val q = VersionedTable.readStream(spark, dir)
       .groupBy(col("k")).agg(sum(col("v")).as("s"))
       .writeStream.format("memory").queryName(name)

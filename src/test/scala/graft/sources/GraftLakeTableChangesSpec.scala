@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -10,11 +8,6 @@ import graft.SparkSpec
   * `table_changes(from, to)`): per-version commit-log deltas as one
   * batch DataFrame, inclusive range bounds, stream-equal semantics. */
 class GraftLakeTableChangesSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshDir(): String =
-    s"/tmp/graft_tc_${java.util.UUID.randomUUID()}"
 
   test("inclusive range bounds slice the feed by commit") {
     import spark.implicits._
@@ -71,11 +64,7 @@ class GraftLakeTableChangesSpec extends SparkSpec {
 
   test("lineage feed: change rows carry _row_id; update pre/post " +
       "images pair on the SAME id (Iceberg v3 changelog shape)") {
-    val cat = s"glc_tcl_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_tcl_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('graft.row.lineage'='true', 'graft.cdc.key'='k')")
     spark.sql(s"INSERT INTO $cat.t VALUES (1, 10), (2, 20), (3, 30)")
@@ -113,11 +102,7 @@ class GraftLakeTableChangesSpec extends SparkSpec {
   test("lineage feed: fold-back by _row_id reconstructs the live " +
       "table, and the drained stream matches the batch feed") {
     import spark.implicits._
-    val cat = s"glc_tcf_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_tcf_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('graft.row.lineage'='true', 'graft.cdc.key'='k')")
     spark.sql(s"INSERT INTO $cat.t SELECT id, id * 10 FROM range(0, 12)")
@@ -145,7 +130,7 @@ class GraftLakeTableChangesSpec extends SparkSpec {
     // drained stream carries the SAME lineage columns and rows
     val streamed = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, s"$root/t"),
-      s"tc_lin_${n.incrementAndGet()}", "append")
+      scratch().name("tc_lin"), "append")
       .select(batch.columns.map(col): _*)
     assert(batch.exceptAll(streamed).isEmpty &&
       streamed.exceptAll(batch).isEmpty,
@@ -163,7 +148,7 @@ class GraftLakeTableChangesSpec extends SparkSpec {
     val batch = VersionedTable.tableChanges(spark, dir, 0)
     val streamed = graft.streaming.StreamOps.runToMemory(spark,
       VersionedTable.changeFeedStream(spark, dir),
-      s"tc_eq_${n.incrementAndGet()}", "append")
+      scratch().name("tc_eq"), "append")
       .select(batch.columns.map(col): _*)
     assert(batch.exceptAll(streamed).isEmpty &&
       streamed.exceptAll(batch).isEmpty,

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 
 /** Tags: named immutable snapshot refs (Iceberg's tags) — addressable
@@ -9,17 +7,6 @@ import graft.SparkSpec
   * vacuum, SQL lifecycle via `CALL system.create_tag/drop_tag`, and
   * the `.refs` metadata table. */
 class GraftLakeTagSpec extends SparkSpec {
-
-  private val n = new AtomicInteger(0)
-
-  private def freshCatalog(): (String, String) = {
-    val cat = s"gltag_test_${n.incrementAndGet()}"
-    val root = s"/tmp/graft_lake_tag_${java.util.UUID.randomUUID()}"
-    spark.conf.set(s"spark.sql.catalog.$cat",
-      classOf[GraftLakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    (cat, root)
-  }
 
   test("create_tag + VERSION AS OF '<tag>' + refs metadata table") {
     val (cat, _) = freshCatalog()

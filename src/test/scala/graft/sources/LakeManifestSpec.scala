@@ -12,9 +12,6 @@ import graft.SparkSpec
   * references. */
 class LakeManifestSpec extends SparkSpec {
 
-  private def freshDir(): String =
-    s"/tmp/graft_manifest_${java.util.UUID.randomUUID()}"
-
   private def hfs(dir: String) =
     org.apache.hadoop.fs.FileSystem.get(new Path(dir).toUri,
       spark.sparkContext.hadoopConfiguration)

@@ -219,10 +219,8 @@ class StreamOpsSpec extends SparkSpec {
 
   test("streaming ingest is exactly-once: batch replay overwrites " +
       "instead of double-appending, content matches the batch read") {
-    val uri = java.nio.file.Files
-      .createTempDirectory("graft_ingest").toString + "/staged"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ingest_ckpt").toString
+    val uri = freshDir("staged")
+    val ckpt = freshDir("ckpt")
     val stream = StreamOps.readEvents(spark, sf)
     val q = StreamOps.ingestPlanes(stream, uri, ckpt)
     try q.processAllAvailable() finally q.stop()
@@ -253,12 +251,9 @@ class StreamOpsSpec extends SparkSpec {
       "after a stop/start cycle are suppressed by the RECOVERED state, " +
       "new keys still pass") {
     import spark.implicits._
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_src").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_state").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_out").toString + "/rows"
+    val src = freshDir("src")
+    val ckpt = freshDir("ckpt")
+    val out = freshDir("rows")
     val t0 = new java.sql.Timestamp(1700000000000L)
     Seq((1L, t0), (2L, t0), (3L, t0)).toDF("k", "ts_utc")
       .coalesce(1).write.mode("append").parquet(src)
@@ -292,8 +287,7 @@ class StreamOpsSpec extends SparkSpec {
     // the watermark past batch 2's late row — the engine must drop it
     // AND account for it (silent late-data loss is the #1 streaming
     // correctness incident; the metric is the only way to see it)
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_wm_src").toString
+    val src = freshDir("src")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     Seq((1L, ts(1000)), (1L, ts(2000))).toDF("user_id", "ts_utc")
       .coalesce(1).write.mode("append").parquet(src)

@@ -14,16 +14,13 @@ import graft.core.NDArray
   * without a shuffle or a driver funnel. */
 class ZarrScaleGeometrySpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory("graft-zscale").toString + "/" + name
-
   test("2048x3072 plane, chunk=(256,256), shardInner=(64,64): 96 shard " +
       "objects, exact round-trip, no Exchange beyond the explode") {
     val (h, w) = (2048, 3072)
     // value = y*w + x: unique per pixel, exact in a double
     val arr = NDArray.tabulate(Seq(h, w))(idx => idx(0) * w * 1.0 + idx(1))
     val img = BioSpark.fromArray(spark, arr)
-    val uri = tmp("big.ome.zarr")
+    val uri = freshDir("big.ome.zarr")
 
     // plan audit FIRST (same geometry the write runs): the re-tile is a
     // Generate (explode over the chunk grid) fed by projections — any

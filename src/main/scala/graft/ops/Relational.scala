@@ -4470,10 +4470,13 @@ object Relational {
     * the copy-on-write DML tier (GraftLakeTable.deleteWhere →
     * VersionedTable.deleteWhere): the delete condition crosses Spark's
     * V2 Predicate surface, translates to a Column, and executes as the
-    * two-phase COW commit — phase 1 finds TOUCHED files with the
-    * predicate pushed to parquet footers and returns only (file, n)
-    * rows; phase 2 rewrites survivors of touched files only, while
-    * every untouched file carries forward by reference (byte-identical
+    * two-phase COW commit over the snapshot's catalog relation —
+    * phase 1 counts matches per `_file` after manifest stats have
+    * dropped the files that cannot match (the predicate still pushed
+    * to parquet in the rest) and returns only (file, n) rows; phase 2
+    * rewrites survivors of touched files only (`_file IN touched`
+    * prunes the scan to them), while every untouched file carries
+    * forward by reference (byte-identical
     * manifest path — spec-pinned in GraftLakeCatalogSpec). At 100 TB a
     * selective delete costs two scans of the touched sliver plus a
     * manifest write, never a table rewrite. The emitted fingerprints

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -226,8 +224,8 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     * lakehouse-safe subset: each added column is appended by
     * publishing a carry-forward commit whose delta is one
     * schema-bearing EMPTY parquet file, so the widened schema
-    * surfaces through the same mergeSchema reads that already serve
-    * implicit widening ([[VersionedTable.read]]), prior data is
+    * surfaces through the manifest-recorded schema every read serves
+    * ([[LakeSchema]]), prior data is
     * untouched (new column reads NULL over old files), and prior
     * snapshots keep their exact shape under `VERSION AS OF`. Rename/
     * drop/retype are rejected: they would re-interpret bytes already
@@ -464,8 +462,7 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     // reads) — their rename/drop is pure meta re-keying below
     val rawFields: Set[String] =
       if (snap.dataFiles.isEmpty) Set.empty
-      else spark.read.option("mergeSchema", "true")
-        .parquet(snap.dataFiles: _*).schema.fieldNames
+      else LakeSchema.physicalSchema(spark, snap).fieldNames
         .map(_.toLowerCase).toSet
     val metaOnlyDefaults: Set[String] =
       LakeDefaults.fromMeta(snap.meta).map(_._1).filter { nm =>
@@ -747,53 +744,37 @@ final class GraftLakeTable(ident: Identifier, dir: String,
 
   private def spark: SparkSession = SparkSession.active
 
-  /** `_file` METADATA COLUMN (Iceberg's `_file`): the data file
-    * serving each row — per-row lineage for layout debugging
-    * (`SELECT _file, count(*) ... GROUP BY _file`) and targeted
-    * maintenance, resolved only when referenced. Absent on snapshots
-    * with outstanding merge-on-read masks: the DV scan re-plans rows
-    * positionally and a wrong-but-plausible path would be worse than
-    * a loud unresolved-column error — compact first. */
+  /** METADATA COLUMNS, resolved only when referenced, on every
+    * snapshot — clean or carrying merge-on-read masks:
+    *  - `_file` (Iceberg's `_file`): the manifest path of the data file
+    *    serving each row — per-row lineage for layout debugging
+    *    (`SELECT _file, count(*) ... GROUP BY _file`) and targeted
+    *    maintenance; the copy-on-write delete finds and rewrites its
+    *    touched files through it.
+    *  - `_pos` (Iceberg's `_pos`): the row's 0-based physical position
+    *    in that file, counting masked rows — what the positional
+    *    delete files record, served by the positioned reader
+    *    ([[GraftLakeDvScan]]).
+    *  - row lineage (`_row_id`, `_last_updated_version`) on enabled
+    *    tables: `_row_id` keeps Spark's PRESERVE_ON_UPDATE default
+    *    (true), so an UPDATE carries it into the replacement row;
+    *    `_last_updated_version` declares preserve_on_update = false,
+    *    so Spark's rewrite NULLIFIES it for updated rows and the read
+    *    serves the replacement file's birth = the update's own commit
+    *    version. MERGE reinserts nullify both → fresh identity.
+    *  - the shredded-JSON columns, so the rewrite can reference them
+    *    while `SELECT *` stays clean.
+    * A DATA column named `_file` or `_pos` shadows the metadata
+    * column of that name. */
   override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (snapshot.deleteFiles.nonEmpty ||
-        schema().fieldNames.exists(_.equalsIgnoreCase("_file")))
-      // masked snapshots: `_file` and shredded columns stay absent
-      // (the DV scan re-plans rows positionally), but ROW LINEAGE
-      // serves — the DV reader's position counter is exactly the
-      // physical position the id arithmetic needs, so lineage reads
-      // and lineage-preserving DML work over deletion vectors
-      // (Iceberg v3's DV + row-lineage composition)
-      (if (snapshot.deleteFiles.nonEmpty && lineageOn)
-        GraftLakeTable.lineageMetaCols
-      else Array.empty[
-        org.apache.spark.sql.connector.catalog.MetadataColumn]) ++
-        (if (snapshot.deleteFiles.nonEmpty) shredMetaCols
-         else Array.empty[
-           org.apache.spark.sql.connector.catalog.MetadataColumn])
-    else {
-      val file = new org.apache.spark.sql.connector.catalog.MetadataColumn {
-        override def name(): String = "_file"
-        override def dataType(): org.apache.spark.sql.types.DataType =
-          org.apache.spark.sql.types.StringType
-        override def isNullable: Boolean = false
-        override def comment(): String =
-          "path of the data file serving the row"
-      }
-      // ROW LINEAGE metadata columns ([[LakeRowLineage]]) on enabled
-      // tables. `_row_id` keeps Spark's PRESERVE_ON_UPDATE default
-      // (true): an UPDATE carries it into the replacement row.
-      // `_last_updated_version` declares preserve_on_update = false:
-      // Spark's rewrite NULLIFIES it for updated rows, and the null
-      // materializes → the read serves the replacement file's birth =
-      // the update's own commit version. MERGE reinserts nullify both
-      // (PRESERVE_ON_REINSERT default false) → fresh identity.
-      // shredded-JSON columns serve through the metadata surface so
-      // the rewrite can reference them while SELECT * stays clean
-      if (!lineageOn) Array(file) ++ shredMetaCols
-      else Array[org.apache.spark.sql.connector.catalog.MetadataColumn](
-        file) ++ GraftLakeTable.lineageMetaCols ++ shredMetaCols
-    }
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
+    val data = schema().fieldNames.map(_.toLowerCase).toSet
+    GraftLakeTable.positionMetaCols.filterNot(c => data(c.name)) ++
+      (if (lineageOn) GraftLakeTable.lineageMetaCols
+       else Array.empty[
+         org.apache.spark.sql.connector.catalog.MetadataColumn]) ++
+      shredMetaCols
+  }
 
   /** Shredded-JSON hidden columns as metadata columns
     * ([[LakeJsonShred]]) — declared regardless of masks (the DV scan
@@ -886,9 +867,8 @@ final class GraftLakeTable(ident: Identifier, dir: String,
   /** Resolved once per load: AS-OF pins the version; under a WAP
     * branch the branch head (main if this table has no such branch);
     * the table's HEAD otherwise (branch-staged manifests are not the
-    * table). mergeSchema mirrors [[VersionedTable.read]] —
-    * carry-forward commits may widen the schema and single-footer
-    * sampling would silently drop evolved columns. */
+    * table). [[VersionedTable.read]] pins the version, so a WAP
+    * branch never redirects a facade read. */
   private lazy val snapshot: VersionedTable.Snapshot = {
     val v = version
       .orElse(wapBranch.flatMap(
@@ -898,60 +878,27 @@ final class GraftLakeTable(ident: Identifier, dir: String,
     VersionedTable.snapshotOf(spark, dir, v)
   }
 
-  /** Type-widening overrides for the resolved snapshot —
-    * version-pinned like the column mapping, so time travel below the
-    * widen commit serves the narrow type. */
-  private[sources] lazy val widenOverrides
-      : Map[String, org.apache.spark.sql.types.DataType] =
-    LakeTypeWidening.fromMeta(snapshot.meta)
-
+  /** The snapshot's files under the ONE schema resolver
+    * ([[LakeSchema.physicalSchema]]: the manifest-recorded schema,
+    * widen overrides on top). Materialized lineage columns must stay
+    * readable even when that schema (a fresh append / the recorded
+    * union on an old snapshot) lacks them — the positioned reader
+    * reads them from older rewritten files. */
   private lazy val delegate: ParquetTable = {
-    // materialized lineage columns must stay readable even when the
-    // schema source (a fresh append / the recorded union on an old
-    // snapshot) lacks them — the lineage scan reads them from older
-    // rewritten files
-    def withLineageGuard(sch: StructType): StructType =
+    val phys = LakeSchema.physicalSchema(spark, snapshot)
+    val guarded =
       if (snapshot.stats.valuesIterator.exists(
           _.cols.contains(LakeRowLineage.PhysRowId)) &&
-          !sch.fieldNames.exists(_.equalsIgnoreCase(
+          !phys.fieldNames.exists(_.equalsIgnoreCase(
             LakeRowLineage.PhysRowId)))
-        sch.add(LakeRowLineage.PhysRowId,
+        phys.add(LakeRowLineage.PhysRowId,
             org.apache.spark.sql.types.LongType)
           .add(LakeRowLineage.PhysLastUpd,
             org.apache.spark.sql.types.IntegerType)
-      else sch
-    // MANIFEST-RECORDED schema ([[LakeSchema]]): schema resolution is
-    // one manifest read instead of O(files) footer IO at plan time —
-    // widen overrides apply on top, exactly as over the inference.
-    LakeSchema.fromMeta(snapshot.meta) match {
-      case Some(rec) =>
-        ParquetTable(ident.toString, spark,
-          CaseInsensitiveStringMap.empty(),
-          snapshot.dataFiles,
-          Some(withLineageGuard(
-            LakeTypeWidening.widen(rec, widenOverrides))),
-          classOf[ParquetFileFormat])
-      case None if widenOverrides.isEmpty =>
-        ParquetTable(ident.toString, spark,
-          new CaseInsensitiveStringMap(
-            Map("mergeSchema" -> "true").asJava),
-          snapshot.dataFiles,
-          None, classOf[ParquetFileFormat])
-      case None =>
-        // widened legacy tables carry an EXPLICIT schema: schema
-        // merging would refuse the int/long file mix, while the
-        // parquet readers natively upcast narrow files to the
-        // declared wide type. The base column set comes from the
-        // newest file — every commit writes the full current schema.
-        val newest = snapshot.dataFiles.maxBy(p =>
-          LakePartitioning.fileVersionOfPath(p).getOrElse(-1))
-        val wide = withLineageGuard(LakeTypeWidening.widen(
-          spark.read.parquet(newest).schema, widenOverrides))
-        ParquetTable(ident.toString, spark,
-          CaseInsensitiveStringMap.empty(),
-          snapshot.dataFiles,
-          Some(wide), classOf[ParquetFileFormat])
-    }
+      else phys
+    ParquetTable(ident.toString, spark,
+      CaseInsensitiveStringMap.empty(), snapshot.dataFiles,
+      Some(guarded), classOf[ParquetFileFormat])
   }
 
   override def name(): String = ident.toString
@@ -1300,6 +1247,27 @@ final class GraftLakeTable(ident: Identifier, dir: String,
 }
 
 object GraftLakeTable {
+
+  /** `_file` and `_pos`, the positioned metadata columns. */
+  private[sources] val positionMetaCols
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = "_file"
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.StringType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "path of the data file serving the row"
+      },
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = "_pos"
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.LongType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "0-based position of the row in its data file"
+      })
 
   /** ROW LINEAGE metadata columns, shared by the clean and masked
     * serving paths. `_row_id` keeps PRESERVE_ON_UPDATE (an UPDATE

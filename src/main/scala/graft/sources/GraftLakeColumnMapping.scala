@@ -127,22 +127,6 @@ object LakeColumnMapping {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Read-side projection for FACADE reads ([[VersionedTable.read]]):
-    * select the mapped physical columns under their logical names. */
-  def toLogical(df: DataFrame, m: Mapping): DataFrame =
-    df.select(toLogicalCols(df, m): _*)
-
-  /** The logical projection as columns — callers that must carry
-    * extra (non-mapped) columns through append to these. */
-  def toLogicalCols(df: DataFrame, m: Mapping)
-      : Seq[org.apache.spark.sql.Column] =
-    m.fields.map { case (l, p) =>
-      val actual = df.columns.find(_.equalsIgnoreCase(p)).getOrElse(
-        throw new IllegalStateException(
-          s"mapped physical column '$p' absent from read (logical '$l')"))
-      col(actual).as(l)
-    }.toIndexedSeq
-
   /** Logical pruned schema → physical request for the inner parquet
     * builder (order preserved; `_file` and other non-mapped names
     * pass through untouched). */

@@ -10,26 +10,30 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Catalog scan for a snapshot carrying MERGE-ON-READ delete files
-  * (positional deletion vectors). The V2 parquet stack has no
-  * `_metadata.row_index`, so positions are recovered structurally:
-  * the delegate scan's partitions are RE-PLANNED to exactly one WHOLE
-  * file per partition, and — crucially — no predicate is pushed into
-  * parquet (predicate pushdown is the only thing that makes the
-  * reader skip rows), so each partition yields every row of its file
-  * in file order and a running counter IS the row's position, the
-  * same 0-based file position the delete files record. Each
-  * partition carries only ITS file's positions, as a roaring-style
-  * compressed bitmap ([[PositionBitmap]] — ~2 B/position sparse,
-  * ≤ 8 KiB per 64 Ki rows dense) probed O(1) per row; masks apply
-  * per-partition with zero joins or shuffles — the DV read shape.
-  * Filters the optimizer wanted pushed are simply left for the
-  * post-scan Filter node (rows are masked first, then filtered — the
-  * correct order), and aggregate pushdown is deliberately absent: a
-  * footer-count would count masked rows. Column pruning still
-  * delegates (dropping columns never drops rows). Compact the table
-  * to return to the full pushdown stack — DV chains are a
-  * between-compactions state, not a resting state.
+/** The lake's POSITIONED reader: every read that needs a row's
+  * physical position runs here — snapshots carrying MERGE-ON-READ
+  * delete files (positional deletion vectors, equality deletes), and
+  * clean snapshots whose query asks for `_pos` or the row-lineage
+  * columns (then with an empty mask). The delegate scan's partitions
+  * are RE-PLANNED to exactly one WHOLE file per partition, and no
+  * predicate is pushed into parquet (predicate pushdown is the only
+  * thing that makes the reader skip rows), so each partition yields
+  * every row of its file in file order and a running counter IS the
+  * row's position — the same 0-based file position the delete files
+  * record and V1 `_metadata.row_index` reports. Each partition
+  * carries only ITS file's positions, as a roaring-style compressed
+  * bitmap ([[PositionBitmap]] — ~2 B/position sparse, ≤ 8 KiB per
+  * 64 Ki rows dense) probed O(1) per row; masks apply per-partition
+  * with zero joins or shuffles — the DV read shape. The reader
+  * appends whichever of `_row_id`, `_last_updated_version`, `_file`
+  * and `_pos` the query asks for. Filters the optimizer wanted pushed
+  * are left for the post-scan Filter node (rows are masked first,
+  * then filtered — the correct order); only whole FILES drop, from
+  * the builders' static prunes. Aggregate pushdown
+  * is deliberately absent: a footer-count would count masked rows.
+  * Column pruning still delegates (dropping columns never drops
+  * rows). Compact the table to return to the full pushdown stack —
+  * DV chains are a between-compactions state, not a resting state.
   *
   * EQUALITY deletes ship scale-shaped: key tuples load ONCE on the
   * driver (bounded by `spark.graft.lake.eqDelete.maxKeys` — beyond
@@ -118,26 +122,23 @@ final class GraftLakeDvScanBuilder(table: ParquetTable,
     eqFiles.flatMap(f => spark.read.parquet(f).columns).distinct
 
   private var requested: Option[StructType] = None
-  private var wantsLineage = false
+  private var served = Set.empty[String]
+  private def wantsLineage = GraftLakeDvScan.wantsLineage(served)
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     requested = Some(requiredSchema)
-    // ROW LINEAGE over a DV scan ([[LakeRowLineage]] — Iceberg v3
+    // the metadata columns strip from the inner read and the reader
+    // appends them. ROW LINEAGE ([[LakeRowLineage]] — Iceberg v3
     // serves row lineage over deletion-vector tables): the running
     // position counter this scan already keeps for mask probing IS
     // the physical row position, so `_row_id` = manifest base + pos
     // (materialized physical value wins) composes with masks exactly.
-    // The identity columns strip from the inner read; the PHYSICAL
-    // lineage columns ride along when any file carries them.
-    wantsLineage = lineage.isDefined &&
-      requiredSchema.fieldNames.exists(n =>
-        n.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-          n.equalsIgnoreCase(LakeRowLineage.LastUpdCol))
-    val dataReq =
-      if (!wantsLineage) requiredSchema
-      else StructType(requiredSchema.fields.filterNot(f =>
-        f.name.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-          f.name.equalsIgnoreCase(LakeRowLineage.LastUpdCol)))
+    // The PHYSICAL lineage columns ride along when any file carries
+    // them.
+    served = GraftLakeDvScan.served(requiredSchema, tableSchema,
+      lineage.isDefined)
+    val dataReq = StructType(requiredSchema.fields.filterNot(f =>
+      served(f.name.toLowerCase)))
     val withPhys =
       if (!wantsLineage) dataReq
       else StructType(dataReq.fields ++
@@ -209,13 +210,35 @@ final class GraftLakeDvScanBuilder(table: ParquetTable,
     }
     new GraftLakeDvScan(inner.build(), positions, totalRows,
       eqDeletes,
-      requested.filter(_ => eqFiles.nonEmpty || wantsLineage),
+      requested.filter(_ => eqFiles.nonEmpty || served.nonEmpty),
+      served,
       lineageInfo = if (wantsLineage) lineage else None,
-      statsDrop = statsDropped)
+      dropped = statsDropped)
   }
 }
 
 private[sources] object GraftLakeDvScan {
+  val LineageCols: Seq[String] =
+    Seq(LakeRowLineage.RowIdCol, LakeRowLineage.LastUpdCol)
+
+  /** The metadata columns the positioned reader appends, in the order
+    * it appends them after the inner row. */
+  val MetaCols: Seq[String] = LineageCols ++ Seq("_file", "_pos")
+
+  /** The metadata columns of `req` the positioned reader serves
+    * (lower-case): the lineage columns on lineage tables, `_file` and
+    * `_pos` unless a data column of `dataSchema` shadows them. */
+  def served(req: StructType, dataSchema: StructType,
+      lineageOn: Boolean): Set[String] =
+    req.fieldNames.map(_.toLowerCase).filter {
+      case n @ ("_file" | "_pos") =>
+        !dataSchema.fieldNames.exists(_.equalsIgnoreCase(n))
+      case n => lineageOn && LineageCols.contains(n)
+    }.toSet
+
+  def wantsLineage(served: Set[String]): Boolean =
+    LineageCols.exists(served)
+
   /** Hard cap on equality-delete keys a scan may materialize on the
     * driver (and broadcast). Past it the scan REFUSES with a
     * compact-first error: an equality-delete chain is a
@@ -244,13 +267,19 @@ private[sources] final case class ResolvedEqDeletes(
     types: Array[Array[DataType]],
     keys: Array[java.util.HashSet[UnsafeRow]]) extends Serializable
 
+/** `served` names the metadata columns (lower-case, a subset of
+  * [[GraftLakeDvScan.MetaCols]]) the reader appends after the inner
+  * row; `projectTo` maps the output onto inner ordinals and those.
+  * `dropped` (decoded paths) are whole files the builder's static
+  * prunes removed. */
 final class GraftLakeDvScan(inner: Scan,
     deletes: Map[String, PositionBitmap],
     totalRows: Option[Long] = None,
     eqDeletes: Seq[EqDelete] = Seq.empty,
     projectTo: Option[StructType] = None,
+    served: Set[String] = Set.empty,
     lineageInfo: Option[Map[String, LakeRowLineage.FileLineage]] = None,
-    statsDrop: Set[String] = Set.empty)
+    dropped: Set[String] = Set.empty)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -259,8 +288,10 @@ final class GraftLakeDvScan(inner: Scan,
 
   override def description(): String =
     s"GraftLakeDvScan(masked=${deletes.valuesIterator.map(_.cardinality).sum}" +
-      (if (eqDeletes.isEmpty) ")"
-       else s", eqKeys=${eqDeletes.map(_.keys.size).sum})")
+      (if (eqDeletes.isEmpty) ""
+       else s", eqKeys=${eqDeletes.map(_.keys.size).sum}") +
+      (if (served.isEmpty) ")"
+       else s", metadata=${served.toSeq.sorted.mkString(",")})")
 
   /** LIVE-row statistics for the planner, from MANIFEST row counts
     * minus the masked rows — so join-side decisions (broadcast vs
@@ -309,10 +340,10 @@ final class GraftLakeDvScan(inner: Scan,
           case fp: FilePartition => fp.files
           case other => throw new IllegalStateException(
             s"unexpected non-file partition $other under DV scan")
-        }.filterNot(f =>
-          statsDrop.contains(f.filePath.toPath.toString))
-        // facade-recorded _metadata.file_path strings and the V2
-        // reader's SparkPath normalize through hadoop Path
+        }.filterNot(f => dropped.contains(f.filePath.toPath.toString))
+        // delete files record V1 `_metadata.file_path` strings (URL
+        // encoded); they and the split's SparkPath normalize through
+        // hadoop Path
         val byKey = deletes.map { case (f, ps) =>
           new org.apache.hadoop.fs.Path(f).toString -> ps
         }
@@ -326,15 +357,13 @@ final class GraftLakeDvScan(inner: Scan,
               innerSchema.fieldNames.mkString("(", ",", ")"))
           i
         }
-        // lineage feed: the identity columns are APPENDED by the
-        // reader after the inner row (ordinals n, n+1)
+        // served metadata columns are APPENDED by the reader after
+        // the inner row, at ordinals n + their MetaCols index
         val n = innerSchema.length
         val projection = projectTo.map(p =>
           p.fieldNames.map { c =>
-            if (lineageInfo.isDefined &&
-                c.equalsIgnoreCase(LakeRowLineage.RowIdCol)) n
-            else if (lineageInfo.isDefined &&
-                c.equalsIgnoreCase(LakeRowLineage.LastUpdCol)) n + 1
+            if (served(c.toLowerCase))
+              n + GraftLakeDvScan.MetaCols.indexOf(c.toLowerCase)
             else ordinal(c)
           }.toSeq)
         files
@@ -344,13 +373,15 @@ final class GraftLakeDvScan(inner: Scan,
             val whole = splits.head.copy(start = 0L,
               length = splits.head.fileSize)
             val key = new org.apache.hadoop.fs.Path(path).toString
+            // DECODED, byte-identical to the manifest path
+            val decoded = splits.head.filePath.toPath.toString
             val born = LakePartitioning.fileVersionOfPath(key)
             val applicable = eqDeletes.indices.filter(j =>
               born.exists(_ < eqDeletes(j).version)).toArray
-            val fl = lineageInfo.map(_.getOrElse(key,
+            val fl = lineageInfo.map(_.getOrElse(decoded,
               LakeRowLineage.FileLineage(-1L, 0))).orNull
             new DvInputPartition(FilePartition(i, Array(whole)),
-              byKey.getOrElse(key, EmptyMask),
+              decoded, byKey.getOrElse(key, EmptyMask),
               applicable, projection, fl): InputPartition
           }.toArray
       }
@@ -358,6 +389,7 @@ final class GraftLakeDvScan(inner: Scan,
         val innerSchema = inner.readSchema()
         new DvReaderFactory(ib.createReaderFactory(),
           projectTo, innerSchema, resolvedEqBroadcast,
+          appendMeta = served.nonEmpty,
           lineaged = lineageInfo.isDefined,
           matRid = innerSchema.fieldNames.indexWhere(
             _.equalsIgnoreCase(LakeRowLineage.PhysRowId)),
@@ -398,13 +430,15 @@ final class GraftLakeDvScan(inner: Scan,
   private val EmptyMask = new PositionBitmap
 }
 
-/** A whole-file partition plus exactly ITS positional delete bitmap
-  * and the INDICES (into the scan's broadcast [[ResolvedEqDeletes]])
-  * of the equality deletes that apply to its file, plus the output
-  * projection when the read widened for equality keys. Deliberately
-  * carries NO key material — closure size is independent of key and
-  * file counts (spec-pinned). */
+/** A whole-file partition plus its decoded path, exactly ITS
+  * positional delete bitmap and the INDICES (into the scan's
+  * broadcast [[ResolvedEqDeletes]]) of the equality deletes that
+  * apply to its file, plus the output projection when the read
+  * widened for equality keys or appends metadata columns.
+  * Deliberately carries NO key material — closure size is
+  * independent of key and file counts (spec-pinned). */
 private[sources] final class DvInputPartition(val file: FilePartition,
+    val path: String,
     val mask: PositionBitmap,
     val eqIdx: Array[Int] = Array.emptyIntArray,
     val projection: Option[Seq[Int]] = None,
@@ -414,16 +448,18 @@ private[sources] final class DvInputPartition(val file: FilePartition,
     file.preferredLocations()
 }
 
-/** `lineaged` appends `[_row_id, _last_updated_version]` after the
-  * inner row (the projection maps them at ordinals n, n+1):
-  * materialized physical value (`matRid`/`matLu` inner ordinals, -1 =
-  * absent) when non-null, manifest base + PHYSICAL position / birth
-  * version otherwise — the position counter counts every row of the
-  * file (masked included), so ids are mask-independent. */
+/** `appendMeta` appends `[_row_id, _last_updated_version, _file,
+  * _pos]` after the inner row (the projection picks the requested
+  * ones). `lineaged` fills the first two: materialized physical value
+  * (`matRid`/`matLu` inner ordinals, -1 = absent) when non-null,
+  * manifest base + PHYSICAL position / birth version otherwise — the
+  * position counter counts every row of the file (masked included),
+  * so positions and ids are mask-independent. */
 private final class DvReaderFactory(inner: PartitionReaderFactory,
     projectTo: Option[StructType] = None,
     innerSchema: StructType = new StructType(),
     eqBroadcast: Option[Broadcast[ResolvedEqDeletes]] = None,
+    appendMeta: Boolean = false,
     lineaged: Boolean = false, matRid: Int = -1, matLu: Int = -1)
     extends PartitionReaderFactory {
 
@@ -460,10 +496,12 @@ private final class DvReaderFactory(inner: PartitionReaderFactory,
         Some(pr)
       case _ => None
     }
-    val linTail = if (lineaged)
+    val tail = if (appendMeta)
       new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(2) else null
-    val linJoined = if (lineaged)
+        .GenericInternalRow(GraftLakeDvScan.MetaCols.size) else null
+    if (appendMeta) tail.update(2,
+      org.apache.spark.unsafe.types.UTF8String.fromString(dv.path))
+    val joined = if (appendMeta)
       new org.apache.spark.sql.catalyst.expressions.JoinedRow else null
     new PartitionReader[InternalRow] {
       private var pos = -1L
@@ -486,22 +524,23 @@ private final class DvReaderFactory(inner: PartitionReaderFactory,
             val row = r.get()
             if (probes.isEmpty || !eqMasked(row)) {
               val served: InternalRow =
-                if (!lineaged) row
+                if (!appendMeta) row
                 else {
-                  val fl = dv.lineage
-                  val rid: Any =
-                    if (matRid >= 0 && !row.isNullAt(matRid))
-                      row.getLong(matRid)
-                    else if (fl != null && fl.base >= 0L) fl.base + pos
-                    else null
-                  val lu: Any =
-                    if (matLu >= 0 && !row.isNullAt(matLu))
-                      row.getInt(matLu)
-                    else if (fl != null) fl.birth
-                    else null
-                  linTail.update(0, rid)
-                  linTail.update(1, lu)
-                  linJoined(row, linTail)
+                  if (lineaged) {
+                    val fl = dv.lineage
+                    tail.update(0,
+                      if (matRid >= 0 && !row.isNullAt(matRid))
+                        row.getLong(matRid)
+                      else if (fl != null && fl.base >= 0L) fl.base + pos
+                      else null)
+                    tail.update(1,
+                      if (matLu >= 0 && !row.isNullAt(matLu))
+                        row.getInt(matLu)
+                      else if (fl != null) fl.birth
+                      else null)
+                  }
+                  tail.setLong(3, pos)
+                  joined(row, tail)
                 }
               current = projector match {
                 case Some(pr) => pr.project(served); pr

@@ -89,7 +89,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
     * would be worse than the loud refusal below), the operation asks
     * Spark for the lineage METADATA columns; the group-based
     * `ReplaceData` plan then reads them ([[LakeScanBuilder]] serves
-    * them via [[LakeLineageScan]]), nullifies per the preservation
+    * them via [[GraftLakeDvScan]]), nullifies per the preservation
     * contract (update → null `_last_updated_version`, reinsert → null
     * both), and hands them back to the write
     * (`DataWriter.write(meta, row)`), which MATERIALIZES them as the
@@ -139,8 +139,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
               org.apache.spark.sql.types.IntegerType)))
         val inner = new GraftLakeDvScanBuilder(
           ParquetTable("lake_rewrite_dv_scan", spark,
-            new CaseInsensitiveStringMap(
-              java.util.Collections.singletonMap("mergeSchema", "true")),
+            CaseInsensitiveStringMap.empty(),
             snap.dataFiles, Some(physSchema),
             classOf[ParquetFileFormat]),
           schema, snap.deleteFiles, options,
@@ -921,8 +920,7 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
     if (!wantsLineage)
       new LakeGroupScan(
         ParquetTable("lake_rewrite_scan", spark,
-          new CaseInsensitiveStringMap(java.util.Collections.singletonMap(
-            "mergeSchema", "true")),
+          CaseInsensitiveStringMap.empty(),
           selected, Some(schema), classOf[ParquetFileFormat])
           .newScanBuilder(options).build(),
         this)
@@ -931,14 +929,15 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
       // schema gains the hidden physical lineage columns (absent
       // files read them as null — the manifest fallback covers
       // those), the inner builder prunes to data + physical lineage,
-      // and [[LakeLineageScan]] appends the metadata columns over
-      // whole-file partitions. Runtime group narrowing is bypassed
-      // here (conservative: the static selection is replaced), and no
-      // parquet predicates were ever pushed — positions stay exact.
+      // and the positioned reader ([[GraftLakeDvScan]], empty mask)
+      // appends the metadata columns over whole-file partitions.
+      // Runtime group narrowing is bypassed here (conservative: the
+      // static selection is replaced), and no parquet predicates were
+      // ever pushed — positions stay exact.
       val req = requested.get
+      val served = GraftLakeDvScan.served(req, schema, lineageOn = true)
       val dataFields = req.fields.filterNot(f =>
-        f.name.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-          f.name.equalsIgnoreCase(LakeRowLineage.LastUpdCol))
+        served(f.name.toLowerCase))
       val mats = Seq(
         org.apache.spark.sql.types.StructField(
           LakeRowLineage.PhysRowId,
@@ -951,8 +950,7 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
       val wide = StructType(schema.fields.filterNot(f =>
         LakeRowLineage.isInternalCol(f.name)) ++ mats)
       val innerB = ParquetTable("lake_rewrite_scan", spark,
-        new CaseInsensitiveStringMap(java.util.Collections.singletonMap(
-          "mergeSchema", "true")),
+        CaseInsensitiveStringMap.empty(),
         selected, Some(wide), classOf[ParquetFileFormat])
         .newScanBuilder(options)
       val innerReq = StructType(dataFields ++ mats)
@@ -961,11 +959,11 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
             .SupportsPushDownRequiredColumns => p.pruneColumns(innerReq)
         case _ =>
       }
-      val built = innerB.build()
       // the commit replaces this builder's STATIC selection (runtime
-      // group narrowing does not flow through the lineage wrapper —
+      // group narrowing does not flow through the positioned reader —
       // conservative, never lossy)
-      new LakeLineageScan(built, req, built.readSchema(), lineage.get)
+      new GraftLakeDvScan(innerB.build(), Map.empty,
+        projectTo = Some(req), served = served, lineageInfo = lineage)
     }
   }
 }

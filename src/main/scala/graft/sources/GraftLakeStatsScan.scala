@@ -60,8 +60,7 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
     with SupportsPushDownAggregates {
 
   private var answered: Option[(StructType, InternalRow)] = None
-  private var wantsFile = false
-  private var wantsLineage = false
+  private var served = Set.empty[String]
   private var requestedFull: Option[StructType] = None
   private var prunedTo: Option[StructType] = None
 
@@ -115,30 +114,20 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
       case _ => false
     })
 
-  /** The `_file` METADATA column is produced by THIS layer, not
-    * parquet: strip it before forwarding (the file builder would
-    * reject an unknown field) and remember to append it at read. A
-    * DATA column named `_file` shadows the metadata column (Spark's
-    * SupportsMetadataColumns contract) — it must pass through to
-    * parquet untouched. */
+  /** The METADATA columns (`_file`, `_pos`, row lineage) are
+    * produced by THIS layer, not parquet: strip them before forwarding
+    * (the file builder would reject an unknown field) and remember to
+    * append them at read. A DATA column named `_file` or `_pos`
+    * shadows the metadata column (Spark's SupportsMetadataColumns
+    * contract) — it must pass through to parquet untouched. `_file`
+    * alone keeps the split-granular pushdown scan; anything
+    * positional reads through [[GraftLakeDvScan]]. */
   override def pruneColumns(requiredSchema: StructType): Unit = {
     requestedFull = Some(requiredSchema)
-    wantsLineage = lineage.isDefined &&
-      requiredSchema.fieldNames.exists(n =>
-        n.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-          n.equalsIgnoreCase(LakeRowLineage.LastUpdCol))
-    wantsFile = !wantsLineage &&
-      requiredSchema.fieldNames.contains("_file") &&
-      !tableSchema.fieldNames.exists(_.equalsIgnoreCase("_file"))
-    val forInner =
-      if (wantsFile)
-        StructType(requiredSchema.fields.filterNot(_.name == "_file"))
-      else if (wantsLineage)
-        StructType(requiredSchema.fields.filterNot(f =>
-          f.name.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-            f.name.equalsIgnoreCase(LakeRowLineage.LastUpdCol) ||
-            f.name.equalsIgnoreCase("_file")))
-      else requiredSchema
+    served = GraftLakeDvScan.served(requiredSchema, tableSchema,
+      lineage.isDefined)
+    val forInner = StructType(requiredSchema.fields.filterNot(f =>
+      served(f.name.toLowerCase)))
     prunedTo = Some(forInner)
     super.pruneColumns(mapping match {
       case Some(m) => LakeColumnMapping.pruneToPhysical(m, forInner)
@@ -153,53 +142,64 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
     case None => innerBuild()
   }
 
-  /** ROW-LINEAGE read ([[LakeLineageScan]]): a FRESH delegate builder
-    * with NO pushed parquet filters (positions must count every row of
-    * a file — the [[GraftLakeDvScan]] discipline; Spark re-applies the
-    * predicates in the post-scan Filter since [[pushFilters]] returned
-    * them as residual), pruned to the requested data columns plus the
-    * materialized physical lineage columns when any live file carries
-    * them. FILE-granular pruning still composes: static partition
-    * claims, per-generation claims and manifest blooms drop whole
-    * files, which never breaks position counting. */
-  private def buildLineageScan(): Scan = {
-    val (perFile, delegateSchema) = lineage.get
+  /** POSITIONED read ([[GraftLakeDvScan]] with an empty mask): a FRESH
+    * delegate builder with NO pushed parquet filters (positions must
+    * count every row of a file; Spark re-applies the predicates in
+    * the post-scan Filter since [[pushFilters]] returned them as
+    * residual), pruned to the requested data columns plus the
+    * materialized physical lineage columns when lineage is asked for
+    * and any live file carries them. FILE-granular pruning still
+    * composes: the static keep-set drops whole files, which never
+    * breaks position counting. */
+  private def buildPositionedScan(): Scan = {
     val req = requestedFull.getOrElse(tableSchema)
-    val dataFields = req.fields.filterNot(f =>
-      f.name.equalsIgnoreCase(LakeRowLineage.RowIdCol) ||
-        f.name.equalsIgnoreCase(LakeRowLineage.LastUpdCol) ||
-        (f.name.equalsIgnoreCase("_file") &&
-          !tableSchema.fieldNames.exists(_.equalsIgnoreCase("_file"))))
+    val dataFields = req.fields.filterNot(f => served(f.name.toLowerCase))
+    val wantsLineage = GraftLakeDvScan.wantsLineage(served)
     // materialized lineage columns exist only on rewritten files —
     // and never together with an active mapping (row-level DML is
     // refused on mapped tables; compact clears the mapping)
-    val mats = delegateSchema.fields.filter(f =>
-      LakeRowLineage.isInternalCol(f.name))
+    val mats =
+      if (!wantsLineage) Array.empty[StructField]
+      else lineage.get._2.fields.filter(f =>
+        LakeRowLineage.isInternalCol(f.name))
     val fresh = rebuildInner()
-    val innerReq = StructType((mapping match {
+    fresh.pruneColumns(StructType((mapping match {
       case Some(m) =>
         LakeColumnMapping.pruneToPhysical(m, StructType(dataFields))
           .fields
       case None => dataFields
-    }) ++ mats)
-    fresh.pruneColumns(innerReq)
+    }) ++ mats))
     val built = fresh.build()
     val logicalScan = mapping match {
       case Some(m) => new LakeMappedScan(built, m)
       case None => built
     }
-    val keep: Option[Set[String]] = {
-      val bd = bloomDropped ++ statsDropped
-      val static = partPruned.map(_._2.keySet).orElse(genStaticKeep)
-      (static, bd) match {
-        case (None, s) if s.isEmpty => None
-        case (st, s) => Some(st.getOrElse(snap.dataFiles
-          .map(p => new Path(p).toString).toSet) -- s)
-      }
-    }
-    new LakeLineageScan(logicalScan, req, logicalScan.readSchema(),
-      perFile, keep)
+    new GraftLakeDvScan(logicalScan, Map.empty, projectTo = Some(req),
+      served = served,
+      lineageInfo = if (wantsLineage) lineage.map(_._1) else None,
+      dropped = staticKeep.map(allFiles -- _).getOrElse(Set.empty))
   }
+
+  private def allFiles: Set[String] =
+    snap.dataFiles.map(p => new Path(p).toString).toSet
+
+  /** The files every static prune keeps (None = no prune fired):
+    * partition claims or per-generation claims, minus the files
+    * blooms, manifest stats and `_file` predicates drop. Read at
+    * build, after the filters and the pruned columns arrived. */
+  private lazy val staticKeep: Option[Set[String]] = {
+    val static = partPruned.map(_._2.keySet).orElse(genStaticKeep)
+    (static, dropped) match {
+      case (None, d) if d.isEmpty => None
+      case (st, d) => Some(st.getOrElse(allFiles) -- d)
+    }
+  }
+
+  private lazy val dropped: Set[String] =
+    bloomDropped ++ statsDropped ++
+      (if (served("_file"))
+        LakeFilePrune.fileColDropped(catalystFilters, snap.dataFiles)
+      else Set.empty)
 
   /** STATIC PARTITION PRUNING: on a partitioned table, a pushed
     * `EqualTo`/`In` filter on the partition column keeps only the
@@ -212,7 +212,7 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
     * equality filter (null never matches `=`/IN). Composes with both
     * downstream scan shapes: the key-grouped scan reads the pruned
     * map, the runtime-filter scan seeds its kept-set with it. */
-  private def partPruned
+  private lazy val partPruned
       : Option[(Seq[LakePartitioning.Spec],
         Map[String, Seq[Option[Any]]])] =
     partInfo.map { case (specs, keys) =>
@@ -329,17 +329,17 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
     * key can't join on it anyway. */
   override def build(): Scan = answered match {
     case Some((schema, row)) => new LakeStatsAggScan(schema, row)
-    case None if wantsLineage => buildLineageScan()
-    case None if wantsFile => new LakeFileColumnScan(logicalBuild())
-    case None =>
-      val bloomDrop = bloomDropped ++ statsDropped
-      partPruned match {
+    case None if served.exists(_ != "_file") => buildPositionedScan()
+    case None if served("_file") =>
+      new LakeFileColumnScan(new LakeRuntimeFilterScan(logicalBuild(),
+        snap, staticKeep = staticKeep, tableSchema = tableSchema))
+    case None => partPruned match {
       case Some((specs, keys0))
           if keys0.nonEmpty && specs.forall(s =>
             prunedTo.forall(_.fieldNames.exists(
               _.equalsIgnoreCase(s.column)))) &&
-            (keys0.keySet -- bloomDrop).nonEmpty =>
-        val keys = keys0 -- bloomDrop
+            (keys0.keySet -- dropped).nonEmpty =>
+        val keys = keys0 -- dropped
         new LakeKeyGroupedScan(logicalBuild(), specs, keys,
           LakePartitioning.keyTypes(specs, tableSchema),
           provenEmpty = snap.dataFiles
@@ -352,27 +352,12 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
             partInfo.map(_._2.keySet -- keys.keySet).getOrElse(Set.empty),
           clusterOrdering = reportOrdering,
           ndvSnap = Some(snap), ndvSchema = tableSchema)
-      case Some((_, keys)) =>
-        // a partition column pruned from the output (no SPJ use) or
-        // every file statically/bloom pruned: ordinary scan, seeded
-        // with the kept file set
+      case _ =>
+        // a partition column pruned from the output (no SPJ use),
+        // every file statically pruned, or no partitioning: ordinary
+        // scan, seeded with the kept file set
         new LakeRuntimeFilterScan(logicalBuild(), snap,
-          staticKeep = Some(keys.keySet -- bloomDrop),
-          tableSchema = tableSchema)
-      case None => (genStaticKeep, bloomDrop) match {
-        case (Some(keep), bd) =>
-          // spec-evolved table, mixed generations: per-generation
-          // static prune seeded into the ordinary scan
-          new LakeRuntimeFilterScan(logicalBuild(), snap,
-            staticKeep = Some(keep -- bd), tableSchema = tableSchema)
-        case (None, bd) if bd.nonEmpty =>
-          new LakeRuntimeFilterScan(logicalBuild(), snap,
-            staticKeep = Some(snap.dataFiles
-              .map(p => new Path(p).toString).toSet -- bd),
-            tableSchema = tableSchema)
-        case _ => new LakeRuntimeFilterScan(logicalBuild(), snap,
-          tableSchema = tableSchema)
-      }
+          staticKeep = staticKeep, tableSchema = tableSchema)
     }
   }
 }
@@ -632,6 +617,34 @@ private[graft] object LakeStatsAggregate {
   * set of runtime predicates. Conservative by construction — files
   * without stats (or untranslatable predicates) are kept. */
 private[sources] object LakeFilePrune {
+
+  /** `_file` pruning: every `_file = 'p'` / `_file IN (...)` filter
+    * (callers pass filters only when `_file` is the metadata column)
+    * keeps exactly the files it names — the copy-on-write delete's
+    * rewrite reads its touched files this way. Returns DECODED paths
+    * of the files no such filter names. */
+  def fileColDropped(
+      catalystFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      files: Seq[String]): Set[String] = {
+    import org.apache.spark.sql.catalyst.{expressions => ce}
+    def isFile(e: ce.Expression) = e match {
+      case a: ce.AttributeReference => a.name.equalsIgnoreCase("_file")
+      case _ => false
+    }
+    val named: Seq[Set[String]] = catalystFilters.collect {
+      case ce.EqualTo(a, ce.Literal(v, _)) if isFile(a) => Set[Any](v)
+      case ce.EqualTo(ce.Literal(v, _), a) if isFile(a) => Set[Any](v)
+      case ce.In(a, vs)
+          if isFile(a) && vs.forall(_.isInstanceOf[ce.Literal]) =>
+        vs.map(_.asInstanceOf[ce.Literal].value).toSet
+      case ce.InSet(a, vs) if isFile(a) => vs
+    }.map(_.collect { case v if v != null => new Path(v.toString).toString })
+    if (named.isEmpty) Set.empty
+    else {
+      val all = files.map(p => new Path(p).toString)
+      named.flatMap(keep => all.filterNot(keep)).toSet
+    }
+  }
 
   /** Every top-level column with usable bounds in at least one file's
     * stats — the columns a runtime IN-filter could prune on. */

@@ -1,12 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** ROW LINEAGE (Iceberg v3 row lineage / Delta row tracking): stable
   * per-row identity that survives compaction and row-level rewrites,
@@ -121,170 +117,6 @@ private[graft] object LakeRowLineage {
         snap.stats.get(p).flatMap(_.firstRowId).getOrElse(-1L),
         LakePartitioning.fileVersionOfPath(p).getOrElse(0))
     }.toMap
-
-  /** DataFrame-side lineage materialization for FACADE rewrites
-    * (compact, COW delete survivors): given a raw tagged scan that
-    * still exposes `_metadata`, append the PHYSICAL lineage columns
-    * computed exactly like the scan serves them — materialized value
-    * if present, manifest base + row position / birth version
-    * otherwise. The per-file map is manifest-sized and broadcasts. */
-  def materializeCols(spark: SparkSession,
-      raw: org.apache.spark.sql.DataFrame,
-      info: Map[String, FileLineage]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, when}
-    import spark.implicits._
-    val m = info.toSeq.map { case (p, fl) => (p, fl.base, fl.birth) }
-      .toDF("__lin_path", "__lin_base", "__lin_birth")
-    val hasRid = raw.columns.exists(_.equalsIgnoreCase(PhysRowId))
-    val hasLu = raw.columns.exists(_.equalsIgnoreCase(PhysLastUpd))
-    val joined = raw
-      .withColumn("__lin_fp", col("_metadata.file_path"))
-      .withColumn("__lin_ri", col("_metadata.row_index"))
-      .join(broadcast(m), col("__lin_fp") === col("__lin_path"), "left")
-    val rid = coalesce(
-      (if (hasRid) Seq(col(PhysRowId)) else Seq.empty) :+
-        when(col("__lin_base") >= 0L, col("__lin_base") + col("__lin_ri")): _*)
-    val lu = coalesce(
-      (if (hasLu) Seq(col(PhysLastUpd)) else Seq.empty) :+
-        col("__lin_birth"): _*)
-    joined
-      .withColumn(PhysRowId, rid.cast(LongType))
-      .withColumn(PhysLastUpd, lu.cast(IntegerType))
-      .drop("__lin_fp", "__lin_ri", "__lin_path", "__lin_base",
-        "__lin_birth")
-  }
-}
-
-/** Scan serving the lineage metadata columns (and `_file`): the
-  * delegate's splits re-plan to ONE WHOLE FILE per partition with no
-  * parquet predicate pushdown (the [[GraftLakeDvScan]] discipline —
-  * a running counter IS the row position), each partition carries its
-  * file's (base, birth) constants, and the reader appends
-  * `_row_id` / `_last_updated_version` / `_file` per row —
-  * materialized physical value when non-null, manifest arithmetic
-  * otherwise. `keep` (static partition/bloom prune survivors) drops
-  * whole files — file-granular pruning composes with position
-  * counting; row-granular pushdown cannot and stays post-scan. */
-final class LakeLineageScan(inner: Scan,
-    output: StructType,
-    innerOutput: StructType,
-    info: Map[String, LakeRowLineage.FileLineage],
-    keep: Option[Set[String]] = None) extends Scan {
-
-  override def readSchema(): StructType = output
-
-  override def description(): String =
-    inner.description() + ", MetadataCols: row lineage"
-
-  override def toBatch: Batch = {
-    val ib = inner.toBatch
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] = {
-        val files = ib.planInputPartitions().toSeq.flatMap {
-          case fp: FilePartition => fp.files
-          case other => throw new IllegalStateException(
-            s"unexpected non-file partition $other under lineage scan")
-        }
-        files
-          .groupBy(_.filePath.toString).toSeq.sortBy(_._1)
-          .filter { case (p, _) =>
-            keep.forall(_.contains(
-              new org.apache.hadoop.fs.Path(p).toString))
-          }
-          .zipWithIndex
-          .map { case ((path, splits), i) =>
-            val whole = splits.head.copy(start = 0L,
-              length = splits.head.fileSize)
-            val decoded = splits.head.filePath.toPath.toString
-            val fl = info.getOrElse(
-              new org.apache.hadoop.fs.Path(path).toString,
-              LakeRowLineage.FileLineage(-1L, 0))
-            new LineagePartition(FilePartition(i, Array(whole)),
-              decoded, fl.base, fl.birth): InputPartition
-          }.toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory = {
-        // requested-name → joined-row ordinal: inner columns first,
-        // then [rowId, lastUpd, file] appended by the reader
-        val n = innerOutput.length
-        val ords = output.fields.map { f =>
-          if (f.name.equalsIgnoreCase(LakeRowLineage.RowIdCol)) n
-          else if (f.name.equalsIgnoreCase(LakeRowLineage.LastUpdCol))
-            n + 1
-          else if (f.name.equalsIgnoreCase("_file")) n + 2
-          else {
-            val i = innerOutput.fieldNames
-              .indexWhere(_.equalsIgnoreCase(f.name))
-            if (i < 0) throw new IllegalStateException(
-              s"lineage scan: requested column '${f.name}' missing " +
-                "from the inner read")
-            i
-          }
-        }
-        val matRid = innerOutput.fieldNames
-          .indexWhere(_.equalsIgnoreCase(LakeRowLineage.PhysRowId))
-        val matLu = innerOutput.fieldNames
-          .indexWhere(_.equalsIgnoreCase(LakeRowLineage.PhysLastUpd))
-        new LineageReaderFactory(ib.createReaderFactory(), output,
-          ords, matRid, matLu)
-      }
-    }
-  }
-}
-
-private final class LineagePartition(val file: FilePartition,
-    val path: String, val base: Long, val birth: Int)
-    extends InputPartition {
-  override def preferredLocations(): Array[String] =
-    file.preferredLocations()
-}
-
-private final class LineageReaderFactory(inner: PartitionReaderFactory,
-    output: StructType, ords: Array[Int], matRid: Int, matLu: Int)
-    extends PartitionReaderFactory {
-
-  // per-row appended values; never hand out raw columnar batches
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
-    val lp = p.asInstanceOf[LineagePartition]
-    val r = inner.createReader(lp.file)
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    val tail = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(3)
-    tail.update(2,
-      org.apache.spark.unsafe.types.UTF8String.fromString(lp.path))
-    val proj =
-      org.apache.spark.sql.catalyst.ProjectingInternalRow(output,
-        ords.toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      private var pos = -1L
-
-      override def next(): Boolean = {
-        if (!r.next()) return false
-        pos += 1
-        true
-      }
-
-      override def get(): InternalRow = {
-        val row = r.get()
-        val rid: Any =
-          if (matRid >= 0 && !row.isNullAt(matRid)) row.getLong(matRid)
-          else if (lp.base >= 0L) lp.base + pos
-          else null
-        val lu: Any =
-          if (matLu >= 0 && !row.isNullAt(matLu)) row.getInt(matLu)
-          else lp.birth
-        tail.update(0, rid)
-        tail.update(1, lu)
-        proj.project(joined(row, tail))
-        proj
-      }
-
-      override def close(): Unit = r.close()
-    }
-  }
 }
 
 /** Write-side lineage materialization for ROW-LEVEL rewrites: wraps

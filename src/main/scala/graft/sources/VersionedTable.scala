@@ -2,6 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types.StructType
 
 /** Versioned table snapshots with TIME-TRAVEL reads — the lakehouse
@@ -119,16 +122,7 @@ object VersionedTable {
           .map(LakeColumnMapping.toPhysical(df, _))
           .getOrElse(df)
       else df
-    // SHREDDED-JSON materialization ([[LakeJsonShred]]): declared
-    // paths parse ONCE here at ingest into hidden string columns —
-    // the steady-state read then never touches the raw JSON for them
-    val shredded = LakeJsonShred
-      .fromProps(GraftLakeTable.readProperties(spark, dir)) match {
-      case Some((src, paths))
-          if mapped.columns.exists(_.equalsIgnoreCase(src)) =>
-        LakeJsonShred.shred(mapped, src, paths)
-      case _ => mapped
-    }
+    val shredded = shredFor(spark, dir, mapped)
     // declared PARTITIONING wins over declared clustering for the
     // shuffle (one shuffle per commit, never two): rows route to their
     // partition value and, when clustering is ALSO declared, sort
@@ -188,6 +182,21 @@ object VersionedTable {
       op.getOrElse(if (carryForward) "append" else "overwrite"),
       base = if (carryForward && base >= 0) Some(base) else None)
   }
+
+  /** SHREDDED-JSON materialization ([[LakeJsonShred]]) on every
+    * data-landing path: declared paths parse ONCE at write into
+    * hidden string columns — the steady-state read then never touches
+    * the raw JSON for them. `df` unchanged when nothing is declared or
+    * it lacks the source column. */
+  private def shredFor(spark: SparkSession, dir: String,
+      df: DataFrame): DataFrame =
+    LakeJsonShred
+      .fromProps(GraftLakeTable.readProperties(spark, dir)) match {
+      case Some((src, paths))
+          if df.columns.exists(_.equalsIgnoreCase(src)) =>
+        LakeJsonShred.shred(df, src, paths)
+      case _ => df
+    }
 
   /** Write-side CLUSTERING declaration, the
     * `TBLPROPERTIES('graft.write.ordered-by'='user_id')` contract
@@ -1098,142 +1107,39 @@ object VersionedTable {
   def filesOf(spark: SparkSession, dir: String, version: Int): Seq[String] =
     snapshotOf(spark, dir, version).dataFiles
 
-  /** Snapshot read: `version = None` reads the latest commit.
-    * `mergeSchema` is on: a carry-forward commit may WIDEN the schema
-    * (the additive column evolution every long-lived table undergoes),
-    * and Spark's default single-footer sampling would silently drop
-    * the new column when an old file is sampled — with the merge, old
-    * files surface the added columns as nulls, exactly the lakehouse
-    * evolution contract. Cost is one footer read per file at planning,
-    * which the manifest's explicit file list already bounds. */
+  /** Snapshot read: `version = None` reads the head commit. One
+    * `DataSourceV2Relation` over [[GraftLakeTable]] pinned to the
+    * version — the catalog's own scan stack, so a facade read and a
+    * SQL read of a snapshot are the same read: the schema comes from
+    * the manifest ([[LakeSchema]], no footer inference), manifest
+    * stats and blooms prune files, merge-on-read masks apply in the
+    * positioned reader ([[GraftLakeDvScan]] — so
+    * `spark.graft.lake.eqDelete.maxKeys` bounds this read's
+    * equality-delete keys exactly as it bounds SQL reads), and the
+    * metadata columns `_file`, `_pos`, `_row_id` and
+    * `_last_updated_version` resolve when referenced. Pinning the
+    * version keeps a session's `spark.graft.wap.branch` from
+    * redirecting the read. A missing version throws
+    * IllegalArgumentException here, not mid-scan. */
   def read(spark: SparkSession, dir: String,
-      version: Option[Int] = None): DataFrame =
-    readImpl(spark, dir, version, keepLineage = false)
-
-  private def readImpl(spark: SparkSession, dir: String,
-      version: Option[Int], keepLineage: Boolean): DataFrame = {
+      version: Option[Int] = None): DataFrame = {
     val v = version.orElse(headVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir"))
-    val snap = snapshotOf(spark, dir, v)
-    val widen = LakeTypeWidening.fromMeta(snap.meta)
-    val defaults = LakeDefaults.fromMeta(snap.meta)
-    val data =
-      if (widen.isEmpty && defaults.isEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataFiles: _*)
-      else if (widen.isEmpty) {
-        // DEFAULT columns ride the requested schema's resolver
-        // metadata: files that physically lack the column backfill
-        // the declared constant, files written after the add serve
-        // their stored values ([[LakeDefaults]])
-        val merged = spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataFiles: _*).schema
-        spark.read.schema(LakeDefaults.enrich(merged, defaults))
-          .parquet(snap.dataFiles: _*)
-      } else {
-        // widened snapshot: explicit wide schema (merging refuses the
-        // narrow/wide file mix; the readers upcast natively). Newest
-        // file carries the full column set — commits write the full
-        // current schema.
-        val newest = snap.dataFiles.maxBy(p =>
-          LakePartitioning.fileVersionOfPath(p).getOrElse(-1))
-        val wide = LakeTypeWidening.widen(
-          spark.read.parquet(newest).schema, widen)
-        // lineage-materializing reads must see the hidden physical
-        // columns even when the NEWEST file (a fresh append) lacks
-        // them — older rewritten files still carry ids
-        val pinned =
-          if (keepLineage && snap.stats.valuesIterator.exists(
-              _.cols.contains(LakeRowLineage.PhysRowId)) &&
-              !wide.fieldNames.exists(_.equalsIgnoreCase(
-                LakeRowLineage.PhysRowId)))
-            wide.add(LakeRowLineage.PhysRowId,
-                org.apache.spark.sql.types.LongType)
-              .add(LakeRowLineage.PhysLastUpd,
-                org.apache.spark.sql.types.IntegerType)
-          else wide
-        spark.read.schema(LakeDefaults.enrich(pinned, defaults))
-          .parquet(snap.dataFiles: _*)
-      }
-    val (eqDels, posDels) = snap.deleteFiles.partition(isEqualityDelete)
-    // lineage-materializing reads (the facade rewrites' input —
-    // compact, COW-delete survivors) compute the hidden physical
-    // lineage columns from the SAME raw (file, position) tags the
-    // masks ride, BEFORE any mask join drops rows, so a rewrite lands
-    // every surviving row's identity and lineage survives compaction
-    // even over masked snapshots
-    val lineaged =
-      if (!keepLineage) data
-      else LakeRowLineage.materializeCols(spark, data,
-        LakeRowLineage.perFile(snap))
-    val masked = if (snap.deleteFiles.isEmpty) lineaged
-    else {
-      // merge-on-read: positional masks anti-join on (file, position)
-      // pairs, equality masks on key tuples scoped by birth version.
-      // `_metadata` resolves only on the raw scan relation, so both
-      // columns materialize FIRST, before any join. The delete sides
-      // are mask-sized (tiny next to data), so Catalyst broadcasts
-      // them and the masks apply MAP-side — no data shuffle, the
-      // DV-apply shape.
-      import org.apache.spark.sql.functions.col
-      val tagged = lineaged
-        .withColumn("__graft_f", col("_metadata.file_path"))
-        .withColumn("__graft_p", col("_metadata.row_index"))
-      val posMasked = if (posDels.isEmpty) tagged
-      else {
-        val dels = spark.read.parquet(posDels: _*)
-          .select(col("file_path").as("__graft_df"),
-            col("row_index").as("__graft_dp"))
-          .distinct()
-        tagged.join(dels, col("__graft_f") === col("__graft_df") &&
-          col("__graft_p") === col("__graft_dp"), "left_anti")
-      }
-      applyEqDeletes(spark, posMasked, eqDels, col("__graft_f"))
-        .drop("__graft_f", "__graft_p")
-    }
-    // column-mapped snapshot: present the logical schema (physical
-    // file columns selected + aliased; dropped physicals fall away).
-    // AFTER the DV mask — `_metadata` only resolves on the raw scan.
-    // In keepLineage mode the hidden lineage columns ride through the
-    // logical projection (toLogical would otherwise drop them).
-    val logical = LakeColumnMapping.fromMeta(snap.meta)
-      .filterNot(_.isIdentity)
-      .map { m =>
-        if (!keepLineage) LakeColumnMapping.toLogical(masked, m)
-        else {
-          val lin = Seq(LakeRowLineage.PhysRowId,
-            LakeRowLineage.PhysLastUpd)
-            .filter(c => masked.columns.exists(_.equalsIgnoreCase(c)))
-          masked.select(LakeColumnMapping.toLogicalCols(masked, m) ++
-            lin.map(c => masked(c)): _*)
-        }
-      }
-      .getOrElse(masked)
-    // hidden physical lineage + shredded-JSON columns (materialized
-    // by writes on declaring tables) never surface on the data read
-    val noShred = logical.drop(
-      logical.columns.filter(LakeJsonShred.isShredCol).toIndexedSeq: _*)
-    if (keepLineage) noShred
-    else noShred.drop(LakeRowLineage.PhysRowId,
-      LakeRowLineage.PhysLastUpd)
+    snapshotOf(spark, dir, v)
+    DatasetBridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftLakeTable(Identifier.of(Array.empty[String], dir), dir,
+        Some(v)), None, None))
   }
 
-  /** Raw merged read of (a subset of) a snapshot's data files with
-    * declared DEFAULT columns enriched ([[LakeDefaults]]) — condition
-    * evaluation in the rewrite paths must see backfilled values, not
-    * the nulls a plain merged read serves for old files. */
-  private def rawDefaulted(spark: SparkSession, snap: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val defaults = LakeDefaults.fromMeta(snap.meta)
-    if (defaults.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(files: _*)
-    else {
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(files: _*).schema
-      spark.read.schema(LakeDefaults.enrich(merged, defaults))
-        .parquet(files: _*)
-    }
-  }
+  /** The positioned metadata columns `deleteWhere` and
+    * `deleteWhereMergeOnRead` read; a data column of the same name
+    * would shadow them, so those deletes refuse such tables. */
+  private def requirePositioned(rel: DataFrame, dir: String): Unit =
+    rel.columns.find(c => c.equalsIgnoreCase("_file") ||
+        c.equalsIgnoreCase("_pos"))
+      .foreach(c => throw new UnsupportedOperationException(
+        s"DELETE on $dir: the data column '$c' shadows the metadata " +
+          "column the delete locates rows by"))
 
   /** Lineage enabled for this table (property or an already-assigned
     * watermark in the snapshot meta)? */
@@ -1265,35 +1171,6 @@ object VersionedTable {
     EqDeleteRe.findFirstIn(p).isDefined
 
   private val EqDeleteRe = """/files-v\d+-eq[0-9a-f]+/""".r
-
-  /** Apply EQUALITY-DELETE files to a raw data scan: each delete file
-    * holds the KEY TUPLES to drop (its parquet schema IS the key set,
-    * Iceberg's equality_ids made self-describing), null-safe (`<=>`,
-    * Iceberg's equality-delete null semantics), and SCOPED BY SEQUENCE:
-    * a delete committed at version D applies only to data files BORN
-    * BEFORE D (`files-v<fileV>` with fileV < D) — the rule that lets an
-    * upsert batch commit its delete keys and its replacement rows
-    * atomically without the keys eating the fresh rows. The delete
-    * side is keys-sized, so every anti join broadcasts and applies
-    * map-side. `data` must still expose `_metadata` (raw parquet scan,
-    * before any projection). */
-  private[sources] def applyEqDeletes(spark: SparkSession,
-      data: DataFrame, eqFiles: Seq[String],
-      filePathCol: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit, regexp_extract}
-    if (eqFiles.isEmpty) return data
-    eqFiles.foldLeft(data) { (df, ef) =>
-      val delV = LakePartitioning.fileVersionOfPath(ef).getOrElse(
-        throw new IllegalStateException(
-          s"equality-delete file $ef carries no version in its path"))
-      val keys = spark.read.parquet(ef).distinct()
-      val cond = keys.columns.map(k =>
-        df(k) <=> keys(k)).reduce(_ && _) &&
-        regexp_extract(filePathCol,
-          "/files-v(\\d+)-", 1).cast("int") < lit(delV)
-      df.join(broadcast(keys), cond, "left_anti")
-    }
-  }
 
   /** MERGE-ON-READ EQUALITY DELETE (Iceberg's equality-delete files):
     * record the KEYS to delete — an O(keys) WRITE with zero target
@@ -1347,17 +1224,10 @@ object VersionedTable {
           batch.columns.mkString("(", ",", ")"))))
     val eqWritten = writeEqDeleteFile(spark, dir, newV,
       batch.select(cols.map(org.apache.spark.sql.functions.col): _*))
-    // parse-once discipline on EVERY data-landing path: the upsert's
-    // fresh rows shred like any commit, so declared-path serving
-    // survives MoR chains instead of degrading until compaction
-    val shredded = LakeJsonShred
-      .fromProps(GraftLakeTable.readProperties(spark, dir)) match {
-      case Some((src, paths))
-          if batch.columns.exists(_.equalsIgnoreCase(src)) =>
-        LakeJsonShred.shred(batch, src, paths)
-      case _ => batch
-    }
-    val dataFiles = writeDataFiles(spark, shredded, dir, newV,
+    // the upsert's fresh rows shred like any commit, so declared-path
+    // serving survives MoR chains instead of degrading until compaction
+    val dataFiles = writeDataFiles(spark, shredFor(spark, dir, batch),
+      dir, newV,
       LakePartitioning.specOf(spark, dir))
     publish(fs(spark, dir), dir, newV,
       snap.dataFiles ++ dataFiles,
@@ -1369,18 +1239,16 @@ object VersionedTable {
 
   /** Validate + land one equality-delete file for version `v`; empty
     * key sets land nothing (the publish stays mask-free). Validation
-    * samples the NEWEST data file's footer (one metadata read — the
-    * write path must stay O(batch), never O(table)); commits always
-    * land the full current schema, so the newest file carries every
-    * column an equality key may name. */
+    * reads the snapshot's schema ([[LakeSchema.physicalSchema]] — the
+    * manifest record, so the write path stays O(batch), never
+    * O(table)). */
   private def writeEqDeleteFile(spark: SparkSession, dir: String,
       v: Int, keys: DataFrame): Seq[(String, LakeFileStats.FileStats)] = {
     val snap = snapshotOf(spark, dir, headVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir")))
     val table =
       if (snap.dataFiles.isEmpty) keys.schema
-      else spark.read.parquet(snap.dataFiles.maxBy(p =>
-        LakePartitioning.fileVersionOfPath(p).getOrElse(-1))).schema
+      else LakeSchema.physicalSchema(spark, snap)
     keys.schema.fields.foreach { f =>
       val tf = table.fields.find(_.name.equalsIgnoreCase(f.name))
         .getOrElse(throw new IllegalArgumentException(
@@ -1424,12 +1292,15 @@ object VersionedTable {
     * CDC tombstones). Reads apply the mask map-side ([[read]]);
     * [[compact]] materializes survivors and drops the masks (the
     * Iceberg `rewrite` that keeps DV chains short). `cond` evaluates
-    * against the LIVE view (already-masked rows can't re-match, though
-    * re-recording a position would be harmless — apply is idempotent).
-    * Positions ride `_metadata.row_index`, stable per parquet file. */
+    * against the LIVE view ([[read]], which applies both positional
+    * and equality masks — already-masked rows can't re-match, though
+    * re-recording a position would be harmless: apply is idempotent).
+    * Positions are the snapshot's `_file`/`_pos` metadata columns,
+    * stable per parquet file; the delete file records the file in
+    * V1 `_metadata.file_path` form, as every mask reader expects. */
   def deleteWhereMergeOnRead(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, udf}
     val v = headVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir"))
     val snap = snapshotOf(spark, dir, v)
@@ -1445,30 +1316,16 @@ object VersionedTable {
     if (snap.dataFiles.isEmpty)
       return publish(fs(spark, dir), dir, newV, snap.dataFiles,
         snap.deleteFiles, snap.stats, snap.meta, op = "delete")
-    // materialize (file, pos) BEFORE masking: metadata columns only
-    // resolve on the scan relation itself, not across the anti join.
-    // RESERVED names internally — a user column named file_path /
-    // row_index must keep feeding `cond`, not be shadowed by metadata
-    // (the delete-file OUTPUT schema still uses the public names).
-    val (eqDels, posDels) = snap.deleteFiles.partition(isEqualityDelete)
-    val data = applyEqDeletes(spark,
-      rawDefaulted(spark, snap, snap.dataFiles)
-        .withColumn("__graft_fp", col("_metadata.file_path"))
-        .withColumn("__graft_ri", col("_metadata.row_index")),
-      eqDels, col("__graft_fp"))
-    val live =
-      if (posDels.isEmpty) data
-      else data.join(
-        spark.read.parquet(posDels: _*)
-          .select(col("file_path").as("__graft_df"),
-            col("row_index").as("__graft_dp")).distinct(),
-        col("__graft_fp") === col("__graft_df") &&
-          col("__graft_ri") === col("__graft_dp"), "left_anti")
+    val live = read(spark, dir, Some(v))
+    requirePositioned(live, dir)
+    // manifest (decoded) path → the URL-encoded `_metadata.file_path`
+    // form; runs on matched rows only
+    val urlForm = udf((p: String) => new Path(p).toUri.toString)
     // one delete file per commit: the mask is matches-sized (tiny), so
     // repartition(1) shuffles only the matches — never the scan
     val positions = live.filter(cond)
-      .select(col("__graft_fp").as("file_path"),
-        col("__graft_ri").as("row_index"))
+      .select(urlForm(col("_file")).as("file_path"),
+        col("_pos").as("row_index"))
       .repartition(1)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val delDir = s"$dir/files-v$newV-$nonce"
@@ -1862,13 +1719,11 @@ object VersionedTable {
     val spec = orderBy.flatMap(parseClusterSpec)
       .orElse(clusteringSpec(spark, dir))
     // lineage-enabled tables compact THROUGH their row identity: the
-    // rewrite input carries materialized `__graft_row_id`/`__graft_
-    // last_upd`, so ids survive the file rewrite (Iceberg v3's
-    // preserve-on-rewrite contract)
-    val input =
-      if (lineageEnabled(spark, dir, snapshotOf(spark, dir, v).meta))
-        readImpl(spark, dir, None, keepLineage = true)
-      else read(spark, dir)
+    // rewrite input materializes `_row_id`/`_last_updated_version` as
+    // `__graft_row_id`/`__graft_last_upd`, so ids survive the file
+    // rewrite (Iceberg v3's preserve-on-rewrite contract)
+    val input = withPhysLineage(spark, dir,
+      snapshotOf(spark, dir, v).meta, read(spark, dir, Some(v)))
     val out = spec match {
       case Some(s) => clusterWith(s, input, Some(targetFiles))
       case None => input.repartition(targetFiles)
@@ -1876,6 +1731,19 @@ object VersionedTable {
     commitAs(spark, out, dir, nextVersion(spark, dir),
       carryForward = false, meta = snapshotOf(spark, dir, v).meta,
       applyDeclaredClustering = false, op = Some("compact"))
+  }
+
+  /** `rel` (a [[read]] of `dir`) with the lineage metadata columns
+    * materialized as the hidden physical columns, on lineage tables —
+    * the input of a facade rewrite that must keep row identity. */
+  private def withPhysLineage(spark: SparkSession, dir: String,
+      meta: Map[String, String], rel: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (!lineageEnabled(spark, dir, meta)) rel
+    else rel
+      .withColumn(LakeRowLineage.PhysRowId, col(LakeRowLineage.RowIdCol))
+      .withColumn(LakeRowLineage.PhysLastUpd,
+        col(LakeRowLineage.LastUpdCol))
   }
 
   /** SIZE-targeted compaction — the 100 TB operating mode: you size
@@ -1905,18 +1773,21 @@ object VersionedTable {
     * rewriting ONLY the files that contain matching rows. Two phases,
     * both distributed:
     *
-    *  1. Find the TOUCHED files: scan with `cond` pushed down and
-    *     aggregate match counts by `_metadata.file_path`. Parquet
-    *     footer stats prune entire non-matching files from this scan,
-    *     so on a selective delete over a well-laid-out table (q96
-    *     range / q107 Z-order) phase 1 reads a sliver; only file
-    *     identities and counts come back to the driver (one row per
-    *     touched file — manifest-sized, never data-sized).
+    *  1. Find the TOUCHED files: filter the snapshot ([[read]]) by
+    *     `cond` and count matches per `_file`. Manifest stats and
+    *     blooms drop files that cannot match before the scan starts,
+    *     and parquet pushes `cond` into the files that remain, so on
+    *     a selective delete over a well-laid-out table (q96 range /
+    *     q107 Z-order) phase 1 reads a sliver; only file identities
+    *     and counts come back to the driver (one row per touched
+    *     file — manifest-sized, never data-sized).
     *  2. Rewrite ONLY the touched files with survivors (rows where
     *     `cond` is not TRUE — NULL survives, matching SQL DELETE's
-    *     three-valued semantics) into a fresh data dir; every
-    *     untouched file carries forward BY REFERENCE, byte-identical
-    *     path strings in the new manifest, zero IO.
+    *     three-valued semantics) into a fresh data dir: the same
+    *     relation filtered to `_file IN touched`, which the scan turns
+    *     into a whole-file prune. Every untouched file carries forward
+    *     BY REFERENCE, byte-identical path strings in the new
+    *     manifest, zero IO.
     *
     * On a 100 TB table a delete touching 0.1% of files costs two scans
     * of that 0.1% (find + rewrite) plus a manifest write — never a
@@ -1953,12 +1824,14 @@ object VersionedTable {
         publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
           op = "delete"),
         0L, 0, 0)
-    val snap = rawDefaulted(spark, prior, files)
-    val perFile = snap.filter(cond)
-      .groupBy(col("_metadata.file_path").as("fp"))
+    val rel = read(spark, dir, Some(v))
+    requirePositioned(rel, dir)
+    val found = rel.filter(cond)
+      .groupBy(col("_file"))
       .agg(count(lit(1)).as("n"))
-      .collect().map(r => (new Path(r.getString(0)).toString,
-        r.getLong(1))).toMap
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val perFile = found.map { case (p, n) => new Path(p).toString -> n }
+      .toMap
     val (touched, kept) =
       files.partition(p => perFile.contains(new Path(p).toString))
     if (touched.isEmpty)
@@ -1966,16 +1839,11 @@ object VersionedTable {
         publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
           op = "delete"),
         0L, 0, files.size)
-    val rawTouched = rawDefaulted(spark, prior, touched)
-    // lineage tables: survivors of the COW rewrite carry their
-    // materialized identity into the replacement files
-    val linTouched =
-      if (lineageEnabled(spark, dir, prior.meta))
-        LakeRowLineage.materializeCols(spark, rawTouched,
-          LakeRowLineage.perFile(prior))
-      else rawTouched
-    val survivors = linTouched
-      .filter(not(coalesce(cond, lit(false))))
+    // survivors re-shred (the read serves the logical columns) and,
+    // on lineage tables, carry their identity into the new files
+    val survivors = shredFor(spark, dir, withPhysLineage(spark, dir,
+      prior.meta, rel.filter(col("_file").isin(found.map(_._1): _*))
+        .filter(not(coalesce(cond, lit(false))))))
     // a partitioned table's survivors re-route so the rewrite keeps
     // every file's key claim (the SPJ layout survives COW deletes)
     val newFiles = writeDataFiles(spark, survivors, dir, newV,

@@ -105,13 +105,17 @@ class GraftLakeDvScaleSpec extends SparkSpec {
       (0 until 50).map(_.toLong).toDF("k"))
     spark.conf.set(GraftLakeDvScan.EqKeyBudgetConf, "10")
     try {
-      val e = intercept[Exception] {
-        spark.sql(s"SELECT count(*) FROM $cat.t").collect()
+      // SQL and facade reads are the same read, under the same budget
+      Seq[() => Unit](
+        () => spark.sql(s"SELECT count(*) FROM $cat.t").collect(),
+        () => VersionedTable.read(spark, s"$root/t").count()
+      ).foreach { run =>
+        val e = intercept[Exception](run())
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+        assert(msgs.contains("convert_deletes"),
+          s"expected the budget refusal, got: $msgs")
       }
-      val msgs = Iterator.iterate(e: Throwable)(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-      assert(msgs.contains("convert_deletes"),
-        s"expected the budget refusal, got: $msgs")
       // the maintenance folds the keys into positional masks — the
       // budget no longer applies and the read recovers
       val folded = spark.sql(

@@ -1,10 +1,13 @@
 package graft.sources
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** `_file` metadata column (Iceberg's `_file`): per-row data-file
-  * lineage resolved only when referenced; split granularity and
-  * filter pushdown preserved; refused on DV-masked snapshots. */
+  * lineage resolved only when referenced, on every snapshot; split
+  * granularity and filter pushdown preserved on clean snapshots. */
 class GraftLakeFileColSpec extends SparkSpec {
 
   test("_file groups rows by their manifest data file exactly") {
@@ -41,20 +44,73 @@ class GraftLakeFileColSpec extends SparkSpec {
       .map(_.getString(0)).toSeq === Seq("user-a", "user-b"))
     assert(spark.sql(s"SELECT count(*) FROM $cat.s").collect()(0)
       .getLong(0) === 2L)
+    // the delete locates rows by the metadata column: with it shadowed
+    // the statement refuses rather than match the user's values
+    val e = intercept[Exception](
+      spark.sql(s"DELETE FROM $cat.s WHERE k = 1"))
+    assert(e.getMessage.contains("shadows"))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.s").collect()(0)
+      .getLong(0) === 2L)
   }
 
-  test("_file is absent on DV-masked snapshots (loud, not wrong)") {
-    val (cat, _) = freshCatalog()
+  test("_file = and IN drop whole files before the scan") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.p (k BIGINT)")
+    // one file per insert
+    (0 until 4).foreach(i => spark.sql(s"INSERT INTO $cat.p " +
+      s"SELECT id FROM range(${i * 10}, ${i * 10 + 10}, 1, 1)"))
+    val files = spark.sql(s"SELECT DISTINCT _file FROM $cat.p").collect()
+      .map(_.getString(0)).sorted
+    assert(files.length === 4)
+    val rel = VersionedTable.read(spark, s"$root/p")
+    def tasks(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val (rows, _, n) = TestListenerBus.counting(spark.sparkContext)(
+        df.select(col("k")).collect().length)
+      (rows, n)
+    }
+    // one task per named file; the other files never launch
+    assert(tasks(rel.where(col("_file") === files(1))) === ((10, 1)))
+    assert(tasks(rel.where(col("_file").isin(files(0), files(3)))) ===
+      ((20, 2)))
+    // lineage-free positioned reads prune the same way
+    assert(tasks(rel.where(col("_file") === files(2) && col("_pos") < 5))
+      === ((5, 1)))
+  }
+
+  test("_file on masked snapshots: manifest paths, live rows per file") {
+    import spark.implicits._
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.d (k BIGINT) " +
       s"TBLPROPERTIES('${GraftLakeTable.DeleteModeProp}'='merge-on-read')")
-    spark.sql(s"INSERT INTO $cat.d SELECT id FROM range(10)")
-    spark.sql(s"DELETE FROM $cat.d WHERE k = 3")
-    val e = intercept[Exception] {
-      spark.sql(s"SELECT _file FROM $cat.d").collect()
+    spark.sql(s"INSERT INTO $cat.d SELECT id FROM range(10)")      // v1
+    spark.sql(s"INSERT INTO $cat.d SELECT id FROM range(10, 25)")  // v2
+    val dir = s"$root/d"
+    def perFile(): Map[String, Long] = spark.sql(
+      s"SELECT _file, count(*) FROM $cat.d GROUP BY _file")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the live rows of each file, counted from the data itself
+    def expected(live: Set[Long]): Map[String, Long] = {
+      val snap = VersionedTable.snapshotOf(spark, dir,
+        VersionedTable.latestVersion(spark, dir).get)
+      snap.dataFiles.map(p => p -> spark.read.parquet(p).as[Long]
+        .collect().count(live).toLong).filter(_._2 > 0).toMap
     }
-    assert(e.getMessage.contains("_file"))
-    // data still reads fine without it
-    assert(spark.sql(s"SELECT count(*) FROM $cat.d").collect()(0)
-      .getLong(0) === 9L)
+    // positionally masked
+    spark.sql(s"DELETE FROM $cat.d WHERE k IN (3, 12, 13)")
+    assert(VersionedTable.snapshotOf(spark, dir,
+      VersionedTable.latestVersion(spark, dir).get).deleteFiles.nonEmpty)
+    val pos = perFile()
+    assert(pos === expected((0L until 25L).toSet -- Set(3L, 12L, 13L)))
+    assert(pos.values.sum === 22L)
+    // equality-masked on top
+    VersionedTable.deleteByKeysMergeOnRead(spark, dir,
+      Seq(0L, 1L, 20L).toDF("k"))
+    assert(VersionedTable.snapshotOf(spark, dir,
+      VersionedTable.latestVersion(spark, dir).get).deleteFiles
+      .exists(VersionedTable.isEqualityDelete))
+    val eq = perFile()
+    assert(eq === expected(
+      (0L until 25L).toSet -- Set(0L, 1L, 3L, 12L, 13L, 20L)))
+    assert(eq.values.sum === 19L)
   }
 }

@@ -4467,26 +4467,24 @@ object Relational {
 
   // ---------------------------------------------------------------- q176
   /** SQL `DELETE FROM` + `TRUNCATE TABLE` through the lake catalog —
-    * the copy-on-write DML tier (GraftLakeTable.deleteWhere →
-    * VersionedTable.deleteWhere): the delete condition crosses Spark's
-    * V2 Predicate surface, translates to a Column, and executes as the
-    * two-phase COW commit over the snapshot's catalog relation —
-    * phase 1 counts matches per `_file` after manifest stats have
-    * dropped the files that cannot match (the predicate still pushed
-    * to parquet in the rest) and returns only (file, n) rows; phase 2
-    * rewrites survivors of touched files only (`_file IN touched`
-    * prunes the scan to them), while every untouched file carries
-    * forward by reference (byte-identical
-    * manifest path — spec-pinned in GraftLakeCatalogSpec). At 100 TB a
-    * selective delete costs two scans of the touched sliver plus a
-    * manifest write, never a table rewrite. The emitted fingerprints
-    * prove the full DML lifecycle: v1 = CTAS load, v2 = post-DELETE
-    * (three-valued semantics: only TRUE-condition rows leave), v3 =
-    * post-TRUNCATE (schema-preserving empty commit) — and v1 is
-    * byte-stable AFTER both, read back through `VERSION AS OF`, so
-    * deletes never mutate history (GDPR-style erasure still vacuums old
-    * versions; that lifecycle is q164's). Oracle restates each snapshot
-    * from the raw source with the filter that defined it. */
+    * the copy-on-write DML tier: the DELETE plans as Spark's
+    * `ReplaceData` through GraftLakeRowLevelOperation, the one
+    * row-level rewrite UPDATE and MERGE use. Manifest stats prune the
+    * files the condition cannot match at plan time, Spark's runtime
+    * group filter drops the files whose stats rule out every matching
+    * key at execution, and only the files left are rewritten with
+    * their survivors, while every other file carries forward by
+    * reference (byte-identical manifest path — spec-pinned in
+    * GraftLakeCatalogSpec). At 100 TB a selective delete costs a scan
+    * of the touched sliver plus a manifest write, never a table
+    * rewrite. The emitted fingerprints prove the full DML lifecycle:
+    * v1 = CTAS load, v2 = post-DELETE (three-valued semantics: only
+    * TRUE-condition rows leave), v3 = post-TRUNCATE (schema-preserving
+    * empty commit) — and v1 is byte-stable AFTER both, read back
+    * through `VERSION AS OF`, so deletes never mutate history
+    * (GDPR-style erasure still vacuums old versions; that lifecycle is
+    * q164's). Oracle restates each snapshot from the raw source with
+    * the filter that defined it. */
   val q176LakeDeleteSql: Q = (spark, dir) => {
     val scratch = Scratch(spark, "q176")
     val cat = scratch.catalog

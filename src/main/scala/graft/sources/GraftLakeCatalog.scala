@@ -570,14 +570,15 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
         val sn = VersionedTable.snapshotOf(spark, d, v)
         VersionedTable.publishVersion(spark, d,
           VersionedTable.nextVersion(spark, d), sn.dataFiles,
-          sn.deleteFiles, sn.stats, sn.meta -- removedDefaults, op = op)
+          new StructType(), sn.deleteFiles, sn.stats,
+          sn.meta -- removedDefaults, op = op)
       }
     } else {
       // pure rename/drop: a manifest-only commit — the SAME files,
       // stats carried by reference, zero data IO
       VersionedTable.publishVersion(spark, d,
         VersionedTable.nextVersion(spark, d), snap.dataFiles,
-        snap.deleteFiles, snap.stats,
+        new StructType(), snap.deleteFiles, snap.stats,
         (snap.meta -- removedDefaults) ++ m.metaEntries ++ defaultMeta,
         op = op)
     }
@@ -733,9 +734,11 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
   * through the V1Write fallback into [[VersionedTable.commit]]:
   * INSERT INTO appends (carry-forward commit), INSERT OVERWRITE
   * replaces (the WriteBuilder's truncate() flips carry-forward off) —
-  * in both cases the new version is published by the same atomic
-  * manifest rename as the facade path, so readers never observe a torn
-  * snapshot and a lost race throws instead of corrupting. */
+  * in both cases the new version is published by the same manifest
+  * rename as the facade path, so readers never observe a torn
+  * snapshot. A second commit of a version already published throws;
+  * two truly concurrent committers can both win today (the rename is
+  * check-then-rename — ROADMAP item 4). */
 final class GraftLakeTable(ident: Identifier, dir: String,
     version: Option[Int]) extends Table
     with SupportsRead with SupportsWrite with SupportsDeleteV2
@@ -749,8 +752,7 @@ final class GraftLakeTable(ident: Identifier, dir: String,
     *  - `_file` (Iceberg's `_file`): the manifest path of the data file
     *    serving each row — per-row lineage for layout debugging
     *    (`SELECT _file, count(*) ... GROUP BY _file`) and targeted
-    *    maintenance; the copy-on-write delete finds and rewrites its
-    *    touched files through it.
+    *    maintenance.
     *  - `_pos` (Iceberg's `_pos`): the row's 0-based physical position
     *    in that file, counting masked rows — what the positional
     *    delete files record, served by the positioned reader
@@ -762,8 +764,9 @@ final class GraftLakeTable(ident: Identifier, dir: String,
     *    so Spark's rewrite NULLIFIES it for updated rows and the read
     *    serves the replacement file's birth = the update's own commit
     *    version. MERGE reinserts nullify both → fresh identity.
-    *  - the shredded-JSON columns, so the rewrite can reference them
-    *    while `SELECT *` stays clean.
+    *  - the shredded-JSON columns, so the read rewrite can reference
+    *    them and a row-level DELETE can carry them into its
+    *    replacement files, while `SELECT *` stays clean.
     * A DATA column named `_file` or `_pos` shadows the metadata
     * column of that name. */
   override def metadataColumns()
@@ -838,12 +841,14 @@ final class GraftLakeTable(ident: Identifier, dir: String,
         s"${GraftLakeTable.WapBranchConf}='$b' is set — fast_forward " +
         "or drop the branch first"))
 
-  /** `UPDATE` / `MERGE INTO` / non-metadata `DELETE` — the group-based
-    * copy-on-write rewrite ([[GraftLakeRowLevelOperation]]); groups
-    * are files, untouched files carry forward by reference. Plain
-    * DELETE still short-circuits through [[deleteWhere]] when its
-    * condition translates (Spark's metadata-only delete rule asks
-    * [[canDeleteWhere]] first). */
+  /** `UPDATE` / `MERGE INTO` / copy-on-write `DELETE` — the one
+    * group-based copy-on-write rewrite ([[GraftLakeRowLevelOperation]]);
+    * groups are files, untouched files carry forward by reference.
+    * Only a merge-on-read DELETE short-circuits through
+    * [[deleteWhere]] (Spark's metadata-only delete rule asks
+    * [[canDeleteWhere]] first). A DELETE on a shredded table carries
+    * the stored shredded-JSON columns through unchanged, so serving
+    * survives it. */
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     if (version.isDefined) throw new UnsupportedOperationException(
@@ -858,9 +863,14 @@ final class GraftLakeTable(ident: Identifier, dir: String,
     // under WAP the rewrite bases on the branch head and its commit
     // stages onto the branch — DML participates in write-audit-publish
     val wap = wapBranch
+    val carried =
+      if (info.command != RowLevelOperation.Command.DELETE) Seq.empty
+      else shredServing.toSeq.flatMap(_._2).map(p =>
+        StructField(LakeJsonShred.shredColName(p), p.dt))
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation =
-        new GraftLakeRowLevelOperation(dir, info.command, schema(), wap)
+        new GraftLakeRowLevelOperation(dir, info.command, schema(), wap,
+          carried)
     }
   }
 
@@ -1112,31 +1122,30 @@ final class GraftLakeTable(ident: Identifier, dir: String,
             snapshot.stats.get(p).map(p -> _)).toMap)
         else None)
 
-  /** `DELETE FROM` lands here when every conjunct of the condition
-    * translates (the analyzer ANDs the array): V2 predicates → the
-    * stable V1 filter algebra → a `Column`, executed by
-    * [[VersionedTable.deleteWhere]]'s copy-on-write commit — untouched
-    * files carry forward by reference, only files containing matches
-    * rewrite (spec-pinned). An untranslatable condition makes
-    * `canDeleteWhere` return false and Spark fails the statement
-    * loudly rather than silently widening the delete. `TRUNCATE TABLE`
-    * overrides the scan-everything default with a schema-preserving
-    * empty commit. */
+  /** `DELETE FROM` lands here only when it is MERGE-ON-READ — the
+    * table sets `graft.delete.mode = merge-on-read`, or the snapshot
+    * already carries masks — and every conjunct of the condition
+    * translates (the analyzer ANDs the array). Every other DELETE,
+    * copy-on-write included, declines here and plans as Spark's
+    * `ReplaceData` through [[GraftLakeRowLevelOperation]], like UPDATE
+    * and MERGE: manifest stats and the runtime group filter pick the
+    * files to rewrite, untouched files carry forward by reference.
+    * `TRUNCATE TABLE` overrides the scan-everything default with a
+    * schema-preserving empty commit. */
   override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
     version.isEmpty &&
-      // the metadata-delete shortcut targets MAIN ([[VersionedTable
-      // .deleteWhere]]); under WAP, declining here routes the DELETE
-      // through the row-level operation, which stages on the branch
+      (deleteMode == "merge-on-read" || snapshot.deleteFiles.nonEmpty) &&
+      // the mask commit targets MAIN; under WAP, declining here routes
+      // the DELETE through the row-level operation, which stages on
+      // the branch
       wapBranch.isEmpty &&
       // mapped tables: route to the row-level path's loud refusal
       mapping.isEmpty &&
       predicates.forall(p =>
         PredicateBridge.toV1(p).flatMap(GraftLakeTable.toColumn).isDefined)
 
-  /** Dispatch by `graft.delete.mode`: `merge-on-read` records
-    * positional delete files (zero data rewrite — and the only legal
-    * mode once DVs are outstanding), anything else runs the
-    * copy-on-write rewrite. */
+  /** The merge-on-read DELETE: records positional delete files, zero
+    * data rewrite ([[VersionedTable.deleteWhereMergeOnRead]]). */
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     if (version.isDefined) throw new UnsupportedOperationException(
       s"cannot delete from time-travel snapshot ${ident.toString} " +
@@ -1146,9 +1155,7 @@ final class GraftLakeTable(ident: Identifier, dir: String,
         .getOrElse(throw new UnsupportedOperationException(
           s"cannot translate delete predicate $p")))
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (deleteMode == "merge-on-read" || snapshot.deleteFiles.nonEmpty)
-      VersionedTable.deleteWhereMergeOnRead(spark, dir, cond)
-    else VersionedTable.deleteWhere(spark, dir, cond)
+    VersionedTable.deleteWhereMergeOnRead(spark, dir, cond)
     ()
   }
 
@@ -1176,42 +1183,9 @@ final class GraftLakeTable(ident: Identifier, dir: String,
         // A PARTITIONED table's streaming writes cluster on the
         // transform instead (resolved through this catalog's own
         // `bucket` function), so each task feeds few fanout files.
-        val ordering = VersionedTable.clusteringV2Sort(
-          SparkSession.active, dir)
-        // only identity/bucket transforms enter the DECLARED
-        // distribution: Spark's DistributionAndOrderingUtils cannot
-        // resolve the time/truncate transforms in a write
-        // distribution ("not currently supported") — routing still
-        // lands per-value files, the distribution is a fanout-width
-        // optimization only
-        val distributable = partSpec.map(_.filter {
-          case _: LakePartitioning.IdentitySpec |
-               _: LakePartitioning.BucketSpec => true
-          case _ => false
-        }).filter(_.nonEmpty)
-        val dist = distributable match {
-          case Some(specs) =>
-            Some(org.apache.spark.sql.connector.distributions
-              .Distributions.clustered(
-                specs.map(_.transform
-                  : org.apache.spark.sql.connector.expressions.Expression)
-                  .toArray))
-          case None if partSpec.isEmpty && ordering.nonEmpty =>
-            Some(org.apache.spark.sql.connector.distributions
-              .Distributions.ordered(ordering))
-          case None => None
-        }
-        dist match {
-          case None => new LakeWrite(replace, info)
-          case Some(d) => new LakeWrite(replace, info)
-              with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              d
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              if (partSpec.isDefined) Array.empty else ordering
-          }
+        val l = LakePartitioning.writeLayout(spark, dir, partSpec)
+        new LakeWrite(replace, info) with LakePartitioning.DeclaredLayout {
+          override protected def layout = l
         }
       }
     }

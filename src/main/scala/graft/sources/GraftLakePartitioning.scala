@@ -5,9 +5,11 @@ import scala.util.chaining._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{Expressions, Literal, Transform}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Literal, SortOrder, Transform}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory, Scan, SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -195,6 +197,40 @@ object LakePartitioning {
   def specOf(spark: SparkSession, dir: String): Option[Seq[Spec]] =
     Option(GraftLakeTable.readProperties(spark, dir).get(Prop))
       .flatMap(parse)
+
+  /** The write layout a lake table declares to Spark
+    * ([[DeclaredLayout]]) — one rule for the batch, streaming and
+    * row-level writes. A PARTITIONED table clusters on its identity/
+    * bucket transforms, so each task feeds few fanout files; Spark's
+    * DistributionAndOrderingUtils cannot resolve the time/truncate
+    * transforms in a write distribution, so those declare nothing
+    * (routing still lands per-value files — the distribution is a
+    * fanout-width optimization only). A declared-CLUSTERED table
+    * (`graft.write.ordered-by`) range-distributes and sorts by its
+    * terms, so its files come back with disjoint key ranges. Anything
+    * else declares no requirement, and Spark leaves the plan alone. */
+  def writeLayout(spark: SparkSession, dir: String,
+      partSpecs: Option[Seq[Spec]]): (Distribution, Array[SortOrder]) = {
+    val distributable = partSpecs.map(_.filter {
+      case _: IdentitySpec | _: BucketSpec => true
+      case _ => false
+    }).filter(_.nonEmpty)
+    lazy val ordering = VersionedTable.clusteringV2Sort(spark, dir)
+    distributable match {
+      case Some(specs) => (Distributions.clustered(
+        specs.map(_.transform: Expression).toArray), Array.empty)
+      case None if partSpecs.isEmpty && ordering.nonEmpty =>
+        (Distributions.ordered(ordering), ordering)
+      case None => (Distributions.unspecified(), Array.empty)
+    }
+  }
+
+  /** A lake Write's [[writeLayout]] as Spark's requirement. */
+  trait DeclaredLayout extends RequiresDistributionAndOrdering {
+    protected def layout: (Distribution, Array[SortOrder])
+    override def requiredDistribution(): Distribution = layout._1
+    override def requiredOrdering(): Array[SortOrder] = layout._2
+  }
 
   /** A data file's birth commit version — structural in its path
     * (`files-v<N>-<nonce>/…`), which is what makes per-file spec

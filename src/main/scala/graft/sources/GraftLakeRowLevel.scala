@@ -13,13 +13,14 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetTable, Parq
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Group-based copy-on-write row-level operation for the lake catalog —
-  * the machinery behind SQL `UPDATE` and `MERGE INTO` (and `DELETE`
-  * when its condition doesn't translate to the metadata-only path).
-  * The rewrite group is a FILE, Delta/Iceberg's copy-on-write shape:
+  * the one machinery behind SQL `UPDATE`, `MERGE INTO` and every
+  * copy-on-write `DELETE` (only a merge-on-read DELETE takes the
+  * metadata-only path, [[GraftLakeTable.canDeleteWhere]]). The rewrite
+  * group is a FILE, Delta/Iceberg's copy-on-write shape:
   *
   *  - **Scan side**: Spark's group-based planning hands the command's
   *    target-only conjuncts to [[LakeScanBuilder.pushFilters]] for
@@ -40,9 +41,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    listing every UNSELECTED file by reference (byte-identical
   *    paths, zero IO) plus the new files — the same atomic
   *    manifest-rename commit point as every other lake write. The
-  *    version was pinned when the operation was created, so a
-  *    concurrent committer makes the rename fail LOUDLY (optimistic
-  *    concurrency) instead of silently dropping either write.
+  *    commit takes the next free version number at commit time; a
+  *    commit that finds that manifest already published throws, but
+  *    two truly concurrent committers can both win the
+  *    check-then-rename today and one write is lost (ROADMAP item 4).
   *
   * If a statement plans multiple scans over the operation (Spark's
   * subquery-condition rewrites do), the replaced set is the UNION of
@@ -52,7 +54,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * .vacuum]] reclaims replaced files after retention.
   */
 final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
-    schema: StructType, branch: Option[String] = None)
+    schema: StructType, branch: Option[String] = None,
+    carried: Seq[StructField] = Seq.empty)
     extends RowLevelOperation {
 
   private def spark: SparkSession = SparkSession.active
@@ -84,27 +87,42 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
     s"GraftLakeRowLevel($cmd, $dir @ v$pinnedV)"
 
   /** ROW LINEAGE through the rewrite ([[LakeRowLineage]]): when the
-    * table declares it (and the snapshot is mask-free — the DV scan
-    * cannot serve positions AND lineage, and a silent full id churn
-    * would be worse than the loud refusal below), the operation asks
-    * Spark for the lineage METADATA columns; the group-based
-    * `ReplaceData` plan then reads them ([[LakeScanBuilder]] serves
-    * them via [[GraftLakeDvScan]]), nullifies per the preservation
-    * contract (update → null `_last_updated_version`, reinsert → null
-    * both), and hands them back to the write
-    * (`DataWriter.write(meta, row)`), which MATERIALIZES them as the
-    * hidden physical columns — ids survive UPDATE/MERGE/DELETE. */
+    * table declares it, the operation asks Spark for the lineage
+    * METADATA columns; the group-based `ReplaceData` plan then reads
+    * them ([[LakeScanBuilder]] serves them via [[GraftLakeDvScan]]),
+    * nullifies per the preservation contract (update → null
+    * `_last_updated_version`, reinsert → null both), and hands them
+    * back to the write (`DataWriter.write(meta, row)`), which
+    * MATERIALIZES them as the hidden physical columns — ids survive
+    * UPDATE/MERGE/DELETE. */
   private lazy val lineageOn: Boolean =
     VersionedTable.lineageEnabled(spark, dir, snap.meta)
 
+  /** The metadata the rewrite carries, as (metadata column, the
+    * physical column the write appends it as), in
+    * [[requiredMetadataAttributes]] order: the lineage columns, then
+    * `carried` — stored hidden columns a DELETE copies through
+    * unchanged (the shredded-JSON columns: a DELETE does not change a
+    * surviving row, so its stored values stay exact). */
+  private lazy val metaCols: Seq[(String, StructField)] =
+    (if (!lineageOn) Seq.empty
+     else Seq(
+       LakeRowLineage.RowIdCol ->
+         StructField(LakeRowLineage.PhysRowId, LongType),
+       LakeRowLineage.LastUpdCol ->
+         StructField(LakeRowLineage.PhysLastUpd, IntegerType))) ++
+      carried.map(f => f.name -> f)
+
+  private def metaFields: Seq[StructField] = metaCols.map(_._2)
+
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (!lineageOn) Array.empty
-    else Array(
-      org.apache.spark.sql.connector.expressions.Expressions
-        .column(LakeRowLineage.RowIdCol),
-      org.apache.spark.sql.connector.expressions.Expressions
-        .column(LakeRowLineage.LastUpdCol))
+    metaCols.map(c => org.apache.spark.sql.connector.expressions
+      .Expressions.column(c._1)).toArray
+
+  /** What the rewrite scans read: the data columns plus the carried
+    * hidden ones, which the scan serves under their metadata names. */
+  private def scanSchema: StructType = StructType(schema.fields ++ carried)
 
   /** Clean snapshots get the group-pruning scan; snapshots with
     * outstanding merge-on-read delete files read through the
@@ -117,7 +135,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
       options: CaseInsensitiveStringMap): ScanBuilder = {
     val b: ScanBuilder with LakeRewriteScan =
       if (snap.deleteFiles.isEmpty)
-        new LakeScanBuilder(dir, snapshotFiles, schema, options,
+        new LakeScanBuilder(dir, snapshotFiles, scanSchema, options,
           snap.stats,
           lineage =
             if (lineageOn) Some(LakeRowLineage.perFile(snap)) else None)
@@ -128,15 +146,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
         // materialized value — mask-independent), so row-level DML
         // over deletion vectors preserves row ids end-to-end and the
         // commit doubles as the chain's compaction
-        val physSchema =
-          if (!lineageOn) schema
-          else StructType(schema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(
-              LakeRowLineage.PhysRowId,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(
-              LakeRowLineage.PhysLastUpd,
-              org.apache.spark.sql.types.IntegerType)))
+        val physSchema = StructType(schema.fields ++ metaFields)
         val inner = new GraftLakeDvScanBuilder(
           ParquetTable("lake_rewrite_dv_scan", spark,
             CaseInsensitiveStringMap.empty(),
@@ -188,145 +198,99 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = {
-        // a PARTITIONED table's rewrite clusters on the transforms
-        // (so each task feeds few fanout files) and routes rows into
-        // per-value claim dirs — replacement files keep the key-claim
-        // layout and the SPJ contract SURVIVES row-level DML. A
-        // declared-clustered table's rewrite declares its sort layout
-        // instead (RequiresDistributionAndOrdering): V2Writes inserts
-        // the range shuffle + sort, so replacement files come back
-        // with disjoint key ranges exactly like commit-path files.
+        // a PARTITIONED table's rewrite routes rows into per-value
+        // claim dirs, so replacement files keep the key-claim layout
+        // and the SPJ contract SURVIVES row-level DML; the declared
+        // layout (partition clustering, or a clustered table's range
+        // shuffle + sort) comes back on the replacement files too
         val partSpecs = LakePartitioning.specOf(spark, dir)
-        val ordering = VersionedTable.clusteringV2Sort(spark, dir)
-        // only identity/bucket are declarable in a write distribution:
-        // Spark's DistributionAndOrderingUtils cannot resolve the
-        // time/truncate transforms there (see GraftLakeTable
-        // .newWriteBuilder) — routing still lands per-value files,
-        // the distribution is a fanout-width optimization only
-        val distributable = partSpecs.map(_.filter {
-          case _: LakePartitioning.IdentitySpec |
-               _: LakePartitioning.BucketSpec => true
-          case _ => false
-        }).filter(_.nonEmpty)
-        val dist = distributable match {
-          case Some(specs) =>
-            Some(org.apache.spark.sql.connector.distributions
-              .Distributions.clustered(
-                specs.map(_.transform
-                  : org.apache.spark.sql.connector.expressions.Expression)
-                  .toArray))
-          case None if partSpecs.isEmpty && ordering.nonEmpty =>
-            Some(org.apache.spark.sql.connector.distributions
-              .Distributions.ordered(ordering))
-          case None => None
-        }
-        dist match {
-          case None => new Write {
-            override def toBatch: BatchWrite = batchWrite(info, partSpecs)
-          }
-          case Some(d) => new Write
-              with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-            override def requiredDistribution()
-                : org.apache.spark.sql.connector.distributions.Distribution =
-              d
-            override def requiredOrdering()
-                : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-              if (partSpecs.isDefined) Array.empty else ordering
-            override def toBatch: BatchWrite = batchWrite(info, partSpecs)
-          }
+        val l = LakePartitioning.writeLayout(spark, dir, partSpecs)
+        new Write with LakePartitioning.DeclaredLayout {
+          override protected def layout = l
+          override def toBatch: BatchWrite = batchWrite(info, partSpecs)
         }
       }
     }
 
   private def batchWrite(info: LogicalWriteInfo,
       partSpecs: Option[Seq[LakePartitioning.Spec]]): BatchWrite = {
-          // next FREE number, not pinnedV+1: branch-staged manifests
-          // share the sequence, and a collision would fail the rename
-          val newV = VersionedTable.nextVersion(spark, dir)
-          val dataDir = s"$dir/files-v$newV-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          // lineage rewrites land the carried metadata as the hidden
-          // physical columns: the file schema widens by two nullable
-          // fields and the writer joins them on per row
-          // ([[LineageWriterFactory]])
-          val writeSchema =
-            if (!lineageOn) info.schema()
-            else StructType(info.schema().fields ++ Seq(
-              org.apache.spark.sql.types.StructField(
-                LakeRowLineage.PhysRowId,
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField(
-                LakeRowLineage.PhysLastUpd,
-                org.apache.spark.sql.types.IntegerType)))
-          val writeInfo: LogicalWriteInfo =
-            if (!lineageOn) info
-            else new LogicalWriteInfo {
-              override def options(): CaseInsensitiveStringMap =
-                info.options()
-              override def queryId(): String = info.queryId()
-              override def schema(): StructType = writeSchema
-            }
-          val inner = partSpecs match {
-            case None =>
-              ParquetWrite(Seq(dataDir), "parquet",
-                (_: org.apache.spark.sql.types.DataType) => true,
-                writeInfo).toBatch
-            case Some(specs) =>
-              // partition-routing fanout: claims restore with the
-              // rewrite, published from the tasks' COMMIT MESSAGES
-              // (a speculative attempt's stray files are never
-              // referenced; vacuum sweeps them). Partition columns
-              // keep their ordinals under the widened schema (lineage
-              // fields append at the END), so the router is exact.
-              new LakeFanoutBatchWrite(dataDir,
-                org.apache.spark.sql.graftbridge.ParquetRowWriterBridge
-                  .prepare(spark, writeSchema),
-                LakePartitioning.rowRouter(specs, writeSchema),
-                spark.sparkContext.hadoopConfiguration)
-          }
-          new BatchWrite {
-            override def createBatchWriterFactory(
-                p: PhysicalWriteInfo): DataWriterFactory =
-              if (lineageOn)
-                new LineageWriterFactory(
-                  inner.createBatchWriterFactory(p))
-              else new OpStrippingWriterFactory(
-                inner.createBatchWriterFactory(p), info.schema())
-            override def useCommitCoordinator(): Boolean =
-              inner.useCommitCoordinator()
-            override def commit(msgs: Array[WriterCommitMessage]): Unit = {
-              inner.commit(msgs)
-              val s = spark
-              val replaced = replacedFiles.toSet
-              val kept = snapshotFiles.filterNot(replaced.contains)
-              val fresh = inner match {
-                case f: LakeFanoutBatchWrite => f.committedFiles(s, msgs)
-                case _ => VersionedTable.listDataFiles(s, dir, dataDir)
-              }
-              // DV path replaces every file (scan applied the masks),
-              // so the published snapshot is clean; on the pruned COW
-              // path no masks existed to carry
-              val deletes =
-                if (kept.isEmpty) Seq.empty[String] else snap.deleteFiles
-              // carried files keep manifest stats by reference; only
-              // the fresh files' footers are read at publish. Staged
-              // (WAP) DML labels the manifest and advances the branch
-              // ref — main is untouched until fast_forward.
-              val meta = branch match {
-                case Some(b) =>
-                  snap.meta + (VersionedTable.BranchMetaKey -> b)
-                case None => snap.meta
-              }
-              VersionedTable.publishVersion(s, dir, newV, kept ++ fresh,
-                deletes, snap.stats, meta,
-                op = cmd.toString.toLowerCase)
-              branch.foreach(b =>
-                VersionedTable.moveBranch(s, dir, b, newV))
-              ()
-            }
-            override def abort(msgs: Array[WriterCommitMessage]): Unit =
-              inner.abort(msgs)
-          }
+    // next FREE number, not pinnedV+1: branch-staged manifests share
+    // the sequence, and a collision would fail the rename
+    val newV = VersionedTable.nextVersion(spark, dir)
+    val dataDir = s"$dir/files-v$newV-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    // the metadata the rewrite carries lands as hidden physical
+    // columns: the file schema widens by [[metaFields]] and the writer
+    // joins them on per row ([[MetadataColumnsWriterFactory]])
+    val writeSchema = StructType(info.schema().fields ++ metaFields)
+    val writeInfo: LogicalWriteInfo =
+      if (metaFields.isEmpty) info
+      else new LogicalWriteInfo {
+        override def options(): CaseInsensitiveStringMap = info.options()
+        override def queryId(): String = info.queryId()
+        override def schema(): StructType = writeSchema
+      }
+    val inner = partSpecs match {
+      case None =>
+        ParquetWrite(Seq(dataDir), "parquet",
+          (_: org.apache.spark.sql.types.DataType) => true,
+          writeInfo).toBatch
+      case Some(specs) =>
+        // partition-routing fanout: claims restore with the rewrite,
+        // published from the tasks' COMMIT MESSAGES (a speculative
+        // attempt's stray files are never referenced; vacuum sweeps
+        // them). Partition columns keep their ordinals under the
+        // widened schema (metadata fields append at the END), so the
+        // router is exact.
+        new LakeFanoutBatchWrite(dataDir,
+          org.apache.spark.sql.graftbridge.ParquetRowWriterBridge
+            .prepare(spark, writeSchema),
+          LakePartitioning.rowRouter(specs, writeSchema),
+          spark.sparkContext.hadoopConfiguration)
+    }
+    new BatchWrite {
+      override def createBatchWriterFactory(
+          p: PhysicalWriteInfo): DataWriterFactory =
+        if (metaFields.nonEmpty)
+          new MetadataColumnsWriterFactory(
+            inner.createBatchWriterFactory(p),
+            metaFields.map(_.dataType).toArray)
+        else new OpStrippingWriterFactory(
+          inner.createBatchWriterFactory(p), info.schema())
+      override def useCommitCoordinator(): Boolean =
+        inner.useCommitCoordinator()
+      override def commit(msgs: Array[WriterCommitMessage]): Unit = {
+        inner.commit(msgs)
+        val s = spark
+        val replaced = replacedFiles.toSet
+        val kept = snapshotFiles.filterNot(replaced.contains)
+        val fresh = inner match {
+          case f: LakeFanoutBatchWrite => f.committedFiles(s, msgs)
+          case _ => VersionedTable.listDataFiles(s, dir, dataDir)
+        }
+        // DV path replaces every file (scan applied the masks), so the
+        // published snapshot is clean; on the pruned COW path no masks
+        // existed to carry
+        val deletes =
+          if (kept.isEmpty) Seq.empty[String] else snap.deleteFiles
+        // carried files keep manifest stats by reference; only the
+        // fresh files' footers are read at publish, and the recorded
+        // schema learns what this write wrote. Staged (WAP) DML
+        // labels the manifest and advances the branch ref — main is
+        // untouched until fast_forward.
+        val meta = branch match {
+          case Some(b) => snap.meta + (VersionedTable.BranchMetaKey -> b)
+          case None => snap.meta
+        }
+        VersionedTable.publishVersion(s, dir, newV, kept ++ fresh,
+          writeSchema, deletes, snap.stats, meta,
+          op = cmd.toString.toLowerCase)
+        branch.foreach(b => VersionedTable.moveBranch(s, dir, b, newV))
+        ()
+      }
+      override def abort(msgs: Array[WriterCommitMessage]): Unit =
+        inner.abort(msgs)
+    }
   }
 }
 
@@ -450,6 +414,54 @@ private final class OpStrippingWriterFactory(
           // dropped: a delete must not be written back
         } else { proj.project(row); w.write(proj) }
       }
+      override def commit(): WriterCommitMessage = w.commit()
+      override def abort(): Unit = w.abort()
+      override def close(): Unit = w.close()
+    }
+  }
+}
+
+/** Writes the metadata a row-level rewrite carries as hidden
+  * physical columns: Spark hands each row with its metadata row
+  * (`DataWriter.write(meta, row)`, in
+  * [[GraftLakeRowLevelOperation.requiredMetadataAttributes]] order),
+  * and the file row is the data row with the metadata values joined
+  * on — `_row_id`/`_last_updated_version` as the materialized lineage
+  * columns, a DELETE's carried shredded-JSON columns as themselves.
+  * Spark already nullified what must not carry (update → null
+  * `_last_updated_version`, reinsert → null both); nulls materialize
+  * as nulls, and the read side's manifest fallback serves fresh
+  * lineage for them. */
+private final class MetadataColumnsWriterFactory(
+    inner: DataWriterFactory,
+    types: Array[org.apache.spark.sql.types.DataType])
+    extends DataWriterFactory {
+  import org.apache.spark.sql.catalyst.InternalRow
+
+  override def createWriter(partitionId: Int,
+      taskId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] = {
+    val w = inner.createWriter(partitionId, taskId)
+    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+      private val joined =
+        new org.apache.spark.sql.catalyst.expressions.JoinedRow
+      private val tail = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(types.length)
+
+      override def write(meta: InternalRow, row: InternalRow): Unit = {
+        var i = 0
+        while (i < types.length) {
+          tail.update(i, if (meta.isNullAt(i)) null else meta.get(i, types(i)))
+          i += 1
+        }
+        w.write(joined(row, tail))
+      }
+
+      override def write(row: InternalRow): Unit = {
+        var i = 0
+        while (i < types.length) { tail.setNullAt(i); i += 1 }
+        w.write(joined(row, tail))
+      }
+
       override def commit(): WriterCommitMessage = w.commit()
       override def abort(): Unit = w.abort()
       override def close(): Unit = w.close()
@@ -1005,7 +1017,10 @@ private[sources] final class LakeGroupScan(inner: Scan,
     * (conservative: wrong pick only costs prune opportunities). */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val out = inner.readSchema().fieldNames.map(_.toLowerCase).toSet
+    // data columns only: a DELETE's carried shredded columns are
+    // metadata the matching-rows subquery does not read
+    val out = inner.readSchema().fieldNames
+      .filterNot(LakeJsonShred.isShredCol).map(_.toLowerCase).toSet
     val covered = LakeFilePrune.attrs(builder.staticSelected, builder.stats)
       .map(_.fieldNames()(0))
       .filter(c => out.contains(c.toLowerCase))

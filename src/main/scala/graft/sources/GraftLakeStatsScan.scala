@@ -620,9 +620,9 @@ private[sources] object LakeFilePrune {
 
   /** `_file` pruning: every `_file = 'p'` / `_file IN (...)` filter
     * (callers pass filters only when `_file` is the metadata column)
-    * keeps exactly the files it names — the copy-on-write delete's
-    * rewrite reads its touched files this way. Returns DECODED paths
-    * of the files no such filter names. */
+    * keeps exactly the files it names, so a query aimed at known files
+    * (`WHERE _file IN (...)`, targeted maintenance) opens only those.
+    * Returns DECODED paths of the files no such filter names. */
   def fileColDropped(
       catalystFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       files: Seq[String]): Set[String] = {

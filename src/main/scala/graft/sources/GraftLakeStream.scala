@@ -323,35 +323,17 @@ private[sources] final class GraftLakeMicroBatchStream(dir: String,
       .map { case (f, rs) => f -> rs.map(_.getLong(1)).distinct.sorted }
   }
 
-  /** EQUALITY deletes resolved to per-file POSITIONS over `files` —
-    * one delta-scoped job per call: rows whose key tuple matches any
-    * eq file's set (null-safe, version-scoped: a delete at D masks
-    * only files born before D) collect as (file, row_index), the
-    * currency the stream's whole-file readers already speak. Masked
-    * rows are keys-sized, never table-sized. */
-  private def eqPositions(files: Seq[String],
-      eqFiles: Seq[String]): Map[String, Array[Long]] = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_extract}
-    if (files.isEmpty || eqFiles.isEmpty) return Map.empty
-    val tagged = spark.read.option("mergeSchema", "true")
-      .parquet(files: _*)
-      .withColumn("__graft_f", col("_metadata.file_path"))
-      .withColumn("__graft_p", col("_metadata.row_index"))
-    val matched = eqFiles.map { ef =>
-      val delV = LakePartitioning.fileVersionOfPath(ef).getOrElse(
-        throw new IllegalStateException(
-          s"equality-delete file $ef carries no version in its path"))
-      val keys = spark.read.parquet(ef).distinct()
-      val cond = keys.columns.map(k =>
-        tagged(k) <=> keys(k)).reduce(_ && _) &&
-        regexp_extract(col("__graft_f"),
-          "/files-v(\\d+)-", 1).cast("int") < lit(delV)
-      tagged.join(broadcast(keys), cond, "left_semi")
-        .select(col("__graft_f"), col("__graft_p"))
-    }.reduce(_ union _).distinct().collect()
-    matched.groupBy(r => norm(r.getString(0)))
-      .map { case (f, rs) => f -> rs.map(_.getLong(1)).distinct.sorted }
-  }
+  /** EQUALITY deletes resolved to per-file POSITIONS over `files` (data
+    * files of `snap`) — one delta-scoped job per call
+    * ([[VersionedTable.eqDeletePositions]]), collected as the currency
+    * the stream's whole-file readers already speak. Masked rows are
+    * keys-sized, never table-sized. */
+  private def eqPositions(snap: VersionedTable.Snapshot, files: Seq[String],
+      eqFiles: Seq[String]): Map[String, Array[Long]] =
+    if (files.isEmpty || eqFiles.isEmpty) Map.empty
+    else VersionedTable.eqDeletePositions(spark, snap, files, eqFiles)
+      .collect().groupBy(r => norm(r.getString(0)))
+      .map { case (f, rs) => f -> rs.map(_.getLong(1)).sorted }
 
   /** Per-file union of two position maps (sorted, distinct). */
   private def mergeMasks(a: Map[String, Array[Long]],
@@ -427,7 +409,7 @@ private[sources] final class GraftLakeMicroBatchStream(dir: String,
       val (eqD, posD) =
         snap.deleteFiles.partition(VersionedTable.isEqualityDelete)
       val masks = mergeMasks(masksOf(posD),
-        eqPositions(snap.dataFiles, eqD))
+        eqPositions(snap, snap.dataFiles, eqD))
       snap.dataFiles.foreach { f =>
         work += ((f, null,
           masks.getOrElse(norm(f), Array.emptyLongArray), "insert", e.v))
@@ -487,7 +469,7 @@ private[sources] final class GraftLakeMicroBatchStream(dir: String,
           else mergeMasks(
             if (prevPos.nonEmpty) masksOf(prevPos)
             else Map.empty[String, Array[Long]],
-            eqPositions(touched, prevEq))
+            eqPositions(prev, touched, prevEq))
         }
         // added files are born AT v: no equality delete (scoped to
         // files born before its commit) can mask them — positional
@@ -521,7 +503,7 @@ private[sources] final class GraftLakeMicroBatchStream(dir: String,
           else mergeMasks(
             if (newPos.nonEmpty) masksOf(newPos)
             else Map.empty[String, Array[Long]],
-            eqPositions(kept, newEq)).toSeq.flatMap { case (f, ps) =>
+            eqPositions(cur, kept, newEq)).toSeq.flatMap { case (f, ps) =>
             val already =
               prevMasks.getOrElse(f, Array.emptyLongArray).toSet
             val fresh = ps.filterNot(already.contains)
@@ -734,7 +716,7 @@ private[sources] final class GraftLakeStreamingWrite(dir: String,
         s"failed to stage epoch $epochId of $queryId into $dataDir")
     val fresh = VersionedTable.listDataFiles(spark, dir, dataDir)
     VersionedTable.publishVersion(spark, dir, newV,
-      snap.dataFiles ++ fresh, snap.deleteFiles, snap.stats,
+      snap.dataFiles ++ fresh, info.schema(), snap.deleteFiles, snap.stats,
       snap.meta + (epochKey -> epochId.toString),
       op = "stream-append")
     ()

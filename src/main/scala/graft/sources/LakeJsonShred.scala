@@ -43,10 +43,12 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *
   * The rewrite is CORRECTNESS-GATED per table: it fires only when
   * every live data file physically carries the shredded columns
-  * (manifest-stats column inventory — zero IO). Files landed by
-  * non-shredding writers (row-level rewrites, upserts) degrade the
-  * table to raw parsing until compaction re-materializes; answers
-  * never change, only the plan does. */
+  * (manifest-stats column inventory — zero IO). Commits, merge-on-read
+  * upserts and compaction shred what they land, and a row-level
+  * DELETE carries the stored columns of its survivors unchanged.
+  * Files landed by UPDATE/MERGE rewrites or the streaming sink lack
+  * them and degrade the table to raw parsing until compaction
+  * re-materializes; answers never change, only the plan does. */
 private[graft] object LakeJsonShred {
 
   /** Table property: `<jsonColumn>:<path>[ <TYPE>][,<path>[ <TYPE>]...]`. */

@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
 
 /** ROW LINEAGE (Iceberg v3 row lineage / Delta row tracking): stable
   * per-row identity that survives compaction and row-level rewrites,
@@ -117,48 +115,4 @@ private[graft] object LakeRowLineage {
         snap.stats.get(p).flatMap(_.firstRowId).getOrElse(-1L),
         LakePartitioning.fileVersionOfPath(p).getOrElse(0))
     }.toMap
-}
-
-/** Write-side lineage materialization for ROW-LEVEL rewrites: wraps
-  * the replacement-file writer so Spark's metadata-ful `ReplaceData`
-  * path ([[org.apache.spark.sql.execution.datasources.v2
-  * .DataAndMetadataWritingSparkTask]] — `DataWriter.write(meta, row)`)
-  * lands each row WITH its carried lineage as the trailing physical
-  * columns. The metadata row is `[_row_id, _last_updated_version]`
-  * in [[GraftLakeRowLevelOperation.requiredMetadataAttributes]]
-  * order; Spark already nullified what must not carry (update →
-  * null `_last_updated_version`, reinsert → null both), and nulls
-  * simply materialize as nulls — the read side's manifest fallback
-  * serves fresh values for them. */
-private[sources] final class LineageWriterFactory(
-    inner: DataWriterFactory) extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = {
-    val w = inner.createWriter(partitionId, taskId)
-    new DataWriter[InternalRow] {
-      private val joined =
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      private val tail = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(2)
-
-      override def write(meta: InternalRow, row: InternalRow): Unit = {
-        tail.update(0,
-          if (meta.isNullAt(0)) null else meta.getLong(0))
-        tail.update(1,
-          if (meta.isNullAt(1)) null else meta.getInt(1))
-        w.write(joined(row, tail))
-      }
-
-      override def write(row: InternalRow): Unit = {
-        tail.update(0, null)
-        tail.update(1, null)
-        w.write(joined(row, tail))
-      }
-
-      override def commit(): WriterCommitMessage = w.commit()
-      override def abort(): Unit = w.abort()
-      override def close(): Unit = w.close()
-    }
-  }
 }

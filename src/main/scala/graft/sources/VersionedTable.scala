@@ -84,14 +84,17 @@ object VersionedTable {
     })
 
   /** Publish `df` as the EXPLICIT version `v` — the raw commit point,
-    * exposed so the two-committer race is deterministically testable.
-    * Each attempt writes its data under a nonce-suffixed directory
-    * (attempts never collide on the filesystem before the real race),
-    * then the manifest rename decides: Hadoop `rename` refuses an
-    * existing destination, so of two committers publishing the same
-    * version exactly ONE wins and the loser throws
-    * IllegalStateException. The loser's data directory is left behind
-    * referenced by no manifest — exactly what [[vacuum]] collects. */
+    * exposed so the two-committer race is testable. Each attempt
+    * writes its data under a nonce-suffixed directory (attempts never
+    * collide on the filesystem before the race), then the manifest
+    * rename decides. Sequentially, a second publish of the same
+    * version finds the destination taken and throws
+    * IllegalStateException. Under true concurrency the rename is
+    * check-then-rename ([[FastLocalFileSystem.rename]]), so both
+    * committers can win and one manifest silently replaces the other
+    * — ROADMAP item 4 makes it refuse-to-replace. A loser's data
+    * directory is left behind referenced by no manifest — exactly
+    * what [[vacuum]] collects. */
   def commitAs(spark: SparkSession, df: DataFrame, dir: String,
       v: Int, carryForward: Boolean = true,
       meta: Map[String, String] = Map.empty,
@@ -365,37 +368,26 @@ object VersionedTable {
   /** Publish an explicit file list as version `v` — the manifest-only
     * commit point for writers that land their data files through
     * Spark's own V2 file write (the lake catalog's row-level
-    * operations) rather than [[writeDataFiles]]. Same atomic rename,
-    * same loser-throws race semantics. `knownStats` carries prior
-    * manifests' per-file stats forward; files not covered (the fresh
-    * ones) get their footers read once here. */
+    * operations, the streaming sink) rather than [[writeDataFiles]].
+    * Same manifest rename as every commit; under concurrent writers it
+    * is not yet a refuse-to-replace point (ROADMAP item 4).
+    * `knownStats` carries prior manifests' per-file stats forward;
+    * files not covered (the fresh ones) get their footers read once
+    * here for stats.
+    *
+    * `written` is the schema the caller wrote its fresh files under
+    * (empty when it landed none): a recorded schema ([[LakeSchema]])
+    * unions with it, so row-level rewrites that materialize lineage
+    * or shredded columns record them. Tables without a recorded
+    * schema stay on inference. */
   private[sources] def publishVersion(spark: SparkSession, dir: String,
-      v: Int, files: Seq[String], deletes: Seq[String] = Seq.empty,
+      v: Int, files: Seq[String], written: StructType,
+      deletes: Seq[String] = Seq.empty,
       knownStats: Map[String, LakeFileStats.FileStats] = Map.empty,
       meta: Map[String, String] = Map.empty,
       op: String = "write"): Int = {
-    // SCHEMA IN THE MANIFEST ([[LakeSchema]]): carried recorded
-    // schema unions with the FRESH files' physical schema (row-level
-    // rewrites materialize lineage columns; the union must learn
-    // them). One delta-scoped schema read — the fresh files' footers
-    // are being read for stats in this same commit anyway. Tables
-    // without a recorded schema stay on inference.
-    val schemaMeta: Map[String, String] =
-      LakeSchema.fromMeta(meta) match {
-        case Some(rec) =>
-          val fresh = files.filterNot(knownStats.contains)
-          if (fresh.isEmpty) Map.empty
-          else Map(LakeSchema.toMeta(LakeSchema.merge(Some(rec),
-            StructType(spark.read.option("mergeSchema", "true")
-              .parquet(fresh: _*).schema.fields
-              // hive-style partition discovery over routed rewrite
-              // dirs (__graft_part*=v/...) must not leak the routing
-              // columns into the recorded schema — they live in
-              // paths, not file bytes
-              .filterNot(_.name.toLowerCase.startsWith(
-                LakePartitioning.PartColPrefix))))))
-        case None => Map.empty
-      }
+    val schemaMeta = LakeSchema.fromMeta(meta)
+      .map(rec => LakeSchema.toMeta(LakeSchema.merge(Some(rec), written)))
     publish(fs(spark, dir), dir, v, files, deletes,
       statsFor(spark, files ++ deletes, knownStats),
       meta ++ schemaMeta, op)
@@ -1131,16 +1123,6 @@ object VersionedTable {
         Some(v)), None, None))
   }
 
-  /** The positioned metadata columns `deleteWhere` and
-    * `deleteWhereMergeOnRead` read; a data column of the same name
-    * would shadow them, so those deletes refuse such tables. */
-  private def requirePositioned(rel: DataFrame, dir: String): Unit =
-    rel.columns.find(c => c.equalsIgnoreCase("_file") ||
-        c.equalsIgnoreCase("_pos"))
-      .foreach(c => throw new UnsupportedOperationException(
-        s"DELETE on $dir: the data column '$c' shadows the metadata " +
-          "column the delete locates rows by"))
-
   /** Lineage enabled for this table (property or an already-assigned
     * watermark in the snapshot meta)? */
   private[sources] def lineageEnabled(spark: SparkSession, dir: String,
@@ -1317,7 +1299,13 @@ object VersionedTable {
       return publish(fs(spark, dir), dir, newV, snap.dataFiles,
         snap.deleteFiles, snap.stats, snap.meta, op = "delete")
     val live = read(spark, dir, Some(v))
-    requirePositioned(live, dir)
+    // a data column named `_file` or `_pos` would shadow the metadata
+    // column the delete locates rows by
+    live.columns.find(c => c.equalsIgnoreCase("_file") ||
+        c.equalsIgnoreCase("_pos"))
+      .foreach(c => throw new UnsupportedOperationException(
+        s"DELETE on $dir: the data column '$c' shadows the metadata " +
+          "column the delete locates rows by"))
     // manifest (decoded) path → the URL-encoded `_metadata.file_path`
     // form; runs on matched rows only
     val urlForm = udf((p: String) => new Path(p).toUri.toString)
@@ -1358,45 +1346,23 @@ object VersionedTable {
     * contract); folding converts them to position bitmaps —
     * compressed, per-file, probe-O(1) — WITHOUT the full compact
     * rewrite. Matching runs as broadcast SEMI joins over the raw
-    * scan (keys are tiny next to data: map-side, no data shuffle),
-    * scoped by birth version exactly like the read path. Returns the
-    * new version. */
+    * scan ([[eqDeletePositions]]). Returns the new version. */
   def convertEqDeletes(spark: SparkSession, dir: String): Int = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_extract}
     val v = headVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir"))
     val snap = snapshotOf(spark, dir, v)
     val (eqDels, posDels) = snap.deleteFiles.partition(isEqualityDelete)
     if (eqDels.isEmpty) return v // nothing to fold
     val newV = nextVersion(spark, dir)
-    // raw scan with (file, position); rows ALREADY positionally
-    // masked need no re-recording (apply is idempotent, but the fold
-    // should stay matches-sized) — subtract the existing masks first
-    val tagged = spark.read.option("mergeSchema", "true")
-      .parquet(snap.dataFiles: _*)
-      .withColumn("__graft_fp", col("_metadata.file_path"))
-      .withColumn("__graft_ri", col("_metadata.row_index"))
-    val live =
-      if (posDels.isEmpty) tagged
-      else tagged.join(
-        spark.read.parquet(posDels: _*)
-          .select(col("file_path").as("__graft_df"),
-            col("row_index").as("__graft_dp")).distinct(),
-        col("__graft_fp") === col("__graft_df") &&
-          col("__graft_ri") === col("__graft_dp"), "left_anti")
-    val positions = eqDels.map { ef =>
-      val delV = LakePartitioning.fileVersionOfPath(ef).getOrElse(
-        throw new IllegalStateException(
-          s"equality-delete file $ef carries no version in its path"))
-      val keys = spark.read.parquet(ef).distinct()
-      val cond = keys.columns.map(k =>
-        live(k) <=> keys(k)).reduce(_ && _) &&
-        regexp_extract(col("__graft_fp"),
-          "/files-v(\\d+)-", 1).cast("int") < lit(delV)
-      live.join(broadcast(keys), cond, "left_semi")
-        .select(col("__graft_fp").as("file_path"),
-          col("__graft_ri").as("row_index"))
-    }.reduce(_ unionAll _).distinct().repartition(1)
+    // rows ALREADY positionally masked need no re-recording (apply is
+    // idempotent, but the fold should stay matches-sized)
+    val matched = eqDeletePositions(spark, snap, snap.dataFiles, eqDels)
+    val positions = (
+      if (posDels.isEmpty) matched
+      else matched.join(spark.read.parquet(posDels: _*)
+        .select("file_path", "row_index"),
+        Seq("file_path", "row_index"), "left_anti")
+    ).repartition(1)
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val delDir = s"$dir/files-v$newV-$nonce"
     positions.write.parquet(delDir)
@@ -1411,6 +1377,38 @@ object VersionedTable {
       (snap.stats -- eqDels) ++
         writtenStats.filter(ws => newDeletes.contains(ws._1)),
       snap.meta, op = "convert_deletes")
+  }
+
+  /** EQUALITY-DELETE MATCHER, shared by [[convertEqDeletes]] and the
+    * change-feed stream: the rows of `files` (data files of `snap`)
+    * whose key tuple one of `eqFiles` records, as distinct
+    * (file_path, row_index) in V1 `_metadata.file_path` form — the
+    * currency positional delete files speak. Null-safe, and scoped by
+    * birth version exactly like the read path: a delete committed at
+    * D masks only files born before D. The scan reads with the
+    * snapshot's recorded schema ([[LakeSchema.physicalSchema]]), and
+    * each equality file is one broadcast SEMI join (keys are tiny next
+    * to data: map-side, no data shuffle). */
+  private[sources] def eqDeletePositions(spark: SparkSession,
+      snap: Snapshot, files: Seq[String], eqFiles: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_extract}
+    val tagged = spark.read.schema(LakeSchema.physicalSchema(spark, snap))
+      .parquet(files: _*)
+      .withColumn("__graft_fp", col("_metadata.file_path"))
+      .withColumn("__graft_ri", col("_metadata.row_index"))
+    eqFiles.map { ef =>
+      val delV = LakePartitioning.fileVersionOfPath(ef).getOrElse(
+        throw new IllegalStateException(
+          s"equality-delete file $ef carries no version in its path"))
+      val keys = spark.read.parquet(ef).distinct()
+      val cond = keys.columns.map(k =>
+        tagged(k) <=> keys(k)).reduce(_ && _) &&
+        regexp_extract(col("__graft_fp"),
+          "/files-v(\\d+)-", 1).cast("int") < lit(delV)
+      tagged.join(broadcast(keys), cond, "left_semi")
+        .select(col("__graft_fp").as("file_path"),
+          col("__graft_ri").as("row_index"))
+    }.reduce(_ union _).distinct()
   }
 
   /** STREAMING read of a lake table (Delta's streaming source, the
@@ -1762,97 +1760,6 @@ object VersionedTable {
       .map(p => f.getFileStatus(new Path(p)).getLen).sum
     compact(spark, dir, math.max(1L,
       math.ceil(total.toDouble / targetFileBytes).toLong).toInt)
-  }
-
-  /** Per-file outcome of a [[deleteWhere]] commit. */
-  final case class DeleteResult(version: Int, deletedRows: Long,
-      rewrittenFiles: Int, carriedFiles: Int)
-
-  /** Copy-on-write DELETE (Delta's delete shape): remove the rows where
-    * `cond` is TRUE and publish the result as a new version —
-    * rewriting ONLY the files that contain matching rows. Two phases,
-    * both distributed:
-    *
-    *  1. Find the TOUCHED files: filter the snapshot ([[read]]) by
-    *     `cond` and count matches per `_file`. Manifest stats and
-    *     blooms drop files that cannot match before the scan starts,
-    *     and parquet pushes `cond` into the files that remain, so on
-    *     a selective delete over a well-laid-out table (q96 range /
-    *     q107 Z-order) phase 1 reads a sliver; only file identities
-    *     and counts come back to the driver (one row per touched
-    *     file — manifest-sized, never data-sized).
-    *  2. Rewrite ONLY the touched files with survivors (rows where
-    *     `cond` is not TRUE — NULL survives, matching SQL DELETE's
-    *     three-valued semantics) into a fresh data dir: the same
-    *     relation filtered to `_file IN touched`, which the scan turns
-    *     into a whole-file prune. Every untouched file carries forward
-    *     BY REFERENCE, byte-identical path strings in the new
-    *     manifest, zero IO.
-    *
-    * On a 100 TB table a delete touching 0.1% of files costs two scans
-    * of that 0.1% (find + rewrite) plus a manifest write — never a
-    * table rewrite. The commit publishes through the same atomic
-    * manifest rename as every other write; prior snapshots keep
-    * serving the deleted rows (time travel), and [[vacuum]] reclaims
-    * the replaced files once retention passes. A no-match delete still
-    * publishes a (file-identical) version, so DML always advances the
-    * version counter deterministically. */
-  def deleteWhere(spark: SparkSession, dir: String,
-      cond: org.apache.spark.sql.Column): DeleteResult = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, not}
-    val v = headVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no committed version at $dir"))
-    val f = fs(spark, dir)
-    val prior = snapshotOf(spark, dir, v)
-    if (prior.deleteFiles.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"copy-on-write delete at $dir would resurrect rows masked by " +
-          "outstanding merge-on-read delete files; use " +
-          "deleteWhereMergeOnRead or compact() first")
-    // the partial rewrite would land survivor files under LOGICAL
-    // names while untouched files keep the old physical names — the
-    // mixed state corrupts mapped reads; compact first
-    LakeColumnMapping.fromMeta(prior.meta).filterNot(_.isIdentity)
-      .foreach(_ => throw new UnsupportedOperationException(
-        s"copy-on-write delete on a column-mapped table at $dir is " +
-          "not supported — run compact first (it rewrites files " +
-          "under the current logical names and clears the mapping)"))
-    val files = prior.dataFiles
-    val newV = nextVersion(spark, dir)
-    if (files.isEmpty)
-      return DeleteResult(
-        publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
-          op = "delete"),
-        0L, 0, 0)
-    val rel = read(spark, dir, Some(v))
-    requirePositioned(rel, dir)
-    val found = rel.filter(cond)
-      .groupBy(col("_file"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val perFile = found.map { case (p, n) => new Path(p).toString -> n }
-      .toMap
-    val (touched, kept) =
-      files.partition(p => perFile.contains(new Path(p).toString))
-    if (touched.isEmpty)
-      return DeleteResult(
-        publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
-          op = "delete"),
-        0L, 0, files.size)
-    // survivors re-shred (the read serves the logical columns) and,
-    // on lineage tables, carry their identity into the new files
-    val survivors = shredFor(spark, dir, withPhysLineage(spark, dir,
-      prior.meta, rel.filter(col("_file").isin(found.map(_._1): _*))
-        .filter(not(coalesce(cond, lit(false))))))
-    // a partitioned table's survivors re-route so the rewrite keeps
-    // every file's key claim (the SPJ layout survives COW deletes)
-    val newFiles = writeDataFiles(spark, survivors, dir, newV,
-      LakePartitioning.specOf(spark, dir))
-    publish(f, dir, newV, kept ++ newFiles, Seq.empty,
-      prior.stats.view.filterKeys(kept.toSet).toMap ++
-        statsFor(spark, newFiles, Map.empty),
-      prior.meta, op = "delete")
-    DeleteResult(newV, perFile.values.sum, touched.size, kept.size)
   }
 
   /** TRUNCATE: publish an empty snapshot that PRESERVES the current

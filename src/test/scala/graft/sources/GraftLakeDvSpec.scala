@@ -41,18 +41,25 @@ class GraftLakeDvSpec extends SparkSpec {
     assert(VersionedTable.read(spark, dir).count() === 12)
   }
 
-  test("facade COW delete refuses on outstanding DVs") {
+  test("COW-mode SQL DELETE over outstanding masks records masks") {
     import spark.implicits._
-    val dir = freshDir()
-    VersionedTable.commit(spark, Seq((1, "a"), (2, "b")).toDF("k", "v"),
-      dir)
+    val (cat, root) = freshCatalog()
+    val dir = s"$root/t"
+    VersionedTable.commit(spark,
+      Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), dir)   // v0
     VersionedTable.deleteWhereMergeOnRead(spark, dir,
-      org.apache.spark.sql.functions.col("k") === 1)
-    val cow = intercept[UnsupportedOperationException] {
-      VersionedTable.deleteWhere(spark, dir,
-        org.apache.spark.sql.functions.col("k") === 2)
-    }
-    assert(cow.getMessage.contains("resurrect"))
+      org.apache.spark.sql.functions.col("k") === 1)            // v1
+    val s1 = VersionedTable.snapshotOf(spark, dir, 1)
+    // no graft.delete.mode: the table is copy-on-write, but a rewrite
+    // now would have to apply the masks first — the DELETE masks too
+    spark.sql(s"DELETE FROM $cat.t WHERE k = 2")                // v2
+    val s2 = VersionedTable.snapshotOf(spark, dir, 2)
+    assert(s2.dataFiles === s1.dataFiles, "the DELETE rewrote data files")
+    assert(s2.deleteFiles.size > s1.deleteFiles.size)
+    assert(spark.sql(s"SELECT k FROM $cat.t").collect()
+      .map(_.getInt(0)).toSeq === Seq(3))
+    assert(VersionedTable.read(spark, dir).collect()
+      .map(_.getInt(0)).toSeq === Seq(3))
   }
 
   test("catalog merge-on-read mode: SQL DELETE writes DVs, reads apply them") {

@@ -44,12 +44,21 @@ class GraftLakeFileColSpec extends SparkSpec {
       .map(_.getString(0)).toSeq === Seq("user-a", "user-b"))
     assert(spark.sql(s"SELECT count(*) FROM $cat.s").collect()(0)
       .getLong(0) === 2L)
-    // the delete locates rows by the metadata column: with it shadowed
-    // the statement refuses rather than match the user's values
+    // a copy-on-write DELETE rewrites by file group, never by the
+    // metadata column: the user's column is ordinary data to it
+    spark.sql(s"DELETE FROM $cat.s WHERE k = 1")
+    assert(spark.sql(s"SELECT k, _file FROM $cat.s").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((2L, "user-b")))
+    // the merge-on-read delete locates rows by the metadata column:
+    // with it shadowed the statement refuses rather than match the
+    // user's values
+    spark.sql(s"CREATE TABLE $cat.m (k BIGINT, _file STRING) " +
+      "TBLPROPERTIES ('graft.delete.mode'='merge-on-read')")
+    spark.sql(s"INSERT INTO $cat.m VALUES (1, 'user-a'), (2, 'user-b')")
     val e = intercept[Exception](
-      spark.sql(s"DELETE FROM $cat.s WHERE k = 1"))
+      spark.sql(s"DELETE FROM $cat.m WHERE k = 1"))
     assert(e.getMessage.contains("shadows"))
-    assert(spark.sql(s"SELECT count(*) FROM $cat.s").collect()(0)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.m").collect()(0)
       .getLong(0) === 2L)
   }
 

@@ -80,13 +80,13 @@ class GraftLakeJsonShredSpec extends SparkSpec {
     val head = VersionedTable.latestVersion(spark, s"$root/e").get
     val snap = VersionedTable.snapshotOf(spark, s"$root/e", head)
     val foreignDir = s"$root/e/files-v${head + 1}-foreign"
-    Seq((4L, """{"k": "d"}""")).toDF("id", "props")
-      .coalesce(1).write.parquet(foreignDir)
+    val foreignDf = Seq((4L, """{"k": "d"}""")).toDF("id", "props")
+    foreignDf.coalesce(1).write.parquet(foreignDir)
     val foreign = VersionedTable.listDataFiles(spark, s"$root/e",
       foreignDir)
     VersionedTable.publishVersion(spark, s"$root/e", head + 1,
-      snap.dataFiles ++ foreign, snap.deleteFiles, snap.stats,
-      snap.meta, op = "foreign")
+      snap.dataFiles ++ foreign, foreignDf.schema, snap.deleteFiles,
+      snap.stats, snap.meta, op = "foreign")
     val degraded = q()
     assert(!readSchemaOf(degraded).contains("__shred_k"),
       "rewrite must not fire over files missing the shredded column")
@@ -99,6 +99,45 @@ class GraftLakeJsonShredSpec extends SparkSpec {
       s"compact must re-earn the shredded plan: ${readSchemaOf(healed)}")
     assert(healed.collect().map(_.getString(1)).toSeq ===
       Seq("a", "B", "c", "d"))
+  }
+
+  test("shredded serving survives a copy-on-write DELETE: the rewrite " +
+      "carries the stored columns, answers unchanged") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.e (id BIGINT, props STRING) " +
+      "TBLPROPERTIES('graft.json.shred'='props:$.plan,$.n BIGINT')")
+    // one file per insert, so each DELETE rewrites a file with survivors
+    spark.sql(s"""INSERT INTO $cat.e SELECT /*+ COALESCE(1) */ * FROM VALUES
+      | (1, '{"plan": "pro", "n": 3}'), (2, '{"plan": "free", "n": 5}'),
+      | (3, '{"n": 9}'), (4, NULL) AS s(id, props)""".stripMargin)
+    spark.sql(s"""INSERT INTO $cat.e SELECT /*+ COALESCE(1) */ * FROM VALUES
+      | (5, '{"plan": "team", "n": 11}'), (6, '{"plan": "pro", "n": 1}')
+      | AS s(id, props)""".stripMargin)
+    def q() = spark.sql(s"SELECT id, get_json_object(props, '$$.plan') " +
+      s"AS p, CAST(get_json_object(props, '$$.n') AS BIGINT) AS n " +
+      s"FROM $cat.e ORDER BY id")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), Option(r.getString(1)),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq
+    val before = rows(q())
+    val dir = s"$root/e"
+    val filesBefore = VersionedTable.filesOf(spark, dir,
+      VersionedTable.headVersion(spark, dir).get)
+    // a translatable and an untranslatable condition: both rewrite
+    spark.sql(s"DELETE FROM $cat.e WHERE id = 2")
+    spark.sql(s"DELETE FROM $cat.e WHERE length(props) > 20 AND id = 5")
+    val after0 = VersionedTable.snapshotOf(spark, dir,
+      VersionedTable.headVersion(spark, dir).get)
+    val fresh = after0.dataFiles.filterNot(filesBefore.contains)
+    assert(fresh.exists(f =>
+      after0.stats.get(f).exists(_.rowCount > 0L)),
+      s"the DELETEs must rewrite files with survivors: $fresh")
+    val after = q()
+    val rs = readSchemaOf(after)
+    assert(rs.contains("__shred_plan") && rs.contains("__shred_n__long"),
+      s"shredded serving must survive DELETE: $rs")
+    assert(!rs.contains("props"), s"raw column must stay pruned: $rs")
+    assert(rows(after) === before.filterNot(r => r._1 == 2L || r._1 == 5L))
   }
 
   test("colliding sanitized column names are rejected loudly") {

@@ -455,13 +455,14 @@ class GraftLakeSpjSpec extends SparkSpec {
     // shows up as the NULL (layout-debt) row
     val tdir = s"$root/pm"
     val stray = s"$tdir/files-vX-foreign"
-    (900L to 901L).toDF("k").withColumn("v", col("k"))
-      .coalesce(1).write.parquet(stray)
+    val strayDf = (900L to 901L).toDF("k").withColumn("v", col("k"))
+    strayDf.coalesce(1).write.parquet(stray)
     val strayFile = VersionedTable.listDataFiles(spark, tdir, stray)
     val head = VersionedTable.latestVersion(spark, tdir).get
     val snap0 = VersionedTable.snapshotOf(spark, tdir, head)
     VersionedTable.publishVersion(spark, tdir, head + 1,
-      snap0.dataFiles ++ strayFile, Seq.empty, snap0.stats, snap0.meta)
+      snap0.dataFiles ++ strayFile, strayDf.schema, Seq.empty,
+      snap0.stats, snap0.meta)
     val withDebt = spark.sql(s"SELECT * FROM $cat.pm.partitions")
       .collect()
     assert(withDebt.exists(_.isNullAt(0)),

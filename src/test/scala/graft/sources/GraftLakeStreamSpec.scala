@@ -22,7 +22,8 @@ class GraftLakeStreamSpec extends SparkSpec {
 
   test("change feed emits op-tagged deltas incl. MoR delete content; folding reconstructs state") {
     import spark.implicits._
-    val dir = freshDir()
+    val (cat, root) = freshCatalog()
+    val dir = s"$root/t"
     // v0: initial load (two files)
     VersionedTable.commit(spark,
       (0 until 20).map(i => (i.toLong, s"v0-$i")).toDF("k", "s")
@@ -31,7 +32,7 @@ class GraftLakeStreamSpec extends SparkSpec {
     VersionedTable.commit(spark,
       (20 until 25).map(i => (i.toLong, s"v1-$i")).toDF("k", "s"), dir)
     // v2: COW delete (rewrites touched files; k<3 removed)
-    VersionedTable.deleteWhere(spark, dir, col("k") < 3L)
+    spark.sql(s"DELETE FROM $cat.t WHERE k < 3")
     // v3: MoR delete (masks only; k in [10,12) removed)
     VersionedTable.deleteWhereMergeOnRead(spark, dir,
       col("k") >= 10L && col("k") < 12L)

@@ -11,12 +11,13 @@ class GraftLakeTableChangesSpec extends SparkSpec {
 
   test("inclusive range bounds slice the feed by commit") {
     import spark.implicits._
-    val dir = freshDir()
+    val (cat, root) = freshCatalog()
+    val dir = s"$root/t"
     VersionedTable.commit(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir)            // v0
     VersionedTable.commit(spark,
       Seq((3L, "c")).toDF("k", "v"), dir)                       // v1
-    VersionedTable.deleteWhere(spark, dir, col("k") === 1L)     // v2
+    spark.sql(s"DELETE FROM $cat.t WHERE k = 1")                // v2
     val full = VersionedTable.tableChanges(spark, dir, 0)
     val byV = full.collect()
       .groupBy(_.getInt(full.columns.indexOf("_commit_version")))

@@ -89,14 +89,14 @@ class LakeManifestSpec extends SparkSpec {
 
   test("rewrite carries surviving entries by reference with exclusions") {
     import spark.implicits._
-    val dir = freshDir()
+    val (cat, root) = freshCatalog()
+    val dir = s"$root/t"
     VersionedTable.commit(spark,
       (0 until 100).map(i => (i, s"r$i")).toDF("k", "v")
         .repartition(5, org.apache.spark.sql.functions.col("k")), dir)
     val before = VersionedTable.snapshotOf(spark, dir, 0)
-    // COW delete rewrites only the files containing k < 20
-    VersionedTable.deleteWhere(spark, dir,
-      org.apache.spark.sql.functions.col("k") < 20)
+    // COW delete rewrites only the files that may hold k < 20
+    spark.sql(s"DELETE FROM $cat.t WHERE k < 20")
     val after = VersionedTable.snapshotOf(spark, dir, 1)
     val r1 = rawOf(dir, 1)
     val carried = before.dataFiles.toSet

@@ -2469,11 +2469,11 @@ object Relational {
     * by `l_orderkey`, and the MERGE's source holds keys from ONE
     * narrow slice. The merge condition references the source, so
     * static group pruning cannot narrow the rewrite at plan time —
-    * Spark's RowLevelOperationRuntimeGroupFiltering computes the
-    * source's ACTUAL keys in an execution-time subquery and the scan
-    * drops every file whose manifest [min,max] provably misses them,
-    * so only the files holding merge keys are rewritten and the rest
-    * carry forward by reference. In-engine gates pin (a) the runtime
+    * Spark's RowLevelOperationRuntimeGroupFiltering computes, in an
+    * execution-time subquery, the `_file` of every target row the
+    * source matches and the scan drops every other file, so only the
+    * files holding merge keys are rewritten and the rest carry
+    * forward by reference. In-engine gates pin (a) the runtime
     * filter fired and narrowed (kept < total), and (b) files really
     * carried across the commit (before ∩ after non-empty); the
     * post-merge aggregate hash-gates against DuckDB restating the
@@ -4471,10 +4471,11 @@ object Relational {
     * `ReplaceData` through GraftLakeRowLevelOperation, the one
     * row-level rewrite UPDATE and MERGE use. Manifest stats prune the
     * files the condition cannot match at plan time, Spark's runtime
-    * group filter drops the files whose stats rule out every matching
-    * key at execution, and only the files left are rewritten with
-    * their survivors, while every other file carries forward by
-    * reference (byte-identical manifest path — spec-pinned in
+    * group filter keeps at execution only the files holding a
+    * matching row (their `_file` values, from a subquery), and only
+    * those are rewritten with their survivors, while every other
+    * file carries forward by reference (byte-identical manifest path
+    * — spec-pinned in
     * GraftLakeCatalogSpec). At 100 TB a selective delete costs a scan
     * of the touched sliver plus a manifest write, never a table
     * rewrite. The emitted fingerprints prove the full DML lifecycle:

@@ -1122,19 +1122,22 @@ final class GraftLakeTable(ident: Identifier, dir: String,
             snapshot.stats.get(p).map(p -> _)).toMap)
         else None)
 
-  /** `DELETE FROM` lands here only when it is MERGE-ON-READ — the
-    * table sets `graft.delete.mode = merge-on-read`, or the snapshot
-    * already carries masks — and every conjunct of the condition
-    * translates (the analyzer ANDs the array). Every other DELETE,
-    * copy-on-write included, declines here and plans as Spark's
-    * `ReplaceData` through [[GraftLakeRowLevelOperation]], like UPDATE
-    * and MERGE: manifest stats and the runtime group filter pick the
-    * files to rewrite, untouched files carry forward by reference.
+  /** `DELETE FROM` lands here when it is MERGE-ON-READ — the table
+    * sets `graft.delete.mode = merge-on-read`, or the snapshot already
+    * carries masks — or when it is UNCONDITIONAL (the condition is
+    * only `ALWAYS_TRUE`: Spark does not rewrite `DELETE FROM t` on a
+    * truncatable table, and a declined unconditional delete fails at
+    * planning), and every conjunct of the condition translates (the
+    * analyzer ANDs the array). Every other DELETE, copy-on-write
+    * included, declines here and plans as Spark's `ReplaceData`
+    * through [[GraftLakeRowLevelOperation]], like UPDATE and MERGE:
+    * the runtime group filter on `_file` picks exactly the files
+    * holding a match, untouched files carry forward by reference.
     * `TRUNCATE TABLE` overrides the scan-everything default with a
     * schema-preserving empty commit. */
   override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
     version.isEmpty &&
-      (deleteMode == "merge-on-read" || snapshot.deleteFiles.nonEmpty) &&
+      (mergeOnRead || GraftLakeTable.unconditional(predicates)) &&
       // the mask commit targets MAIN; under WAP, declining here routes
       // the DELETE through the row-level operation, which stages on
       // the branch
@@ -1144,12 +1147,21 @@ final class GraftLakeTable(ident: Identifier, dir: String,
       predicates.forall(p =>
         PredicateBridge.toV1(p).flatMap(GraftLakeTable.toColumn).isDefined)
 
-  /** The merge-on-read DELETE: records positional delete files, zero
-    * data rewrite ([[VersionedTable.deleteWhereMergeOnRead]]). */
+  private def mergeOnRead: Boolean =
+    deleteMode == "merge-on-read" || snapshot.deleteFiles.nonEmpty
+
+  /** The merge-on-read DELETE records positional delete files, zero
+    * data rewrite ([[VersionedTable.deleteWhereMergeOnRead]]); an
+    * unconditional copy-on-write DELETE is the schema-preserving
+    * empty commit ([[VersionedTable.truncate]]). */
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
     if (version.isDefined) throw new UnsupportedOperationException(
       s"cannot delete from time-travel snapshot ${ident.toString} " +
         s"VERSION AS OF ${version.get}")
+    if (!mergeOnRead && GraftLakeTable.unconditional(predicates)) {
+      VersionedTable.truncate(spark, dir)
+      return
+    }
     val cond = predicates.toSeq
       .map(p => PredicateBridge.toV1(p).flatMap(GraftLakeTable.toColumn)
         .getOrElse(throw new UnsupportedOperationException(
@@ -1221,6 +1233,11 @@ final class GraftLakeTable(ident: Identifier, dir: String,
 }
 
 object GraftLakeTable {
+
+  /** A DELETE condition that is only `ALWAYS_TRUE` (`DELETE FROM t`,
+    * `WHERE true`): it removes every row. */
+  private[sources] def unconditional(predicates: Array[Predicate]): Boolean =
+    predicates.forall(_.name() == "ALWAYS_TRUE")
 
   /** `_file` and `_pos`, the positioned metadata columns. */
   private[sources] val positionMetaCols

@@ -32,9 +32,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    FOOTER statistics on the driver ([[LakeFileStats]] — min/max/
   *    nullCount per file, conservative possibility test over the V1
   *    filter algebra): no cluster job at all, manifest-sized metadata
-  *    IO, the Delta/Iceberg stats-pruning discipline. A selective
-  *    UPDATE on a 100 TB table reads and rewrites the touched sliver,
-  *    never the table.
+  *    IO, the Delta/Iceberg stats-pruning discipline. At execution
+  *    Spark's runtime group filter narrows that selection to exactly
+  *    the files holding a matching row (their `_file` values, from a
+  *    subquery — [[LakeGroupScan]]). A selective UPDATE on a 100 TB
+  *    table reads and rewrites the touched sliver, never the table.
   *  - **Write side**: the rewritten rows land through Spark's own V2
   *    parquet write ([[ParquetWrite]]) into a fresh immutable
   *    `files-v<N>-<nonce>/` dir; `commit` then publishes a manifest
@@ -115,10 +117,19 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
 
   private def metaFields: Seq[StructField] = metaCols.map(_._2)
 
+  /** `_file` rides last among the metadata the rewrite reads, unless a
+    * data column of that name shadows it: it is the runtime group
+    * filter's key ([[LakeGroupScan.filterAttributes]]) and is never
+    * written. */
+  private def fileCol: Boolean =
+    !schema.fieldNames.exists(_.equalsIgnoreCase(LakeGroupScan.FileCol))
+
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    metaCols.map(c => org.apache.spark.sql.connector.expressions
-      .Expressions.column(c._1)).toArray
+    (metaCols.map(_._1) ++
+      (if (fileCol) Seq(LakeGroupScan.FileCol) else Nil))
+      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
+      .toArray
 
   /** What the rewrite scans read: the data columns plus the carried
     * hidden ones, which the scan serves under their metadata names. */
@@ -135,7 +146,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
       options: CaseInsensitiveStringMap): ScanBuilder = {
     val b: ScanBuilder with LakeRewriteScan =
       if (snap.deleteFiles.isEmpty)
-        new LakeScanBuilder(dir, snapshotFiles, scanSchema, options,
+        new LakeScanBuilder(snapshotFiles, scanSchema, options,
           snap.stats,
           lineage =
             if (lineageOn) Some(LakeRowLineage.perFile(snap)) else None)
@@ -182,9 +193,9 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
     * predicates), the replaced set must equal exactly THAT scan's
     * final selection: unioning in the matching-rows subquery scan's
     * wider static selection would remove files whose rows the write
-    * never produced — the row-loss trap. A runtime-dropped file is
-    * stats-PROVEN to hold no matching row, so carrying it forward by
-    * reference is exact. */
+    * never produced — the row-loss trap. A runtime-dropped file holds
+    * no matching row (the subquery named every file that does), so
+    * carrying it forward by reference is exact. */
   private def replacedFiles: Seq[String] = scans.synchronized {
     if (scans.isEmpty) snapshotFiles
     else {
@@ -251,7 +262,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
     new BatchWrite {
       override def createBatchWriterFactory(
           p: PhysicalWriteInfo): DataWriterFactory =
-        if (metaFields.nonEmpty)
+        if (requiredMetadataAttributes().nonEmpty)
           new MetadataColumnsWriterFactory(
             inner.createBatchWriterFactory(p),
             metaFields.map(_.dataType).toArray)
@@ -427,7 +438,8 @@ private final class OpStrippingWriterFactory(
   * [[GraftLakeRowLevelOperation.requiredMetadataAttributes]] order),
   * and the file row is the data row with the metadata values joined
   * on — `_row_id`/`_last_updated_version` as the materialized lineage
-  * columns, a DELETE's carried shredded-JSON columns as themselves.
+  * columns, a DELETE's carried shredded-JSON columns as themselves;
+  * the trailing `_file` is not written.
   * Spark already nullified what must not carry (update → null
   * `_last_updated_version`, reinsert → null both); nulls materialize
   * as nulls, and the read side's manifest fallback serves fresh
@@ -855,7 +867,7 @@ private[sources] trait LakeRewriteScan {
   * [[LakeFileStats.footerReads]]); a pre-stats file falls back to one
   * driver-side footer read, and its stats get embedded by the next
   * commit. */
-final class LakeScanBuilder(dir: String, allFiles: Seq[String],
+final class LakeScanBuilder(allFiles: Seq[String],
     schema: StructType, options: CaseInsensitiveStringMap,
     manifestStats: Map[String, LakeFileStats.FileStats] = Map.empty,
     lineage: Option[Map[String, LakeRowLineage.FileLineage]] = None)
@@ -885,11 +897,6 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
 
   private[sources] def staticSelected: Seq[String] = selected
 
-  private[sources] def stats: Map[String, LakeFileStats.FileStats] =
-    manifestStats
-
-  private[sources] def tableDir: String = dir
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     if (filters.nonEmpty && allFiles.nonEmpty) {
       try {
@@ -917,13 +924,13 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
 
   /** The group scan, wrapped for RUNTIME group filtering
     * ([[LakeGroupScan]]): Spark's
-    * `RowLevelOperationRuntimeGroupFiltering` computes the command's
-    * actual matching keys in a subquery at execution and hands them
-    * here as IN predicates — files whose manifest stats prove no key
-    * present drop from the rewrite AND from the replaced set
-    * (a MERGE against an arbitrary source rewrites only the files
-    * holding its keys, beyond what the static condition could prove
-    * at plan time — Iceberg's runtime group filter shape). */
+    * `RowLevelOperationRuntimeGroupFiltering` computes the `_file` of
+    * every row the command matches in a subquery at execution and
+    * hands the set here as an IN predicate — every other file drops
+    * from the rewrite AND from the replaced set (a DELETE, UPDATE or
+    * MERGE rewrites exactly the files holding a match, beyond what
+    * the static condition could prove at plan time — Iceberg's
+    * runtime group filter shape). */
   override def build(): Scan = {
     val wantsLineage = lineage.isDefined && requested.exists(r =>
       r.fieldNames.exists(n =>
@@ -935,7 +942,12 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
           CaseInsensitiveStringMap.empty(),
           selected, Some(schema), classOf[ParquetFileFormat])
           .newScanBuilder(options).build(),
-        this)
+        this,
+        // the metadata column, unless a data column shadows it
+        fileCol = !schema.fieldNames.exists(
+            _.equalsIgnoreCase(LakeGroupScan.FileCol)) &&
+          requested.exists(_.fieldNames.exists(
+            _.equalsIgnoreCase(LakeGroupScan.FileCol))))
     else {
       // lineage-serving rewrite scan: the parquet table's declared
       // schema gains the hidden physical lineage columns (absent
@@ -981,21 +993,25 @@ final class LakeScanBuilder(dir: String, allFiles: Seq[String],
 }
 
 /** Rewrite scan wrapper carrying `SupportsRuntimeV2Filtering` for
-  * group-based row-level operations: runtime predicates narrow the
-  * file set conservatively via manifest stats, the batch re-forms
-  * split bundles over surviving files only, and the narrowed
+  * group-based row-level operations. With `fileCol` the scan serves
+  * the `_file` metadata column (one split per partition, the path a
+  * per-partition constant — [[LakeFileColumnScan]]'s shape) and
+  * declares it the runtime filter key: the `_file IN (...)` predicate
+  * narrows the file set to exactly the files the subquery named, the
+  * batch keeps the surviving files' splits only, and the narrowed
   * selection is pushed back into the builder so the COMMIT replaces
-  * exactly what the write read. Reader factory, columnar path, and
-  * statistics delegate unchanged. */
+  * exactly what the write read. Statistics delegate unchanged. */
 private[sources] final class LakeGroupScan(inner: Scan,
-    builder: LakeScanBuilder) extends Scan
+    builder: LakeScanBuilder, fileCol: Boolean) extends Scan
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   import org.apache.hadoop.fs.Path
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
   import org.apache.spark.sql.execution.datasources.FilePartition
 
-  override def readSchema(): StructType = inner.readSchema()
+  override def readSchema(): StructType =
+    if (fileCol) LakeFileColumnScan.withFileCol(inner.readSchema())
+    else inner.readSchema()
 
   override def description(): String = {
     val extra =
@@ -1007,38 +1023,26 @@ private[sources] final class LakeGroupScan(inner: Scan,
     inner.description() + extra
   }
 
-  /** Exactly ONE attribute: Spark's runtime group filter builds a
-    * single IN-subquery over a struct of ALL declared attributes, and
-    * a struct IN does not translate to a V2 predicate (the filter
-    * then never reaches the scan) — Iceberg declares only `_file` for
-    * the same reason. The clustering key is the column whose per-file
-    * ranges are disjoint by construction (maximum prune power); an
-    * unclustered table falls back to the first stats-covered column
-    * (conservative: wrong pick only costs prune opportunities). */
+  /** `_file` alone, Iceberg's key: the matching-rows subquery then
+    * names exactly the files holding a match. Exactly one attribute
+    * either way — Spark's runtime group filter builds a single
+    * IN-subquery over a struct of ALL declared attributes, and a
+    * struct IN does not translate to a V2 predicate. Without `_file`
+    * (a data column shadows it) the rewrite keeps its static
+    * selection. */
   override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // data columns only: a DELETE's carried shredded columns are
-    // metadata the matching-rows subquery does not read
-    val out = inner.readSchema().fieldNames
-      .filterNot(LakeJsonShred.isShredCol).map(_.toLowerCase).toSet
-    val covered = LakeFilePrune.attrs(builder.staticSelected, builder.stats)
-      .map(_.fieldNames()(0))
-      .filter(c => out.contains(c.toLowerCase))
-    val clusterHead = VersionedTable
-      .clusteringSpec(SparkSession.active, builder.tableDir)
-      .flatMap(_.headOption)
-      .map(_.trim)
-      .filter(c => covered.exists(_.equalsIgnoreCase(c)))
-    clusterHead.orElse(covered.sorted.headOption)
-      .map(c => Array(
-        org.apache.spark.sql.connector.expressions.Expressions.column(c)))
-      .getOrElse(Array.empty)
-  }
+      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    if (!fileCol) Array.empty
+    else Array(org.apache.spark.sql.connector.expressions.Expressions
+      .column(LakeGroupScan.FileCol))
 
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     LakeGroupScan.filterCalls.incrementAndGet()
-    LakeFilePrune.keep(builder.staticSelected, builder.stats, predicates)
+    LakeFilePrune.fileColKept(
+      predicates.toSeq.flatMap(p =>
+        org.apache.spark.sql.graftbridge.PredicateBridge.toV1(p)),
+      builder.staticSelected)
       .foreach { kept =>
         builder.runtimeSelected = Some(kept)
         LakeGroupScan.lastPrune.set(
@@ -1049,18 +1053,19 @@ private[sources] final class LakeGroupScan(inner: Scan,
   override def toBatch: Batch = {
     val ib = inner.toBatch
     new Batch {
-      override def planInputPartitions(): Array[InputPartition] =
-        builder.runtimeSelected match {
+      override def planInputPartitions(): Array[InputPartition] = {
+        val parts = builder.runtimeSelected match {
           case None => ib.planInputPartitions()
           case Some(keptSeq) =>
             val kept = keptSeq.map(p => new Path(p).toString).toSet
-            val parts = ib.planInputPartitions()
-            if (!parts.forall(_.isInstanceOf[FilePartition])) parts
-            else parts.toSeq
-              .map { case fp: FilePartition =>
-                // decoded lookup: kept is keyed by manifest paths
-                fp.files.filter(f => kept.contains(
-                  f.filePath.toPath.toString))
+            ib.planInputPartitions().toSeq
+              .map {
+                case fp: FilePartition =>
+                  // decoded lookup: kept is keyed by manifest paths
+                  fp.files.filter(f => kept.contains(
+                    f.filePath.toPath.toString))
+                case other => throw new IllegalStateException(
+                  s"unexpected non-file partition $other under rewrite scan")
               }
               .filter(_.nonEmpty)
               .zipWithIndex
@@ -1068,8 +1073,11 @@ private[sources] final class LakeGroupScan(inner: Scan,
                 FilePartition(i, fs): InputPartition }
               .toArray
         }
+        if (fileCol) LakeFileColumnScan.perSplit(parts) else parts
+      }
       override def createReaderFactory(): PartitionReaderFactory =
-        ib.createReaderFactory()
+        if (fileCol) LakeFileColumnScan.readerFactory(ib.createReaderFactory())
+        else ib.createReaderFactory()
     }
   }
 
@@ -1084,10 +1092,14 @@ private[sources] final class LakeGroupScan(inner: Scan,
   }
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    inner.columnarSupportMode()
+    if (fileCol) Scan.ColumnarSupportMode.UNSUPPORTED
+    else inner.columnarSupportMode()
 }
 
 private[graft] object LakeGroupScan {
+  /** The runtime group filter key: the path of a row's data file. */
+  val FileCol = "_file"
+
   /** Spec instrumentation, mirroring [[LakeRuntimeFilterScan.lastPrune]]:
     * runtime group-filter invocations and the last (kept<<32|total). */
   val filterCalls = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, LocalScan, Pa
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.graftbridge.{DelegatingFileScanBuilder, PredicateBridge}
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -196,10 +197,19 @@ final class LakeReadScanBuilder(inner: FileScanBuilder,
   }
 
   private lazy val dropped: Set[String] =
-    bloomDropped ++ statsDropped ++
-      (if (served("_file"))
-        LakeFilePrune.fileColDropped(catalystFilters, snap.dataFiles)
-      else Set.empty)
+    bloomDropped ++ statsDropped ++ fileColDropped
+
+  /** A read aimed at known files (`WHERE _file IN (...)`) opens only
+    * those ([[LakeFilePrune.fileColKept]]). Returns DECODED paths. */
+  private def fileColDropped: Set[String] =
+    if (!served("_file")) Set.empty
+    else LakeFilePrune.fileColKept(
+      catalystFilters.flatMap(e =>
+        org.apache.spark.sql.graftbridge.FilterBridge.toV1(e)),
+      snap.dataFiles)
+      .map(kept => (snap.dataFiles.toSet -- kept)
+        .map(p => new Path(p).toString))
+      .getOrElse(Set.empty)
 
   /** STATIC PARTITION PRUNING: on a partitioned table, a pushed
     * `EqualTo`/`In` filter on the partition column keeps only the
@@ -389,9 +399,7 @@ final class LakeFileColumnScan(inner: Scan) extends Scan {
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
 
   override def readSchema(): StructType =
-    inner.readSchema()
-      .add("_file", org.apache.spark.sql.types.StringType,
-        nullable = false)
+    LakeFileColumnScan.withFileCol(inner.readSchema())
 
   override def description(): String =
     inner.description() + ", MetadataCol: _file"
@@ -400,25 +408,40 @@ final class LakeFileColumnScan(inner: Scan) extends Scan {
     val ib = inner.toBatch
     new Batch {
       override def planInputPartitions(): Array[InputPartition] =
-        ib.planInputPartitions().toSeq
-          .flatMap {
-            case fp: FilePartition => fp.files
-            case other => throw new IllegalStateException(
-              s"unexpected non-file partition $other under _file scan")
-          }
-          .zipWithIndex
-          .map { case (pf, i) =>
-            // DECODED (SparkPath.toPath) so the emitted value is
-            // byte-identical to manifest paths (and `.files` rows) —
-            // `file:///x` and `file:/x` must not read as two files,
-            // and a space in a partition value must not surface %20
-            new FileColPartition(FilePartition(i, Array(pf)),
-              pf.filePath.toPath.toString): InputPartition
-          }.toArray
+        LakeFileColumnScan.perSplit(ib.planInputPartitions())
       override def createReaderFactory(): PartitionReaderFactory =
-        new FileColReaderFactory(ib.createReaderFactory())
+        LakeFileColumnScan.readerFactory(ib.createReaderFactory())
     }
   }
+}
+
+private[sources] object LakeFileColumnScan {
+
+  def withFileCol(schema: StructType): StructType =
+    schema.add("_file", org.apache.spark.sql.types.StringType,
+      nullable = false)
+
+  /** One split per partition, each tagged with its file's path. */
+  def perSplit(parts: Array[InputPartition]): Array[InputPartition] =
+    parts.toSeq
+      .flatMap {
+        case fp: FilePartition => fp.files
+        case other => throw new IllegalStateException(
+          s"unexpected non-file partition $other under _file scan")
+      }
+      .zipWithIndex
+      .map { case (pf, i) =>
+        // DECODED (SparkPath.toPath) so the emitted value is
+        // byte-identical to manifest paths (and `.files` rows) —
+        // `file:///x` and `file:/x` must not read as two files,
+        // and a space in a partition value must not surface %20
+        new FileColPartition(FilePartition(i, Array(pf)),
+          pf.filePath.toPath.toString): InputPartition
+      }.toArray
+
+  /** Reads [[perSplit]]'s partitions, appending the path to each row. */
+  def readerFactory(inner: PartitionReaderFactory): PartitionReaderFactory =
+    new FileColReaderFactory(inner)
 }
 
 /** One split plus its file path (the per-partition `_file` constant). */
@@ -620,30 +643,22 @@ private[sources] object LakeFilePrune {
 
   /** `_file` pruning: every `_file = 'p'` / `_file IN (...)` filter
     * (callers pass filters only when `_file` is the metadata column)
-    * keeps exactly the files it names, so a query aimed at known files
-    * (`WHERE _file IN (...)`, targeted maintenance) opens only those.
-    * Returns DECODED paths of the files no such filter names. */
-  def fileColDropped(
-      catalystFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      files: Seq[String]): Set[String] = {
-    import org.apache.spark.sql.catalyst.{expressions => ce}
-    def isFile(e: ce.Expression) = e match {
-      case a: ce.AttributeReference => a.name.equalsIgnoreCase("_file")
-      case _ => false
-    }
-    val named: Seq[Set[String]] = catalystFilters.collect {
-      case ce.EqualTo(a, ce.Literal(v, _)) if isFile(a) => Set[Any](v)
-      case ce.EqualTo(ce.Literal(v, _), a) if isFile(a) => Set[Any](v)
-      case ce.In(a, vs)
-          if isFile(a) && vs.forall(_.isInstanceOf[ce.Literal]) =>
-        vs.map(_.asInstanceOf[ce.Literal].value).toSet
-      case ce.InSet(a, vs) if isFile(a) => vs
+    * keeps exactly the files it names — the runtime group filter's
+    * exact rewrite set ([[LakeGroupScan.filter]]) and a read aimed at
+    * known files. Returns the `files` every such filter names, None
+    * when no filter is on `_file`. */
+  def fileColKept(filters: Seq[sources.Filter],
+      files: Seq[String]): Option[Seq[String]] = {
+    def isFile(a: String) = a.equalsIgnoreCase("_file")
+    val named: Seq[Set[String]] = filters.collect {
+      case sources.EqualTo(a, v) if isFile(a) => Set[Any](v)
+      case sources.In(a, vs) if isFile(a) => vs.toSet
     }.map(_.collect { case v if v != null => new Path(v.toString).toString })
-    if (named.isEmpty) Set.empty
-    else {
-      val all = files.map(p => new Path(p).toString)
-      named.flatMap(keep => all.filterNot(keep)).toSet
-    }
+    if (named.isEmpty) None
+    else Some(files.filter { p =>
+      val d = new Path(p).toString
+      named.forall(_(d))
+    })
   }
 
   /** Every top-level column with usable bounds in at least one file's

@@ -233,6 +233,56 @@ class GraftLakeCatalogSpec extends SparkSpec {
       .collect()(0).getLong(0) === 20L)
   }
 
+  test("DELETE on an overlapping layout rewrites only the files " +
+      "holding a match") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
+    // four files that each span k 0..99 — min/max stats rule none out
+    spark.range(0, 100).selectExpr("CAST(id AS INT) AS k",
+      "CAST(id AS STRING) AS v").repartition(4)
+      .createOrReplaceTempView("glc_overlap_src")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM glc_overlap_src")
+    val dir = s"$root/t"
+    val v = VersionedTable.latestVersion(spark, dir).get
+    val before = VersionedTable.filesOf(spark, dir, v)
+    assert(before.count(_.contains(s"files-v$v")) === 4,
+      s"want 4 overlapping files: $before")
+    spark.sql(s"DELETE FROM $cat.t WHERE k = 7")
+    val after = VersionedTable.filesOf(spark, dir, v + 1)
+    val replaced = before.filterNot(after.contains)
+      .map(p => new Path(p).toString).toSet
+    val touched = spark.read.parquet(before: _*)
+      .filter(org.apache.spark.sql.functions.col("k") === 7)
+      .select(org.apache.spark.sql.functions
+        .col("_metadata.file_path")).distinct().collect()
+      .map(r => new Path(r.getString(0)).toString).toSet
+    assert(touched.size === 1)
+    assert(replaced === touched,
+      s"rewrite set != files containing the match:\n" +
+        s"replaced=$replaced\ntouched=$touched")
+    assert(spark.sql(s"SELECT count(*), sum(k) FROM $cat.t").collect()(0)
+      .toSeq === Seq(99L, 4943L))
+  }
+
+  test("unconditional DELETE on a copy-on-write table empties it; " +
+      "history serves") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")
+    spark.sql(s"INSERT INTO $cat.t VALUES (1,'a'), (2,'b')") // v1
+    spark.sql(s"DELETE FROM $cat.t")                         // v2
+    val latest = spark.sql(s"SELECT * FROM $cat.t")
+    assert(latest.count() === 0)
+    assert(latest.columns.toSeq === Seq("k", "v"))
+    spark.sql(s"INSERT INTO $cat.t VALUES (3,'c')")          // v3
+    spark.sql(s"DELETE FROM $cat.t WHERE true")              // v4
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t").collect()(0)
+      .getLong(0) === 0L)
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t VERSION AS OF 1")
+      .collect()(0).getLong(0) === 2L)
+    assert(spark.sql(s"SELECT k FROM $cat.t VERSION AS OF 3")
+      .collect().map(_.getInt(0)).toSeq === Seq(3))
+  }
+
   test("TRUNCATE TABLE empties via schema-preserving commit; history serves") {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.t (k INT, v STRING)")

@@ -85,11 +85,17 @@ class GraftLakeClusteringSpec extends SparkSpec {
     }
     mkTable("clustered", " TBLPROPERTIES('graft.write.ordered-by'='k')")
     mkTable("plain", "")
-    Seq((100L, 7L), (105L, 7L)).toDF("k", "v")
+    (100L to 105L).map(k => (k, 7L)).toDF("k", "v")
       .createOrReplaceTempView("glcl_upd")
-    def mergeAndCountRewrites(name: String): Int = {
+    // (files replaced, files holding a merge key before the merge)
+    def mergeAndCountRewrites(name: String): (Int, Int) = {
       val vBefore = VersionedTable.latestVersion(spark, s"$root/$name").get
       val before = VersionedTable.filesOf(spark, s"$root/$name", vBefore)
+      val holding = spark.read.parquet(before: _*)
+        .filter(org.apache.spark.sql.functions.col("k")
+          .between(100L, 105L))
+        .select(org.apache.spark.sql.functions
+          .col("_metadata.file_path")).distinct().count().toInt
       spark.sql(
         s"""MERGE INTO $cat.$name AS t USING glcl_upd AS s
            |ON t.k = s.k AND t.k BETWEEN 100 AND 105
@@ -98,19 +104,21 @@ class GraftLakeClusteringSpec extends SparkSpec {
            |""".stripMargin)
       val after = VersionedTable.filesOf(spark,
         s"$root/$name", vBefore + 1)
-      before.count(f => !after.contains(f))
+      (before.count(f => !after.contains(f)), holding)
     }
-    val plainRewrites = mergeAndCountRewrites("plain")
-    val clusteredRewrites = mergeAndCountRewrites("clustered")
-    // every round-robin file spans [0,3999] so all 4 intersect the
-    // bound; the clustered layout localizes [100,105] to one file
-    assert(plainRewrites === 4, s"plain rewrote $plainRewrites")
+    val (plainRewrites, plainHolding) = mergeAndCountRewrites("plain")
+    val (clusteredRewrites, _) = mergeAndCountRewrites("clustered")
+    // the rewrite replaces exactly the files holding a merge key: the
+    // interleaved keys 100..105 sit in several round-robin files, the
+    // clustered layout localizes [100,105] to one file
+    assert(plainRewrites === plainHolding && plainRewrites > 1,
+      s"plain rewrote $plainRewrites, $plainHolding hold a key")
     assert(clusteredRewrites === 1,
       s"clustered rewrote $clusteredRewrites")
     // identical answers either way
     Seq("clustered", "plain").foreach { t =>
       assert(spark.sql(s"SELECT sum(v) FROM $cat.$t").collect()(0)
-        .getLong(0) === 14L)
+        .getLong(0) === 42L)
     }
     spark.catalog.dropTempView("glcl_upd")
     spark.catalog.dropTempView("glcl_merge_src")

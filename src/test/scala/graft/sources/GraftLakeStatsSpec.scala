@@ -55,7 +55,7 @@ class GraftLakeStatsSpec extends SparkSpec {
     val snap = VersionedTable.snapshotOf(spark, dir,
       VersionedTable.latestVersion(spark, dir).get)
     assert(snap.dataFiles.forall(snap.stats.contains))
-    val builder = new LakeScanBuilder(dir, snap.dataFiles,
+    val builder = new LakeScanBuilder(snap.dataFiles,
       spark.table(s"$cat.t").schema, CaseInsensitiveStringMap.empty(),
       snap.stats)
     val before = LakeFileStats.footerReads.get()

@@ -93,20 +93,21 @@ class LakeManifestSpec extends SparkSpec {
     val dir = s"$root/t"
     VersionedTable.commit(spark,
       (0 until 100).map(i => (i, s"r$i")).toDF("k", "v")
-        .repartition(5, org.apache.spark.sql.functions.col("k")), dir)
+        .repartitionByRange(5, org.apache.spark.sql.functions.col("k")),
+      dir)
     val before = VersionedTable.snapshotOf(spark, dir, 0)
-    // COW delete rewrites only the files that may hold k < 20
+    // COW delete rewrites only the files that hold k < 20
     spark.sql(s"DELETE FROM $cat.t WHERE k < 20")
     val after = VersionedTable.snapshotOf(spark, dir, 1)
     val r1 = rawOf(dir, 1)
+    val rewritten = before.dataFiles.toSet -- after.dataFiles.toSet
     val carried = before.dataFiles.toSet
       .intersect(after.dataFiles.toSet)
-    if (carried.nonEmpty && r1.fullySegmented) {
-      assert(r1.segNames.nonEmpty)
-      assert(r1.excludes.subsetOf(
-        before.dataFiles.toSet -- after.dataFiles.toSet),
-        "exclusions must be exactly the rewritten files")
-    }
+    assert(rewritten.nonEmpty && carried.nonEmpty,
+      s"range layout must carry files: rewritten=$rewritten")
+    assert(r1.fullySegmented && r1.segNames.nonEmpty)
+    assert(r1.excludes === rewritten,
+      "exclusions must be exactly the rewritten files")
     assert(VersionedTable.read(spark, dir).count() == 80)
     assert(VersionedTable.read(spark, dir, Some(0)).count() == 100)
   }
